@@ -960,10 +960,7 @@ object Connector {
         .options(Map("catalog" -> joinStatCatalog, "newtable" -> "5"))
         .mode("append").save()
     }
-    val confKey = "spark.sql.optimizer.datasourceV2JoinPushdown"
-    val prev = s.conf.getOption(confKey)
-    s.conf.set(confKey, "true")
-    try {
+    Tables.withConfs(s, "spark.sql.optimizer.datasourceV2JoinPushdown" -> "true") {
       val cust = s.read.format("graft-kv").option("catalog", joinCustCatalog).load()
       val stat = s.read.format("graft-kv").option("catalog", joinStatCatalog).load()
       val joined = cust
@@ -979,9 +976,6 @@ object Connector {
       require(joined.queryExecution.executedPlan.toString.contains("GraftKvJoinScan"),
         "kv27 must execute the pushed kv-kv join, not a fallback plan")
       s.createDataFrame(java.util.Arrays.asList(rows: _*), joined.schema)
-    } finally prev match {
-      case Some(v) => s.conf.set(confKey, v)
-      case None => s.conf.unset(confKey)
     }
   }
 
@@ -1034,15 +1028,10 @@ object Connector {
         .createOrReplaceTempView("kv28_lines_src")
       s.sql("INSERT INTO graft.default.spj_linestats SELECT * FROM kv28_lines_src")
     }
-    val bucketingKey = "spark.sql.sources.v2.bucketing.enabled"
-    val broadcastKey = "spark.sql.autoBroadcastJoinThreshold"
-    val prevBucketing = s.conf.getOption(bucketingKey)
-    val prevBroadcast = s.conf.getOption(broadcastKey)
-    s.conf.set(bucketingKey, "true")
     // both sides are "large" by scenario: disable broadcast so the plan is
     // the one a 100 TB run would get (SPJ sort-merge, not a broadcast)
-    s.conf.set(broadcastKey, "-1")
-    try {
+    Tables.withConfs(s, "spark.sql.sources.v2.bucketing.enabled" -> "true",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val joined = s.sql(
         """SELECT o.o_orderpriority, count(*) AS n_orders,
           |  CAST(sum(l.n_lines) AS BIGINT) AS sum_lines,
@@ -1068,9 +1057,6 @@ object Connector {
         "kv28 must run storage-partitioned: no shuffle below the join\n" +
           planLines.mkString("\n"))
       s.createDataFrame(java.util.Arrays.asList(rows: _*), joined.schema)
-    } finally {
-      prevBucketing.fold(s.conf.unset(bucketingKey))(v => s.conf.set(bucketingKey, v))
-      prevBroadcast.fold(s.conf.unset(broadcastKey))(v => s.conf.set(broadcastKey, v))
     }
   }
 

@@ -652,47 +652,33 @@ object Relational {
     // edge list (no runtime stats can change that choice). Measured at
     // sf0.1: 12.6 s → 8.1 s warm. AQE's conf is read at EXECUTION time, so
     // the eager localCheckpoint below runs the whole query inside the
-    // try/finally window and the returned frame is the materialized result
+    // conf window and the returned frame is the materialized result
     // (recomputed from parquet on every invocation — nothing is memoized
     // across calls). At cluster scale the same reasoning holds: the
     // per-iteration driver fixed cost dominates regardless of data volume,
     // and the one corpus-sized join (events ⋈ comp) is uniform-keyed.
-    // SINGLE-THREADED SESSION CONTRACT (same as StreamBatch.withDrainAqe):
-    // this set/restore mutates session-global conf; bench/verify run
-    // queries sequentially on one session. Restore via getOption/unset so
-    // a previously-unset conf stays unset.
     //
-    // Shuffle width for the WHOLE recursion execution is derived from the
-    // input (guide §2, scale-adaptive partitioning), capped at the session
-    // value: Spark's UnionLoopExec round-robin-repartitions EVERY
-    // iteration's result to spark.sql.shuffle.partitions (keyless
-    // repartition — it also pays sortBeforeRepartition), so a 32-wide
-    // session constant made each of the 17 iterations a 32-task shuffle
-    // of a wave-sized frontier. At cluster scale the cap keeps today's
-    // width; locally the derived width is 2-3.
-    val aqeKey = "spark.sql.adaptive.enabled"
+    // Shuffle width for the WHOLE recursion execution — the edge
+    // materialization and every loop iteration — is derived from the input
+    // (guide §2, scale-adaptive partitioning), capped at the session value:
+    // Spark's UnionLoopExec round-robin-repartitions EVERY iteration's
+    // result to spark.sql.shuffle.partitions (keyless repartition — it
+    // also pays sortBeforeRepartition), so a 32-wide session constant made
+    // each of the 17 iterations a 32-task shuffle of a wave-sized frontier.
+    // At cluster scale the cap keeps today's width; locally the derived
+    // width is 2-3. The events count is a parquet metadata-only job.
     val shufKey = "spark.sql.shuffle.partitions"
-    val prevAqe = s.conf.getOption(aqeKey)
-    val prevShuf = s.conf.getOption(shufKey)
-    val nEvents = Tables.events(s, dir).count() // parquet metadata-only
-    val perPart = s.conf.get("graft.q27.rowsPerPartition", "50000").toLong
-    val sessParts = s.conf.get(shufKey).toInt
-    val nParts = math.max(1L, math.min(sessParts.toLong,
-      (nEvents + perPart - 1) / perPart)).toInt
-    s.conf.set(aqeKey, "false")
-    s.conf.set(shufKey, nParts.toString)
-    try q27Recursion(s, dir).localCheckpoint(true)
-    finally {
-      prevAqe match {
-        case Some(v) => s.conf.set(aqeKey, v)
-        case None => s.conf.unset(aqeKey)
-      }
-      prevShuf match {
-        case Some(v) => s.conf.set(shufKey, v)
-        case None => s.conf.unset(shufKey)
-      }
+    val nEvents = Tables.events(s, dir).count()
+    val nParts = math.max(1L, math.min(s.conf.get(shufKey).toLong,
+      (nEvents + Q27RowsPerPartition - 1) / Q27RowsPerPartition))
+    Tables.withConfs(s, "spark.sql.adaptive.enabled" -> "false",
+      shufKey -> nParts.toString) {
+      q27Recursion(s, dir).localCheckpoint(true)
     }
   }
+
+  /** Events per shuffle partition of the q27 recursion. */
+  private val Q27RowsPerPartition = 50000L
 
   /** The lazy recursive-CTE frame (plan-audited: native UnionLoop, broadcast
     * step join). [[q27RecursiveCte]] executes it eagerly with AQE off. */
@@ -709,24 +695,13 @@ object Relational {
     // from parquet on every invocation — nothing survives the call. At
     // cluster scale the same one-pass materialization holds (checkpoint to
     // reliable storage instead of executor blocks).
-    // SIZE the edge materialization's partitioning from the INPUT, not the
-    // session constant (guide §2: scale-adaptive partitioning): every one
-    // of the loop's 17 iterations inherits the checkpointed frame's
-    // partition count, so a 32-partition edge table costs 17 × 32 task
-    // launches for wave-sized frontiers (measured: ~250-490 ms/iteration
-    // stage at sf0.1, all scheduling). Events count is a parquet
-    // metadata-only job; edges ≤ events by construction (≤ one lag edge
-    // per event). The width caps at the session's shuffle partitions, so
-    // at cluster scale this is exactly today's behavior.
-    val nEvents = Tables.events(s, dir).count()
-    val perPart = s.conf.get("graft.q27.rowsPerPartition", "50000").toLong
-    val sessParts = s.conf.get("spark.sql.shuffle.partitions").toInt
-    val nParts = math.max(1L, math.min(sessParts.toLong,
-      (nEvents + perPart - 1) / perPart)).toInt
-    val shufK = "spark.sql.shuffle.partitions"
-    val prevShuf = s.conf.get(shufK)
-    s.conf.set(shufK, nParts.toString)
-    val edges = try s.sql("""
+    // The edge materialization's partitioning is the session's shuffle
+    // width, which [[q27RecursiveCte]] sizes from the INPUT: every one of
+    // the loop's 17 iterations inherits the checkpointed frame's partition
+    // count, so a 32-partition edge table costs 17 × 32 task launches for
+    // wave-sized frontiers (measured: ~250-490 ms/iteration stage at sf0.1,
+    // all scheduling).
+    val edges = s.sql("""
       WITH ev AS (
         SELECT event_id, user_id, unix_seconds(ts) AS tu FROM events_q27),
       e AS (SELECT event_id AS a,
@@ -735,7 +710,6 @@ object Relational {
             FROM ev)
       SELECT a, b FROM e WHERE b IS NOT NULL AND gap <= 43200""")
       .localCheckpoint(true)
-    finally s.conf.set(shufK, prevShuf)
     edges.createOrReplaceTempView("q27_edges")
     // The checkpointed frame is a LogicalRDD with NO size stats (leaf
     // default = defaultSizeInBytes), so auto-broadcast can never pick it:

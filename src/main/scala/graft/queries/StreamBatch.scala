@@ -4,13 +4,12 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.streaming.GraftStreaming
 
 /** Streaming queries surfaced through the batch correctness gate: each runs
   * a Structured Streaming pipeline over the events parquet (as a file-stream
-  * source) to completion with Trigger.AvailableNow, then returns the sink
+  * source) to completion with an AvailableNow trigger, then returns the sink
   * table as a DataFrame whose contents are DETERMINISTIC and expressible in
   * batch SQL — so `graft.streaming` gets driver-checked CORRECTNESS rows,
   * not just ScalaTests.
@@ -24,36 +23,15 @@ import graft.streaming.GraftStreaming
   *    the batch window twin exactly.
   */
 object StreamBatch {
+  import GraftStreaming.tempWorkDir
+  import Tables.withConfs
 
-  /** Ephemeral per-invocation working dirs (streaming checkpoints, file
-    * sources, CDC log dirs): every sv query creates a FRESH one per call
-    * and abandons it at the end — the durability a persistent checkpoint
-    * buys is out of scope by construction (a re-run re-creates the world,
-    * and the crash/replay specs exercise torn state through the kv store's
-    * own stamps, not the checkpoint). On this host they landed on ext4
-    * /tmp, so every offset/commit-log and state-store delta write paid
-    * create+fsync+rename against a real disk (guide §6: small files hurt
-    * twice; a drain suite writes dozens of them). Default to RAM-backed
-    * /dev/shm when present; `graft.stream.tmpBase` overrides for
-    * deployments that want durable checkpoints (i.e. streams that OUTLIVE
-    * the process — at cluster scale point this at reliable storage). */
-  private def tempWorkDir(s: SparkSession, prefix: String): java.nio.file.Path = {
-    val base = s.conf.getOption("graft.stream.tmpBase").orElse {
-      val shm = java.nio.file.Paths.get("/dev/shm")
-      if (Files.isDirectory(shm) && Files.isWritable(shm)) Some("/dev/shm")
-      else None
-    }
-    base match {
-      case Some(b) => Files.createTempDirectory(
-        java.nio.file.Paths.get(b), prefix)
-      case None => Files.createTempDirectory(prefix)
-    }
-  }
+  private val AqeKey = "spark.sql.adaptive.enabled"
+  private val ShuffleKey = "spark.sql.shuffle.partitions"
 
   /** Stream the events parquet through a fresh file-source dir (the parquet
     * file is copied so the source directory contains exactly one file). */
   private def eventStream(s: SparkSession, dir: String): DataFrame = {
-    ensureCkptChecksum(s)
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     s.conf.set("spark.sql.session.timeZone", "UTC")
     val src = tempWorkDir(s, "graft-sv-src")
@@ -63,67 +41,84 @@ object StreamBatch {
     Tables.normalizeEventTs(s.readStream.schema(schema).parquet(src.toString))
   }
 
+  /** Spark 4.1 writes a `.crc` companion next to every state-store
+    * checkpoint file (deltas, snapshots) and re-verifies it on read — per
+    * file one extra create+write+fsync and one extra open+read. For
+    * single-JVM streams over fresh local checkpoints corruption detection
+    * buys nothing; measured on the state-heavy streams (paired A/B): sv4
+    * 9.9→7.0 s, sv6 4.8→4.1 s. Deployments on flaky object storage
+    * re-enable it with `graft.stream.ckptChecksum=true`. Every stream run
+    * here sets it inside its conf window. */
+  private def ckptChecksum(s: SparkSession): (String, String) =
+    "spark.sql.streaming.checkpoint.fileChecksum.enabled" ->
+      s.conf.get("graft.stream.ckptChecksum", "false")
+
   /** Stateful streaming operators launch one state-store task per shuffle
     * partition PER MICRO-BATCH; at these data sizes 32 partitions is pure
-    * fixed overhead (measured ~2× on the stream-stream join). Pin 8 for the
-    * stream's lifetime and restore after: the state partitioning bakes into
-    * each query's FRESH checkpoint at its first batch, so the choice is
-    * per-query-run, and every sv oracle is partitioning-independent (key
-    * sets, per-group folds, maxes). At real scale the inverse applies —
-    * size state partitions to executor count × cores, not down. */
-  private def withStreamShuffle[A](s: SparkSession)(f: => A): A = {
-    ensureCkptChecksum(s)
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try f finally s.conf.set("spark.sql.shuffle.partitions", prev)
+    * fixed overhead (measured ~2× on the stream-stream join), so the stream
+    * runs at 8. The state partitioning bakes into each query's FRESH
+    * checkpoint at its first batch, and every sv oracle is
+    * partitioning-independent (key sets, per-group folds, maxes). */
+  private def runToMemory(df: DataFrame, name: String, mode: String): Unit = {
+    val s = df.sparkSession
+    withConfs(s, ShuffleKey -> "8", ckptChecksum(s)) {
+      GraftStreaming.runOnce(df.writeStream.outputMode(mode).format("memory")
+        .queryName(name)
+        .option("checkpointLocation", tempWorkDir(s, s"graft-$name-ckpt").toString))
+    }
   }
 
-  /** Spark 4.1 writes a `.crc` companion next to EVERY checkpoint file
-    * (offset/commit logs, state deltas/snapshots) and re-verifies it on
-    * read — per checkpointed file that is one extra create+write+fsync and
-    * one extra open+read (guide §6: small files hurt twice). For these
-    * single-JVM drains over fresh local checkpoints corruption detection
-    * buys nothing; measured on the state-heavy streams (paired A/B):
-    * sv4 9.9→7.0 s, sv6 4.8→4.1 s. Deployments on flaky object storage
-    * re-enable with `graft.stream.ckptChecksum=true`. SET-ONCE (idempotent,
-    * no restore window) rather than set/restore: the conf only affects
-    * graft's own streaming checkpoints, and a set-once cannot leak a
-    * mid-run value the way an interrupted restore can. */
-  private def ensureCkptChecksum(s: SparkSession): Unit =
-    s.conf.set("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-      s.conf.get("graft.stream.ckptChecksum", "false"))
-
-  /** AQE OFF for one drain run (restoring after): every foreachBatch job a
-    * CDC maintainer issues is either a hinted broadcast, a bounded sliver
-    * read, or a batch-proportional write — AdaptiveSparkPlan's per-job
-    * stage-materialization and re-planning has nothing to re-optimize and
+  /** One CDC drain — the whole stream lifecycle of a maintainer: a graft-kv
+    * `readStream` with `srcOpts`, `body` on every micro-batch through
+    * foreachBatch, checkpointed at `ckpt` (the caller's: it is resumed
+    * across drains and never deleted here), run AvailableNow to completion.
+    * The drain conf window sets the checkpoint checksum and turns AQE OFF:
+    * every job a maintainer issues is a hinted broadcast, a bounded sliver
+    * read, or a batch-proportional write, so AdaptiveSparkPlan's per-job
+    * stage materialization and re-planning has nothing to re-optimize and
     * costs measurably (paired A/B at sf0.1, wall and JVM-cpu: sv21
     * 17.5→11.3 s / 70→52 cpu-s, sv12 6.2→4.5 / 27→17, sv25 24.4→20.5,
-    * sv14 ≥15→14.5, sv22 8.1→7.4, sv26 10.0→8.9). Unlike the join-view
-    * pin this deliberately does NOT touch shuffle partitions: a
-    * maintainer's first batch is a corpus-sized load with real compute
-    * that needs the session's full parallelism (an 8-partition pin
-    * measured 2-6× slower there). `graft.stream.aqe=true` restores AQE
-    * for deployments whose catch-up batches rival the corpus. */
-  private def withDrainAqe[A](s: SparkSession)(f: => A): A = {
-    ensureCkptChecksum(s)
-    val aqeK = "spark.sql.adaptive.enabled"
-    val prev = s.conf.get(aqeK)
-    s.conf.set(aqeK, s.conf.get("graft.stream.aqe", "false"))
-    try f finally s.conf.set(aqeK, prev)
+    * sv22 8.1→7.4, sv26 10.0→8.9). Shuffle partitions stay untouched: a
+    * maintainer's first batch is a corpus-sized load that needs the
+    * session's full parallelism (an 8-partition pin measured 2-6× slower). */
+  private def drain(s: SparkSession, srcOpts: Map[String, String], ckpt: String)(
+      body: (DataFrame, Long) => Unit): Unit =
+    withConfs(s, AqeKey -> "false", ckptChecksum(s)) {
+      GraftStreaming.runOnce(s.readStream.format("graft-kv").options(srcOpts).load()
+        .writeStream.foreachBatch(body).option("checkpointLocation", ckpt))
+      ()
+    }
+
+  /** `f` over `df` persisted; unpersisted on every exit path, so a batch
+    * that throws leaks no cached blocks. */
+  private def withPersisted[A](df: DataFrame)(f: DataFrame => A): A = {
+    val p = df.persist()
+    try f(p) finally p.unpersist()
   }
 
-  private def runToMemory(df: DataFrame, name: String, mode: String): Unit =
-    withStreamShuffle(df.sparkSession) {
-      // explicit RAM-backed checkpoint (see tempWorkDir) — without it the
-      // engine creates an implicit one under java.io.tmpdir (ext4 here),
-      // paying disk fsyncs for offset/commit/state files per micro-batch
-      val q = df.writeStream.outputMode(mode).format("memory").queryName(name)
-        .option("checkpointLocation",
-          tempWorkDir(df.sparkSession, s"graft-$name-ckpt").toString)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
+  /** Split bounds of a table a write may create: numeric keys in [0, max],
+    * string keys over '0'..'z' (byte-interpolated — covers digit-formatted
+    * keys), or the store's default string bounds. */
+  private def numKeys(max: Long) =
+    Some(Map("minSplitNum" -> "0", "maxSplitNum" -> max.toString))
+  private val strKeys = Some(Map("minSplit" -> "0", "maxSplit" -> "z"))
+  private val anyKeys = Some(Map.empty[String, String])
+  private val deleteMode = Map("delete" -> "true")
+
+  /** The sv family's one graft-kv batch write: `df` into `catalog` with cell
+    * stamp `stamp`. The table-creation policy lives here: a write that may
+    * create its table passes `create`, the split bounds of the reference's
+    * `newtable` DDL at 4 regions, and `versions`, the cell versions the
+    * table keeps. Delete-mode and other per-write options ride in `opts`. */
+  private def kvWrite(df: DataFrame, catalog: String, stamp: Long,
+      create: Option[Map[String, String]] = None, versions: Int = 1,
+      overwrite: Boolean = false, opts: Map[String, String] = Map.empty): Unit = {
+    val ddl = create.fold(Map.empty[String, String])(_ + ("newtable" -> "4")) ++
+      (if (versions > 1) Map("maxVersions" -> versions.toString) else Map.empty)
+    df.write.format("graft-kv")
+      .options(Map("catalog" -> catalog, "timestamp" -> stamp.toString) ++ ddl ++ opts)
+      .mode(if (overwrite) "overwrite" else "append").save()
+  }
 
   /** sv1: watermarked streaming dedup — one row per distinct
     * (user_id, event_type); the emitted key set equals batch DISTINCT. */
@@ -179,9 +174,11 @@ object StreamBatch {
         .select(col("event_id").cast("long").as("event_id"),
           col("user_id").cast("long").as("user_id"),
           col("event_type"), col("value").cast("double").as("value"))
-      GraftStreaming.runOnce(GraftStreaming.kvSink(stream, Map(
-        "catalog" -> kvSinkCatalog, "newtable" -> "4", "timestamp" -> "1000",
-        "minSplitNum" -> "0", "maxSplitNum" -> maxId.toString)))
+      withConfs(s, ckptChecksum(s)) {
+        GraftStreaming.runOnce(GraftStreaming.kvSink(stream, Map(
+          "catalog" -> kvSinkCatalog, "newtable" -> "4", "timestamp" -> "1000",
+          "minSplitNum" -> "0", "maxSplitNum" -> maxId.toString)))
+      }
     }
     s.read.format("graft-kv").option("catalog", kvSinkCatalog).load()
       .orderBy(col("event_id"))
@@ -359,15 +356,8 @@ object StreamBatch {
       col("event_type"),
       col("value").cast("double").as("value"))
     val maxId = base.agg(max(col("event_id"))).head().getLong(0)
-    def writeGen(df: DataFrame, ts: Long, overwrite: Boolean): Unit =
-      df.write.format("graft-kv")
-        .options(Map("catalog" -> sv10SourceCatalog, "newtable" -> "4",
-          "timestamp" -> ts.toString,
-          "minSplitNum" -> "0", "maxSplitNum" -> maxId.toString))
-        .mode(if (overwrite) "overwrite" else "append").save()
     val ckpt = tempWorkDir(s, "graft-sv10-ckpt").toString
-    def mirror(phaseStamp: Long): Unit = {
-      ensureCkptChecksum(s)
+    def mirror(phaseStamp: Long): Unit = withConfs(s, ckptChecksum(s)) {
       val stream = s.readStream.format("graft-kv")
         .option("catalog", sv10SourceCatalog).load()
       GraftStreaming.runOnce(GraftStreaming.kvSink(stream, Map(
@@ -379,13 +369,13 @@ object StreamBatch {
     // fresh run every invocation: gen1 recreates the source, the mirror
     // drops, and the checkpoint dir above is new
     graft.store.KvStore.drop("default:kv_cdc_mirror")
-    writeGen(base, ts = 1000, overwrite = true)
+    kvWrite(base, sv10SourceCatalog, 1000, numKeys(maxId), overwrite = true)
     mirror(phaseStamp = 10)
-    writeGen(base.filter(col("event_id") % 7 === 0)
-      .withColumn("value", col("value") + 1000000.0d), ts = 2000, overwrite = false)
+    kvWrite(base.filter(col("event_id") % 7 === 0)
+      .withColumn("value", col("value") + 1000000.0d), sv10SourceCatalog, 2000, numKeys(maxId))
     mirror(phaseStamp = 20)
-    writeGen(base.filter(col("event_id") % 13 === 0)
-      .withColumn("value", col("value") + 2000000.0d), ts = 3000, overwrite = false)
+    kvWrite(base.filter(col("event_id") % 13 === 0)
+      .withColumn("value", col("value") + 2000000.0d), sv10SourceCatalog, 3000, numKeys(maxId))
     mirror(phaseStamp = 30)
     s.read.format("graft-kv")
       .options(Map("catalog" -> sv10SinkCatalog, "maxVersions" -> "4",
@@ -435,50 +425,25 @@ object StreamBatch {
     val maxId = base.agg(max(col("event_id"))).head().getLong(0)
     val srcParsed = graft.catalog.GraftCatalog.parse(sv11SourceCatalog, Map.empty)
     val mirParsed = graft.catalog.GraftCatalog.parse(sv11MirrorCatalog, Map.empty)
-    def writeGen(df: DataFrame, ts: Long, overwrite: Boolean): Unit =
-      df.write.format("graft-kv")
-        .options(Map("catalog" -> sv11SourceCatalog, "newtable" -> "4",
-          "timestamp" -> ts.toString,
-          "minSplitNum" -> "0", "maxSplitNum" -> maxId.toString))
-        .mode(if (overwrite) "overwrite" else "append").save()
     val ckpt = tempWorkDir(s, "graft-sv11-ckpt").toString
-    def mirrorApply(phaseStamp: Long): Unit = {
-      val stream = s.readStream.format("graft-kv")
-        .option("catalog", sv11SourceCatalog).option("tombstones", "true").load()
-      withDrainAqe(s) { // per-batch jobs are broadcasts/slivers: AQE only re-plans (see helper)
-      val q = stream.writeStream
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          // the batch frame feeds three actions (tombstone write, isEmpty
-          // probe, upsert write); pinning it reads the source slice once
-          // per batch instead of three times — batch-proportional memory
-          val b = df.persist()
-          // tombstones mirror as DISTRIBUTED delete-writes (delete=true):
-          // each task drops its own region slice's keys — no driver
-          // round-trip of the deleted-id set
-          b.filter(col("_deleted")).select(col("event_id"))
-            .write.format("graft-kv")
-            .options(Map("catalog" -> sv11MirrorCatalog, "delete" -> "true",
-              "timestamp" -> phaseStamp.toString, "newtable" -> "4",
-              "minSplitNum" -> "0", "maxSplitNum" -> maxId.toString))
-            .mode("append").save()
+    def mirrorApply(phaseStamp: Long): Unit =
+      drain(s, Map("catalog" -> sv11SourceCatalog, "tombstones" -> "true"), ckpt) {
+        // the batch frame feeds three actions (tombstone write, isEmpty
+        // probe, upsert write); pinning it reads the source slice once per
+        // batch instead of three times — batch-proportional memory
+        (df, _) => withPersisted(df) { b =>
+          // tombstones mirror as DISTRIBUTED delete-writes: each task drops
+          // its own region slice's keys — no driver round-trip of the
+          // deleted-id set
+          kvWrite(b.filter(col("_deleted")).select(col("event_id")),
+            sv11MirrorCatalog, phaseStamp, numKeys(maxId), opts = deleteMode)
           val ups = b.filter(!col("_deleted")).drop("_deleted", "_cell_ts")
-          if (!ups.isEmpty)
-            ups.write.format("graft-kv")
-              .options(Map("catalog" -> sv11MirrorCatalog, "newtable" -> "4",
-                "timestamp" -> phaseStamp.toString,
-                "minSplitNum" -> "0", "maxSplitNum" -> maxId.toString))
-              .mode("append").save()
-          b.unpersist()
-          ()
+          if (!ups.isEmpty) kvWrite(ups, sv11MirrorCatalog, phaseStamp, numKeys(maxId))
         }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      } // withDrainAqe
-    }
+      }
     // fresh run every invocation (same protocol as sv10)
     KvStore.drop(mirParsed.qualifiedName)
-    writeGen(base, ts = 1000, overwrite = true)
+    kvWrite(base, sv11SourceCatalog, 1000, numKeys(maxId), overwrite = true)
     mirrorApply(phaseStamp = 10)
     // ranged DELETE on the source — streams as _deleted=true tombstones
     val hrf = FilterCompiler.compileAll(srcParsed, Seq(
@@ -487,8 +452,8 @@ object StreamBatch {
     KvStore.table(srcParsed.qualifiedName).delete(hrf.ranges, hrf.pred, stamp = 2000)
     mirrorApply(phaseStamp = 20)
     // update wave: re-puts %7 ids (resurrecting deleted ones) with new values
-    writeGen(base.filter(col("event_id") % 7 === 0)
-      .withColumn("value", col("value") + 1000000.0d), ts = 3000, overwrite = false)
+    kvWrite(base.filter(col("event_id") % 7 === 0)
+      .withColumn("value", col("value") + 1000000.0d), sv11SourceCatalog, 3000, numKeys(maxId))
     mirrorApply(phaseStamp = 30)
     s.read.format("graft-kv")
       .option("catalog", sv11MirrorCatalog).load()
@@ -568,19 +533,13 @@ object StreamBatch {
     * the batch per-source (n_docs, n_tokens) over the FINAL corpus state —
     * the incremental-materialized-view contract, with no corpus rescan. */
   def sv17StreamMixtureStats(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val base = Tables.documents(s, dir).select(
       col("doc_id").cast("long").as("doc_id"), col("source"), col("text"))
     val maxId = base.agg(max(col("doc_id"))).head().getLong(0)
-    def writeGen(df: DataFrame, ts: Long, overwrite: Boolean): Unit =
-      df.write.format("graft-kv")
-        .options(Map("catalog" -> sv17SourceCatalog, "newtable" -> "4",
-          "timestamp" -> ts.toString,
-          "minSplitNum" -> "0", "maxSplitNum" -> maxId.toString))
-        .mode(if (overwrite) "overwrite" else "append").save()
     val sink = tempWorkDir(s, "graft-sv17-sink").toString
     val ckpt = tempWorkDir(s, "graft-sv17-ckpt").toString
-    def drain(): Unit = withStreamShuffle(s) {
+    // a stateful stream: the memory-sink streams' 8-partition pin
+    def drainDeltas(): Unit = withConfs(s, ShuffleKey -> "8", ckptChecksum(s)) {
       // tombstones=true surfaces `_cell_ts` as a real column — the CDC
       // stamp mixtureDeltaStream uses to apply versions newest-wins,
       // independent of within-batch arrival order (no deletes occur in
@@ -588,14 +547,12 @@ object StreamBatch {
       val stream = s.readStream.format("graft-kv")
         .option("catalog", sv17SourceCatalog).option("tombstones", "true")
         .load().filter(!col("_deleted"))
-      val q = GraftStreaming.mixtureDeltaStream(stream).writeStream
+      GraftStreaming.runOnce(GraftStreaming.mixtureDeltaStream(stream).writeStream
         .outputMode("append").format("parquet")
-        .option("path", sink).option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+        .option("path", sink).option("checkpointLocation", ckpt))
     }
-    writeGen(base, ts = 1000, overwrite = true)
-    drain()
+    kvWrite(base, sv17SourceCatalog, 1000, numKeys(maxId), overwrite = true)
+    drainDeltas()
     val gen2 = base.filter(col("doc_id") % 5 === 0 || col("doc_id") % 11 === 0)
       .withColumn("text", when(col("doc_id") % 5 === 0,
         concat(col("text"), lit(" extra extra extra"))).otherwise(col("text")))
@@ -604,12 +561,14 @@ object StreamBatch {
       .unionByName(s.range(maxId + 1, maxId + 11).select(
         col("id").as("doc_id"), lit("newsrc").as("source"),
         concat(lit("brand new doc "), col("id").cast("string")).as("text")))
-    writeGen(gen2, ts = 2000, overwrite = false)
-    drain()
+    kvWrite(gen2, sv17SourceCatalog, 2000, numKeys(maxId))
+    drainDeltas()
+    // materialized: the sink dir goes when the entry returns
     s.read.parquet(sink)
       .groupBy(col("source"))
       .agg(sum(col("d_docs")).as("n_docs"), sum(col("d_tokens")).as("n_tokens"))
       .orderBy(col("source"))
+      .localCheckpoint()
   }
 
   val sv17Sql: String =
@@ -635,28 +594,13 @@ object StreamBatch {
       col("value").cast("double").as("value"))
     val maxId = base.agg(max(col("event_id"))).head().getLong(0)
     val srcParsed = graft.catalog.GraftCatalog.parse(sv15SourceCatalog, Map.empty)
-    def writeGen(df: DataFrame, ts: Long, overwrite: Boolean): Unit =
-      df.write.format("graft-kv")
-        .options(Map("catalog" -> sv15SourceCatalog, "newtable" -> "4",
-          "timestamp" -> ts.toString,
-          "minSplitNum" -> "0", "maxSplitNum" -> maxId.toString))
-        .mode(if (overwrite) "overwrite" else "append").save()
     val logDir = tempWorkDir(s, "graft-sv15-log").toString
     val ckpt = tempWorkDir(s, "graft-sv15-ckpt").toString
-    def appendLog(): Unit = {
-      withDrainAqe(s) { // per-batch jobs are broadcasts/slivers: AQE only re-plans (see helper)
-      val q = s.readStream.format("graft-kv")
-        .option("catalog", sv15SourceCatalog).option("tombstones", "true").load()
-        .writeStream
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          df.write.mode("append").parquet(logDir); ()
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      } // withDrainAqe
-    }
-    writeGen(base, ts = 1000, overwrite = true)
+    def appendLog(): Unit =
+      drain(s, Map("catalog" -> sv15SourceCatalog, "tombstones" -> "true"), ckpt) {
+        (df, _) => df.write.mode("append").parquet(logDir)
+      }
+    kvWrite(base, sv15SourceCatalog, 1000, numKeys(maxId), overwrite = true)
     appendLog()
     val hrf = graft.datasource.FilterCompiler.compileAll(srcParsed, Seq(
       org.apache.spark.sql.sources.GreaterThanOrEqual("event_id", 100L),
@@ -664,10 +608,11 @@ object StreamBatch {
     graft.store.KvStore.table(srcParsed.qualifiedName)
       .delete(hrf.ranges, hrf.pred, stamp = 2000)
     appendLog()
-    writeGen(base.filter(col("event_id") % 7 === 0)
-      .withColumn("value", col("value") + 1000000.0d), ts = 3000, overwrite = false)
+    kvWrite(base.filter(col("event_id") % 7 === 0)
+      .withColumn("value", col("value") + 1000000.0d), sv15SourceCatalog, 3000, numKeys(maxId))
     appendLog()
-    // merge-on-read: newest log row per key wins; tombstones suppress
+    // merge-on-read: newest log row per key wins; tombstones suppress.
+    // Materialized: the log dir goes when the entry returns
     val w = Window.partitionBy(col("event_id"))
       .orderBy(col("_cell_ts").desc, col("_deleted").asc)
     s.read.parquet(logDir)
@@ -675,6 +620,7 @@ object StreamBatch {
       .filter(col("__rn") === 1 && !col("_deleted"))
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
       .orderBy(col("event_id"))
+      .localCheckpoint()
   }
 
   /** Same final state as sv11 — identical source protocol, lakehouse sink. */
@@ -728,12 +674,8 @@ object StreamBatch {
       .filter(length(col("term")) > 0)
       .withColumn("ik", concat(col("term"), lit(sep),
         format_string("%012d", col("doc_id"))))
-    val stream = s.readStream.format("graft-kv")
-      .option("catalog", srcCatalog).option("tombstones", "true").load()
-    withDrainAqe(s) { // per-batch jobs are broadcasts/slivers: AQE only re-plans (see helper)
-    val q = stream.writeStream
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        val changed = df.select(col("doc_id"), col("text"), col("_deleted")).cache()
+    drain(s, Map("catalog" -> srcCatalog, "tombstones" -> "true"), ckpt) { (df, _) =>
+      withPersisted(df.select(col("doc_id"), col("text"), col("_deleted"))) { changed =>
         // before the first batch no mirror exists — nothing old to retire
         val haveMirror = KvStore.exists(fwdName)
         if (!changed.isEmpty) {
@@ -752,38 +694,20 @@ object StreamBatch {
               .option("catalog", fwdCatalog).load()
               .join(broadcast(changed.select("doc_id").distinct()),
                 Seq("doc_id"), "leftsemi")
-            pairsOf(oldDocs).select(col("ik"))
-              .write.format("graft-kv")
-              .options(Map("catalog" -> idxCatalog, "delete" -> "true",
-                "timestamp" -> phaseStamp.toString))
-              .mode("append").save()
+            kvWrite(pairsOf(oldDocs).select(col("ik")), idxCatalog, phaseStamp,
+              opts = deleteMode)
             // 2. forward mirror: deleted docs die the same way
-            changed.filter(col("_deleted")).select(col("doc_id"))
-              .write.format("graft-kv")
-              .options(Map("catalog" -> fwdCatalog, "delete" -> "true",
-                "timestamp" -> phaseStamp.toString))
-              .mode("append").save()
+            kvWrite(changed.filter(col("_deleted")).select(col("doc_id")), fwdCatalog,
+              phaseStamp, opts = deleteMode)
           }
           val ups = changed.filter(!col("_deleted")).select(col("doc_id"), col("text"))
-          ups.write.format("graft-kv")
-            .options(Map("catalog" -> fwdCatalog, "newtable" -> "4",
-              "timestamp" -> phaseStamp.toString,
-              "minSplitNum" -> "0", "maxSplitNum" -> maxId.toString))
-            .mode("append").save()
+          kvWrite(ups, fwdCatalog, phaseStamp, numKeys(maxId))
           // 3. insert the new index pairs
-          pairsOf(ups).select(col("ik"), col("term"), col("doc_id"))
-            .write.format("graft-kv")
-            .options(Map("catalog" -> idxCatalog, "newtable" -> "4",
-              "timestamp" -> phaseStamp.toString))
-            .mode("append").save()
+          kvWrite(pairsOf(ups).select(col("ik"), col("term"), col("doc_id")), idxCatalog,
+            phaseStamp, anyKeys)
         }
-        changed.unpersist()
-        ()
       }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    } // withDrainAqe
+    }
   }
 
   def sv12StreamCdcIndex(s: SparkSession, dir: String): DataFrame = {
@@ -795,12 +719,6 @@ object StreamBatch {
     val maxId = base.agg(max(col("doc_id"))).head().getLong(0)
     val fwdParsed = graft.catalog.GraftCatalog.parse(sv12FwdCatalog, Map.empty)
     val idxParsed = graft.catalog.GraftCatalog.parse(sv12IdxCatalog, Map.empty)
-    def writeSrc(df: DataFrame, ts: Long, overwrite: Boolean): Unit =
-      df.write.format("graft-kv")
-        .options(Map("catalog" -> sv12SrcCatalog, "newtable" -> "4",
-          "timestamp" -> ts.toString,
-          "minSplitNum" -> "0", "maxSplitNum" -> maxId.toString))
-        .mode(if (overwrite) "overwrite" else "append").save()
     val ckpt = tempWorkDir(s, "graft-sv12-ckpt").toString
     def applyBatch(phaseStamp: Long): Unit =
       maintainCdcIndex(s, sv12SrcCatalog, sv12FwdCatalog, sv12IdxCatalog,
@@ -808,7 +726,7 @@ object StreamBatch {
     // fresh run every invocation
     KvStore.drop(fwdParsed.qualifiedName)
     KvStore.drop(idxParsed.qualifiedName)
-    writeSrc(base, ts = 1000, overwrite = true)
+    kvWrite(base, sv12SrcCatalog, 1000, numKeys(maxId), overwrite = true)
     applyBatch(phaseStamp = 10)
     val hrf = FilterCompiler.compileAll(
       graft.catalog.GraftCatalog.parse(sv12SrcCatalog, Map.empty), Seq(
@@ -816,9 +734,9 @@ object StreamBatch {
         org.apache.spark.sql.sources.LessThanOrEqual("doc_id", 199L))).exactOrThrow("CDC DELETE")
     KvStore.table("default:kv_idx_src").delete(hrf.ranges, hrf.pred, stamp = 2000)
     applyBatch(phaseStamp = 20)
-    writeSrc(base.filter(col("doc_id") % 9 === 0)
-      .withColumn("text", concat(col("text"), lit(" zzznewterm"))), ts = 3000,
-      overwrite = false)
+    kvWrite(base.filter(col("doc_id") % 9 === 0)
+      .withColumn("text", concat(col("text"), lit(" zzznewterm"))), sv12SrcCatalog, 3000,
+      numKeys(maxId))
     applyBatch(phaseStamp = 30)
     // the answer: the maintained index aggregated into px26's capped form
     val pairs = s.read.format("graft-kv")
@@ -880,38 +798,18 @@ object StreamBatch {
       col("event_type"),
       col("value").cast("double").as("value"))
     val maxId = base.agg(max(col("event_id"))).head().getLong(0)
-    def writeGen(df: DataFrame, ts: Long, overwrite: Boolean): Unit =
-      df.write.format("graft-kv")
-        .options(Map("catalog" -> sv13SrcCatalog, "newtable" -> "4",
-          "timestamp" -> ts.toString,
-          "minSplitNum" -> "0", "maxSplitNum" -> maxId.toString))
-        .mode(if (overwrite) "overwrite" else "append").save()
     // fresh run every invocation
     graft.store.KvStore.drop("default:kv_cap_mirror")
-    writeGen(base, ts = 1000, overwrite = true)
-    writeGen(base.filter(col("event_id") % 5 === 0)
-      .withColumn("value", col("value") + 1000000.0d), ts = 2000, overwrite = false)
-    writeGen(base.filter(col("event_id") % 11 === 0)
-      .withColumn("value", col("value") + 2000000.0d), ts = 3000, overwrite = false)
-    val ckpt = tempWorkDir(s, "graft-sv13-ckpt").toString
-    withDrainAqe(s) { // per-batch jobs are broadcasts/slivers: AQE only re-plans (see helper)
-    val q = s.readStream.format("graft-kv")
-      .option("catalog", sv13SrcCatalog)
-      .option("maxRowsPerBatch", "1") // one stamp generation per micro-batch
-      .load()
-      .writeStream
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        df.write.format("graft-kv")
-          .options(Map("catalog" -> sv13MirCatalog, "newtable" -> "4",
-            "timestamp" -> (10 + batchId).toString,
-            "minSplitNum" -> "0", "maxSplitNum" -> maxId.toString))
-          .mode("append").save()
-        ()
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    } // withDrainAqe
+    kvWrite(base, sv13SrcCatalog, 1000, numKeys(maxId), overwrite = true)
+    kvWrite(base.filter(col("event_id") % 5 === 0)
+      .withColumn("value", col("value") + 1000000.0d), sv13SrcCatalog, 2000, numKeys(maxId))
+    kvWrite(base.filter(col("event_id") % 11 === 0)
+      .withColumn("value", col("value") + 2000000.0d), sv13SrcCatalog, 3000, numKeys(maxId))
+    // maxRowsPerBatch=1: one stamp generation per micro-batch
+    drain(s, Map("catalog" -> sv13SrcCatalog, "maxRowsPerBatch" -> "1"),
+        tempWorkDir(s, "graft-sv13-ckpt").toString) { (df, batchId) =>
+      kvWrite(df, sv13MirCatalog, 10 + batchId, numKeys(maxId))
+    }
     s.read.format("graft-kv").option("catalog", sv13MirCatalog).load()
       .orderBy(col("event_id"))
   }
@@ -1067,145 +965,115 @@ object StreamBatch {
     * entries, and mirror rows upsert per batch. */
   private[graft] def maintainNearDupIndex(s: SparkSession, srcCatalog: String,
       fwdCatalog: String, idxCatalog: String, pairsCatalog: String,
-      maxId: Long, ckpt: String): Unit = {
-    def kvWrite(df: DataFrame, cat: String, ts: Long): Unit = {
-      // numeric presplits for the doc_id-keyed mirror; byte-interpolated
-      // string presplits ('0'..'z' covers the digit-formatted keys) for the
-      // string-keyed index and pairs tables
-      val splits =
-        if (cat == fwdCatalog) Map("minSplitNum" -> "0", "maxSplitNum" -> maxId.toString)
-        else Map("minSplit" -> "0", "maxSplit" -> "z")
-      df.write.format("graft-kv")
-        .options(Map("catalog" -> cat, "newtable" -> "4",
-          "timestamp" -> ts.toString) ++ splits)
-        .mode("append").save()
-    }
-    withDrainAqe(s) { // per-batch jobs are broadcasts/slivers: AQE only re-plans (see helper)
-    val q = s.readStream.format("graft-kv")
-      .option("catalog", srcCatalog)
-      .option("maxRowsPerBatch", "1") // one stamp generation per micro-batch
-      .load()
-      .writeStream
-      .foreachBatch { (b: DataFrame, batchId: Long) =>
-        // The batch frames below are each consumed by SEVERAL actions /
-        // plan branches (newBands feeds the prefix collect, both sides of
-        // the new×new self-join, the new×old join, and the index append;
-        // docs feeds the sketch, the rerank union, and the mirror append;
-        // sh joins twice into the rerank; candIds gates the mirror sliver
-        // and the rerank semi-join). All are BATCH-proportional —
-        // ≤ new-docs × bands rows — so pinning them trades bounded memory
-        // for not re-tokenizing / re-minhashing the batch up to 5×.
-        val docs = b.select(col("doc_id"), col("text")).persist()
+      maxId: Long, ckpt: String): Unit =
+    // maxRowsPerBatch=1: one stamp generation per micro-batch
+    drain(s, Map("catalog" -> srcCatalog, "maxRowsPerBatch" -> "1"), ckpt) { (b, batchId) =>
+      // The batch frames below are each consumed by SEVERAL actions /
+      // plan branches (newBands feeds the prefix collect, both sides of
+      // the new×new self-join, the new×old join, and the index append;
+      // docs feeds the sketch, the rerank union, and the mirror append;
+      // sh joins twice into the rerank; candIds gates the mirror sliver
+      // and the rerank semi-join). All are BATCH-proportional —
+      // ≤ new-docs × bands rows — so pinning them trades bounded memory
+      // for not re-tokenizing / re-minhashing the batch up to 5×.
+      withPersisted(b.select(col("doc_id"), col("text"))) { docs =>
         val toks = docs
           .select(col("doc_id").as("id"), graft.pipeline.TextOps.tokens(col("text")).as("toks"))
           .filter(size(col("toks")) > 0)
-        val newBands = toks
-          .select(col("id"),
-            posexplode(graft.functions.HashExprs.minhashBands(col("toks"), 32, 16)))
-          .withColumnsRenamed(Map("pos" -> "band", "col" -> "bh"))
-          .persist()
-        // Steady-state CDC batches are small: their distinct (band, bh)
-        // pairs (≤ new-docs × 16, bounded by BATCH size, never corpus
-        // size) collect cheaply and compile into pushed ik prefix ranges,
-        // so the persisted index scan reads only the batch's bucket
-        // slivers. The prefix set is BY-NAME: for a small index the
-        // lookup answers with the full scan without even running the
-        // prefix job. When it does run, ONE bounded job decides both the
-        // guard and the prefix set: limit(cap + 1) caps driver memory,
-        // and a result past the cap means the batch's buckets blanket
-        // the index — the full scan it falls back to is the right plan
-        // there. The lookup self-decides sliver-vs-full-scan (state
-        // size + cap + index-size ratio) — callers re-join on (band, bh)
-        // either way.
-        val oldIdx = bandIndexLookup(s, idxCatalog, newBands
-            .select(format_string("%02d:%021d:", col("band"), col("bh")).as("p"))
-            .distinct().limit(MaxPushedBandPrefixes + 1)
-            .collect().map(_.getString(0)))
-          .select(col("band"), col("bh"), col("doc_id").as("old_id"))
-        val nn = newBands.as("x").join(newBands.as("y"), Seq("band", "bh"))
-          .filter(col("x.id") < col("y.id"))
-          .select(col("x.id").as("ida"), col("y.id").as("idb"))
-        val no = newBands.join(oldIdx, Seq("band", "bh"))
-          .select(least(col("id"), col("old_id")).as("ida"),
-            greatest(col("id"), col("old_id")).as("idb"))
-        // cand feeds candIds AND the accepted-pair join — pinned so the
-        // index-sliver read and the bucket joins run once per batch
-        val cand = nn.union(no).distinct().persist()
-        // rerank shingles ONLY for candidate docs — a semi-join restriction
-        // before the sketch, not after: at scale the corpus+mirror union is
-        // everything ever ingested, and sketching it per batch would be a
-        // full re-read; the candidate sliver is what the LSH stage exists
-        // to produce
-        val candIds = cand.select(col("ida").as("doc_id"))
-          .union(cand.select(col("idb").as("doc_id"))).distinct().persist()
-        // OLD candidates' text comes from the mirror as a capped-In POINT
-        // sliver on its doc_id rowkey — the mirror is everything ever
-        // ingested, and scanning it per batch would be the one
-        // corpus-proportional term left in the protocol
-        val oldCandIds = candIds
-          .join(docs.select(col("doc_id")), Seq("doc_id"), "leftanti")
-        val fwdSliver = mirrorLookup(s, fwdCatalog, "", oldCandIds,
-          idCol = "doc_id").select(col("doc_id"), col("text"))
-        val sh = docs.unionByName(fwdSliver)
-          .join(candIds, Seq("doc_id"), "leftsemi")
-          .select(col("doc_id").as("id"), graft.pipeline.TextOps.tokens(col("text")).as("toks"))
-          .filter(size(col("toks")) > 0)
-          .select(col("id"), graft.functions.HashExprs.sortedShingles(col("toks")).as("sh"))
-          .persist()
-        val accepted = cand
-          .join(sh.select(col("id").as("ida"), col("sh").as("sh_a")), Seq("ida"))
-          .join(sh.select(col("id").as("idb"), col("sh").as("sh_b")), Seq("idb"))
-          .withColumn("jaccard", graft.pipeline.Dedup.jaccard(col("sh_a"), col("sh_b")))
-          .filter(col("jaccard") >= 0.8)
-          .select(format_string("%012d:%012d", col("ida"), col("idb")).as("pk"),
-            col("ida").as("id_a"), col("idb").as("id_b"), col("jaccard"))
-        kvWrite(accepted, pairsCatalog, ts = 10 + batchId)
-        kvWrite(newBands.select(
-          format_string("%02d:%021d:%012d", col("band"), col("bh"), col("id")).as("ik"),
-          col("band"), col("bh"), col("id").as("doc_id")), idxCatalog, ts = 10 + batchId)
-        kvWrite(docs, fwdCatalog, ts = 10 + batchId)
-        Seq(sh, newBands, docs, cand, candIds).foreach(_.unpersist())
-        ()
+        withPersisted(toks
+            .select(col("id"),
+              posexplode(graft.functions.HashExprs.minhashBands(col("toks"), 32, 16)))
+            .withColumnsRenamed(Map("pos" -> "band", "col" -> "bh"))) { newBands =>
+          // Steady-state CDC batches are small: their distinct (band, bh)
+          // pairs (≤ new-docs × 16, bounded by BATCH size, never corpus
+          // size) collect cheaply and compile into pushed ik prefix ranges,
+          // so the persisted index scan reads only the batch's bucket
+          // slivers. The prefix set is BY-NAME: for a small index the
+          // lookup answers with the full scan without even running the
+          // prefix job. When it does run, ONE bounded job decides both the
+          // guard and the prefix set: limit(cap + 1) caps driver memory,
+          // and a result past the cap means the batch's buckets blanket
+          // the index — the full scan it falls back to is the right plan
+          // there. The lookup self-decides sliver-vs-full-scan (state
+          // size + cap + index-size ratio) — callers re-join on (band, bh)
+          // either way.
+          val oldIdx = bandIndexLookup(s, idxCatalog, newBands
+              .select(format_string("%02d:%021d:", col("band"), col("bh")).as("p"))
+              .distinct().limit(MaxPushedBandPrefixes + 1)
+              .collect().map(_.getString(0)))
+            .select(col("band"), col("bh"), col("doc_id").as("old_id"))
+          val nn = newBands.as("x").join(newBands.as("y"), Seq("band", "bh"))
+            .filter(col("x.id") < col("y.id"))
+            .select(col("x.id").as("ida"), col("y.id").as("idb"))
+          val no = newBands.join(oldIdx, Seq("band", "bh"))
+            .select(least(col("id"), col("old_id")).as("ida"),
+              greatest(col("id"), col("old_id")).as("idb"))
+          // cand feeds candIds AND the accepted-pair join — pinned so the
+          // index-sliver read and the bucket joins run once per batch
+          withPersisted(nn.union(no).distinct()) { cand =>
+            // rerank shingles ONLY for candidate docs — a semi-join restriction
+            // before the sketch, not after: at scale the corpus+mirror union is
+            // everything ever ingested, and sketching it per batch would be a
+            // full re-read; the candidate sliver is what the LSH stage exists
+            // to produce
+            withPersisted(cand.select(col("ida").as("doc_id"))
+                .union(cand.select(col("idb").as("doc_id"))).distinct()) { candIds =>
+              // OLD candidates' text comes from the mirror as a capped-In POINT
+              // sliver on its doc_id rowkey — the mirror is everything ever
+              // ingested, and scanning it per batch would be the one
+              // corpus-proportional term left in the protocol
+              val oldCandIds = candIds
+                .join(docs.select(col("doc_id")), Seq("doc_id"), "leftanti")
+              val fwdSliver = mirrorLookup(s, fwdCatalog, "", oldCandIds,
+                idCol = "doc_id").select(col("doc_id"), col("text"))
+              withPersisted(docs.unionByName(fwdSliver)
+                  .join(candIds, Seq("doc_id"), "leftsemi")
+                  .select(col("doc_id").as("id"),
+                    graft.pipeline.TextOps.tokens(col("text")).as("toks"))
+                  .filter(size(col("toks")) > 0)
+                  .select(col("id"),
+                    graft.functions.HashExprs.sortedShingles(col("toks")).as("sh"))) { sh =>
+                val accepted = cand
+                  .join(sh.select(col("id").as("ida"), col("sh").as("sh_a")), Seq("ida"))
+                  .join(sh.select(col("id").as("idb"), col("sh").as("sh_b")), Seq("idb"))
+                  .withColumn("jaccard", graft.pipeline.Dedup.jaccard(col("sh_a"), col("sh_b")))
+                  .filter(col("jaccard") >= 0.8)
+                  .select(format_string("%012d:%012d", col("ida"), col("idb")).as("pk"),
+                    col("ida").as("id_a"), col("idb").as("id_b"), col("jaccard"))
+                // numeric presplits for the doc_id-keyed mirror, string presplits
+                // for the string-keyed index and pairs tables
+                kvWrite(accepted, pairsCatalog, 10 + batchId, strKeys)
+                kvWrite(newBands.select(
+                    format_string("%02d:%021d:%012d", col("band"), col("bh"), col("id")).as("ik"),
+                    col("band"), col("bh"), col("id").as("doc_id")),
+                  idxCatalog, 10 + batchId, strKeys)
+                kvWrite(docs, fwdCatalog, 10 + batchId, numKeys(maxId))
+              }
+            }
+          }
+        }
       }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    } // withDrainAqe
-  }
+    }
 
   def sv14StreamIncrNeardup(s: SparkSession, dir: String): DataFrame = {
     import graft.store.KvStore
     val base = Tables.documents(s, dir)
       .select(col("doc_id").cast("long").as("doc_id"), col("text"))
     val maxId = base.agg(max(col("doc_id"))).head().getLong(0)
-    def writeSrc(df: DataFrame, ts: Long, overwrite: Boolean): Unit =
-      df.write.format("graft-kv")
-        .options(Map("catalog" -> sv14SrcCatalog, "newtable" -> "4",
-          "timestamp" -> ts.toString,
-          "minSplitNum" -> "0", "maxSplitNum" -> maxId.toString))
-        .mode(if (overwrite) "overwrite" else "append").save()
     // fresh run every invocation
     Seq("default:kv_nd_fwd", "default:kv_nd_idx", "default:kv_nd_pairs")
       .foreach(KvStore.drop)
     (0 to 2).foreach { g =>
-      writeSrc(base.filter(col("doc_id") % 3 === g), ts = 1000L * (g + 1),
-        overwrite = g == 0)
-    }
-    def kvInit(df: DataFrame, cat: String): Unit = {
-      val splits =
-        if (cat == sv14FwdCatalog) Map("minSplitNum" -> "0", "maxSplitNum" -> maxId.toString)
-        else Map("minSplit" -> "0", "maxSplit" -> "z")
-      df.write.format("graft-kv")
-        .options(Map("catalog" -> cat, "newtable" -> "4", "timestamp" -> "1") ++ splits)
-        .mode("append").save()
+      kvWrite(base.filter(col("doc_id") % 3 === g), sv14SrcCatalog, 1000L * (g + 1),
+        numKeys(maxId), overwrite = g == 0)
     }
     // pre-create the mirror/index/pairs tables (empty): the FIRST batch
     // already reads them for its index lookup
-    kvInit(base.limit(0), sv14FwdCatalog)
-    kvInit(s.range(0).select(lit("").as("ik"), lit(0).as("band"),
-      lit(0L).as("bh"), lit(0L).as("doc_id")), sv14IdxCatalog)
-    kvInit(s.range(0).select(lit("").as("pk"), lit(0L).as("id_a"),
-      lit(0L).as("id_b"), lit(0.0d).as("jaccard")), sv14PairsCatalog)
+    kvWrite(base.limit(0), sv14FwdCatalog, 1, numKeys(maxId))
+    kvWrite(s.range(0).select(lit("").as("ik"), lit(0).as("band"),
+      lit(0L).as("bh"), lit(0L).as("doc_id")), sv14IdxCatalog, 1, strKeys)
+    kvWrite(s.range(0).select(lit("").as("pk"), lit(0L).as("id_a"),
+      lit(0L).as("id_b"), lit(0.0d).as("jaccard")), sv14PairsCatalog, 1, strKeys)
     val ckpt = tempWorkDir(s, "graft-sv14-ckpt").toString
     maintainNearDupIndex(s, sv14SrcCatalog, sv14FwdCatalog, sv14IdxCatalog,
       sv14PairsCatalog, maxId, ckpt)
@@ -1219,6 +1087,7 @@ object StreamBatch {
     * against store-resident vectors equal scores against the parquet
     * originals. */
   private[graft] val sv18AvroVec = """{"type":"array","items":"float"}"""
+  private val vecOpts = Map("annVec" -> sv18AvroVec)
 
   private[graft] val sv18SrcCatalog =
     """{"table":{"namespace":"default", "name":"kv_ann_src"},
@@ -1373,17 +1242,11 @@ object StreamBatch {
     val fwdName = graft.catalog.GraftCatalog.parse(fwdCatalog, Map.empty).qualifiedName
     def cellOf(vec: org.apache.spark.sql.Column) =
       element_at(graft.functions.VectorExprs.nearestCentroids(vec, cents, 1), 1)
-    withDrainAqe(s) { // per-batch jobs are broadcasts/slivers: AQE only re-plans (see helper)
-    val q = s.readStream.format("graft-kv")
-      .options(Map("catalog" -> srcCatalog, "annVec" -> sv18AvroVec,
-        "tombstones" -> "true"))
-      .load()
-      .writeStream
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        // three consumers (retirement probe, mirror writes, index
-        // insert) — pin the batch-proportional frame once
-        val changed = df.select(col("vec_id"), col("embedding"),
-          col("_deleted")).persist()
+    drain(s, Map("catalog" -> srcCatalog, "annVec" -> sv18AvroVec, "tombstones" -> "true"),
+        ckpt) { (df, _) =>
+      // three consumers (retirement probe, mirror writes, index
+      // insert) — pin the batch-proportional frame once
+      withPersisted(df.select(col("vec_id"), col("embedding"), col("_deleted"))) { changed =>
         val haveMirror = KvStore.exists(fwdName)
         if (!changed.isEmpty) {
           if (haveMirror) {
@@ -1394,42 +1257,23 @@ object StreamBatch {
             // never the corpus-sized mirror (oversized batches keep the
             // touched-rows contract via mirrorLookup's leftsemi fallback)
             val old = mirrorLookup(s, fwdCatalog, sv18AvroVec, changed)
-            old.select(cellOf(col("embedding")).as("cell"), col("vec_id"))
-              .write.format("graft-kv")
-              .options(Map("catalog" -> idxCatalog,
-                "delete" -> "true", "timestamp" -> phaseStamp.toString) ++ idxOpts)
-              .mode("append").save()
-            changed.filter(col("_deleted")).select(col("vec_id"))
-              .write.format("graft-kv")
-              .options(Map("catalog" -> fwdCatalog, "annVec" -> sv18AvroVec,
-                "delete" -> "true", "timestamp" -> phaseStamp.toString))
-              .mode("append").save()
+            kvWrite(old.select(cellOf(col("embedding")).as("cell"), col("vec_id")),
+              idxCatalog, phaseStamp, opts = deleteMode ++ idxOpts)
+            kvWrite(changed.filter(col("_deleted")).select(col("vec_id")), fwdCatalog,
+              phaseStamp, opts = deleteMode ++ vecOpts)
           }
           val ups = changed.filter(!col("_deleted"))
             .select(col("vec_id"), col("embedding"))
-          ups.write.format("graft-kv")
-            .options(Map("catalog" -> fwdCatalog, "annVec" -> sv18AvroVec,
-              "newtable" -> "4", "timestamp" -> (phaseStamp + 1).toString,
-              "minSplitNum" -> "0", "maxSplitNum" -> maxId.toString))
-            .mode("append").save()
+          kvWrite(ups, fwdCatalog, phaseStamp + 1, numKeys(maxId), opts = vecOpts)
           crashPoint() // worst torn window: mirror overwritten, index insert missing
           // the new inverted-file entries: presplit across CELL space, so
           // cells (and their probe slivers) spread over regions
-          ups.select(cellOf(col("embedding")).as("cell") +: col("vec_id") +:
-              covered(col("embedding")): _*)
-            .write.format("graft-kv")
-            .options(Map("catalog" -> idxCatalog,
-              "newtable" -> "4", "timestamp" -> (phaseStamp + 1).toString,
-              "minSplitNum" -> "0", "maxSplitNum" -> cents.length.toString) ++ idxOpts)
-            .mode("append").save()
+          kvWrite(ups.select(cellOf(col("embedding")).as("cell") +: col("vec_id") +:
+              covered(col("embedding")): _*),
+            idxCatalog, phaseStamp + 1, numKeys(cents.length), opts = idxOpts)
         }
-        changed.unpersist()
-        ()
       }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    } // withDrainAqe
+    }
   }
 
   def sv18StreamAnnIvf(s: SparkSession, dir: String): DataFrame = {
@@ -1449,12 +1293,6 @@ object StreamBatch {
     val srcParsed = graft.catalog.GraftCatalog.parse(sv18SrcCatalog, Map.empty)
     val fwdParsed = graft.catalog.GraftCatalog.parse(sv18FwdCatalog, Map.empty)
     val idxParsed = graft.catalog.GraftCatalog.parse(sv18IdxCatalog, Map.empty)
-    def writeSrc(df: DataFrame, ts: Long, overwrite: Boolean): Unit =
-      df.write.format("graft-kv")
-        .options(Map("catalog" -> sv18SrcCatalog, "annVec" -> sv18AvroVec,
-          "newtable" -> "4", "timestamp" -> ts.toString,
-          "minSplitNum" -> "0", "maxSplitNum" -> maxId.toString))
-        .mode(if (overwrite) "overwrite" else "append").save()
     val ckpt = tempWorkDir(s, "graft-sv18-ckpt").toString
     def applyBatch(phaseStamp: Long): Unit =
       maintainAnnIndex(s, sv18SrcCatalog, sv18FwdCatalog, sv18IdxCatalog,
@@ -1463,11 +1301,13 @@ object StreamBatch {
     Seq(fwdParsed, idxParsed).foreach(p => KvStore.drop(p.qualifiedName))
     // g0: a corrupted first generation — reversed vectors land in WRONG
     // cells, so the later correction must re-key, not just overwrite
-    writeSrc(base.filter(col("vec_id") % 3 === 0)
-      .withColumn("embedding", reverse(col("embedding"))), ts = 1000, overwrite = true)
+    kvWrite(base.filter(col("vec_id") % 3 === 0)
+      .withColumn("embedding", reverse(col("embedding"))), sv18SrcCatalog, 1000,
+      numKeys(maxId), overwrite = true, opts = vecOpts)
     applyBatch(phaseStamp = 10)
     // g1: second generation + the corrected first generation (re-keying)
-    writeSrc(base.filter(col("vec_id") % 3 <= 1), ts = 2000, overwrite = false)
+    kvWrite(base.filter(col("vec_id") % 3 <= 1), sv18SrcCatalog, 2000, numKeys(maxId),
+      opts = vecOpts)
     applyBatch(phaseStamp = 20)
     // ranged DELETE — tombstones retire index entries
     val hrf = FilterCompiler.compileAll(srcParsed, Seq(
@@ -1476,8 +1316,9 @@ object StreamBatch {
     KvStore.table(srcParsed.qualifiedName).delete(hrf.ranges, hrf.pred, stamp = 3000)
     applyBatch(phaseStamp = 30)
     // g2: last generation + resurrection of the deleted range
-    writeSrc(base.filter(col("vec_id") % 3 === 2 ||
-      (col("vec_id") >= 30 && col("vec_id") <= 90)), ts = 4000, overwrite = false)
+    kvWrite(base.filter(col("vec_id") % 3 === 2 ||
+      (col("vec_id") >= 30 && col("vec_id") <= 90)), sv18SrcCatalog, 4000, numKeys(maxId),
+      opts = vecOpts)
     applyBatch(phaseStamp = 40)
     // IVF probe over the maintained index — px13's read path, but the
     // candidate slivers come from PUSHED key ranges on the probed cells
@@ -1580,13 +1421,8 @@ object StreamBatch {
       phaseStamp: Long, n: Int = 5, crashPoint: () => Unit = () => ()): Unit = {
     import graft.store.KvStore
     val mirName = graft.catalog.GraftCatalog.parse(mirCatalog, Map.empty).qualifiedName
-    withDrainAqe(s) { // per-batch jobs are broadcasts/slivers: AQE only re-plans (see helper)
-    val q = s.readStream.format("graft-kv")
-      .option("catalog", srcCatalog).option("tombstones", "true").load()
-      .writeStream
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        val changed = df.select(col("doc_id"), col("text"), col("_deleted"))
-          .persist()
+    drain(s, Map("catalog" -> srcCatalog, "tombstones" -> "true"), ckpt) { (df, _) =>
+      withPersisted(df.select(col("doc_id"), col("text"), col("_deleted"))) { changed =>
         if (!changed.isEmpty) {
           if (KvStore.exists(mirName)) {
             // 1. retire the touched docs' OLD pairs: changed ids → In
@@ -1608,11 +1444,8 @@ object StreamBatch {
                 if (ids.length > MaxPushedBandPrefixes) idsLeftsemi
                 else mirror.filter(col("train_id").isInCollection(ids.toSeq))
               }
-            oldPairs.select(col("train_id"), col("eval_id"))
-              .write.format("graft-kv")
-              .options(Map("catalog" -> mirCatalog, "delete" -> "true",
-                "timestamp" -> phaseStamp.toString))
-              .mode("append").save()
+            kvWrite(oldPairs.select(col("train_id"), col("eval_id")), mirCatalog,
+              phaseStamp, opts = deleteMode)
           }
           crashPoint() // fault-injection seam: deletes-at-T landed, puts-at-T+1 have not
           // 2. fresh pairs for the upserted docs, against the static
@@ -1620,21 +1453,11 @@ object StreamBatch {
           //    and never a repeat of the eval-side tokenize
           val ups = changed.filter(!col("_deleted"))
             .select(col("doc_id"), col("text"))
-          graft.pipeline.Dedup.contaminationWithEvalGrams(ups, evalG,
-            "doc_id", "text", n = n, minShared = 1)
-            .write.format("graft-kv")
-            .options(Map("catalog" -> mirCatalog, "newtable" -> "4",
-              "timestamp" -> (phaseStamp + 1).toString,
-              "minSplitNum" -> "0", "maxSplitNum" -> maxId.toString))
-            .mode("append").save()
+          kvWrite(graft.pipeline.Dedup.contaminationWithEvalGrams(ups, evalG,
+            "doc_id", "text", n = n, minShared = 1), mirCatalog, phaseStamp + 1, numKeys(maxId))
         }
-        changed.unpersist()
-        ()
       }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    } // withDrainAqe
+    }
   }
 
   def sv19StreamDecontam(s: SparkSession, dir: String): DataFrame = {
@@ -1650,19 +1473,13 @@ object StreamBatch {
     val maxId = base.agg(max(col("doc_id"))).head().getLong(0)
     val srcParsed = graft.catalog.GraftCatalog.parse(sv19SrcCatalog, Map.empty)
     val mirParsed = graft.catalog.GraftCatalog.parse(sv19MirCatalog, Map.empty)
-    def writeSrc(df: DataFrame, ts: Long, overwrite: Boolean): Unit =
-      df.write.format("graft-kv")
-        .options(Map("catalog" -> sv19SrcCatalog, "newtable" -> "4",
-          "timestamp" -> ts.toString,
-          "minSplitNum" -> "0", "maxSplitNum" -> maxId.toString))
-        .mode(if (overwrite) "overwrite" else "append").save()
     val ckpt = tempWorkDir(s, "graft-sv19-ckpt").toString
     def applyBatch(phaseStamp: Long): Unit =
       maintainContamMirror(s, sv19SrcCatalog, sv19MirCatalog, evalG,
         maxId, ckpt, phaseStamp)
     // fresh run every invocation
     KvStore.drop(mirParsed.qualifiedName)
-    writeSrc(train, ts = 1000, overwrite = true)
+    kvWrite(train, sv19SrcCatalog, 1000, numKeys(maxId), overwrite = true)
     applyBatch(phaseStamp = 10)
     val hrf = FilterCompiler.compileAll(srcParsed, Seq(
       org.apache.spark.sql.sources.GreaterThanOrEqual("doc_id", 100L),
@@ -1670,14 +1487,14 @@ object StreamBatch {
     KvStore.table(srcParsed.qualifiedName).delete(hrf.ranges, hrf.pred, stamp = 2000)
     applyBatch(phaseStamp = 20)
     val inDel = col("doc_id").between(100, 199)
-    writeSrc(
+    kvWrite(
       train.filter(inDel && col("doc_id") % 2 === 0)
         .unionAll(train.filter(!inDel && col("doc_id") % 9 === 0)
           .withColumn("text", concat(col("text"), lit(" zzznewterm"))))
         .unionAll(train.filter(!inDel && col("doc_id") % 9 =!= 0 &&
             col("doc_id") % 50 === 7)
           .withColumn("text", lit("quarantine removed"))),
-      ts = 3000, overwrite = false)
+      sv19SrcCatalog, 3000, numKeys(maxId))
     applyBatch(phaseStamp = 30)
     evalG.unpersist()
     s.read.format("graft-kv").option("catalog", sv19MirCatalog).load()
@@ -1720,6 +1537,7 @@ object StreamBatch {
 
   /** Avro schema of the PQ code column: m small ints per vector. */
   private[graft] val sv20AvroCodes = """{"type":"array","items":"int"}"""
+  private val codesOpts = Map("pqCodes" -> sv20AvroCodes)
 
   private[graft] val sv20SrcCatalog =
     """{"table":{"namespace":"default", "name":"kv_pq_src"},
@@ -1747,43 +1565,24 @@ object StreamBatch {
       ckpt: String, phaseStamp: Long): Unit = {
     import graft.store.KvStore
     val codesName = graft.catalog.GraftCatalog.parse(codesCatalog, Map.empty).qualifiedName
-    withDrainAqe(s) { // per-batch jobs are broadcasts/slivers: AQE only re-plans (see helper)
-    val q = s.readStream.format("graft-kv")
-      .options(Map("catalog" -> srcCatalog, "annVec" -> sv18AvroVec,
-        "tombstones" -> "true")).load()
-      .writeStream
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        val changed = df.select(col("vec_id"), col("embedding"), col("_deleted"))
-          .persist()
+    drain(s, Map("catalog" -> srcCatalog, "annVec" -> sv18AvroVec, "tombstones" -> "true"),
+        ckpt) { (df, _) =>
+      withPersisted(df.select(col("vec_id"), col("embedding"), col("_deleted"))) { changed =>
         if (!changed.isEmpty) {
           // retirement: tombstoned ids die by key through the
           // delete-mode writer — distributed, batch-sized, no reads
           if (KvStore.exists(codesName))
-            changed.filter(col("_deleted")).select(col("vec_id"))
-              .write.format("graft-kv")
-              .options(Map("catalog" -> codesCatalog,
-                "pqCodes" -> sv20AvroCodes,
-                "delete" -> "true", "timestamp" -> phaseStamp.toString))
-              .mode("append").save()
+            kvWrite(changed.filter(col("_deleted")).select(col("vec_id")), codesCatalog,
+              phaseStamp, opts = deleteMode ++ codesOpts)
           // re-encode + overwrite: updates re-code in place one stamp
           // later (key = vec_id, version cap 1 keeps the latest)
-          changed.filter(!col("_deleted"))
+          kvWrite(changed.filter(!col("_deleted"))
             .select(col("vec_id"),
-              graft.pipeline.Similarity.pqCodes(col("embedding"), books).as("codes"))
-            .write.format("graft-kv")
-            .options(Map("catalog" -> codesCatalog,
-              "pqCodes" -> sv20AvroCodes,
-              "newtable" -> "4", "timestamp" -> (phaseStamp + 1).toString,
-              "minSplitNum" -> "0", "maxSplitNum" -> maxId.toString))
-            .mode("append").save()
+              graft.pipeline.Similarity.pqCodes(col("embedding"), books).as("codes")),
+            codesCatalog, phaseStamp + 1, numKeys(maxId), opts = codesOpts)
         }
-        changed.unpersist()
-        ()
       }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    } // withDrainAqe
+    }
   }
 
   /** sv20: INCREMENTAL PQ CODE-TABLE MAINTENANCE over CDC — the streaming
@@ -1814,31 +1613,28 @@ object StreamBatch {
     val maxId = base.agg(max(col("vec_id"))).head().getLong(0)
     val srcParsed = graft.catalog.GraftCatalog.parse(sv20SrcCatalog, Map.empty)
     val codesParsed = graft.catalog.GraftCatalog.parse(sv20CodesCatalog, Map.empty)
-    def writeSrc(df: DataFrame, ts: Long, overwrite: Boolean): Unit =
-      df.write.format("graft-kv")
-        .options(Map("catalog" -> sv20SrcCatalog, "annVec" -> sv18AvroVec,
-          "newtable" -> "4", "timestamp" -> ts.toString,
-          "minSplitNum" -> "0", "maxSplitNum" -> maxId.toString))
-        .mode(if (overwrite) "overwrite" else "append").save()
     val ckpt = tempWorkDir(s, "graft-sv20-ckpt").toString
-    def drain(phaseStamp: Long): Unit =
+    def applyBatch(phaseStamp: Long): Unit =
       maintainPqCodes(s, sv20SrcCatalog, sv20CodesCatalog, books, maxId,
         ckpt, phaseStamp)
     // fresh run every invocation
     KvStore.drop(codesParsed.qualifiedName)
-    writeSrc(base.filter(col("vec_id") % 3 === 0)
-      .withColumn("embedding", reverse(col("embedding"))), ts = 1000, overwrite = true)
-    drain(phaseStamp = 10)
-    writeSrc(base.filter(col("vec_id") % 3 <= 1), ts = 2000, overwrite = false)
-    drain(phaseStamp = 20)
+    kvWrite(base.filter(col("vec_id") % 3 === 0)
+      .withColumn("embedding", reverse(col("embedding"))), sv20SrcCatalog, 1000,
+      numKeys(maxId), overwrite = true, opts = vecOpts)
+    applyBatch(phaseStamp = 10)
+    kvWrite(base.filter(col("vec_id") % 3 <= 1), sv20SrcCatalog, 2000, numKeys(maxId),
+      opts = vecOpts)
+    applyBatch(phaseStamp = 20)
     val hrf = FilterCompiler.compileAll(srcParsed, Seq(
       org.apache.spark.sql.sources.GreaterThanOrEqual("vec_id", 30L),
       org.apache.spark.sql.sources.LessThanOrEqual("vec_id", 90L))).exactOrThrow("CDC DELETE")
     KvStore.table(srcParsed.qualifiedName).delete(hrf.ranges, hrf.pred, stamp = 3000)
-    drain(phaseStamp = 30)
-    writeSrc(base.filter(col("vec_id") % 3 === 2 ||
-      (col("vec_id") >= 30 && col("vec_id") <= 90)), ts = 4000, overwrite = false)
-    drain(phaseStamp = 40)
+    applyBatch(phaseStamp = 30)
+    kvWrite(base.filter(col("vec_id") % 3 === 2 ||
+      (col("vec_id") >= 30 && col("vec_id") <= 90)), sv20SrcCatalog, 4000, numKeys(maxId),
+      opts = vecOpts)
+    applyBatch(phaseStamp = 40)
     // search the MAINTAINED code table — px56's answer, served from codes
     val codeTable = s.read.format("graft-kv")
       .options(Map("catalog" -> sv20CodesCatalog, "pqCodes" -> sv20AvroCodes)).load()
@@ -1979,14 +1775,10 @@ object StreamBatch {
     val highWrite = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
     val srcOpts = Map("catalog" -> srcCatalog, "tombstones" -> "true") ++
       maxRowsPerBatch.map(n => "maxRowsPerBatch" -> n.toString)
-    withDrainAqe(s) { // per-batch jobs are broadcasts/slivers: AQE only re-plans (see helper)
-    val q = s.readStream.format("graft-kv").options(srcOpts).load()
-      .writeStream
-      .foreachBatch { (b: DataFrame, batchId: Long) =>
-        val stamp = (batchId + 1) * 10
-        val asOf = Map("maxStamp" -> stamp.toString)
-        val changed = b.select(col("doc_id"), col("text"), col("_deleted"))
-          .persist()
+    drain(s, srcOpts, ckpt) { (b, batchId) =>
+      val stamp = (batchId + 1) * 10
+      val asOf = Map("maxStamp" -> stamp.toString)
+      withPersisted(b.select(col("doc_id"), col("text"), col("_deleted"))) { changed =>
         if (!changed.isEmpty) {
           // OLD text of every changed id (upsert OR tombstone), as of
           // pre-batch state — stable even if this batch's own mirror
@@ -1995,75 +1787,58 @@ object StreamBatch {
             changed.select(col("doc_id")), idCol = "doc_id",
             extraOpts = asOf)
             .select(col("doc_id"), col("text"))
-          val delta = signedBigrams(olds, -1)
+          withPersisted(signedBigrams(olds, -1)
             .unionByName(signedBigrams(changed.filter(!col("_deleted")), 1))
             .groupBy(col("w1"), col("w2"))
             .agg(sum(col("w")).as("d"))
             .filter(col("d") =!= 0)
-            .withColumn("gram", concat(col("w1"), lit(" "), col("w2")))
-            .persist()
-          val current = stringKeyLookup(s, countsCatalog,
-            delta.select(col("gram")), "gram", extraOpts = asOf)
-            .select(col("gram"), col("cnt").as("old_cnt"))
-          // The negative-count guard rides INSIDE the cnt expression (a
-          // conditional raise_error evaluated by the write tasks) instead
-          // of a separate driver-blocking filter+isEmpty job per batch: a
-          // count going negative means the decrement stream no longer
-          // matches what was added (protocol bug or out-of-band state
-          // edit). The failing write makes the refused batch a
-          // PERMANENTLY TORN batch — sibling tasks' puts may have landed
-          // (the kv writer appends eagerly, there is no staging), but the
-          // checkpoint never commits, so once the out-of-band corruption
-          // is repaired a re-drain replays the batch against the same
-          // as-of state and overwrites the partial cells at the same
-          // stamps — the exact discipline every torn window here already
-          // rests on (the recovery spec pins it end to end). merged is
-          // NOT persisted: the counts write is its only consumer.
-          val rawCnt = coalesce(col("old_cnt"), lit(0L)) + col("d")
-          val merged = delta
-            .join(current, Seq("gram"), "left")
-            .select(col("gram"), col("w1"), col("w2"),
-              when(rawCnt < 0, raise_error(concat(
-                lit("maintainBigramCounts: merged count went NEGATIVE for gram '"),
-                col("gram"), lit("' — refusing to persist corrupted counts"))))
-                .otherwise(rawCnt).as("cnt"))
-          // zero-crossers write a LOGICAL zero (a regular versioned cell),
-          // never the physical delete-mode writer: a physical delete is
-          // unrecoverable under the as-of replay read, while a cnt=0 cell
-          // leaves the previous version visible below the batch stamp (the
-          // LSM discipline — logical death now, physical reclamation by
-          // an explicit compaction). Readers treat cnt=0 as dead: it adds
-          // nothing to any marginal and never passes a minCount filter.
-          merged
-            .write.format("graft-kv")
-            .options(Map("catalog" -> countsCatalog, "newtable" -> "4",
-              "maxVersions" -> "2",
-              "timestamp" -> (stamp + 1).toString,
-              "minSplit" -> "0", "maxSplit" -> "z"))
-            .mode("append").save()
-          crashPoint()
-          // mirror maintenance LAST, by the same logical-tombstone rule:
-          // a dead doc becomes EMPTY text (bigram-identical to deletion —
-          // no gram survives tokenization) so its previous version stays
-          // readable below the batch stamp for the replay's decrements
-          changed.select(col("doc_id"),
-              when(col("_deleted"), lit("")).otherwise(col("text")).as("text"))
-            .write.format("graft-kv")
-            .options(Map("catalog" -> mirrorCatalog, "newtable" -> "4",
-              "maxVersions" -> "2",
-              "timestamp" -> (stamp + 1).toString,
-              "minSplitNum" -> "0", "maxSplitNum" -> maxId.toString))
-            .mode("append").save()
-          highWrite.accumulateAndGet(stamp + 1, math.max)
-          delta.unpersist(); ()
+            .withColumn("gram", concat(col("w1"), lit(" "), col("w2")))) { delta =>
+            val current = stringKeyLookup(s, countsCatalog,
+              delta.select(col("gram")), "gram", extraOpts = asOf)
+              .select(col("gram"), col("cnt").as("old_cnt"))
+            // The negative-count guard rides INSIDE the cnt expression (a
+            // conditional raise_error evaluated by the write tasks) instead
+            // of a separate driver-blocking filter+isEmpty job per batch: a
+            // count going negative means the decrement stream no longer
+            // matches what was added (protocol bug or out-of-band state
+            // edit). The failing write makes the refused batch a
+            // PERMANENTLY TORN batch — sibling tasks' puts may have landed
+            // (the kv writer appends eagerly, there is no staging), but the
+            // checkpoint never commits, so once the out-of-band corruption
+            // is repaired a re-drain replays the batch against the same
+            // as-of state and overwrites the partial cells at the same
+            // stamps — the exact discipline every torn window here already
+            // rests on (the recovery spec pins it end to end). merged is
+            // NOT persisted: the counts write is its only consumer.
+            val rawCnt = coalesce(col("old_cnt"), lit(0L)) + col("d")
+            val merged = delta
+              .join(current, Seq("gram"), "left")
+              .select(col("gram"), col("w1"), col("w2"),
+                when(rawCnt < 0, raise_error(concat(
+                  lit("maintainBigramCounts: merged count went NEGATIVE for gram '"),
+                  col("gram"), lit("' — refusing to persist corrupted counts"))))
+                  .otherwise(rawCnt).as("cnt"))
+            // zero-crossers write a LOGICAL zero (a regular versioned cell),
+            // never the physical delete-mode writer: a physical delete is
+            // unrecoverable under the as-of replay read, while a cnt=0 cell
+            // leaves the previous version visible below the batch stamp (the
+            // LSM discipline — logical death now, physical reclamation by
+            // an explicit compaction). Readers treat cnt=0 as dead: it adds
+            // nothing to any marginal and never passes a minCount filter.
+            kvWrite(merged, countsCatalog, stamp + 1, strKeys, versions = 2)
+            crashPoint()
+            // mirror maintenance LAST, by the same logical-tombstone rule:
+            // a dead doc becomes EMPTY text (bigram-identical to deletion —
+            // no gram survives tokenization) so its previous version stays
+            // readable below the batch stamp for the replay's decrements
+            kvWrite(changed.select(col("doc_id"),
+                when(col("_deleted"), lit("")).otherwise(col("text")).as("text")),
+              mirrorCatalog, stamp + 1, numKeys(maxId), versions = 2)
+            highWrite.accumulateAndGet(stamp + 1, math.max)
+          }
         }
-        changed.unpersist()
-        ()
       }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    } // withDrainAqe
+    }
     highWrite.get()
   }
 
@@ -2115,15 +1890,13 @@ object StreamBatch {
       extraKeyCols: Seq[String] = Nil): Long = {
     val state = s.read.format("graft-kv").option("catalog", catalog).load()
     val obs = org.apache.spark.sql.Observation()
-    val dead = state
+    withPersisted(state
       .observe(obs,
         coalesce(max(col("_cell_ts")), lit(Long.MinValue)).as("hw"))
       .filter(isDead && col("_cell_ts") < horizon)
       // composite-keyed tables (extraKeyCols) must carry EVERY key part —
       // the delete-mode writer re-derives the rowkey from them
-      .select((keyCol +: extraKeyCols).map(col): _*)
-      .persist()
-    try {
+      .select((keyCol +: extraKeyCols).map(col): _*)) { dead =>
       val n = dead.count() // the one scan: the high-water metric rides it
       val highWater = graft.pipeline.GraftMetrics.observedLongOr(obs, "hw") {
         Option(state.agg(max(col("_cell_ts"))).head().get(0))
@@ -2137,13 +1910,9 @@ object StreamBatch {
           "horizon above every committed write can reclaim rows an un-run " +
           "phase still needs under its as-of read; pass a fence at or " +
           "below the last successfully drained write stamp")
-      if (n > 0)
-        dead.write.format("graft-kv")
-          .options(Map("catalog" -> catalog, "delete" -> "true",
-            "timestamp" -> horizon.toString))
-          .mode("append").save()
+      if (n > 0) kvWrite(dead, catalog, horizon, opts = deleteMode)
       n
-    } finally dead.unpersist()
+    }
   }
 
   /** sv21: INCREMENTAL BIGRAM-LM MAINTENANCE over CDC — the streaming twin
@@ -2166,52 +1935,37 @@ object StreamBatch {
       .select(col("doc_id").cast("long").as("doc_id"), col("text"))
     val maxId = base.agg(max(col("doc_id"))).head().getLong(0)
     val srcParsed = graft.catalog.GraftCatalog.parse(sv21SrcCatalog, Map.empty)
-    def writeSrc(df: DataFrame, ts: Long, overwrite: Boolean): Unit =
-      df.write.format("graft-kv")
-        .options(Map("catalog" -> sv21SrcCatalog, "newtable" -> "4",
-          "timestamp" -> ts.toString,
-          "minSplitNum" -> "0", "maxSplitNum" -> maxId.toString))
-        .mode(if (overwrite) "overwrite" else "append").save()
     // fresh run every invocation; pre-create mirror + counts (the FIRST
     // batch already point-reads both)
     Seq("default:kv_lm_mirror", "default:kv_lm_counts").foreach(KvStore.drop)
-    base.limit(0).write.format("graft-kv")
-      .options(Map("catalog" -> sv21MirrorCatalog, "newtable" -> "4",
-        "maxVersions" -> "2", "timestamp" -> "1", "minSplitNum" -> "0",
-        "maxSplitNum" -> maxId.toString))
-      .mode("append").save()
-    s.range(0).select(lit("").as("gram"), lit("").as("w1"),
-        lit("").as("w2"), lit(0L).as("cnt"))
-      .write.format("graft-kv")
-      .options(Map("catalog" -> sv21CountsCatalog, "newtable" -> "4",
-        "maxVersions" -> "2", "timestamp" -> "1",
-        "minSplit" -> "0", "maxSplit" -> "z"))
-      .mode("append").save()
+    kvWrite(base.limit(0), sv21MirrorCatalog, 1, numKeys(maxId), versions = 2)
+    kvWrite(s.range(0).select(lit("").as("gram"), lit("").as("w1"),
+      lit("").as("w2"), lit(0L).as("cnt")), sv21CountsCatalog, 1, strKeys, versions = 2)
     val ckpt = tempWorkDir(s, "graft-sv21-ckpt").toString
     // the compaction fence derives from the drain schedule: each drain
     // returns the highest stamp it wrote (per-batch stamps, see
     // maintainBigramCounts), and everything at or below the last returned
     // stamp is committed — never hard-code the fence
     var committedWrite = 0L
-    def drain(): Unit = {
+    def runDrain(): Unit = {
       val w = maintainBigramCounts(s, sv21SrcCatalog, sv21MirrorCatalog,
         sv21CountsCatalog, maxId, ckpt)
       if (w != Long.MinValue) committedWrite = math.max(committedWrite, w)
     }
     // phase 1: a corrupted first generation — grams that must later vanish
-    writeSrc(base.filter(col("doc_id") % 3 === 0)
+    kvWrite(base.filter(col("doc_id") % 3 === 0)
       .withColumn("text", concat(col("text"), lit(" zzcorrupt zzcorrupt"))),
-      ts = 1000, overwrite = true)
-    drain()
+      sv21SrcCatalog, 1000, numKeys(maxId), overwrite = true)
+    runDrain()
     // phase 2: correcting overwrite (%3==0 back to original) + new docs
-    writeSrc(base.filter(col("doc_id") % 3 <= 1), ts = 2000, overwrite = false)
-    drain()
+    kvWrite(base.filter(col("doc_id") % 3 <= 1), sv21SrcCatalog, 2000, numKeys(maxId))
+    runDrain()
     // phase 3: ranged DELETE — counts of [100,300]'s grams must decrement
     val hrf = FilterCompiler.compileAll(srcParsed, Seq(
       org.apache.spark.sql.sources.GreaterThanOrEqual("doc_id", 100L),
       org.apache.spark.sql.sources.LessThanOrEqual("doc_id", 300L))).exactOrThrow("CDC DELETE")
     KvStore.table(srcParsed.qualifiedName).delete(hrf.ranges, hrf.pred, stamp = 3000)
-    drain()
+    runDrain()
     // scheduled compaction mid-stream: reclaim logical tombstones behind
     // the committed watermark (phase 1/2's zero-crossers — the corrupted
     // generation's grams — die physically here; phase 3's zeros at stamp
@@ -2228,9 +1982,9 @@ object StreamBatch {
       length(col("text")) === 0, horizon = committedWrite,
       committedStamp = Some(committedWrite))
     // phase 4: resurrection + the last generation — final corpus = original
-    writeSrc(base.filter(col("doc_id") % 3 === 2 ||
-      (col("doc_id") >= 100 && col("doc_id") <= 300)), ts = 4000, overwrite = false)
-    drain()
+    kvWrite(base.filter(col("doc_id") % 3 === 2 ||
+      (col("doc_id") >= 100 && col("doc_id") <= 300)), sv21SrcCatalog, 4000, numKeys(maxId))
+    runDrain()
     // px30's LM rendered from the MAINTAINED counts
     s.read.format("graft-kv").option("catalog", sv21CountsCatalog).load()
       .select(col("w1"), col("w2"), col("cnt").as("c12"))
@@ -2303,12 +2057,9 @@ object StreamBatch {
     val highWrite = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
     val srcOpts = Map("catalog" -> srcCatalog, "tombstones" -> "true") ++
       maxRowsPerBatch.map(n => "maxRowsPerBatch" -> n.toString)
-    withDrainAqe(s) { // per-batch jobs are broadcasts/slivers: AQE only re-plans (see helper)
-    val q = s.readStream.format("graft-kv").options(srcOpts).load()
-      .writeStream
-      .foreachBatch { (b: DataFrame, batchId: Long) =>
-        val stamp = (batchId + 1) * 10
-        val changed = b.select(col("doc_id"), col("_deleted")).persist()
+    drain(s, srcOpts, ckpt) { (b, batchId) =>
+      val stamp = (batchId + 1) * 10
+      withPersisted(b.select(col("doc_id"), col("_deleted"))) { changed =>
         if (!changed.isEmpty) {
           // retire every changed id's row — an update re-appends at the
           // tail below; a tombstone just dies (position slot stays burned).
@@ -2316,11 +2067,7 @@ object StreamBatch {
           // insert from an update apart would take a manifest point-read
           // the protocol otherwise never makes, and a marker cell is
           // cheaper than a read — compaction reclaims them wholesale.
-          changed.select(col("doc_id"))
-            .write.format("graft-kv")
-            .options(Map("catalog" -> manifestCatalog,
-              "delete" -> "true", "timestamp" -> stamp.toString))
-            .mode("append").save()
+          kvWrite(changed.select(col("doc_id")), manifestCatalog, stamp, opts = deleteMode)
           val ins = changed.filter(!col("_deleted"))
             .select(col("doc_id"),
               graft.functions.HashExprs.md5NumberLower(
@@ -2334,38 +2081,23 @@ object StreamBatch {
               "maxStamp" -> stamp.toString)).load()
             .select(col("shard"), col("n"))
           // ranked feeds the manifest append AND the counter advance
-          val ranked = ins
+          withPersisted(ins
             .withColumn("r", row_number().over(
               Window.partitionBy(col("shard")).orderBy(col("skey"), col("doc_id"))))
             .join(broadcast(ctr), Seq("shard"), "left")
             .select(col("doc_id"), col("skey"), col("shard"),
-              (coalesce(col("n"), lit(0L)) + col("r")).as("pos"))
-            .persist()
-          ranked.write.format("graft-kv")
-            .options(Map("catalog" -> manifestCatalog, "newtable" -> "4",
-              "timestamp" -> (stamp + 1).toString,
-              "minSplitNum" -> "0", "maxSplitNum" -> maxId.toString))
-            .mode("append").save()
-          crashPoint()
-          // two retained versions: a crash AFTER this write must leave the
-          // pre-batch high-water readable below the as-of window on replay
-          ranked.groupBy(col("shard")).agg(max(col("pos")).as("n"))
-            .write.format("graft-kv")
-            .options(Map("catalog" -> countersCatalog, "newtable" -> "4",
-              "maxVersions" -> "2",
-              "timestamp" -> (stamp + 1).toString,
-              "minSplitNum" -> "0", "maxSplitNum" -> (shards - 1).toString))
-            .mode("append").save()
-          highWrite.accumulateAndGet(stamp + 1, math.max)
-          ranked.unpersist()
+              (coalesce(col("n"), lit(0L)) + col("r")).as("pos"))) { ranked =>
+            kvWrite(ranked, manifestCatalog, stamp + 1, numKeys(maxId))
+            crashPoint()
+            // two retained versions: a crash AFTER this write must leave the
+            // pre-batch high-water readable below the as-of window on replay
+            kvWrite(ranked.groupBy(col("shard")).agg(max(col("pos")).as("n")),
+              countersCatalog, stamp + 1, numKeys(shards - 1), versions = 2)
+            highWrite.accumulateAndGet(stamp + 1, math.max)
+          }
         }
-        changed.unpersist()
-        ()
       }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    } // withDrainAqe
+    }
     highWrite.get()
   }
 
@@ -2390,43 +2122,29 @@ object StreamBatch {
       .select(col("doc_id").cast("long").as("doc_id"), col("text"))
     val maxId = base.agg(max(col("doc_id"))).head().getLong(0)
     val srcParsed = graft.catalog.GraftCatalog.parse(sv22SrcCatalog, Map.empty)
-    def writeSrc(df: DataFrame, ts: Long, overwrite: Boolean): Unit =
-      df.write.format("graft-kv")
-        .options(Map("catalog" -> sv22SrcCatalog, "newtable" -> "4",
-          "timestamp" -> ts.toString,
-          "minSplitNum" -> "0", "maxSplitNum" -> maxId.toString))
-        .mode(if (overwrite) "overwrite" else "append").save()
     Seq("default:kv_sh_manifest", "default:kv_sh_counters").foreach(KvStore.drop)
     // pre-create manifest + counters (the first batch reads the counters)
-    s.range(0).select(col("id").as("doc_id"), col("id").as("skey"),
-        lit(0).as("shard"), col("id").as("pos"))
-      .write.format("graft-kv")
-      .options(Map("catalog" -> sv22ManifestCatalog, "newtable" -> "4",
-        "timestamp" -> "1", "minSplitNum" -> "0",
-        "maxSplitNum" -> maxId.toString))
-      .mode("append").save()
-    s.range(0).select(col("id").cast("int").as("shard"), col("id").as("n"))
-      .write.format("graft-kv")
-      .options(Map("catalog" -> sv22CountersCatalog, "newtable" -> "4",
-        "maxVersions" -> "2", "timestamp" -> "1", "minSplitNum" -> "0",
-        "maxSplitNum" -> (shards - 1).toString))
-      .mode("append").save()
+    kvWrite(s.range(0).select(col("id").as("doc_id"), col("id").as("skey"),
+      lit(0).as("shard"), col("id").as("pos")), sv22ManifestCatalog, 1, numKeys(maxId))
+    kvWrite(s.range(0).select(col("id").cast("int").as("shard"), col("id").as("n")),
+      sv22CountersCatalog, 1, numKeys(shards - 1), versions = 2)
     val ckpt = tempWorkDir(s, "graft-sv22-ckpt").toString
     var committedWrite = 0L
-    def drain(): Unit = {
+    def runDrain(): Unit = {
       val w = maintainShardManifest(s, sv22SrcCatalog, sv22ManifestCatalog,
         sv22CountersCatalog, shards, maxId, ckpt)
       if (w != Long.MinValue) committedWrite = math.max(committedWrite, w)
     }
-    writeSrc(base.filter(col("doc_id") % 3 === 0), ts = 1000, overwrite = true)
-    drain()
-    writeSrc(base.filter(col("doc_id") % 3 === 1), ts = 2000, overwrite = false)
-    drain()
+    kvWrite(base.filter(col("doc_id") % 3 === 0), sv22SrcCatalog, 1000, numKeys(maxId),
+      overwrite = true)
+    runDrain()
+    kvWrite(base.filter(col("doc_id") % 3 === 1), sv22SrcCatalog, 2000, numKeys(maxId))
+    runDrain()
     val hrf = FilterCompiler.compileAll(srcParsed, Seq(
       org.apache.spark.sql.sources.GreaterThanOrEqual("doc_id", 100L),
       org.apache.spark.sql.sources.LessThanOrEqual("doc_id", 300L))).exactOrThrow("CDC DELETE")
     KvStore.table(srcParsed.qualifiedName).delete(hrf.ranges, hrf.pred, stamp = 3000)
-    drain()
+    runDrain()
     // scheduled compaction mid-stream (sv21's discipline, manifest flavor):
     // the retire-first write burns a no-op delete MARKER per pure insert
     // (cheaper than the manifest point-read that would tell inserts from
@@ -2438,9 +2156,9 @@ object StreamBatch {
     KvStore.table(graft.catalog.GraftCatalog.parse(sv22ManifestCatalog,
         Map.empty).qualifiedName)
       .compact(expireBefore = Long.MinValue, cdcHorizon = committedWrite)
-    writeSrc(base.filter(col("doc_id") % 3 === 2 ||
-      (col("doc_id") >= 100 && col("doc_id") <= 300)), ts = 4000, overwrite = false)
-    drain()
+    kvWrite(base.filter(col("doc_id") % 3 === 2 ||
+      (col("doc_id") >= 100 && col("doc_id") <= 300)), sv22SrcCatalog, 4000, numKeys(maxId))
+    runDrain()
     s.read.format("graft-kv").option("catalog", sv22ManifestCatalog).load()
       .select(col("doc_id"), col("skey"), col("shard"), col("pos"))
       .orderBy(col("shard"), col("pos"))
@@ -2473,36 +2191,28 @@ object StreamBatch {
       |FROM r JOIN last ON r.doc_id = last.doc_id AND r.ph = last.ph
       |ORDER BY shard, pos""".stripMargin
 
-  /** Run `body` with adaptive query execution OFF, restoring the prior
-    * setting after. Streaming micro-batches are WAVE-sized by admission
-    * control (`maxRowsPerBatch` caps what a batch can hold), and the CDC
-    * protocols' plans are already hand-shaped (broadcast semi-joins,
-    * sliver reads); at that scale AQE's per-shuffle QueryStage
-    * materialization barriers cost more scheduling wall than its
-    * re-planning saves. Measured at sf0.1 (round 10, warm, local[32]):
-    * sv14 11.9 s → 8.2 s (116 → 75 stages), sv4 4.1 → 3.0 s, sv6
-    * 2.7 → 1.9 s. Batch analytics keep AQE (skew joins, coalescing
-    * genuinely help at corpus scale); this wrapper scopes the trade to
-    * the streaming entries only.
+  /** The wrapper every sv entry runs in.
     *
-    * Scope: only work that executes INSIDE `f` — the stream drains, which
-    * are where all the micro-batch planning happens — runs AQE-off. The
-    * returned DataFrame is the post-stream batch readback; when the caller
-    * later executes it (Verify's write, Bench's count) AQE is back on,
-    * which is the setting batch reads want anyway. The restore mutates
-    * session conf, so entries must not run concurrently on one session —
-    * Verify and Bench both run queries sequentially. */
-  private def withoutAqe(
+    * AQE is OFF for the whole entry. Streaming micro-batches are
+    * WAVE-sized by admission control, and the CDC protocols' plans are
+    * already hand-shaped (broadcast semi-joins, sliver reads); at that
+    * scale AQE's per-shuffle QueryStage materialization barriers cost more
+    * scheduling wall than its re-planning saves. Measured at sf0.1 (warm,
+    * local[32]): sv14 11.9 s → 8.2 s (116 → 75 stages), sv4 4.1 → 3.0 s,
+    * sv6 2.7 → 1.9 s. Batch analytics keep AQE: the returned DataFrame is
+    * the post-stream readback, and when the caller executes it (Verify's
+    * write, Bench's count) AQE is back on.
+    *
+    * Every working dir [[GraftStreaming.tempWorkDir]] makes during the
+    * entry lands under one per-entry dir (`graft.stream.tmpBase` points
+    * there), deleted when the entry returns; an entry whose answer reads a
+    * working dir (sv15, sv17) materializes it first. */
+  private def svEntry(
       f: (SparkSession, String) => DataFrame): (SparkSession, String) => DataFrame =
     (s, dir) => {
-      val k = "spark.sql.adaptive.enabled"
-      val prev = s.conf.getOption(k)
-      s.conf.set(k, "false")
-      try f(s, dir)
-      finally prev match {
-        case Some(v) => s.conf.set(k, v)
-        case None => s.conf.unset(k)
-      }
+      val work = tempWorkDir(s, "graft-sv-entry")
+      try withConfs(s, AqeKey -> "false", "graft.stream.tmpBase" -> work.toString)(f(s, dir))
+      finally GraftStreaming.deleteTree(work)
     }
 
   private[graft] val sv23OrdSrcCatalog =
@@ -2571,38 +2281,32 @@ object StreamBatch {
     * added — the refused batch stays torn and replays after repair),
     * write zero-crossers as LOGICAL zeros at `stamp + 1`. */
   private def mergeSegDeltas(s: SparkSession, aggCatalog: String,
-      deltas: DataFrame, stamp: Long): Unit = {
-    val keyed = deltas
-      .withColumn("segment",
-        when(col("seg") === "", lit("(none)")).otherwise(col("seg")))
-      .groupBy(col("segment"))
-      .agg(sum(col("dn")).as("dn"), sum(col("dr")).as("dr"))
-      .filter(col("dn") =!= 0 || col("dr") =!= 0)
-      .persist()
-    if (!keyed.isEmpty) {
-      val current = stringKeyLookup(s, aggCatalog,
-        keyed.select(col("segment")), "segment",
-        extraOpts = Map("maxStamp" -> stamp.toString))
-        .select(col("segment"), col("n_orders").as("cur_n"),
-          col("revenue_c").as("cur_r"))
-      val n = coalesce(col("cur_n"), lit(0L)) + col("dn")
-      val r = coalesce(col("cur_r"), lit(0L)) + col("dr")
-      keyed.join(current, Seq("segment"), "left")
-        .select(col("segment"),
-          when(n < 0 || r < 0, raise_error(concat(
-            lit("mergeSegDeltas: rollup went NEGATIVE for segment '"),
-            col("segment"),
-            lit("' — refusing to persist corrupted aggregates"))))
-            .otherwise(n).as("n_orders"),
-          r.as("revenue_c"))
-        .write.format("graft-kv")
-        .options(Map("catalog" -> aggCatalog, "newtable" -> "4",
-          "maxVersions" -> "2", "timestamp" -> (stamp + 1).toString,
-          "minSplit" -> "0", "maxSplit" -> "z"))
-        .mode("append").save()
+      deltas: DataFrame, stamp: Long): Unit =
+    withPersisted(deltas
+        .withColumn("segment",
+          when(col("seg") === "", lit("(none)")).otherwise(col("seg")))
+        .groupBy(col("segment"))
+        .agg(sum(col("dn")).as("dn"), sum(col("dr")).as("dr"))
+        .filter(col("dn") =!= 0 || col("dr") =!= 0)) { keyed =>
+      if (!keyed.isEmpty) {
+        val current = stringKeyLookup(s, aggCatalog,
+          keyed.select(col("segment")), "segment",
+          extraOpts = Map("maxStamp" -> stamp.toString))
+          .select(col("segment"), col("n_orders").as("cur_n"),
+            col("revenue_c").as("cur_r"))
+        val n = coalesce(col("cur_n"), lit(0L)) + col("dn")
+        val r = coalesce(col("cur_r"), lit(0L)) + col("dr")
+        kvWrite(keyed.join(current, Seq("segment"), "left")
+          .select(col("segment"),
+            when(n < 0 || r < 0, raise_error(concat(
+              lit("mergeSegDeltas: rollup went NEGATIVE for segment '"),
+              col("segment"),
+              lit("' — refusing to persist corrupted aggregates"))))
+              .otherwise(n).as("n_orders"),
+            r.as("revenue_c")),
+          aggCatalog, stamp + 1, strKeys, versions = 2)
+      }
     }
-    keyed.unpersist(); ()
-  }
 
   /** One CDC drain of the ORDERS side of join-view maintenance — half of
     * [[sv23StreamJoinView]]'s protocol (see there for the view design).
@@ -2642,82 +2346,66 @@ object StreamBatch {
     val highWrite = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
     val srcOpts = Map("catalog" -> srcCatalog, "tombstones" -> "true") ++
       maxRowsPerBatch.map(n => "maxRowsPerBatch" -> n.toString)
-    withDrainAqe(s) { // per-batch jobs are broadcasts/slivers: AQE only re-plans (see helper)
-    val q = s.readStream.format("graft-kv").options(srcOpts).load()
-      .writeStream
-      .foreachBatch { (b: DataFrame, batchId: Long) =>
-        val stamp = drainBase + (batchId + 1) * 10
-        val asOf = Map("maxStamp" -> stamp.toString)
-        val changed = b.select(col("o_orderkey"), col("o_custkey"),
-          col("price_c"), col("_deleted")).persist()
+    drain(s, srcOpts, ckpt) { (b, batchId) =>
+      val stamp = drainBase + (batchId + 1) * 10
+      val asOf = Map("maxStamp" -> stamp.toString)
+      withPersisted(b.select(col("o_orderkey"), col("o_custkey"),
+          col("price_c"), col("_deleted"))) { changed =>
         if (!changed.isEmpty) {
           val olds = mirrorLookup(s, ordMirrorCatalog, "",
             changed.select(col("o_orderkey")), idCol = "o_orderkey",
             extraOpts = asOf)
             .filter(col("o_custkey") >= 0) // −1 = logically dead (no view row)
             .select(col("o_orderkey"), col("o_custkey").as("old_custkey"))
-          val j = changed.join(olds, Seq("o_orderkey"), "left").persist()
-          // retire rows whose view ADDRESS vanished: deletes, and moves
-          // (old address ≠ new — the re-keying case)
-          val retire = j.filter(col("old_custkey").isNotNull &&
-              (col("_deleted") || col("old_custkey") =!= col("o_custkey")))
-            .select(col("old_custkey").as("c_custkey"), col("o_orderkey"),
-              lit(0L).as("price_c"), lit("").as("seg"), lit(0).as("alive"))
-          val ups = j.filter(!col("_deleted"))
-          val segs = mirrorLookup(s, custMirrorCatalog, "",
-            ups.select(col("o_custkey").as("c_custkey")), idCol = "c_custkey",
-            extraOpts = asOf)
-            .filter(length(col("seg")) > 0) // '' = logically dead customer
-            .select(col("c_custkey").as("o_custkey"), col("seg"))
-          val inserts = ups.join(segs, Seq("o_custkey"), "left")
-            .select(col("o_custkey").as("c_custkey"), col("o_orderkey"),
-              col("price_c"), coalesce(col("seg"), lit("")).as("seg"),
-              lit(1).as("alive"))
-          retire.unionByName(inserts)
-            .write.format("graft-kv")
-            .options(Map("catalog" -> viewCatalog, "newtable" -> "4",
-              "maxVersions" -> "2", "timestamp" -> (stamp + 1).toString))
-            .mode("append").save()
-          // sv24's rollup delta: every touched order's OLD (price, seg)
-          // decrements, every upsert's NEW increments. The old values'
-          // only current truth is the VIEW row at the old address — read
-          // as-of (so this batch's own view write above is invisible),
-          // custkey prefix slivers pruned to the exact rows by the
-          // address semi-join; cost is bounded by the wave's customers'
-          // order fan-in, the inherent decrement cost of aggregate IVM
-          // over a join
-          aggCatalog.foreach { aggCat =>
-            val oldAddr = j.filter(col("old_custkey").isNotNull)
-              .select(col("old_custkey").as("c_custkey"), col("o_orderkey"))
-            val oldRows = mirrorLookup(s, viewCatalog, "",
-              oldAddr.select(col("c_custkey")), idCol = "c_custkey",
+          withPersisted(changed.join(olds, Seq("o_orderkey"), "left")) { j =>
+            // retire rows whose view ADDRESS vanished: deletes, and moves
+            // (old address ≠ new — the re-keying case)
+            val retire = j.filter(col("old_custkey").isNotNull &&
+                (col("_deleted") || col("old_custkey") =!= col("o_custkey")))
+              .select(col("old_custkey").as("c_custkey"), col("o_orderkey"),
+                lit(0L).as("price_c"), lit("").as("seg"), lit(0).as("alive"))
+            val ups = j.filter(!col("_deleted"))
+            val segs = mirrorLookup(s, custMirrorCatalog, "",
+              ups.select(col("o_custkey").as("c_custkey")), idCol = "c_custkey",
               extraOpts = asOf)
-              .filter(col("alive") === 1)
-              .join(oldAddr, Seq("c_custkey", "o_orderkey"), "leftsemi")
-              .select(col("seg"), lit(-1L).as("dn"),
-                (-col("price_c")).as("dr"))
-            val newRows = inserts.select(col("seg"), lit(1L).as("dn"),
-              col("price_c").as("dr"))
-            mergeSegDeltas(s, aggCat, oldRows.unionByName(newRows), stamp)
+              .filter(length(col("seg")) > 0) // '' = logically dead customer
+              .select(col("c_custkey").as("o_custkey"), col("seg"))
+            val inserts = ups.join(segs, Seq("o_custkey"), "left")
+              .select(col("o_custkey").as("c_custkey"), col("o_orderkey"),
+                col("price_c"), coalesce(col("seg"), lit("")).as("seg"),
+                lit(1).as("alive"))
+            kvWrite(retire.unionByName(inserts), viewCatalog, stamp + 1, anyKeys, versions = 2)
+            // sv24's rollup delta: every touched order's OLD (price, seg)
+            // decrements, every upsert's NEW increments. The old values'
+            // only current truth is the VIEW row at the old address — read
+            // as-of (so this batch's own view write above is invisible),
+            // custkey prefix slivers pruned to the exact rows by the
+            // address semi-join; cost is bounded by the wave's customers'
+            // order fan-in, the inherent decrement cost of aggregate IVM
+            // over a join
+            aggCatalog.foreach { aggCat =>
+              val oldAddr = j.filter(col("old_custkey").isNotNull)
+                .select(col("old_custkey").as("c_custkey"), col("o_orderkey"))
+              val oldRows = mirrorLookup(s, viewCatalog, "",
+                oldAddr.select(col("c_custkey")), idCol = "c_custkey",
+                extraOpts = asOf)
+                .filter(col("alive") === 1)
+                .join(oldAddr, Seq("c_custkey", "o_orderkey"), "leftsemi")
+                .select(col("seg"), lit(-1L).as("dn"),
+                  (-col("price_c")).as("dr"))
+              val newRows = inserts.select(col("seg"), lit(1L).as("dn"),
+                col("price_c").as("dr"))
+              mergeSegDeltas(s, aggCat, oldRows.unionByName(newRows), stamp)
+            }
+            crashPoint()
+            kvWrite(changed.select(col("o_orderkey"),
+                when(col("_deleted"), lit(-1L)).otherwise(col("o_custkey")).as("o_custkey")),
+              ordMirrorCatalog, stamp + 1, anyKeys, versions = 2)
+            highWrite.accumulateAndGet(stamp + 1, math.max)
           }
-          crashPoint()
-          changed.select(col("o_orderkey"),
-              when(col("_deleted"), lit(-1L)).otherwise(col("o_custkey"))
-                .as("o_custkey"))
-            .write.format("graft-kv")
-            .options(Map("catalog" -> ordMirrorCatalog, "newtable" -> "4",
-              "maxVersions" -> "2", "timestamp" -> (stamp + 1).toString))
-            .mode("append").save()
-          highWrite.accumulateAndGet(stamp + 1, math.max)
-          j.unpersist()
         }
-        changed.unpersist()
-        ()
       }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    } // withDrainAqe
+    }
     highWrite.get()
   }
 
@@ -2743,14 +2431,10 @@ object StreamBatch {
     val highWrite = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
     val srcOpts = Map("catalog" -> srcCatalog, "tombstones" -> "true") ++
       maxRowsPerBatch.map(n => "maxRowsPerBatch" -> n.toString)
-    withDrainAqe(s) { // per-batch jobs are broadcasts/slivers: AQE only re-plans (see helper)
-    val q = s.readStream.format("graft-kv").options(srcOpts).load()
-      .writeStream
-      .foreachBatch { (b: DataFrame, batchId: Long) =>
-        val stamp = drainBase + (batchId + 1) * 10
-        val asOf = Map("maxStamp" -> stamp.toString)
-        val changed = b.select(col("c_custkey"), col("seg"), col("_deleted"))
-          .persist()
+    drain(s, srcOpts, ckpt) { (b, batchId) =>
+      val stamp = drainBase + (batchId + 1) * 10
+      val asOf = Map("maxStamp" -> stamp.toString)
+      withPersisted(b.select(col("c_custkey"), col("seg"), col("_deleted"))) { changed =>
         if (!changed.isEmpty) {
           // the affected view rows: THIS batch's custkey prefix slivers,
           // as-of pre-batch state (alive only — dead rows stay dead).
@@ -2764,38 +2448,26 @@ object StreamBatch {
               col("seg").as("old_seg"))
           val segs = changed.select(col("c_custkey"),
             when(col("_deleted"), lit("")).otherwise(col("seg")).as("seg"))
-          val rep = aff.join(segs, Seq("c_custkey")).persist()
-          rep.select(col("c_custkey"), col("o_orderkey"), col("price_c"),
-              col("seg"), lit(1).as("alive"))
-            .write.format("graft-kv")
-            .options(Map("catalog" -> viewCatalog, "newtable" -> "4",
-              "maxVersions" -> "2", "timestamp" -> (stamp + 1).toString))
-            .mode("append").save()
-          // sv24's rollup: a segment change MOVES each repaired row's
-          // contribution old_seg → seg; rows whose segment didn't change
-          // cancel inside the merge's per-segment sum
-          aggCatalog.foreach { aggCat =>
-            mergeSegDeltas(s, aggCat,
-              rep.select(col("old_seg").as("seg"), lit(-1L).as("dn"),
-                  (-col("price_c")).as("dr"))
-                .unionByName(rep.select(col("seg"), lit(1L).as("dn"),
-                  col("price_c").as("dr"))), stamp)
+          withPersisted(aff.join(segs, Seq("c_custkey"))) { rep =>
+            kvWrite(rep.select(col("c_custkey"), col("o_orderkey"), col("price_c"),
+              col("seg"), lit(1).as("alive")), viewCatalog, stamp + 1, anyKeys, versions = 2)
+            // sv24's rollup: a segment change MOVES each repaired row's
+            // contribution old_seg → seg; rows whose segment didn't change
+            // cancel inside the merge's per-segment sum
+            aggCatalog.foreach { aggCat =>
+              mergeSegDeltas(s, aggCat,
+                rep.select(col("old_seg").as("seg"), lit(-1L).as("dn"),
+                    (-col("price_c")).as("dr"))
+                  .unionByName(rep.select(col("seg"), lit(1L).as("dn"),
+                    col("price_c").as("dr"))), stamp)
+            }
+            crashPoint()
+            kvWrite(segs, custMirrorCatalog, stamp + 1, anyKeys, versions = 2)
+            highWrite.accumulateAndGet(stamp + 1, math.max)
           }
-          crashPoint()
-          segs.write.format("graft-kv")
-            .options(Map("catalog" -> custMirrorCatalog, "newtable" -> "4",
-              "maxVersions" -> "2", "timestamp" -> (stamp + 1).toString))
-            .mode("append").save()
-          highWrite.accumulateAndGet(stamp + 1, math.max)
-          rep.unpersist()
         }
-        changed.unpersist()
-        ()
       }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    } // withDrainAqe
+    }
     highWrite.get()
   }
 
@@ -2834,41 +2506,6 @@ object StreamBatch {
   private def runJoinViewPhases(s: SparkSession, dir: String,
       ordCat: String, custCat: String, ordMir: String, custMir: String,
       viewCat: String, aggCat: Option[String]): Unit = {
-    // the drains' shuffles are WAVE-sized (changed-order joins, per-batch
-    // seg rollups) — 32 near-empty shuffle partitions per stage cost more
-    // task-scheduling wall than they buy across 5 drains × ~30 jobs; 8 is
-    // the same pin the memory-sink streams use. NEW in round 14: AQE off
-    // for the same span — every one of the suite's ~100 batch jobs is
-    // wave-sized (hinted broadcasts, bounded sliver reads, ≤ corpus/50
-    // rows), so AdaptiveSparkPlan's per-job stage materialization and
-    // re-planning buys nothing; measured on sv24 (the heaviest drain
-    // suite): 27.8 → 18.5 s warm at sf0.1. This pin is deliberately NOT
-    // applied to the other maintainers (sv12/14/18-22/25/26): their FIRST
-    // batch is a corpus-sized load with real compute (shingling, PQ
-    // encoding, bigram counting) where the 32-partition + AQE default is
-    // the right plan — a blanket pin measured 2-6x slower there. A
-    // production deployment sizes these to its wave volume via the
-    // graft.stream.* confs, not its corpus.
-    val shufK = "spark.sql.shuffle.partitions"
-    val aqeK = "spark.sql.adaptive.enabled"
-    val shufPrev = s.conf.getOption(shufK)
-    val aqePrev = s.conf.get(aqeK)
-    s.conf.set(shufK, s.conf.get("graft.stream.shufflePartitions", "8"))
-    s.conf.set(aqeK, s.conf.get("graft.stream.aqe", "false"))
-    try runJoinViewPhasesInner(s, dir, ordCat, custCat, ordMir, custMir,
-      viewCat, aggCat)
-    finally {
-      s.conf.set(aqeK, aqePrev)
-      shufPrev match {
-        case Some(v) => s.conf.set(shufK, v)
-        case None => s.conf.unset(shufK)
-      }
-    }
-  }
-
-  private def runJoinViewPhasesInner(s: SparkSession, dir: String,
-      ordCat: String, custCat: String, ordMir: String, custMir: String,
-      viewCat: String, aggCat: Option[String]): Unit = {
     import graft.datasource.FilterCompiler
     import graft.store.KvStore
     val ordBase = Tables.orders(s, dir).select(
@@ -2878,123 +2515,109 @@ object StreamBatch {
     val custBase = Tables.customer(s, dir).select(
       col("c_custkey").cast("long").as("c_custkey"),
       col("c_mktsegment").as("seg"))
-    val maxOrd = ordBase.agg(max(col("o_orderkey"))).head().getLong(0)
-    val maxCust = custBase.agg(max(col("c_custkey"))).head().getLong(0)
-    val ordParsed = graft.catalog.GraftCatalog.parse(ordCat, Map.empty)
-    val custParsed = graft.catalog.GraftCatalog.parse(custCat, Map.empty)
-    def writeOrd(df: DataFrame, ts: Long, overwrite: Boolean): Unit =
-      df.write.format("graft-kv")
-        .options(Map("catalog" -> ordCat, "newtable" -> "4",
-          "timestamp" -> ts.toString,
-          "minSplitNum" -> "0", "maxSplitNum" -> maxOrd.toString))
-        .mode(if (overwrite) "overwrite" else "append").save()
-    def writeCust(df: DataFrame, ts: Long, overwrite: Boolean): Unit =
-      df.write.format("graft-kv")
-        .options(Map("catalog" -> custCat, "newtable" -> "4",
-          "timestamp" -> ts.toString,
-          "minSplitNum" -> "0", "maxSplitNum" -> maxCust.toString))
-        .mode(if (overwrite) "overwrite" else "append").save()
-    // fresh run; pre-create the state tables (first batches read all)
-    (Seq(ordCat, custCat, ordMir, custMir, viewCat) ++ aggCat)
-      .foreach(c => KvStore.drop(
-        graft.catalog.GraftCatalog.parse(c, Map.empty).qualifiedName))
-    ordBase.limit(0).select(col("o_orderkey"), col("o_custkey"))
-      .write.format("graft-kv")
-      .options(Map("catalog" -> ordMir, "newtable" -> "4",
-        "maxVersions" -> "2", "timestamp" -> "1",
-        "minSplitNum" -> "0", "maxSplitNum" -> maxOrd.toString))
-      .mode("append").save()
-    custBase.limit(0)
-      .write.format("graft-kv")
-      .options(Map("catalog" -> custMir, "newtable" -> "4",
-        "maxVersions" -> "2", "timestamp" -> "1",
-        "minSplitNum" -> "0", "maxSplitNum" -> maxCust.toString))
-      .mode("append").save()
-    s.range(0).select(lit(0L).as("c_custkey"), lit(0L).as("o_orderkey"),
-        lit(0L).as("price_c"), lit("").as("seg"), lit(1).as("alive"))
-      .write.format("graft-kv")
-      .options(Map("catalog" -> viewCat, "newtable" -> "4",
-        "maxVersions" -> "2", "timestamp" -> "1"))
-      .mode("append").save()
-    aggCat.foreach { ac =>
-      s.range(0).select(lit("").as("segment"), lit(0L).as("n_orders"),
-          lit(0L).as("revenue_c"))
-        .write.format("graft-kv")
-        .options(Map("catalog" -> ac, "newtable" -> "4",
-          "maxVersions" -> "2", "timestamp" -> "1",
-          "minSplit" -> "0", "maxSplit" -> "z"))
-        .mode("append").save()
+    // the drains' shuffles are WAVE-sized (changed-order joins, per-batch
+    // seg rollups) — 32 near-empty shuffle partitions per stage cost more
+    // task-scheduling wall than they buy across 5 drains × ~30 jobs; 8 is
+    // the same pin the memory-sink streams use. AQE is off for the same
+    // span — every one of the suite's ~100 batch jobs is wave-sized
+    // (hinted broadcasts, bounded sliver reads, ≤ corpus/50 rows), so
+    // AdaptiveSparkPlan's per-job stage materialization and re-planning
+    // buys nothing; measured on sv24 (the heaviest drain suite): 27.8 →
+    // 18.5 s warm at sf0.1. The shuffle pin is deliberately NOT applied to
+    // the other CDC maintainers (sv12/14/18-22/25): their FIRST batch is a
+    // corpus-sized load with real compute (shingling, PQ encoding, bigram
+    // counting) where the session's width is the right plan — a blanket
+    // pin measured 2-6x slower there.
+    withConfs(s, ShuffleKey -> "8", AqeKey -> "false") {
+      val maxOrd = ordBase.agg(max(col("o_orderkey"))).head().getLong(0)
+      val maxCust = custBase.agg(max(col("c_custkey"))).head().getLong(0)
+      val ordParsed = graft.catalog.GraftCatalog.parse(ordCat, Map.empty)
+      val custParsed = graft.catalog.GraftCatalog.parse(custCat, Map.empty)
+      // fresh run; pre-create the state tables (first batches read all)
+      (Seq(ordCat, custCat, ordMir, custMir, viewCat) ++ aggCat)
+        .foreach(c => KvStore.drop(
+          graft.catalog.GraftCatalog.parse(c, Map.empty).qualifiedName))
+      kvWrite(ordBase.limit(0).select(col("o_orderkey"), col("o_custkey")), ordMir, 1,
+        numKeys(maxOrd), versions = 2)
+      kvWrite(custBase.limit(0), custMir, 1, numKeys(maxCust), versions = 2)
+      kvWrite(s.range(0).select(lit(0L).as("c_custkey"), lit(0L).as("o_orderkey"),
+        lit(0L).as("price_c"), lit("").as("seg"), lit(1).as("alive")), viewCat, 1, anyKeys,
+        versions = 2)
+      aggCat.foreach { ac =>
+        kvWrite(s.range(0).select(lit("").as("segment"), lit(0L).as("n_orders"),
+          lit(0L).as("revenue_c")), ac, 1, strKeys, versions = 2)
+      }
+      val ckptO = tempWorkDir(s, "graft-jv-ord-ckpt").toString
+      val ckptC = tempWorkDir(s, "graft-jv-cust-ckpt").toString
+      // the coordinator's epoch contract: each drain (either stream) gets a
+      // monotone base; a replayed drain re-runs with ITS base
+      var nextBase = 0L
+      var committedWrite = 0L
+      def drainO(): Unit = {
+        nextBase += 100000L
+        val w = maintainJoinViewOrders(s, nextBase, ckptO,
+          ordCat, ordMir, custMir, viewCat, aggCat)
+        if (w != Long.MinValue) committedWrite = math.max(committedWrite, w)
+      }
+      def drainC(): Unit = {
+        nextBase += 100000L
+        val w = maintainJoinViewCustomer(s, nextBase, ckptC,
+          custCat, custMir, viewCat, aggCat)
+        if (w != Long.MinValue) committedWrite = math.max(committedWrite, w)
+      }
+      // phase 1: customer dimension loads first
+      kvWrite(custBase, custCat, 1000, numKeys(maxCust), overwrite = true)
+      drainC()
+      // phase 2: orders arrive, enriching from the customer mirror
+      kvWrite(ordBase, ordCat, 2000, numKeys(maxOrd), overwrite = true)
+      drainO()
+      // phase 3: %7 orders MOVE custkey (re-key: retire + insert) and gain
+      // 1 cent; then a ranged orders DELETE [100, 299]. BOTH waves ride ONE
+      // drain: the CDC window latest-merges per key, so a moved order inside
+      // the deleted range arrives only as its tombstone (delete wins — the
+      // exact mixed-batch path a real change feed produces), and the batch
+      // carries moves, plain updates, and deletes at once
+      kvWrite(ordBase.filter(col("o_orderkey") % 7 === 0)
+        .select(col("o_orderkey"), ((col("o_custkey") % 50) + 1).as("o_custkey"),
+          (col("price_c") + 1).as("price_c")), ordCat, 3000, numKeys(maxOrd))
+      val hrfO = FilterCompiler.compileAll(ordParsed, Seq(
+        org.apache.spark.sql.sources.GreaterThanOrEqual("o_orderkey", 100L),
+        org.apache.spark.sql.sources.LessThanOrEqual("o_orderkey", 299L))).exactOrThrow("CDC DELETE")
+      KvStore.table(ordParsed.qualifiedName).delete(hrfO.ranges, hrfO.pred, stamp = 4000)
+      drainO()
+      // phase 5: customer wave — %5 segments change; custkeys [10, 29] DIE
+      // (their orders orphan to ''-segment rows, LEFT-join style)
+      kvWrite(custBase.filter(col("c_custkey") % 5 === 0)
+        .withColumn("seg", lit("MOVED")), custCat, 5000, numKeys(maxCust))
+      val hrfC = FilterCompiler.compileAll(custParsed, Seq(
+        org.apache.spark.sql.sources.GreaterThanOrEqual("c_custkey", 10L),
+        org.apache.spark.sql.sources.LessThanOrEqual("c_custkey", 29L))).exactOrThrow("CDC DELETE")
+      KvStore.table(custParsed.qualifiedName).delete(hrfC.ranges, hrfC.pred, stamp = 5100)
+      drainC()
+      // mid-schedule compaction behind the drain-derived fence: retired view
+      // rows, dead mirror rows, and zero-crossed rollup rows die physically;
+      // [25, 29]'s orphan rows are ALIVE ''-segment rows — compaction must
+      // not touch them
+      reclaimLogicalDead(s, viewCat, "c_custkey", col("alive") === 0,
+        horizon = committedWrite, committedStamp = Some(committedWrite),
+        extraKeyCols = Seq("o_orderkey"))
+      reclaimLogicalDead(s, ordMir, "o_orderkey",
+        col("o_custkey") < 0, horizon = committedWrite,
+        committedStamp = Some(committedWrite))
+      reclaimLogicalDead(s, custMir, "c_custkey",
+        length(col("seg")) === 0, horizon = committedWrite,
+        committedStamp = Some(committedWrite))
+      aggCat.foreach { ac =>
+        reclaimLogicalDead(s, ac, "segment", col("n_orders") === 0L,
+          horizon = committedWrite, committedStamp = Some(committedWrite)); ()
+      }
+      // phase 6: partial resurrection — [10, 24] return with their original
+      // segments and repair their orphaned orders in place; [25, 29] stay
+      // dead, so the final answer keeps real LEFT-join orphans
+      kvWrite(custBase.filter(col("c_custkey") >= 10 && col("c_custkey") <= 24),
+        custCat, 6000, numKeys(maxCust))
+      drainC()
     }
-    val ckptO = tempWorkDir(s, "graft-jv-ord-ckpt").toString
-    val ckptC = tempWorkDir(s, "graft-jv-cust-ckpt").toString
-    // the coordinator's epoch contract: each drain (either stream) gets a
-    // monotone base; a replayed drain re-runs with ITS base
-    var nextBase = 0L
-    var committedWrite = 0L
-    def drainO(): Unit = {
-      nextBase += 100000L
-      val w = maintainJoinViewOrders(s, nextBase, ckptO,
-        ordCat, ordMir, custMir, viewCat, aggCat)
-      if (w != Long.MinValue) committedWrite = math.max(committedWrite, w)
-    }
-    def drainC(): Unit = {
-      nextBase += 100000L
-      val w = maintainJoinViewCustomer(s, nextBase, ckptC,
-        custCat, custMir, viewCat, aggCat)
-      if (w != Long.MinValue) committedWrite = math.max(committedWrite, w)
-    }
-    // phase 1: customer dimension loads first
-    writeCust(custBase, ts = 1000, overwrite = true)
-    drainC()
-    // phase 2: orders arrive, enriching from the customer mirror
-    writeOrd(ordBase, ts = 2000, overwrite = true)
-    drainO()
-    // phase 3: %7 orders MOVE custkey (re-key: retire + insert) and gain
-    // 1 cent; then a ranged orders DELETE [100, 299]. BOTH waves ride ONE
-    // drain: the CDC window latest-merges per key, so a moved order inside
-    // the deleted range arrives only as its tombstone (delete wins — the
-    // exact mixed-batch path a real change feed produces), and the batch
-    // carries moves, plain updates, and deletes at once
-    writeOrd(ordBase.filter(col("o_orderkey") % 7 === 0)
-      .select(col("o_orderkey"), ((col("o_custkey") % 50) + 1).as("o_custkey"),
-        (col("price_c") + 1).as("price_c")), ts = 3000, overwrite = false)
-    val hrfO = FilterCompiler.compileAll(ordParsed, Seq(
-      org.apache.spark.sql.sources.GreaterThanOrEqual("o_orderkey", 100L),
-      org.apache.spark.sql.sources.LessThanOrEqual("o_orderkey", 299L))).exactOrThrow("CDC DELETE")
-    KvStore.table(ordParsed.qualifiedName).delete(hrfO.ranges, hrfO.pred, stamp = 4000)
-    drainO()
-    // phase 5: customer wave — %5 segments change; custkeys [10, 29] DIE
-    // (their orders orphan to ''-segment rows, LEFT-join style)
-    writeCust(custBase.filter(col("c_custkey") % 5 === 0)
-      .withColumn("seg", lit("MOVED")), ts = 5000, overwrite = false)
-    val hrfC = FilterCompiler.compileAll(custParsed, Seq(
-      org.apache.spark.sql.sources.GreaterThanOrEqual("c_custkey", 10L),
-      org.apache.spark.sql.sources.LessThanOrEqual("c_custkey", 29L))).exactOrThrow("CDC DELETE")
-    KvStore.table(custParsed.qualifiedName).delete(hrfC.ranges, hrfC.pred, stamp = 5100)
-    drainC()
-    // mid-schedule compaction behind the drain-derived fence: retired view
-    // rows, dead mirror rows, and zero-crossed rollup rows die physically;
-    // [25, 29]'s orphan rows are ALIVE ''-segment rows — compaction must
-    // not touch them
-    reclaimLogicalDead(s, viewCat, "c_custkey", col("alive") === 0,
-      horizon = committedWrite, committedStamp = Some(committedWrite),
-      extraKeyCols = Seq("o_orderkey"))
-    reclaimLogicalDead(s, ordMir, "o_orderkey",
-      col("o_custkey") < 0, horizon = committedWrite,
-      committedStamp = Some(committedWrite))
-    reclaimLogicalDead(s, custMir, "c_custkey",
-      length(col("seg")) === 0, horizon = committedWrite,
-      committedStamp = Some(committedWrite))
-    aggCat.foreach { ac =>
-      reclaimLogicalDead(s, ac, "segment", col("n_orders") === 0L,
-        horizon = committedWrite, committedStamp = Some(committedWrite)); ()
-    }
-    // phase 6: partial resurrection — [10, 24] return with their original
-    // segments and repair their orphaned orders in place; [25, 29] stay
-    // dead, so the final answer keeps real LEFT-join orphans
-    writeCust(custBase.filter(col("c_custkey") >= 10 && col("c_custkey") <= 24),
-      ts = 6000, overwrite = false)
-    drainC()
   }
 
   def sv23StreamJoinView(s: SparkSession, dir: String): DataFrame = {
@@ -3139,12 +2762,6 @@ object StreamBatch {
     val srcParsed = graft.catalog.GraftCatalog.parse(sv25SrcCatalog, Map.empty)
     val fwdParsed = graft.catalog.GraftCatalog.parse(sv25FwdCatalog, Map.empty)
     val codesParsed = graft.catalog.GraftCatalog.parse(sv25CodesCatalog, Map.empty)
-    def writeSrc(df: DataFrame, ts: Long, overwrite: Boolean): Unit =
-      df.write.format("graft-kv")
-        .options(Map("catalog" -> sv25SrcCatalog, "annVec" -> sv18AvroVec,
-          "newtable" -> "4", "timestamp" -> ts.toString,
-          "minSplitNum" -> "0", "maxSplitNum" -> maxId.toString))
-        .mode(if (overwrite) "overwrite" else "append").save()
     val ckpt = tempWorkDir(s, "graft-sv25-ckpt").toString
     def applyBatch(phaseStamp: Long): Unit =
       maintainIvfPqIndex(s, sv25SrcCatalog, sv25FwdCatalog, sv25CodesCatalog,
@@ -3153,11 +2770,13 @@ object StreamBatch {
     Seq(fwdParsed, codesParsed).foreach(p => KvStore.drop(p.qualifiedName))
     // g0: corrupted first generation — reversed vectors land in wrong
     // cells WITH wrong codes, so the correction must re-key and re-code
-    writeSrc(base.filter(col("vec_id") % 3 === 0)
-      .withColumn("embedding", reverse(col("embedding"))), ts = 1000, overwrite = true)
+    kvWrite(base.filter(col("vec_id") % 3 === 0)
+      .withColumn("embedding", reverse(col("embedding"))), sv25SrcCatalog, 1000,
+      numKeys(maxId), overwrite = true, opts = vecOpts)
     applyBatch(phaseStamp = 10)
     // g1: second generation + the corrected first generation (re-keying)
-    writeSrc(base.filter(col("vec_id") % 3 <= 1), ts = 2000, overwrite = false)
+    kvWrite(base.filter(col("vec_id") % 3 <= 1), sv25SrcCatalog, 2000, numKeys(maxId),
+      opts = vecOpts)
     applyBatch(phaseStamp = 20)
     // ranged DELETE — tombstones retire inverted-file rows
     val hrf = FilterCompiler.compileAll(srcParsed, Seq(
@@ -3166,8 +2785,9 @@ object StreamBatch {
     KvStore.table(srcParsed.qualifiedName).delete(hrf.ranges, hrf.pred, stamp = 3000)
     applyBatch(phaseStamp = 30)
     // g2: last generation + resurrection of the deleted range
-    writeSrc(base.filter(col("vec_id") % 3 === 2 ||
-      (col("vec_id") >= 30 && col("vec_id") <= 90)), ts = 4000, overwrite = false)
+    kvWrite(base.filter(col("vec_id") % 3 === 2 ||
+      (col("vec_id") >= 30 && col("vec_id") <= 90)), sv25SrcCatalog, 4000, numKeys(maxId),
+      opts = vecOpts)
     applyBatch(phaseStamp = 40)
     // kv32's serving read over the MAINTAINED table: probe cells pushed as
     // leading-key In slivers (<= queries x nprobe ids, control-sized)
@@ -3247,13 +2867,9 @@ object StreamBatch {
     import org.apache.spark.sql.expressions.Window
     val fwdName = graft.catalog.GraftCatalog.parse(fwdCat, Map.empty).qualifiedName
     val viewName = graft.catalog.GraftCatalog.parse(viewCat, Map.empty).qualifiedName
-    val stream = s.readStream.format("graft-kv")
-      .option("catalog", srcCat).option("tombstones", "true").load()
-    withDrainAqe(s) { // per-batch jobs are broadcasts/slivers: AQE only re-plans (see helper)
-    val q = stream.writeStream
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        val changed = df.select(col("event_id"), col("user_id"), col("tu"),
-          col("_deleted")).cache()
+    drain(s, Map("catalog" -> srcCat, "tombstones" -> "true"), ckpt) { (df, _) =>
+      withPersisted(df.select(col("event_id"), col("user_id"), col("tu"),
+          col("_deleted"))) { changed =>
         if (!changed.isEmpty) {
           val haveFwd = KvStore.exists(fwdName)
           val haveView = KvStore.exists(viewName)
@@ -3294,40 +2910,19 @@ object StreamBatch {
             .withColumn("session_root", last(col("head"), ignoreNulls = true)
               .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
             .select(col("user_id"), col("event_id"), col("tu"), col("session_root"))
-          if (oldView != null) {
-            oldView.select("user_id", "event_id")
-              .write.format("graft-kv")
-              .options(Map("catalog" -> viewCat, "delete" -> "true",
-                "timestamp" -> phaseStamp.toString))
-              .mode("append").save()
-          }
-          roots.write.format("graft-kv")
-            .options(Map("catalog" -> viewCat, "newtable" -> "4",
-              "maxVersions" -> "2", "timestamp" -> (phaseStamp + 1).toString))
-            .mode("append").save()
-          if (fwdHits != null) {
-            fwdHits.select("event_id")
-              .write.format("graft-kv")
-              .options(Map("catalog" -> fwdCat, "delete" -> "true",
-                "timestamp" -> phaseStamp.toString))
-              .mode("append").save()
-          }
-          puts.select("event_id", "user_id")
-            .write.format("graft-kv")
-            .options(Map("catalog" -> fwdCat, "newtable" -> "4",
-              "maxVersions" -> "2", "timestamp" -> (phaseStamp + 1).toString))
-            .mode("append").save()
+          if (oldView != null)
+            kvWrite(oldView.select("user_id", "event_id"), viewCat, phaseStamp,
+              opts = deleteMode)
+          kvWrite(roots, viewCat, phaseStamp + 1, anyKeys, versions = 2)
+          if (fwdHits != null)
+            kvWrite(fwdHits.select("event_id"), fwdCat, phaseStamp, opts = deleteMode)
+          kvWrite(puts.select("event_id", "user_id"), fwdCat, phaseStamp + 1, anyKeys,
+            versions = 2)
           // fwdHits/oldView are local checkpoints — their blocks release
           // with the dataset (ContextCleaner), no unpersist to call
-          ()
         }
-        changed.unpersist()
-        ()
       }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    } // withDrainAqe
+    }
   }
 
   /** sv26: the MAINTAINED transitive closure — q27's session-root view
@@ -3342,52 +2937,40 @@ object StreamBatch {
   def sv26StreamSessionRoots(s: SparkSession, dir: String): DataFrame = {
     import graft.datasource.FilterCompiler
     import graft.store.KvStore
-    // wave-sized drains: same shuffle pin as the other CDC maintainers
-    val shufK = "spark.sql.shuffle.partitions"
-    val shufPrev = s.conf.getOption(shufK)
-    s.conf.set(shufK, "8")
-    try {
+    // wave-sized drains: the join-view drains' shuffle pin
+    withConfs(s, ShuffleKey -> "8") {
       val base = Tables.events(s, dir).select(
         col("event_id").cast("long").as("event_id"),
         col("user_id").cast("long").as("user_id"),
         unix_seconds(col("ts")).cast("long").as("tu"))
       val maxId = base.agg(max(col("event_id"))).head().getLong(0)
       val srcParsed = graft.catalog.GraftCatalog.parse(sv26SrcCatalog, Map.empty)
-      def writeSrc(df: DataFrame, ts: Long, overwrite: Boolean): Unit =
-        df.write.format("graft-kv")
-          .options(Map("catalog" -> sv26SrcCatalog, "newtable" -> "4",
-            "timestamp" -> ts.toString,
-            "minSplitNum" -> "0", "maxSplitNum" -> maxId.toString))
-          .mode(if (overwrite) "overwrite" else "append").save()
       val ckpt = tempWorkDir(s, "graft-sv26-ckpt").toString
-      def drain(stamp: Long): Unit = maintainSessionRoots(s, sv26SrcCatalog,
+      def applyBatch(stamp: Long): Unit = maintainSessionRoots(s, sv26SrcCatalog,
         sv26FwdCatalog, sv26ViewCatalog, ckpt, stamp)
       // fresh run every invocation
       Seq(sv26SrcCatalog, sv26FwdCatalog, sv26ViewCatalog).foreach(c =>
         KvStore.drop(graft.catalog.GraftCatalog.parse(c, Map.empty).qualifiedName))
-      writeSrc(base, ts = 1000, overwrite = true)
-      drain(10)
+      kvWrite(base, sv26SrcCatalog, 1000, numKeys(maxId), overwrite = true)
+      applyBatch(10)
       // wave 2: %11 events move +50000 s — their users' chains re-link
-      writeSrc(base.filter(col("event_id") % 11 === 0)
-        .withColumn("tu", col("tu") + 50000L), ts = 2000, overwrite = false)
-      drain(30)
+      kvWrite(base.filter(col("event_id") % 11 === 0)
+        .withColumn("tu", col("tu") + 50000L), sv26SrcCatalog, 2000, numKeys(maxId))
+      applyBatch(30)
       // wave 3, ONE mixed batch: ranged delete + partial resurrection
       val hrf = FilterCompiler.compileAll(srcParsed, Seq(
         org.apache.spark.sql.sources.GreaterThanOrEqual("event_id", 300L),
         org.apache.spark.sql.sources.LessThanOrEqual("event_id", 599L)))
         .exactOrThrow("CDC DELETE")
       KvStore.table(srcParsed.qualifiedName).delete(hrf.ranges, hrf.pred, stamp = 3000)
-      writeSrc(base
+      kvWrite(base
         .filter(col("event_id").between(300L, 599L) && col("event_id") % 5 === 0)
         .withColumn("tu", when(col("event_id") % 11 === 0, col("tu") + 50000L)
-          .otherwise(col("tu"))), ts = 4000, overwrite = false)
-      drain(50)
+          .otherwise(col("tu"))), sv26SrcCatalog, 4000, numKeys(maxId))
+      applyBatch(50)
       s.read.format("graft-kv").option("catalog", sv26ViewCatalog).load()
         .select(col("event_id"), col("session_root"))
         .orderBy(col("event_id"))
-    } finally shufPrev match {
-      case Some(v) => s.conf.set(shufK, v)
-      case None => s.conf.unset(shufK)
     }
   }
 
@@ -3444,7 +3027,7 @@ object StreamBatch {
     "sv24_stream_join_agg"       -> (sv24StreamJoinAgg _),
     "sv25_stream_ivfpq"          -> (sv25StreamIvfPq _),
     "sv26_stream_session_roots"  -> (sv26StreamSessionRoots _),
-  ).view.mapValues(withoutAqe).toMap
+  ).view.mapValues(svEntry).toMap
 
   val oracles: Map[String, String] = Map(
     "sv1_stream_dedup"      -> sv1Sql,

@@ -62,4 +62,17 @@ object Tables {
   }
   def documents(s: SparkSession, dir: String): DataFrame = apply(s, dir, "documents")
   def embeddings(s: SparkSession, dir: String): DataFrame = apply(s, dir, "embeddings")
+
+  /** Run `f` with the session confs `kvs` set, then restore each key on
+    * every exit path to its prior EXPLICIT state: set back if it was set,
+    * unset if it was not. The snapshot reads `getAll`, not `get` or
+    * `getOption`: those report a registered key's default as if it were
+    * set, and restoring from them leaves the key pinned. Session conf is
+    * session-global, so callers run sequentially on one session. */
+  private[queries] def withConfs[A](s: SparkSession, kvs: (String, String)*)(f: => A): A = {
+    val prior = s.conf.getAll
+    kvs.foreach { case (k, v) => s.conf.set(k, v) }
+    try f
+    finally kvs.foreach { case (k, _) => prior.get(k).fold(s.conf.unset(k))(s.conf.set(k, _)) }
+  }
 }

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import java.nio.file.{Files, Path, Paths}
+
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
@@ -23,26 +25,17 @@ object GraftStreaming {
     * writes, and idempotent upserts make epoch replays converge to
     * exactly-once table contents. `options` must carry the catalog.
     * Unlike foreachBatch, a real sink requires a checkpointLocation; when
-    * the caller doesn't pass one, a throwaway temp dir is used — fine for
-    * ephemeral runs, but durable restart/recovery needs a real path. */
+    * the caller doesn't pass one, a throwaway [[tempWorkDir]] is used —
+    * fine for ephemeral runs, but durable restart/recovery needs a real
+    * path. */
   def kvSink(stream: DataFrame, options: Map[String, String]): DataStreamWriter[Row] = {
     val w = stream.writeStream.format("graft-kv").options(options)
     // DataStreamWriter option keys are case-insensitive — match that, or a
     // caller passing "checkpointlocation" would have their durable
     // checkpoint silently shadowed by the throwaway temp dir
     if (options.keys.exists(_.equalsIgnoreCase("checkpointLocation"))) w
-    else {
-      // throwaway checkpoint: RAM-backed when /dev/shm exists (ext4 /tmp
-      // pays create+fsync+rename per offset/commit file) — callers that
-      // need durable restart/recovery pass their own checkpointLocation
-      val shm = java.nio.file.Paths.get("/dev/shm")
-      val base =
-        if (java.nio.file.Files.isDirectory(shm) &&
-            java.nio.file.Files.isWritable(shm))
-          java.nio.file.Files.createTempDirectory(shm, "graft-kv-sink-ckpt")
-        else java.nio.file.Files.createTempDirectory("graft-kv-sink-ckpt")
-      w.option("checkpointLocation", base.toString)
-    }
+    else w.option("checkpointLocation",
+      tempWorkDir(stream.sparkSession, "graft-kv-sink-ckpt").toString)
   }
 
   /** Watermarked 5-minute tumbling-window count/sum per event type —
@@ -427,10 +420,32 @@ object GraftStreaming {
       .dropDuplicatesWithinWatermark(keyCols)
 
   /** Run a streaming query until all currently-available source data is
-    * processed, then stop (test-harness helper). */
+    * processed, then stop. */
   def runOnce(writer: DataStreamWriter[Row]): StreamingQuery = {
     val q = writer.trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
     q
+  }
+
+  /** A fresh ephemeral working dir (streaming checkpoint, file source, CDC
+    * log) under `graft.stream.tmpBase`, else RAM-backed /dev/shm when
+    * present, else java.io.tmpdir. On ext4 every offset/commit-log and
+    * state-store delta write pays create+fsync+rename against a real disk,
+    * and a drain suite writes dozens of them; point `graft.stream.tmpBase`
+    * at reliable storage for streams that outlive the process. The sv
+    * entries delete every dir made during the entry when it returns; other
+    * callers delete theirs with [[deleteTree]]. */
+  def tempWorkDir(s: SparkSession, prefix: String): Path = {
+    val shm = Paths.get("/dev/shm")
+    s.conf.getOption("graft.stream.tmpBase").map(Paths.get(_))
+      .orElse(Some(shm).filter(p => Files.isDirectory(p) && Files.isWritable(p)))
+      .fold(Files.createTempDirectory(prefix))(Files.createTempDirectory(_, prefix))
+  }
+
+  /** Delete a working dir and everything under it; a no-op if it is gone. */
+  def deleteTree(root: Path): Unit = if (Files.exists(root)) {
+    val st = Files.walk(root)
+    try st.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(p => Files.deleteIfExists(p))
+    finally st.close()
   }
 }

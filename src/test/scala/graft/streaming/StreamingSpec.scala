@@ -1675,7 +1675,9 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // drain under a single-threaded-session contract; the restore lives in
     // a finally. Pin it: a drain that dies mid-batch (the negative-count
     // refusal) must leave spark.sql.adaptive.enabled exactly as it found
-    // it, not leaked off for whatever runs next on the session.
+    // it, not leaked off for whatever runs next on the session — down to
+    // whether the key is explicitly set at all — and must leave no batch
+    // frame cached behind.
     import graft.queries.StreamBatch
     val suf = "cres"
     val srcCat = StreamBatch.sv21SrcCatalog.replace("\"kv_lm_src\"", s""""kv_lm_src_$suf"""")
@@ -1705,8 +1707,13 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       .options(Map("catalog" -> cntCat, "maxVersions" -> "2", "timestamp" -> "5"))
       .mode("append").save()
     val ckpt = Files.createTempDirectory("graft-cres-ckpt").toString
+    // AQE starts explicitly UNSET: the restore must not pin its default
+    spark.conf.unset("spark.sql.adaptive.enabled")
     val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled")
     val shufBefore = spark.conf.get("spark.sql.shuffle.partitions")
+    val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    val explicitBefore = keys.map(spark.conf.getAll.get)
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
     intercept[Throwable] {
       StreamBatch.maintainBigramCounts(spark, srcCat, mirCat, cntCat,
         maxId = 100L, ckpt)
@@ -1715,6 +1722,10 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       "a throwing drain must restore spark.sql.adaptive.enabled")
     assert(spark.conf.get("spark.sql.shuffle.partitions") == shufBefore,
       "a throwing drain must not disturb spark.sql.shuffle.partitions")
+    assert(keys.map(spark.conf.getAll.get) == explicitBefore,
+      "a throwing drain must restore each key's explicitly-set state")
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- cachedBefore
+    assert(leaked.isEmpty, s"a throwing drain leaked persisted RDDs $leaked")
     Seq(s"default:kv_lm_src_$suf", s"default:kv_lm_mirror_$suf",
       s"default:kv_lm_counts_$suf").foreach(KvStore.drop)
   }
@@ -2930,5 +2941,70 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       "the kept pair must survive its own retirement tombstone (re-put at T+1)")
     evalG.unpersist()
     Seq(s"default:kv_ctm_src_$suf", s"default:kv_ctm_mirror_$suf").foreach(KvStore.drop)
+  }
+
+  test("an sv entry deletes every working dir it made; its answer outlives them") {
+    import graft.queries.StreamBatch
+    val entries = Seq("sv11_stream_cdc_tombstones", "sv15_stream_cdc_lakehouse",
+      "sv17_stream_mixture_stats", "sv24_stream_join_agg")
+    val base = Files.createTempDirectory("graft-entry-tmp")
+    val direct = Files.createTempDirectory("graft-direct-tmp")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSeq
+    try {
+      spark.conf.set("graft.stream.tmpBase", base.toString)
+      // collected only after the entry returned, i.e. after its dirs went
+      val viaEntry = entries.map(q => rows(StreamBatch.queries(q)(spark, sfDir)))
+      val left = Files.list(base)
+      try assert(!left.iterator().hasNext, "an sv entry left working dirs behind")
+      finally left.close()
+      // the same computations, unwrapped, with their working dirs kept
+      spark.conf.set("graft.stream.tmpBase", direct.toString)
+      val unwrapped = Seq[(org.apache.spark.sql.SparkSession, String) =>
+          org.apache.spark.sql.DataFrame](
+        StreamBatch.sv11StreamCdcTombstones, StreamBatch.sv15StreamCdcLakehouse,
+        StreamBatch.sv17StreamMixtureStats, StreamBatch.sv24StreamJoinAgg)
+        .map(f => rows(f(spark, sfDir)))
+      entries.zip(viaEntry.zip(unwrapped)).foreach { case (q, (got, want)) =>
+        assert(got.nonEmpty && got == want, s"$q: entry answer differs from the unwrapped run")
+      }
+    } finally {
+      spark.conf.unset("graft.stream.tmpBase")
+      Seq(base, direct).foreach(GraftStreaming.deleteTree)
+    }
+  }
+
+  test("graft.stream.ckptChecksum: stream checkpoints carry Spark .crc files only when true") {
+    // Spark's checkpoint checksums (a `<file>.crc` beside each state-store
+    // file — one extra create+fsync and one extra read per file) are off by
+    // default; the opt-in must still turn them on, and each stream run
+    // restores the session's own checksum setting. Hadoop's local-FS
+    // `.<file>.crc` companions are written either way and do not count.
+    import graft.queries.StreamBatch
+    import scala.jdk.CollectionConverters._
+    val checksumKey = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
+    def sparkCrcFiles(optIn: Boolean): Seq[String] = {
+      val base = Files.createTempDirectory("graft-crc-tmp")
+      spark.conf.set("graft.stream.tmpBase", base.toString)
+      if (optIn) spark.conf.set("graft.stream.ckptChecksum", "true")
+      val before = spark.conf.getAll.get(checksumKey)
+      // sv1's dedup keeps state, so its checkpoint has state-store files
+      try StreamBatch.sv1StreamDedup(spark, sfDir).count()
+      finally Seq("graft.stream.ckptChecksum", "graft.stream.tmpBase").foreach(spark.conf.unset)
+      assert(spark.conf.getAll.get(checksumKey) == before,
+        "a stream run must restore the session's checksum setting")
+      val st = Files.walk(base)
+      try {
+        val files = st.iterator().asScala.toSeq.map(_.getFileName.toString)
+        assert(files.exists(_.endsWith(".delta")), s"the stream kept no state: $files")
+        files.filter(f => f.endsWith(".crc") && !f.startsWith("."))
+      } finally {
+        st.close()
+        GraftStreaming.deleteTree(base)
+      }
+    }
+    val off = sparkCrcFiles(optIn = false)
+    assert(off.isEmpty, s"the default wrote checkpoint checksum files: $off")
+    assert(sparkCrcFiles(optIn = true).nonEmpty,
+      "graft.stream.ckptChecksum=true must write checkpoint checksum files")
   }
 }
