@@ -84,7 +84,9 @@ object Bench {
       }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
+    // graft's session settings: the extensions, and a codegen cache that
+    // holds the whole suite's 169 queries x 2-3 reps (GraftExtensions.configure)
+    val spark = GraftExtensions.configure(SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       // NO global minPartitionSize floor: r10's 16k floor kept the CPU-bound
@@ -94,17 +96,7 @@ object Bench {
       // explicit-N repartition (Dedup.minhashRepPairs), which AQE's
       // coalescing is required to respect, so the fix is local to the
       // queries that need it.
-      .config("spark.ui.enabled", "false")
-      // The suite runs 169 queries x 2-3 reps through ONE session; the
-      // default 100-entry whole-stage-codegen cache thrashes (each query
-      // has ~10-60 codegen stages), so rep 2 re-pays Janino compilation
-      // for every stage. 4000 entries covers the whole suite (generated
-      // classes are a few KB each — tens of MB of driver memory, scale-
-      // independent). useIdInClassName=false keeps identical plan
-      // subtrees' sources byte-identical so they share one entry.
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .config("spark.sql.codegen.useIdInClassName", "false")
-      .withExtensions(new GraftExtensions) // the spark.sql.extensions path
+      .config("spark.ui.enabled", "false"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // warm-up: JVM/codegen/parquet-footer costs land here, not on the first

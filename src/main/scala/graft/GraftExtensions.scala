@@ -37,6 +37,23 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
 object GraftExtensions {
 
+  /** graft's session settings, applied to a builder before `getOrCreate`:
+    * the extensions above, plus a whole-stage-codegen cache sized for a
+    * session that runs many distinct queries. The default 100-entry cache
+    * thrashes once a session cycles through more plans than that (a
+    * query has ~10-60 codegen stages), so every repeat re-pays Janino
+    * compilation; 4000 entries of a few KB each cost tens of MB of driver
+    * memory. `useIdInClassName=false` keeps identical plan subtrees'
+    * generated sources byte-identical, so they share one entry. The cache
+    * size is a STATIC conf: it only takes effect on the builder of a
+    * session that creates its SparkContext, never through
+    * `spark.conf.set` on a live one. */
+  def configure(builder: SparkSession.Builder): SparkSession.Builder =
+    builder
+      .config("spark.sql.codegen.cache.maxEntries", "4000")
+      .config("spark.sql.codegen.useIdInClassName", "false")
+      .withExtensions(new GraftExtensions)
+
   private def litInt(fn: String, arg: String, e: Expression): Int = e match {
     case Literal(v: Int, _) => v
     case Literal(v: Long, _) => v.toInt

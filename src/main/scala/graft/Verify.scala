@@ -10,19 +10,14 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
+    val spark = GraftExtensions.configure(SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       // No global minPartitionSize floor (see Bench.scala): the CPU-bound
       // dedup reranks pin their own parallelism via an explicit-N
       // repartition in Dedup.minhashRepPairs instead.
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // codegen-cache sizing: same rationale as Bench.scala (169 queries
-      // through one session vs the 100-entry default cache)
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .config("spark.sql.codegen.useIdInClassName", "false")
-      .withExtensions(new GraftExtensions) // the spark.sql.extensions path
+      .config("spark.ui.enabled", "false"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

@@ -31,18 +31,23 @@ private[functions] object VecNulls {
   /** Codegen for expressions that delegate to their own `nullSafeEval` via a
     * reference object: a null return (null array element) must flip
     * `ev.isNull` — a bare cast would leave `ev.isNull` false with a null
-    * value and NPE downstream. */
-  def delegateCode(ctx: CodegenContext, ev: ExprCode, self: String, a: String): String = {
-    val tmp = ctx.freshName("delegated")
-    s"""
-       |Object $tmp = $self.nullSafeEval($a);
-       |if ($tmp == null) {
-       |  ${ev.isNull} = true;
-       |} else {
-       |  ${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $tmp;
-       |}
-     """.stripMargin
-  }
+    * value and NPE downstream. A non-nullable expression gets the bare
+    * cast: `nullSafeCodeGen` declares no `ev.isNull` variable for it, so
+    * assigning one would not compile. */
+  def delegateCode(ctx: CodegenContext, ev: ExprCode, self: String, a: String,
+      nullable: Boolean): String =
+    if (!nullable) s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $self.nullSafeEval($a);"
+    else {
+      val tmp = ctx.freshName("delegated")
+      s"""
+         |Object $tmp = $self.nullSafeEval($a);
+         |if ($tmp == null) {
+         |  ${ev.isNull} = true;
+         |} else {
+         |  ${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $tmp;
+         |}
+       """.stripMargin
+    }
 
   /** Codegen prefix: sets `ev.isNull` and skips `body` when `a` holds a null
     * element; emits `body` alone when the array type cannot hold nulls. */
@@ -487,7 +492,7 @@ case class NearestCentroids(child: Expression, centroids: Array[Array[Double]],
     // the surrounding plan in whole-stage codegen via a reference call
     val self = ctx.addReferenceObj("nearestCentroids", this,
       classOf[NearestCentroids].getName)
-    nullSafeCodeGen(ctx, ev, a => VecNulls.delegateCode(ctx, ev, self, a))
+    nullSafeCodeGen(ctx, ev, a => VecNulls.delegateCode(ctx, ev, self, a, nullable))
   }
 
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
@@ -553,7 +558,7 @@ case class BoundaryProbeCells(child: Expression, centroids: Array[Array[Double]]
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val self = ctx.addReferenceObj("boundaryProbeCells", this,
       classOf[BoundaryProbeCells].getName)
-    nullSafeCodeGen(ctx, ev, a => VecNulls.delegateCode(ctx, ev, self, a))
+    nullSafeCodeGen(ctx, ev, a => VecNulls.delegateCode(ctx, ev, self, a, nullable))
   }
 
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)

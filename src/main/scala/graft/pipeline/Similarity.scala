@@ -1,8 +1,11 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Encoder}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
+
+import graft.functions.VectorExprs.nearestCentroids
 
 /** Similarity search over embedding columns (`array<float>`).
   *
@@ -14,6 +17,8 @@ import org.apache.spark.sql.functions._
   *  - [[lshTopK]] is the scale path: random-hyperplane bucketing (seeded,
   *    deterministic) cuts the scanned corpus per query to one bucket before
   *    the exact rerank — the 100 TB shape where brute force is impossible.
+  *  - [[ivfCentroids]] and [[pqCodebooks]] share one Lloyd trainer; every
+  *    search ends in the same per-query ranker.
   */
 object Similarity {
 
@@ -23,20 +28,30 @@ object Similarity {
   def cosine(a: Column, b: Column): Column =
     graft.functions.VectorExprs.cosineSim(a, b)
 
+  /** The per-query top-k every search here ends with: scores each
+    * `(query_id, neighbor_id)` candidate with `score`, ranks per query by
+    * (score DESC, neighbor_id ASC) — a total order, so ties resolve the
+    * same way on every engine — and keeps ranks 1..k as `(query_id,
+    * neighbor_id, extra…, score, rank)`. The window is keyed on the query,
+    * so the shuffle carries only candidate rows. */
+  private[graft] def topKPerQuery(cands: DataFrame, score: Column, k: Int,
+      extra: String*): DataFrame = {
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("score").desc, col("neighbor_id").asc)
+    cands.withColumn("score", score)
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select((Seq("query_id", "neighbor_id") ++ extra ++ Seq("score", "rank")).map(col): _*)
+  }
+
   /** Exact top-k neighbors for each query vector. `queries` must be small
     * enough to broadcast (it is hint-broadcast); the corpus is scanned once. */
   def bruteForceTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
       vecCol: String, k: Int): DataFrame = {
     val q = broadcast(queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
-    val scored = c.crossJoin(q)
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("score", cosine(col("qv"), col("cv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("score"), col("rank"))
+    topKPerQuery(c.crossJoin(q).filter(col("query_id") =!= col("neighbor_id")),
+      cosine(col("qv"), col("cv")), k)
   }
 
   /** Hard-negative mining for contrastive/reranker training data: for each
@@ -58,15 +73,8 @@ object Similarity {
       col(vecCol).as("qv"), col(labelCol).as("query_label")))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
       col(labelCol).as("neighbor_label"))
-    val scored = c.crossJoin(q)
-      .filter(col("neighbor_label") =!= col("query_label"))
-      .withColumn("score", cosine(col("qv"), col("cv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("neighbor_label"),
-        col("score"), col("rank"))
+    topKPerQuery(c.crossJoin(q).filter(col("neighbor_label") =!= col("query_label")),
+      cosine(col("qv"), col("cv")), k, "neighbor_label")
   }
 
   /** Random-hyperplane LSH bucket id (sign bits of dim·r_i), via the native
@@ -91,109 +99,22 @@ object Similarity {
       explode(array(probes: _*)).as("bucket")))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
       lshBucket(col(vecCol), bits, dim).as("bucket"))
-    val scored = c.join(q, Seq("bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("score", cosine(col("qv"), col("cv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("score"), col("rank"))
+    topKPerQuery(c.join(q, Seq("bucket")).filter(col("query_id") =!= col("neighbor_id")),
+      cosine(col("qv"), col("cv")), k)
   }
 
-  /** Train an IVF coarse quantizer: seed centroids = a deterministic
-    * hash-spread sample of `nlist` corpus vectors, refined by `iters`
-    * distributed Lloyd iterations (assign all vectors to their nearest
-    * centroid, average per cell). Lowest-id seeding was replaced in round 4:
-    * when ids correlate with content (or with the evaluation queries) it
-    * measures recall against its own seed block — hash-spread seeding plus
-    * a few Lloyd rounds gives an honest, higher-quality quantizer.
-    *
-    * The per-cell mean runs through a typed vector-sum [[Aggregator]]:
-    * partial aggregation accumulates (Σvec, count) buffers map-side, so the
-    * shuffle carries at most nlist×(dim+1) doubles PER PARTITION — round 1
-    * exploded every vector to corpus×dim (cell, pos, value) rows and
-    * shuffled all of them. Only the nlist×dim centroid matrix ever reaches
-    * the driver. */
+  /** The cell of `vec` under a trained quantizer: its most cosine-similar
+    * centroid, ties to the lowest index. NULL for a NULL vector or one with
+    * a NULL element. */
+  private def cellOf(vec: Column, cents: Array[Array[Double]]): Column =
+    element_at(nearestCentroids(vec, cents, 1), 1)
+
+  /** Train an IVF coarse quantizer of `nlist` cells: hash-spread seeds
+    * refined by `iters` distributed Lloyd iterations — [[lloyd]] with one
+    * subspace, the whole vector. Returns the nlist × dim centroid matrix. */
   def ivfCentroids(corpus: DataFrame, idCol: String, vecCol: String,
-      nlist: Int, iters: Int = 5): Array[Array[Double]] = {
-    // seeds: the nlist rows with the SMALLEST xxhash64(id) — a
-    // deterministic pseudo-uniform sample of the corpus (k-means||-style
-    // spread), instead of the nlist lowest ids, whose vectors can be an
-    // arbitrarily biased block when ids correlate with content. Ties break
-    // by id; a TakeOrdered top-nlist, never a full sort.
-    // NULL vectors (and vectors with NULL elements, which the native
-    // expressions null out) cannot train or vote — exclude them up front;
-    // the typed encoders below would otherwise die mid-Lloyd-iteration on
-    // a NULL in a non-nullable field
-    val clean = corpus.filter(col(vecCol).isNotNull &&
-      !exists(col(vecCol), _.isNull))
-    val seeds: Array[Array[Double]] = clean
-      .orderBy(xxhash64(col(idCol)), col(idCol)).limit(nlist)
-      .select(col(vecCol)).collect()
-      .map(_.getSeq[Any](0).map {
-        case f: Float => f.toDouble
-        case d: Double => d
-        case n: Number => n.doubleValue()
-      }.toArray)
-    require(seeds.nonEmpty,
-      s"ivfCentroids: no non-null $vecCol rows to train a quantizer on")
-    val dim = seeds.head.length
-    val sp = corpus.sparkSession
-    import sp.implicits._
-    def assignTo(cents: Array[Array[Double]]) = clean.select(
-      element_at(graft.functions.VectorExprs.nearestCentroids(col(vecCol), cents, 1), 1)
-        .as("cell"),
-      col(vecCol).cast("array<double>").as("v"))
-      .as[(Int, Seq[Double])]
-    val vecSum = new org.apache.spark.sql.expressions.Aggregator[
-        (Int, Seq[Double]), (Array[Double], Long), Array[Double]] {
-      override def zero: (Array[Double], Long) = (new Array[Double](dim), 0L)
-      override def reduce(b: (Array[Double], Long), a: (Int, Seq[Double])): (Array[Double], Long) = {
-        val arr = b._1; val v = a._2
-        var i = 0
-        val n = math.min(dim, v.length)
-        while (i < n) { arr(i) += v(i); i += 1 }
-        (arr, b._2 + 1)
-      }
-      override def merge(x: (Array[Double], Long), y: (Array[Double], Long)): (Array[Double], Long) = {
-        var i = 0
-        while (i < dim) { x._1(i) += y._1(i); i += 1 }
-        (x._1, x._2 + y._2)
-      }
-      override def finish(b: (Array[Double], Long)): Array[Double] =
-        b._1.map(_ / b._2) // every group has >= 1 member by construction
-      // SESSION-FREE encoders (ExpressionEncoder from TypeTags), NOT the
-      // sp.implicits ones: resolving implicits here makes this anonymous
-      // class capture the enclosing SparkSession, and the Aggregator ships
-      // to tasks — serialization then fails the moment anything has
-      // initialized the session's lazy (non-serializable)
-      // ObservationManager, i.e. the first observe() anywhere breaks every
-      // later ivfCentroids call.
-      override def bufferEncoder: org.apache.spark.sql.Encoder[(Array[Double], Long)] =
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
-      override def outputEncoder: org.apache.spark.sql.Encoder[Array[Double]] =
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
-    }
-    // each Lloyd round: one corpus pass, shuffle ≤ nlist×(dim+1) doubles
-    // per partition; empty cells keep their previous centroid
-    var cents = seeds
-    var it = 0
-    while (it < math.max(iters, 1)) {
-      val means: Array[(Int, Array[Double])] =
-        assignTo(cents).groupByKey(_._1).agg(vecSum.toColumn).collect()
-      val out = cents.map(_.clone())
-      means.foreach { case (cell, m) =>
-        if (cell < out.length) {
-          var i = 0
-          while (i < math.min(dim, m.length)) { out(cell)(i) = m(i); i += 1 }
-        }
-      }
-      cents = out
-      it += 1
-    }
-    cents
-  }
+      nlist: Int, iters: Int = 5): Array[Array[Double]] =
+    lloyd(corpus, idCol, vecCol, Seq(col(vecCol)), nlist, iters)(0)
 
   /** IVF ANN top-k: corpus vectors are bucketed by nearest centroid (one
     * cell each); each query probes its `nprobe` nearest cells and reranks
@@ -213,20 +134,12 @@ object Similarity {
       corpus: DataFrame, idCol: String, vecCol: String, k: Int,
       nprobe: Int): DataFrame = {
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-      element_at(graft.functions.VectorExprs.nearestCentroids(col(vecCol), cents, 1), 1)
-        .as("cell"))
+      cellOf(col(vecCol), cents).as("cell"))
     val q = broadcast(queries
       .select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-        explode(graft.functions.VectorExprs.nearestCentroids(col(vecCol), cents, nprobe))
-          .as("cell")))
-    val scored = c.join(q, Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("score", cosine(col("qv"), col("cv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("score"), col("rank"))
+        explode(nearestCentroids(col(vecCol), cents, nprobe)).as("cell")))
+    topKPerQuery(c.join(q, Seq("cell")).filter(col("query_id") =!= col("neighbor_id")),
+      cosine(col("qv"), col("cv")), k)
   }
 
   /** Cluster-balanced prototype selection: the `k` most-central vectors of
@@ -255,8 +168,7 @@ object Similarity {
       .map { case (c, i) => (i, c.toSeq) }.toSeq.toDF("cell", "cv")
     val assigned = corpus.select(col(idCol).as("vec_id"),
       col(vecCol).cast("array<double>").as("v"),
-      element_at(graft.functions.VectorExprs.nearestCentroids(col(vecCol), cents, 1), 1)
-        .as("cell"))
+      cellOf(col(vecCol), cents).as("cell"))
     val scored = assigned.join(broadcast(centDf), Seq("cell"))
       .withColumn("score", cosine(col("v"), col("cv")))
     val w = Window.partitionBy(col("cell"))
@@ -284,9 +196,9 @@ object Similarity {
 
   /** Train PRODUCT-QUANTIZATION codebooks (Jégou et al. 2011): the vector
     * splits into `m` contiguous subspaces of `dim/m` dims, each with its
-    * own `k`-centroid quantizer (one [[ivfCentroids]] run over the sliced
-    * corpus — same hash-spread seeding and Lloyd refinement). A vector
-    * then stores as `m` small codes (m bytes at k ≤ 256) instead of
+    * own `k`-centroid quantizer, all trained together by [[lloyd]] (one
+    * seed job and one corpus pass per iteration for every subspace). A
+    * vector then stores as `m` small codes (m bytes at k ≤ 256) instead of
     * `4·dim` bytes — the 32× compression that keeps a 100 TB embedding
     * corpus's ANN structure memory-resident, where [[quantizeInt8]] only
     * buys 4×. Returns `m` matrices of `k × dim/m`. */
@@ -295,118 +207,119 @@ object Similarity {
     require(m > 0 && dim % m == 0,
       s"PQ needs dim divisible by m, got dim=$dim m=$m")
     val sub = dim / m
-    // FUSED training: all m subspace quantizers train from ONE TakeOrdered
-    // seed job and ONE corpus pass per Lloyd iteration (the per-(subspace,
-    // cell) sums ride a single aggregation keyed (j, cell)), instead of
-    // m separate ivfCentroids runs — m×(1+iters) corpus jobs → 2+iters.
-    // At sf0.1 the 8-subspace training was ~13 s of kv32's populate, all
-    // per-job overhead; at cluster scale the win is m× fewer corpus scans.
-    // Semantics are the per-subspace run's exactly — same hash-spread
-    // seed rows (the seed ORDER ignores the slice, so all subspaces share
-    // seed rows), same assignment expression, same per-cell mean, same
-    // empty-cell carry-over. The one divergence risk is per-subspace
-    // CLEAN sets: a vector with a null ELEMENT only poisons the subspaces
-    // whose slice contains it — probe for that (one cheap aggregate) and
-    // fall back to the per-subspace path when any null element exists.
-    val notNull = corpus.filter(col(vecCol).isNotNull)
-    val ragged = notNull.agg(coalesce(max(
-        when(exists(col(vecCol), x => x.isNull), lit(1)).otherwise(lit(0))),
-      lit(0))).head().getInt(0) == 1
-    if (ragged)
-      return (0 until m).map { j =>
-        ivfCentroids(corpus.select(col(idCol),
-          slice(col(vecCol), j * sub + 1, sub).as("sv")), idCol, "sv", k, iters)
-      }.toArray
-    val clean = notNull
-    val seedRows: Array[Array[Double]] = clean
-      .orderBy(xxhash64(col(idCol)), col(idCol)).limit(k)
-      .select(col(vecCol)).collect()
-      .map(_.getSeq[Any](0).map {
+    lloyd(corpus, idCol, vecCol, (0 until m).map(j => slice(col(vecCol), j * sub + 1, sub)),
+      k, iters)
+  }
+
+  /** The Lloyd k-means trainer behind [[ivfCentroids]] and [[pqCodebooks]]:
+    * one `k`-cell quantizer per subspace column in `subs` (the whole
+    * vector, or PQ's slices), trained together.
+    *
+    *  - Subspace j trains on its own CLEAN rows: the slice is non-null and
+    *    holds no NULL element (the native expressions null such a slice
+    *    out, so it cannot vote). A vector with a NULL element in one slice
+    *    still trains every other subspace.
+    *  - Seeds: per subspace, the k clean rows with the smallest
+    *    (xxhash64(id), id) — a deterministic pseudo-uniform sample, not the
+    *    k lowest ids, whose vectors can be a biased block when ids
+    *    correlate with content. One TakeOrdered per subspace, never a full
+    *    sort, all in one job.
+    *  - Each iteration is one corpus pass: every row explodes to its
+    *    (j, cell, slice) triples and [[VecSum]] sums them per (j, cell),
+    *    map-side first, so the shuffle carries at most m·k·(dim+1) doubles
+    *    per partition and only the means reach the driver. A cell that
+    *    drew no rows keeps its previous centroid. */
+  private def lloyd(corpus: DataFrame, idCol: String, vecCol: String, subs: Seq[Column],
+      k: Int, iters: Int): Array[Array[Array[Double]]] = {
+    val seeds = subs.indices.map { j =>
+      corpus.filter(subs(j).isNotNull && !exists(subs(j), _.isNull))
+        .orderBy(xxhash64(col(idCol)), col(idCol)).limit(k).select(lit(j), subs(j))
+    }.reduce(_ union _).collect()
+    var books = subs.indices.map { j =>
+      seeds.filter(_.getInt(0) == j).map(_.getSeq[Any](1).map {
         case f: Float => f.toDouble
         case d: Double => d
         case n: Number => n.doubleValue()
       }.toArray)
-    require(seedRows.nonEmpty,
-      s"ivfCentroids: no non-null $vecCol rows to train a quantizer on")
-    var books: Array[Array[Array[Double]]] = (0 until m).map { j =>
-      seedRows.map(v => v.slice(j * sub, math.min(v.length, j * sub + sub)))
     }.toArray
+    require(books.forall(_.nonEmpty), s"no non-null $vecCol rows to train a quantizer on")
+    val dims = books.map(_.head.length)
+    val vecSum = new VecSum(dims.max)
     val sp = corpus.sparkSession
     import sp.implicits._
-    val subSum = new org.apache.spark.sql.expressions.Aggregator[
-        (Int, Int, Seq[Double]), (Array[Double], Long), Array[Double]] {
-      override def zero: (Array[Double], Long) = (new Array[Double](sub), 0L)
-      override def reduce(b: (Array[Double], Long), a: (Int, Int, Seq[Double])): (Array[Double], Long) = {
-        val arr = b._1; val v = a._3
-        var i = 0
-        val n = math.min(sub, v.length)
-        while (i < n) { arr(i) += v(i); i += 1 }
-        (arr, b._2 + 1)
-      }
-      override def merge(x: (Array[Double], Long), y: (Array[Double], Long)): (Array[Double], Long) = {
-        var i = 0
-        while (i < sub) { x._1(i) += y._1(i); i += 1 }
-        (x._1, x._2 + y._2)
-      }
-      override def finish(b: (Array[Double], Long)): Array[Double] =
-        b._1.map(_ / b._2)
-      // session-free encoders — see ivfCentroids' vecSum for why
-      override def bufferEncoder: org.apache.spark.sql.Encoder[(Array[Double], Long)] =
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
-      override def outputEncoder: org.apache.spark.sql.Encoder[Array[Double]] =
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
-    }
-    var it = 0
-    while (it < math.max(iters, 1)) {
-      val bk = books
-      val subCols = (0 until m).map { j =>
-        struct(lit(j).as("j"),
-          element_at(graft.functions.VectorExprs.nearestCentroids(
-            slice(col(vecCol), j * sub + 1, sub), bk(j), 1), 1).as("cell"),
-          slice(col(vecCol), j * sub + 1, sub).cast("array<double>").as("v"))
-      }
-      val sums: Array[((Int, Int), Array[Double])] = clean
-        .select(explode(array(subCols: _*)).as("s"))
+    for (_ <- 1 to math.max(iters, 1)) {
+      val triples = subs.indices.map(j => struct(lit(j).as("j"),
+        cellOf(subs(j), books(j)).as("cell"), subs(j).cast("array<double>").as("v")))
+      val means = corpus.select(explode(array(triples: _*)).as("s"))
         .select(col("s.j"), col("s.cell"), col("s.v"))
+        .filter(col("cell").isNotNull)
         .as[(Int, Int, Seq[Double])]
         .groupByKey(t => (t._1, t._2))
-        .agg(subSum.toColumn).collect()
-      val out = books.map(_.map(_.clone()))
-      sums.foreach { case ((j, cell), mean) =>
-        if (j < out.length && cell >= 0 && cell < out(j).length) {
-          val dimj = out(j)(cell).length
-          var i = 0
-          while (i < math.min(dimj, mean.length)) { out(j)(cell)(i) = mean(i); i += 1 }
-        }
+        .agg(vecSum.toColumn).collect()
+      books = books.map(_.map(_.clone()))
+      // a mean updates the first dims(j) components: subspace j's width is
+      // its first seed's length, whatever the shared buffer's size
+      means.foreach { case ((j, cell), mean) =>
+        if (cell >= 0 && cell < books(j).length)
+          Array.copy(mean, 0, books(j)(cell), 0, math.min(dims(j), books(j)(cell).length))
       }
-      books = out
-      it += 1
     }
     books
   }
 
-  /** PQ codes of a vector column: per subspace, the nearest codebook
-    * centroid (cosine, ties to the lowest cell — the [[ivfCentroids]]
-    * assignment rule). Map-only against broadcast codebooks. */
-  def pqCodes(vec: Column, books: Array[Array[Array[Double]]]): Column = {
-    val sub = books(0)(0).length
-    array(books.indices.map { j =>
-      element_at(graft.functions.VectorExprs.nearestCentroids(
-        slice(vec, j * sub + 1, sub), books(j), 1), 1)
-    }: _*)
+  /** The Lloyd update's reduction: per (subspace, cell), the vector sum and
+    * count of the assigned rows, finished to their mean. Its encoders are
+    * SESSION-FREE (ExpressionEncoder from TypeTags), not `sp.implicits`:
+    * resolving implicits would make the Aggregator capture the
+    * SparkSession, and it ships to tasks — serialization then fails once
+    * anything has initialized the session's lazy (non-serializable)
+    * ObservationManager, i.e. the first observe() anywhere breaks every
+    * later training run. */
+  private class VecSum(dim: Int)
+      extends Aggregator[(Int, Int, Seq[Double]), (Array[Double], Long), Array[Double]] {
+    def zero: (Array[Double], Long) = (new Array[Double](dim), 0L)
+    def reduce(b: (Array[Double], Long), a: (Int, Int, Seq[Double])): (Array[Double], Long) = {
+      val v = a._3
+      val n = math.min(dim, v.length)
+      var i = 0
+      while (i < n) { b._1(i) += v(i); i += 1 }
+      (b._1, b._2 + 1)
+    }
+    def merge(x: (Array[Double], Long), y: (Array[Double], Long)): (Array[Double], Long) = {
+      var i = 0
+      while (i < dim) { x._1(i) += y._1(i); i += 1 }
+      (x._1, x._2 + y._2)
+    }
+    def finish(b: (Array[Double], Long)): Array[Double] = b._1.map(_ / b._2)
+    def bufferEncoder: Encoder[(Array[Double], Long)] = ExpressionEncoder()
+    def outputEncoder: Encoder[Array[Double]] = ExpressionEncoder()
   }
 
-  /** PQ reconstruction: the concatenation of each subspace's chosen
-    * centroid — the decompressed stand-in a PQ search scores against.
-    * Pure projection over broadcast codebook literals. */
-  def pqReconstruct(vec: Column, books: Array[Array[Array[Double]]]): Column = {
+  /** The PQ code of `vec`'s subspace `j`: the nearest centroid of its slice
+    * in codebook `j` (cosine, ties to the lowest cell — the
+    * [[ivfCentroids]] assignment rule). */
+  private def pqCode(vec: Column, books: Array[Array[Array[Double]]], j: Int): Column = {
     val sub = books(0)(0).length
-    concat(books.indices.map { j =>
-      val code = element_at(graft.functions.VectorExprs.nearestCentroids(
-        slice(vec, j * sub + 1, sub), books(j), 1), 1)
-      element_at(typedLit(books(j).map(_.toSeq).toSeq), code + 1)
-    }: _*)
+    cellOf(slice(vec, j * sub + 1, sub), books(j))
   }
+
+  /** PQ codes of a vector column: one [[pqCode]] per subspace. Map-only
+    * against broadcast codebooks. */
+  def pqCodes(vec: Column, books: Array[Array[Array[Double]]]): Column =
+    array(books.indices.map(pqCode(vec, books, _)): _*)
+
+  /** The PQ reconstruction behind every PQ search: the concatenation of
+    * each subspace's chosen centroid, `code(j)` being subspace j's code —
+    * a pure projection over broadcast codebook literals. */
+  private def reconstruct(books: Array[Array[Array[Double]]], code: Int => Column): Column =
+    concat(books.indices.map { j =>
+      element_at(typedLit(books(j).map(_.toSeq).toSeq), code(j) + 1)
+    }: _*)
+
+  /** PQ reconstruction of a full vector column: the decompressed stand-in
+    * a PQ search scores against. */
+  def pqReconstruct(vec: Column, books: Array[Array[Array[Double]]]): Column =
+    reconstruct(books, pqCode(vec, books, _))
 
   /** PQ ANN top-k with PRE-TRAINED codebooks: every corpus vector scores
     * through its RECONSTRUCTION (asymmetric distance — the query side
@@ -425,14 +338,8 @@ object Similarity {
     val c = corpus.select(col(idCol).as("neighbor_id"),
       pqReconstruct(col(vecCol), books).as("rv"))
     val q = broadcast(queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")))
-    val scored = c.crossJoin(q)
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("score", cosine(col("qv"), col("rv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("score"), col("rank"))
+    topKPerQuery(c.crossJoin(q).filter(col("query_id") =!= col("neighbor_id")),
+      cosine(col("qv"), col("rv")), k)
   }
 
   /** PQ ANN over a MATERIALIZED code table — the production shape
@@ -447,20 +354,11 @@ object Similarity {
   def pqTopKFromCodes(books: Array[Array[Array[Double]]],
       queries: DataFrame, codeTable: DataFrame, idCol: String, vecCol: String,
       k: Int): DataFrame = {
-    val rv = concat(books.indices.map { j =>
-      element_at(typedLit(books(j).map(_.toSeq).toSeq),
-        element_at(col("codes"), j + 1) + 1)
-    }: _*)
-    val c = codeTable.select(col(idCol).as("neighbor_id"), rv.as("rv"))
+    val c = codeTable.select(col(idCol).as("neighbor_id"),
+      reconstruct(books, j => element_at(col("codes"), j + 1)).as("rv"))
     val q = broadcast(queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")))
-    val scored = c.crossJoin(q)
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("score", cosine(col("qv"), col("rv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("score"), col("rank"))
+    topKPerQuery(c.crossJoin(q).filter(col("query_id") =!= col("neighbor_id")),
+      cosine(col("qv"), col("rv")), k)
   }
 
   /** The IVF-PQ CODE TABLE: each corpus vector's coarse cell (nearest
@@ -473,9 +371,7 @@ object Similarity {
   def ivfPqCodeTable(cents: Array[Array[Double]],
       books: Array[Array[Array[Double]]], corpus: DataFrame, idCol: String,
       vecCol: String): DataFrame =
-    corpus.select(col(idCol),
-      element_at(graft.functions.VectorExprs.nearestCentroids(col(vecCol), cents, 1), 1)
-        .as("cell"),
+    corpus.select(col(idCol), cellOf(col(vecCol), cents).as("cell"),
       pqCodes(col(vecCol), books).as("codes"))
 
   /** IVF-PQ ANN search — the composed serving architecture of Jégou et al.
@@ -506,7 +402,7 @@ object Similarity {
     * query), so it wins while queries × nprobe ≲ nlist — the online-serving
     * shape this implements. A BULK query batch where queries × nprobe ≫
     * nlist matches most rows many times over; reconstruct once per row
-    * (below the join, [[pqTopK]]'s shape) or chunk the batch there. */
+    * (below the join, [[pqTopKWithCodebooks]]'s shape) or chunk the batch there. */
   def ivfPqTopK(cents: Array[Array[Double]], books: Array[Array[Array[Double]]],
       queries: DataFrame, codeTable: DataFrame, idCol: String, vecCol: String,
       k: Int, nprobe: Int): DataFrame = {
@@ -515,23 +411,12 @@ object Similarity {
     // (below the join, every corpus row would pay them — ~94% wasted at
     // nlist=64/nprobe=4). Catalyst does not push expression evaluation
     // back down through a join, so the placement holds (plan-audited).
-    val rv = concat(books.indices.map { j =>
-      element_at(typedLit(books(j).map(_.toSeq).toSeq),
-        element_at(col("codes"), j + 1) + 1)
-    }: _*)
     val c = codeTable.select(col(idCol).as("neighbor_id"), col("cell"), col("codes"))
     val q = broadcast(queries
       .select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-        explode(graft.functions.VectorExprs.nearestCentroids(col(vecCol), cents, nprobe))
-          .as("cell")))
-    val scored = c.join(q, Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("score", cosine(col("qv"), rv))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("score"), col("rank"))
+        explode(nearestCentroids(col(vecCol), cents, nprobe)).as("cell")))
+    topKPerQuery(c.join(q, Seq("cell")).filter(col("query_id") =!= col("neighbor_id")),
+      cosine(col("qv"), reconstruct(books, j => element_at(col("codes"), j + 1))), k)
   }
 
   /** Embedding near-duplicate pairs: cosine ≥ threshold.
@@ -643,8 +528,7 @@ object Similarity {
       probeEps: Double = 0.0): DataFrame = {
     val assigned = corpus.select(col(idCol).as("id"),
       col(vecCol).cast("array<double>").as("v"),
-      element_at(graft.functions.VectorExprs.nearestCentroids(col(vecCol), cents, 1), 1)
-        .as("cell"))
+      cellOf(col(vecCol), cents).as("cell"))
     // comparison membership: primary cell only, or primary + boundary probe
     val membership =
       if (probeEps <= 0.0) assigned

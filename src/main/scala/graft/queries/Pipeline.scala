@@ -1995,10 +1995,8 @@ object Pipeline {
   def pqCodebooksFor(s: SparkSession, dir: String): Array[Array[Array[Double]]] =
     pqCache.computeIfAbsent(dir, d => {
       val e = Tables.embeddings(s, d)
-      // dim probe mirrors ivfCentroids' null tolerance (a null first row
-      // would NPE) and takes the corpus-wide max so a ragged corpus fails
-      // deterministically inside pqCodebooks instead of picking whichever
-      // row happened to come first
+      // the longest non-null vector's length: a corpus of mixed lengths
+      // gets one deterministic dim, not whichever row came first
       val dim = e.filter(col("embedding").isNotNull)
         .agg(max(size(col("embedding")))).head().getInt(0)
       Similarity.pqCodebooks(e, "vec_id", "embedding", m = 8, k = 16, dim = dim)

@@ -90,11 +90,19 @@ object StreamBatch {
     }
 
   /** `f` over `df` persisted; unpersisted on every exit path, so a batch
-    * that throws leaks no cached blocks. */
-  private def withPersisted[A](df: DataFrame)(f: DataFrame => A): A = {
-    val p = df.persist()
-    try f(p) finally p.unpersist()
-  }
+    * that throws leaks no cached blocks. A frame that already is an eager
+    * local checkpoint (a LogicalRDD over a persisted RDD; a foreachBatch
+    * frame is a LogicalRDD too, but over an unpersisted one) is not cached
+    * twice: its checkpoint blocks are released instead, which
+    * `Dataset.unpersist` never reaches. */
+  private def withPersisted[A](df: DataFrame)(f: DataFrame => A): A =
+    df.queryExecution.analyzed match {
+      case r: org.apache.spark.sql.execution.LogicalRDD if r.rdd.getStorageLevel.isValid =>
+        try f(df) finally r.rdd.unpersist(blocking = false)
+      case _ =>
+        val p = df.persist()
+        try f(p) finally p.unpersist()
+    }
 
   /** Split bounds of a table a write may create: numeric keys in [0, max],
     * string keys over '0'..'z' (byte-interpolated — covers digit-formatted
@@ -1278,8 +1286,8 @@ object StreamBatch {
 
   def sv18StreamAnnIvf(s: SparkSession, dir: String): DataFrame = {
     import graft.datasource.FilterCompiler
+    import graft.pipeline.Similarity
     import graft.store.KvStore
-    import org.apache.spark.sql.expressions.Window
     val cents = Pipeline.ivfCentroidsFor(s, dir)
     // a NULL vec_id cannot key the store and a NULL vector cannot be
     // assigned a cell — px13's read path drops both through its expression
@@ -1331,15 +1339,9 @@ object StreamBatch {
     // part — only the probed cells' slivers are ever scanned
     val probedCells = q.select(col("cell")).distinct().collect().map(_.getInt(0))
     val idx = annIndexProbe(s, sv18IdxCatalog, sv18AvroVec, probedCells)
-    val scored = idx.join(broadcast(q), Seq("cell"))
-      .filter(col("query_id") =!= col("vec_id"))
-      .withColumn("score", graft.pipeline.Similarity.cosine(col("qv"), col("v")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("score"),
-        col("rank"))
+    val cands = idx.withColumnRenamed("vec_id", "neighbor_id").join(broadcast(q), Seq("cell"))
+      .filter(col("query_id") =!= col("neighbor_id"))
+    Similarity.topKPerQuery(cands, Similarity.cosine(col("qv"), col("v")), 5)
       .orderBy(col("query_id"), col("rank"))
   }
 
@@ -1400,7 +1402,8 @@ object StreamBatch {
     * lineage truncation makes per-batch re-derivation impossible by
     * construction, which is what lets [[maintainContamMirror]] promise
     * batch-×-eval-GRAMS work per drain with zero eval re-tokenization.
-    * Callers release the blocks with `unpersist()` when the stream ends. */
+    * Callers release the blocks through [[withPersisted]] (a checkpoint's
+    * `Dataset.unpersist()` does not reach them). */
   private[graft] def contamEvalGrams(evalDocs: DataFrame, n: Int): DataFrame =
     graft.pipeline.Dedup.evalGrams(evalDocs, "doc_id", "text", n)
       .localCheckpoint(true)
@@ -1468,35 +1471,35 @@ object StreamBatch {
     val train = base.filter(col("doc_id") % 10 =!= 0)
     val evalDocs = base.filter(col("doc_id") % 10 === 0)
     // the static eval work happens HERE, once — the drains below reuse the
-    // materialized gram frame
-    val evalG = contamEvalGrams(evalDocs, n = 5)
-    val maxId = base.agg(max(col("doc_id"))).head().getLong(0)
-    val srcParsed = graft.catalog.GraftCatalog.parse(sv19SrcCatalog, Map.empty)
-    val mirParsed = graft.catalog.GraftCatalog.parse(sv19MirCatalog, Map.empty)
-    val ckpt = tempWorkDir(s, "graft-sv19-ckpt").toString
-    def applyBatch(phaseStamp: Long): Unit =
-      maintainContamMirror(s, sv19SrcCatalog, sv19MirCatalog, evalG,
-        maxId, ckpt, phaseStamp)
-    // fresh run every invocation
-    KvStore.drop(mirParsed.qualifiedName)
-    kvWrite(train, sv19SrcCatalog, 1000, numKeys(maxId), overwrite = true)
-    applyBatch(phaseStamp = 10)
-    val hrf = FilterCompiler.compileAll(srcParsed, Seq(
-      org.apache.spark.sql.sources.GreaterThanOrEqual("doc_id", 100L),
-      org.apache.spark.sql.sources.LessThanOrEqual("doc_id", 199L))).exactOrThrow("CDC DELETE")
-    KvStore.table(srcParsed.qualifiedName).delete(hrf.ranges, hrf.pred, stamp = 2000)
-    applyBatch(phaseStamp = 20)
-    val inDel = col("doc_id").between(100, 199)
-    kvWrite(
-      train.filter(inDel && col("doc_id") % 2 === 0)
-        .unionAll(train.filter(!inDel && col("doc_id") % 9 === 0)
-          .withColumn("text", concat(col("text"), lit(" zzznewterm"))))
-        .unionAll(train.filter(!inDel && col("doc_id") % 9 =!= 0 &&
-            col("doc_id") % 50 === 7)
-          .withColumn("text", lit("quarantine removed"))),
-      sv19SrcCatalog, 3000, numKeys(maxId))
-    applyBatch(phaseStamp = 30)
-    evalG.unpersist()
+    // materialized gram frame, released on every exit path
+    withPersisted(contamEvalGrams(evalDocs, n = 5)) { evalG =>
+      val maxId = base.agg(max(col("doc_id"))).head().getLong(0)
+      val srcParsed = graft.catalog.GraftCatalog.parse(sv19SrcCatalog, Map.empty)
+      val mirParsed = graft.catalog.GraftCatalog.parse(sv19MirCatalog, Map.empty)
+      val ckpt = tempWorkDir(s, "graft-sv19-ckpt").toString
+      def applyBatch(phaseStamp: Long): Unit =
+        maintainContamMirror(s, sv19SrcCatalog, sv19MirCatalog, evalG,
+          maxId, ckpt, phaseStamp)
+      // fresh run every invocation
+      KvStore.drop(mirParsed.qualifiedName)
+      kvWrite(train, sv19SrcCatalog, 1000, numKeys(maxId), overwrite = true)
+      applyBatch(phaseStamp = 10)
+      val hrf = FilterCompiler.compileAll(srcParsed, Seq(
+        org.apache.spark.sql.sources.GreaterThanOrEqual("doc_id", 100L),
+        org.apache.spark.sql.sources.LessThanOrEqual("doc_id", 199L))).exactOrThrow("CDC DELETE")
+      KvStore.table(srcParsed.qualifiedName).delete(hrf.ranges, hrf.pred, stamp = 2000)
+      applyBatch(phaseStamp = 20)
+      val inDel = col("doc_id").between(100, 199)
+      kvWrite(
+        train.filter(inDel && col("doc_id") % 2 === 0)
+          .unionAll(train.filter(!inDel && col("doc_id") % 9 === 0)
+            .withColumn("text", concat(col("text"), lit(" zzznewterm"))))
+          .unionAll(train.filter(!inDel && col("doc_id") % 9 =!= 0 &&
+              col("doc_id") % 50 === 7)
+            .withColumn("text", lit("quarantine removed"))),
+        sv19SrcCatalog, 3000, numKeys(maxId))
+      applyBatch(phaseStamp = 30)
+    }
     s.read.format("graft-kv").option("catalog", sv19MirCatalog).load()
       .select(col("train_id"), col("eval_id"), col("n_shared"))
       .orderBy(col("train_id"), col("eval_id"))

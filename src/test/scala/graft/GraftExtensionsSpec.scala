@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The SQL function surface: a session built with
-  * `withExtensions(new GraftExtensions)` resolves the graft_* functions in
+/** The SQL function surface: a session built through
+  * [[GraftExtensions.configure]] resolves the graft_* functions in
   * pure SQL, the results are bit-identical to the Column API (same Catalyst
   * expressions underneath), and sizing arguments reject non-literals with a
   * readable error. Forked test suites run sequentially, so stopping the
@@ -16,15 +16,21 @@ class GraftExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     SparkSession.getActiveSession.foreach(_.stop())
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    SparkSession.builder()
+    GraftExtensions.configure(SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
+      .config("spark.ui.enabled", "false"))
       .getOrCreate()
   }
 
   override def afterAll(): Unit = spark.stop()
+
+  test("configure sets the codegen-cache session settings") {
+    // the cache size is a static conf: this session created its own
+    // SparkContext, so the builder's value is the one in force
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") == "4000")
+    assert(spark.conf.get("spark.sql.codegen.useIdInClassName") == "false")
+  }
 
   test("injected functions resolve in SQL and match the Column API bit-for-bit") {
     import spark.implicits._

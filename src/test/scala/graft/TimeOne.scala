@@ -7,13 +7,10 @@ import org.apache.spark.sql.SparkSession
 object TimeOne {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
-    val builder = SparkSession.builder()
+    val builder = GraftExtensions.configure(SparkSession.builder() // parity with Bench
       .master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "4000") // parity with Bench
-      .config("spark.sql.codegen.useIdInClassName", "false")
-      .withExtensions(new GraftExtensions) // parity with Verify/Bench
+      .config("spark.ui.enabled", "false"))
     // ad-hoc conf overrides for profiling experiments: GRAFT_CONF="k=v;k=v"
     sys.env.get("GRAFT_CONF").foreach(_.split(';').filter(_.contains("="))
       .foreach { kv => val Array(k, v) = kv.split("=", 2); builder.config(k, v) })

@@ -25,10 +25,13 @@ import scala.util.Random
   *     including on empty centroid sets. */
 class HashVectorExprsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
+  // codegen.fallback=false: a generated class that fails to compile fails
+  // the query instead of silently running the stage interpreted
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.ui.enabled", "false")
+    .config("spark.sql.codegen.fallback", "false")
     .getOrCreate()
 
   override def afterAll(): Unit = spark.stop()
@@ -73,6 +76,25 @@ class HashVectorExprsSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(!good.isNullAt(i), s"col $i non-null for the clean row")
       assert(bad.isNullAt(i), s"col $i must be NULL when the vector has a null element")
     }
+  }
+
+  test("centroid expressions compile over a non-null, containsNull = false column") {
+    // non-nullable input with non-null elements makes the expressions
+    // non-nullable, and the generated code then has no isNull variable
+    val schema = StructType(Seq(StructField("v",
+      ArrayType(FloatType, containsNull = false), nullable = false)))
+    val rows = Seq(Seq(1.0f, 0.0f), Seq(0.1f, 1.0f), Seq(0.7f, 0.7f))
+      .map(org.apache.spark.sql.Row(_))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+    val cents = Array(Array(1.0, 0.0), Array(0.0, 1.0))
+    val out = df.select(
+      element_at(VectorExprs.nearestCentroids(col("v"), cents, 1), 1).as("cell"),
+      VectorExprs.nearestCentroids(col("v"), cents, 2).as("probe"),
+      VectorExprs.boundaryProbeCells(col("v"), cents, 0.5).as("bnd")).collect()
+    assert(out.map(r => (r.getInt(0), r.getSeq[Int](1), r.getSeq[Int](2))).toSeq == Seq(
+      (0, Seq(0, 1), Seq(0)), (1, Seq(1, 0), Seq(1)), (0, Seq(0, 1), Seq(0, 1))))
+    val exploded = df.select(explode(VectorExprs.nearestCentroids(col("v"), cents, 2)))
+    assert(exploded.collect().map(_.getInt(0)).toSeq == Seq(0, 1, 1, 0, 0, 1))
   }
 
   // ---- parameter validation fails analysis --------------------------------

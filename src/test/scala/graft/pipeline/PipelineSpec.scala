@@ -1094,6 +1094,45 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(r(1).getAs[Long]("score_micro") == 500000L)
   }
 
+  private def bits(m: Array[Array[Double]]): Seq[Seq[Long]] =
+    m.map(_.map(java.lang.Double.doubleToRawLongBits).toSeq).toSeq
+
+  test("Similarity trainer: ivfCentroids is pqCodebooks' one-subspace case, bit for bit") {
+    val rnd = new scala.util.Random(11)
+    val data = spark.createDataFrame(spark.sparkContext.parallelize(
+      (0L until 60L).map(i => Vec(i, Seq.fill(8)(rnd.nextFloat() * 2 - 1))), 3))
+    val ivf = Similarity.ivfCentroids(data, "vec_id", "embedding", nlist = 6)
+    val pq = Similarity.pqCodebooks(data, "vec_id", "embedding", m = 1, k = 6, dim = 8)
+    assert(ivf.length == 6 && bits(ivf) == bits(pq(0)))
+  }
+
+  test("Similarity trainer: a null element only drops its vector from that subspace's training") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val rnd = new scala.util.Random(13)
+    val schema = StructType(Seq(StructField("vec_id", LongType),
+      StructField("embedding", ArrayType(FloatType, containsNull = true))))
+    // every third vector has one NULL element, in subspace i % 4; one
+    // vector is NULL outright
+    val rows = (0L until 60L).map { i =>
+      val v = Seq.fill[java.lang.Float](8)(rnd.nextFloat() * 2 - 1)
+      Row(i, if (i % 3 == 0) v.updated((i % 4).toInt * 2 + 1, null) else v)
+    } :+ Row(60L, null)
+    val data = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
+    val books = Similarity.pqCodebooks(data, "vec_id", "embedding", m = 4, k = 5, dim = 8)
+    // the definition: each subspace trained alone on its own slice
+    val perSlice = (0 until 4).map { j =>
+      Similarity.ivfCentroids(data.select(col("vec_id"),
+        slice(col("embedding"), j * 2 + 1, 2).as("sv")), "vec_id", "sv", nlist = 5)
+    }
+    assert(books.map(bits).toSeq == perSlice.map(bits))
+    // the partly-null vectors do train their other subspaces: dropping
+    // them outright gives different codebooks
+    val dropped = Similarity.pqCodebooks(data.filter(!exists(col("embedding"), _.isNull)),
+      "vec_id", "embedding", m = 4, k = 5, dim = 8)
+    assert(books.map(bits).toSeq != dropped.map(bits).toSeq)
+  }
+
   test("Similarity.ivfPqTopK: full probe equals PQ brute force; 1-probe stays in the query's cell") {
     val vecs = Seq(
       (1L, Array(1.0f, 0.0f, 0.0f, 0.0f)),

@@ -2866,6 +2866,22 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     Seq(s"default:kv_ctm_src_$suf", s"default:kv_ctm_mirror_$suf").foreach(KvStore.drop)
   }
 
+  test("sv19 releases its eval-gram frame when the run throws") {
+    // a regular FILE as the working-dir base: sv19's checkpoint dir cannot
+    // be created, so the run throws after the eval grams are materialized
+    import graft.queries.StreamBatch
+    val notADir = Files.createTempFile("graft-sv19-notadir", "")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    spark.conf.set("graft.stream.tmpBase", notADir.toString)
+    try intercept[java.io.IOException](StreamBatch.sv19StreamDecontam(spark, sfDir))
+    finally {
+      spark.conf.unset("graft.stream.tmpBase")
+      Files.deleteIfExists(notADir)
+    }
+    val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"a throwing sv19 left persisted RDDs $left behind")
+  }
+
   test("decontamination crash between deletes-at-T and puts-at-T+1 converges on checkpoint resume") {
     // the deletes-at-T / puts-at-T+1 stamp convention's hazard window: a
     // batch that crashed AFTER retiring a doc's old pairs but BEFORE
