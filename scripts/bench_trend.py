@@ -7,6 +7,13 @@ rewrites the block between the BENCH_TREND markers in BASELINE.md. Future
 rounds judge a suspected regression against this history instead of one
 noisy record (this machine's timings vary up to 3x under external load).
 
+A round may hold more than one record of the same configuration: the round's
+record BENCH_LOCAL_r{N}.json plus re-runs named BENCH_LOCAL_r{N}_alt.json or
+BENCH_LOCAL_r{N}_start.json. A query's cell is its minimum across all of
+them, calib-adjusted by the calib of the record that minimum came from.
+Other suffixes (e.g. _c8, the 8-CPU scaling record) are a different
+configuration and are left out.
+
 Usage: python3 scripts/bench_trend.py [repo_root]
 """
 import glob
@@ -29,6 +36,9 @@ INVALID = {(12, "q27_recursive_cte"):
            "r13 verdict: bench JVM threw; the throw's wall was recorded"}
 
 
+RECORD = re.compile(r"BENCH_LOCAL_r(\d+)(_alt|_start)?\.json$")
+
+
 def load_round(path):
     with open(path) as f:
         rec = json.load(f)
@@ -44,18 +54,35 @@ def load_round(path):
     return out, tainted, bool(rec.get("loadHigh")), rec.get("calib_ms")
 
 
+def merge_round(records):
+    """One round from its records, the round's own record first: per query
+    the minimum time and the calib of the record it came from; tainted only
+    where no record timed the query cleanly; loadHigh and the footer calib
+    are the round's own record's."""
+    best, tainted = {}, set()
+    for out, t, _, c in records:
+        tainted |= t
+        for q, v in out.items():
+            if q not in best or v < best[q][0]:
+                best[q] = (v, c)
+    _, _, load_high, calib = records[0]
+    return ({q: v for q, (v, _) in best.items()},
+            {q: c for q, (_, c) in best.items()},
+            tainted - set(best), load_high, calib)
+
+
 def main():
     root = sys.argv[1] if len(sys.argv) > 1 else os.path.dirname(
         os.path.dirname(os.path.abspath(__file__)))
-    rounds = {}
-    tainted = {}
-    load_high = {}
-    calib = {}
+    by_round = {}
+    # sorted: the round's own record (no suffix) sorts before its re-runs
     for path in sorted(glob.glob(os.path.join(root, "BENCH_LOCAL_r*.json"))):
-        m = re.search(r"BENCH_LOCAL_r(\d+)\.json$", path)
+        m = RECORD.search(path)
         if m:
-            r = int(m.group(1))
-            rounds[r], tainted[r], load_high[r], calib[r] = load_round(path)
+            by_round.setdefault(int(m.group(1)), []).append(load_round(path))
+    rounds, cell_calib, tainted, load_high, calib = {}, {}, {}, {}, {}
+    for r, records in by_round.items():
+        rounds[r], cell_calib[r], tainted[r], load_high[r], calib[r] = merge_round(records)
     for (r, q) in INVALID:
         if r in rounds:
             rounds[r].pop(q, None)
@@ -75,15 +102,18 @@ def main():
     calibs = [calib[r] for r in rs if calib.get(r)]
     ref_calib = min(calibs) if calibs else None
 
-    def adj(r, v):
+    def adj(r, q, v):
         if v is None:
             return None
-        c = calib.get(r)
+        c = cell_calib[r].get(q)
         return v * ref_calib / c if c and ref_calib else v
 
     lines = [START, "", "## Per-query bench trend (warm minimum seconds, local sf0.1)", "",
              "Regenerated by `scripts/bench_trend.py` from the committed "
-             "`BENCH_LOCAL_r*.json` records — min across reps per round. "
+             "`BENCH_LOCAL_r*.json` records — min across reps per round, "
+             "and across the round's `_alt`/`_start` re-runs (each cell "
+             "calib-adjusted by its own record's calib; the `_c8` scaling "
+             "record is excluded). "
              "`last/first` flags raw drift across the query's recorded "
              "history (new queries appear mid-table); `@calib` rescales "
              "both ends by the round's `calib_ms` single-core probe "
@@ -110,7 +140,7 @@ def main():
             cells.append(f"{v:.2f}" if v is not None else "—")
             if v is not None:
                 seen.append(v)
-                seen_adj.append((adj(r, v), bool(calib.get(r))))
+                seen_adj.append((adj(r, q, v), bool(cell_calib[r].get(q))))
         ratio = f"{seen[-1] / seen[0]:.2f}x" if len(seen) > 1 and seen[0] > 0 else "—"
         if len(seen_adj) > 1 and seen_adj[0][0] > 0:
             mark = "" if (seen_adj[0][1] and seen_adj[-1][1]) else "~"

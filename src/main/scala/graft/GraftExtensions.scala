@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.{ColumnarRule, SparkPlan}
 
 import graft.functions._
 
@@ -32,6 +34,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // filters settle onto relations, before join reordering — see
     // [[graft.plans.IndexSemiJoin]]
     ext.injectPreCBORule(_ => graft.plans.IndexSemiJoin)
+    // point gets at a plan's root run on the driver, with no job — see
+    // [[graft.plans.DriverLookup]] for the gate and why this hook
+    ext.injectColumnar(_ => new ColumnarRule {
+      override def preColumnarTransitions: Rule[SparkPlan] = graft.plans.DriverLookup
+    })
   }
 }
 

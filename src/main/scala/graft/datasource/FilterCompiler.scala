@@ -53,10 +53,42 @@ object FilterCompiler {
   /** Compile all pushed filters (implicitly AND-ed, reference
     * HBaseFilter.scala:126-138) after applying the In∧¬In set-difference
     * rewrite (reference :252-266). */
-  def compileAll(catalog: GraftCatalog, filters: Seq[Filter]): Hrf =
-    rewriteInNotIn(filters)
-      .map(compile(catalog, _))
+  def compileAll(catalog: GraftCatalog, filters: Seq[Filter]): Hrf = {
+    val rewritten = rewriteInNotIn(filters)
+    val hrf = rewritten.map(compile(catalog, _))
       .foldLeft(Hrf(AllRanges, None, handled = true))(andHrf)
+    fullKeyPoint(catalog, rewritten)
+      .fold(hrf)(p => hrf.copy(ranges = ScanRange.and(hrf.ranges, p)))
+  }
+
+  /** An equality on EVERY part of a composite key pins one stored key: the
+    * writer's encoding of those values (parts concatenated, salt prefixed),
+    * as a point. Each leaf alone prunes only by the leading part, so without
+    * this a full-key get scans that part's whole prefix. The leaves'
+    * predicates stay exact; the point only narrows the pruning ranges. Only
+    * for the plain layout the writer produces: fixed-width parts laid end to
+    * end, the last one of any width. */
+  private def fullKeyPoint(catalog: GraftCatalog,
+      filters: Seq[Filter]): Option[Seq[ScanRange[Array[Byte]]]] = {
+    val parts = catalog.rowKeyParts
+    val eqs: Map[String, Any] = filters.collect {
+      case EqualTo(a, v) if v != null => a -> v
+      case EqualNullSafe(a, v) if v != null => a -> v
+    }.toMap
+    val plainLayout = parts.init.forall(_.width > 0) &&
+      parts.scanLeft(catalog.saltLen)((off, p) => off + p.width).zip(parts)
+        .forall { case (off, p) => p.offset == off }
+    if (parts.size < 2 || !plainLayout || !parts.forall(p => eqs.contains(p.field.name)))
+      return None
+    val encoded = parts.map { p =>
+      val f = p.field
+      KvPredicate.normalize(eqs(f.name), f.dataType).map(f.coder.encode(f.dataType, _))
+        .filter(e => p.width <= 0 || e.length == p.width)
+    }
+    if (encoded.exists(_.isEmpty)) None // a literal no stored key can hold
+    else Some(saltFan(catalog, Seq(ScanRange.point(BytesUtil.concat(encoded.flatten: _*))),
+      fullKey = true))
+  }
 
   /** Which of the pushed filters are fully handled (exact) — the rest are
     * Spark's residual (reference unhandledFilters, HBaseRelation.scala:316). */

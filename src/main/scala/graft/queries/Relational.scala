@@ -671,9 +671,13 @@ object Relational {
     val nEvents = Tables.events(s, dir).count()
     val nParts = math.max(1L, math.min(s.conf.get(shufKey).toLong,
       (nEvents + Q27RowsPerPartition - 1) / Q27RowsPerPartition))
+    // the edge checkpoint is released once the result is materialized, on
+    // every exit path — the result checkpoint no longer reads it
     Tables.withConfs(s, "spark.sql.adaptive.enabled" -> "false",
       shufKey -> nParts.toString) {
-      q27Recursion(s, dir).localCheckpoint(true)
+      Tables.withPersisted(q27Edges(s, dir)) { edges =>
+        q27Loop(s, edges).localCheckpoint(true)
+      }
     }
   }
 
@@ -682,7 +686,11 @@ object Relational {
 
   /** The lazy recursive-CTE frame (plan-audited: native UnionLoop, broadcast
     * step join). [[q27RecursiveCte]] executes it eagerly with AQE off. */
-  private[graft] def q27Recursion(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def q27Recursion(s: SparkSession, dir: String): DataFrame =
+    q27Loop(s, q27Edges(s, dir))
+
+  /** The q27 session-chain edges, eagerly checkpointed. */
+  private def q27Edges(s: SparkSession, dir: String): DataFrame = {
     Tables.events(s, dir).createOrReplaceTempView("events_q27")
     // MATERIALIZE the edge table ONCE before the loop: a CTE reference
     // inside the recursive step is INLINED into the step plan, so the
@@ -701,7 +709,7 @@ object Relational {
     // count, so a 32-partition edge table costs 17 × 32 task launches for
     // wave-sized frontiers (measured: ~250-490 ms/iteration stage at sf0.1,
     // all scheduling).
-    val edges = s.sql("""
+    s.sql("""
       WITH ev AS (
         SELECT event_id, user_id, unix_seconds(ts) AS tu FROM events_q27),
       e AS (SELECT event_id AS a,
@@ -710,6 +718,11 @@ object Relational {
             FROM ev)
       SELECT a, b FROM e WHERE b IS NOT NULL AND gap <= 43200""")
       .localCheckpoint(true)
+  }
+
+  /** The recursion over checkpointed `edges` (the `events_q27` view
+    * [[q27Edges]] registered is the outer side). */
+  private def q27Loop(s: SparkSession, edges: DataFrame): DataFrame = {
     edges.createOrReplaceTempView("q27_edges")
     // The checkpointed frame is a LogicalRDD with NO size stats (leaf
     // default = defaultSizeInBytes), so auto-broadcast can never pick it:

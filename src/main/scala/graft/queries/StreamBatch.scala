@@ -24,7 +24,7 @@ import graft.streaming.GraftStreaming
   */
 object StreamBatch {
   import GraftStreaming.tempWorkDir
-  import Tables.withConfs
+  import Tables.{withConfs, withPersisted}
 
   private val AqeKey = "spark.sql.adaptive.enabled"
   private val ShuffleKey = "spark.sql.shuffle.partitions"
@@ -87,21 +87,6 @@ object StreamBatch {
       GraftStreaming.runOnce(s.readStream.format("graft-kv").options(srcOpts).load()
         .writeStream.foreachBatch(body).option("checkpointLocation", ckpt))
       ()
-    }
-
-  /** `f` over `df` persisted; unpersisted on every exit path, so a batch
-    * that throws leaks no cached blocks. A frame that already is an eager
-    * local checkpoint (a LogicalRDD over a persisted RDD; a foreachBatch
-    * frame is a LogicalRDD too, but over an unpersisted one) is not cached
-    * twice: its checkpoint blocks are released instead, which
-    * `Dataset.unpersist` never reaches. */
-  private def withPersisted[A](df: DataFrame)(f: DataFrame => A): A =
-    df.queryExecution.analyzed match {
-      case r: org.apache.spark.sql.execution.LogicalRDD if r.rdd.getStorageLevel.isValid =>
-        try f(df) finally r.rdd.unpersist(blocking = false)
-      case _ =>
-        val p = df.persist()
-        try f(p) finally p.unpersist()
     }
 
   /** Split bounds of a table a write may create: numeric keys in [0, max],

@@ -75,4 +75,19 @@ object Tables {
     try f
     finally kvs.foreach { case (k, _) => prior.get(k).fold(s.conf.unset(k))(s.conf.set(k, _)) }
   }
+
+  /** `f` over `df` persisted; unpersisted on every exit path, so a batch
+    * that throws leaks no cached blocks. A frame that already is an eager
+    * local checkpoint (a LogicalRDD over a persisted RDD; a foreachBatch
+    * frame is a LogicalRDD too, but over an unpersisted one) is not cached
+    * twice: its checkpoint blocks are released instead, which
+    * `Dataset.unpersist` never reaches. */
+  private[queries] def withPersisted[A](df: DataFrame)(f: DataFrame => A): A =
+    df.queryExecution.analyzed match {
+      case r: org.apache.spark.sql.execution.LogicalRDD if r.rdd.getStorageLevel.isValid =>
+        try f(df) finally r.rdd.unpersist(blocking = false)
+      case _ =>
+        val p = df.persist()
+        try f(p) finally p.unpersist()
+    }
 }

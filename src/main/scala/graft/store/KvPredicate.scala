@@ -431,6 +431,17 @@ object KvPredicate {
       BytesUtil.compareBytes(x.getBytes("UTF-8"), y.getBytes("UTF-8"))
     case (x: Array[Byte], y: Array[Byte])             => BytesUtil.compareBytes(x, y)
     case (x: Number, y: Number) => java.lang.Double.compare(x.doubleValue(), y.doubleValue())
+    // a struct (Avro record) key part: field by field, nulls first, the
+    // order Spark gives structs
+    case (x: org.apache.spark.sql.Row, y: org.apache.spark.sql.Row) if x.length == y.length =>
+      (0 until x.length).iterator.map { i =>
+        (x.isNullAt(i), y.isNullAt(i)) match {
+          case (true, true) => 0
+          case (true, false) => -1
+          case (false, true) => 1
+          case _ => compareTyped(x.get(i), y.get(i))
+        }
+      }.find(_ != 0).getOrElse(0)
     case _ => throw new IllegalArgumentException(
       s"cannot compare ${a.getClass.getName} with ${b.getClass.getName}")
   }

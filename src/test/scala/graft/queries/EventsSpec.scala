@@ -146,4 +146,33 @@ class EventsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got(0).getAs[Long]("n_anomalies") == 0L)
     assert(got(0).getAs[Long]("n_scored") == 5L) // events 11..15
   }
+
+  test("q27 releases its edge checkpoint on success and on a throw") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    // three users, six events each, a minute apart: chains of depth 5
+    val events = (1 to 18).map { i =>
+      (i.toLong, new Timestamp(1700000000000L + i * 60000L), (i % 3).toLong, "click", 1.0)
+    }.toDF("event_id", "ts", "user_id", "event_type", "value")
+    val dir = Files.createTempDirectory("q27").toString
+    events.write.mode("overwrite").parquet(s"$dir/events.parquet")
+    val sc = spark.sparkContext
+    def rddIds(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Set[Int] =
+      plan.collect { case r: LogicalRDD => r.rdd.id }.toSet
+    def edgeIds = rddIds(spark.table("q27_edges").queryExecution.analyzed)
+
+    val before = sc.getPersistentRDDs.keySet
+    val out = Relational.q27RecursiveCte(spark, dir)
+    val left = sc.getPersistentRDDs.keySet -- before
+    assert(left == rddIds(out.queryExecution.analyzed),
+      s"only the result's checkpoint may stay persisted, found $left")
+    assert(edgeIds.nonEmpty && edgeIds.forall(id => !sc.getPersistentRDDs.contains(id)))
+    assert(out.count() == 18L)
+
+    val limitKey = "spark.sql.cteRecursionLevelLimit"
+    spark.conf.set(limitKey, "2")
+    try intercept[Exception](Relational.q27RecursiveCte(spark, dir))
+    finally spark.conf.unset(limitKey)
+    assert(edgeIds.forall(id => !sc.getPersistentRDDs.contains(id)),
+      "a throwing q27 left its edge checkpoint persisted")
+  }
 }
