@@ -4,7 +4,8 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, SortOrder, UnsafeProjection}
+import org.apache.spark.sql.catalyst.plans.physical.Partitioning
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{CollectLimitExec, ProjectExec, SQLExecution, SparkPlan,
   UnaryExecNode}
@@ -43,8 +44,10 @@ import graft.datasource.{GraftInputPartition, GraftScan}
 object DriverLookup extends Rule[SparkPlan] {
 
   /** Keys one driver lookup may serve: one reference bulk-get batch
-    * (`bulkGetSize` = 100). A read of more keys runs as a job, where the
-    * regions are read in parallel. */
+    * (`bulkGetSize` = 100), which bounds the driver's work per collect. It
+    * is not a measured crossover: with the in-process store the driver
+    * read stays cheaper than the job well past it. A read of more keys
+    * runs as a job. */
   val MaxKeys = 100
 
   override def apply(plan: SparkPlan): SparkPlan = plan match {
@@ -76,12 +79,16 @@ object DriverLookup extends Rule[SparkPlan] {
 /** A gated point-get read (see [[DriverLookup]]). `collect` and `take` read
   * the planned partitions on the driver at ACTION time, through the same
   * reader factory the executors use (so TTL, versions, `_cell_ts` and salt
-  * handling are the executor path's), and fill the scan's SQL metrics as a
-  * task would. Every other consumer (`rdd`, `toLocalIterator`, a cache
-  * build) executes the child as a job. */
+  * handling are the executor path's), and fill the scan's SQL metrics with
+  * this execution's counts. Every other consumer (`rdd`, `toLocalIterator`,
+  * a cache build) executes the child as a job. The node reports the
+  * child's partitioning and ordering, which a cache or a checkpoint of the
+  * get copies from the root. */
 case class GraftLookupExec(keys: Int, child: SparkPlan) extends UnaryExecNode {
 
   override def output: Seq[Attribute] = child.output
+  override def outputPartitioning: Partitioning = child.outputPartitioning
+  override def outputOrdering: Seq[SortOrder] = child.outputOrdering
   override def simpleString(maxFields: Int): String = s"GraftLookup(driver, keys=$keys)"
 
   override protected def doExecute(): RDD[InternalRow] = child.execute()
@@ -94,6 +101,12 @@ case class GraftLookupExec(keys: Int, child: SparkPlan) extends UnaryExecNode {
     val scan = child.collectFirst { case b: BatchScanExec => b }.get
     val toUnsafe = UnsafeProjection.create(output, scan.output)
     val factory = scan.readerFactory
+    // the SQL UI keeps a driver update as the execution's value, so each
+    // lookup posts its own counts: a plan run again without a Dataset
+    // action's metric reset would otherwise post a running total
+    val numOutputRows = scan.longMetric("numOutputRows")
+    val metrics = numOutputRows +: scan.customMetrics.values.toSeq
+    metrics.foreach(_.reset())
     val out = ArrayBuffer[InternalRow]()
     val parts = scan.partitions.flatten.iterator
     while (out.size < limit && parts.hasNext) {
@@ -107,11 +120,9 @@ case class GraftLookupExec(keys: Int, child: SparkPlan) extends UnaryExecNode {
     // the planning metrics a job's scan reports on the driver
     scan.scan.reportDriverMetrics().foreach(m =>
       scan.customMetrics.get(m.name).foreach(_.set(m.value)))
-    val numOutputRows = scan.longMetric("numOutputRows")
     numOutputRows.add(out.size)
     SQLMetrics.postDriverMetricUpdates(sparkContext,
-      sparkContext.getLocalProperty(SQLExecution.EXECUTION_ID_KEY),
-      numOutputRows +: scan.customMetrics.values.toSeq)
+      sparkContext.getLocalProperty(SQLExecution.EXECUTION_ID_KEY), metrics)
     out.toArray
   }
 

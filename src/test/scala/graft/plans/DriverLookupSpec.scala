@@ -1,14 +1,18 @@
 package graft.plans
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.execution.ui.SparkListenerDriverAccumUpdates
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -140,13 +144,16 @@ class DriverLookupSpec extends AnyFunSuite with BeforeAndAfterAll {
     viaDriver
   }
 
-  /** Jobs whose submission carried `f`'s thread-local tag; a tagged sentinel
-    * job afterwards proves the listener bus delivered everything before it. */
-  private def jobsOf(f: => Unit): Int = {
+  /** What the listener bus delivered while `f` ran: the number of jobs
+    * whose submission carried `f`'s thread-local tag, and every driver
+    * metric update ({accumulator id -> value} per post). A tagged sentinel
+    * job afterwards proves the bus delivered everything before it. */
+  private def observe(f: => Unit): (Int, Seq[Map[Long, Long]]) = {
     val sc = spark.sparkContext
     val key = "graft.spec.tag"
     val tag = java.util.UUID.randomUUID().toString
     val jobs = new AtomicInteger(0)
+    val updates = new ConcurrentLinkedQueue[Map[Long, Long]]()
     val flushed = new CountDownLatch(1)
     val l = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
@@ -155,6 +162,10 @@ class DriverLookupSpec extends AnyFunSuite with BeforeAndAfterAll {
           case Some(t) if t == tag + "/end" => flushed.countDown()
           case _ =>
         }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case u: SparkListenerDriverAccumUpdates => updates.add(u.accumUpdates.toMap)
+        case _ =>
+      }
     }
     sc.addSparkListener(l)
     try {
@@ -167,8 +178,9 @@ class DriverLookupSpec extends AnyFunSuite with BeforeAndAfterAll {
       sc.setLocalProperty(key, null)
       sc.removeSparkListener(l)
     }
-    jobs.get()
+    (jobs.get(), updates.asScala.toSeq)
   }
+  private def jobsOf(f: => Unit): Int = observe(f)._1
 
   test("point gets return exactly the job path's rows: hit, miss, IN-list, pruned columns") {
     assert(sameRowsAsJob(main().filter(col("k") === 42L), 1).size == 1)
@@ -304,5 +316,40 @@ class DriverLookupSpec extends AnyFunSuite with BeforeAndAfterAll {
     val c1 = consult(); c1.collect()
     val c2 = consult(); c2.queryExecution.toRdd.count()
     assert(values(c1) == values(c2))
+    // one plan run twice by Dataset actions (which reset the plan's metrics
+    // first) and twice directly under an execution id (which do not): each
+    // run posts its own counts, the value the SQL UI shows for that
+    // execution, not a running total
+    val again = q
+    val plan = again.queryExecution.executedPlan
+    val ids = Seq("numOutputRows", "graftRowsScanned").map(scanOf(again).metrics(_).id)
+    val runs = Seq.fill(2)(observe(again.collect())._2) ++ Seq.fill(2)(observe(
+      SQLExecution.withNewExecutionId(again.queryExecution)(plan.executeCollect()))._2)
+    runs.foreach { posted =>
+      assert(ids.map(id => posted.flatMap(_.get(id)).lastOption) == Seq(Some(3L), Some(3L)))
+    }
+    assert(values(again) == values(viaJob))
+  }
+
+  test("a checkpointed get keeps the scan's partitioning and ordering") {
+    // a salted string key read through the table catalog: the scan reports
+    // key-grouped buckets (storage-partitioned join) and key order
+    val confs = Seq("spark.sql.catalog.graft" -> classOf[graft.datasource.GraftTableCatalog].getName,
+      "spark.sql.sources.v2.bucketing.enabled" -> "true")
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      spark.sql("""CREATE TABLE graft.default.dl_spj (k STRING, v STRING)
+                  |TBLPROPERTIES ('rowkey' = 'k', 'saltBuckets' = '4')""".stripMargin)
+      (0 until 40).map(i => (f"k$i%03d", s"v$i")).toDF("k", "v")
+        .writeTo("graft.default.dl_spj").append()
+      val get = spark.table("graft.default.dl_spj").filter(col("k").isin("k003", "k017", "k031"))
+      val child = lookupOf(get).get.child
+      assert(!child.outputPartitioning.isInstanceOf[UnknownPartitioning])
+      assert(child.outputOrdering.nonEmpty)
+      val rdd = get.localCheckpoint(true).queryExecution.analyzed
+        .collectFirst { case r: LogicalRDD => r }.get
+      assert(rdd.outputPartitioning == child.outputPartitioning)
+      assert(rdd.outputOrdering == child.outputOrdering)
+    } finally confs.foreach { case (k, _) => spark.conf.unset(k) }
   }
 }
