@@ -251,7 +251,8 @@ class KvJoinPartitionReader(p: KvJoinInputPartition)
 
   override def close(): Unit = { leftSetup.close(); rightSetup.close() }
 
+  // rows walked: the left side's scan; each right probe is a point get
   override def currentMetricsValues():
       Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    Array(GraftMetricsDefs.task("graftRowsScanned", rowsScanned))
+    GraftMetricsDefs.rows(rowsScanned, leftSetup.rowsWalked)
 }

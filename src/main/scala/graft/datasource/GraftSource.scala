@@ -450,6 +450,9 @@ class GraftScanBuilder(catalog: GraftCatalog, opts: GraftOptions,
     import org.apache.spark.sql.connector.expressions.aggregate._
     if (pushedJoinSpec.isDefined) return false
     if (FilterCompiler.partition(catalog, pushed)._2.nonEmpty) return false
+    // the store-side fold serves latest-merged rows only: exploded versions
+    // make count(*) count versions, which Spark aggregates off the row scan
+    if (!opts.mergeToLatest) return false
     var groupViaIndex = false
     val groupCols: Seq[String] = if (agg.groupByExpressions.isEmpty) Nil else {
       val keyFields = catalog.rowKeyFields
@@ -487,9 +490,12 @@ class GraftScanBuilder(catalog: GraftCatalog, opts: GraftOptions,
         case _ => false
       })
     if (fullSaltedKeyGroup) return false
+    // ops on dynamic or versioned-map columns decline: the fold's walk
+    // reads one newest cell per column
     def ref(e: org.apache.spark.sql.connector.expressions.Expression): Option[String] = e match {
       case nr: NamedReference if nr.fieldNames.length == 1 &&
-        scala.util.Try(catalog.field(nr.fieldNames.head)).isSuccess =>
+        scala.util.Try(catalog.field(nr.fieldNames.head)).toOption
+          .exists(RowMaterializer.walkable) =>
         Some(nr.fieldNames.head)
       case _ => None
     }
@@ -1040,6 +1046,10 @@ private[datasource] object GraftMetricsDefs {
     override def name(): String = "graftRowsScanned"
     override def description(): String = "kv rows materialized"
   }
+  final class RowsWalked extends CustomSumMetric {
+    override def name(): String = "graftRowsWalked"
+    override def description(): String = "kv rows walked (passing the pushed predicate or not)"
+  }
   final class RegionsPlanned extends CustomSumMetric {
     override def name(): String = "graftRegionsPlanned"
     override def description(): String = "kv regions planned (post-pruning)"
@@ -1058,13 +1068,18 @@ private[datasource] object GraftMetricsDefs {
   }
 
   def all: Array[CustomMetric] =
-    Array(new RowsScanned, new RegionsPlanned, new RegionsTotal, new IndexKeys,
-      new IndexOnlyScan)
+    Array(new RowsScanned, new RowsWalked, new RegionsPlanned, new RegionsTotal,
+      new IndexKeys, new IndexOnlyScan)
 
   def task(metricName: String, v: Long): CustomTaskMetric = new CustomTaskMetric {
     override def name(): String = metricName
     override def value(): Long = v
   }
+
+  /** A reader's two row counts: rows it produced and rows its store walks
+    * stepped over. */
+  def rows(scanned: Long, walked: Long): Array[CustomTaskMetric] =
+    Array(task("graftRowsScanned", scanned), task("graftRowsWalked", walked))
 }
 
 class GraftReaderFactory extends PartitionReaderFactory {
@@ -1137,12 +1152,20 @@ private[datasource] object PushedAggSchema {
     }
 }
 
-/** Shared count/min/max partial state over the partition's read schema. */
+/** Count/min/max/sum partial state. `update` reads one decoded row — one
+  * Catalyst value per slot of `schema`, null when absent — through slot
+  * indexes resolved once here. */
 private[datasource] final class AggAccumulator(
     ops: Seq[PushedAggOp], schema: StructType) {
 
-  private val idx = schema.fieldNames.zipWithIndex.toMap
-  private[datasource] val dts = schema.fields.map(_.dataType)
+  private val opArr = ops.toArray
+  private val slot: Array[Int] = opArr.map {
+    case CountStarOp => -1
+    case CountColOp(f) => schema.fieldIndex(f)
+    case MinOp(f) => schema.fieldIndex(f)
+    case MaxOp(f) => schema.fieldIndex(f)
+    case SumOp(f, _, _) => schema.fieldIndex(f)
+  }
   private[datasource] val orderings = schema.fields.map(f =>
     org.apache.spark.sql.catalyst.types.PhysicalDataType.ordering(f.dataType)
       .asInstanceOf[Ordering[Any]])
@@ -1153,12 +1176,6 @@ private[datasource] final class AggAccumulator(
   private val sumsD = new Array[Double](ops.length)
   private val sumSeen = new Array[Boolean](ops.length)
 
-  private[datasource] def copyOf(v: Any): Any = v match {
-    case s: org.apache.spark.unsafe.types.UTF8String => s.copy()
-    case b: Array[Byte] => b.clone()
-    case other => other
-  }
-
   def reset(): Unit = {
     java.util.Arrays.fill(counts, 0L)
     java.util.Arrays.fill(extremes.asInstanceOf[Array[AnyRef]], null)
@@ -1167,46 +1184,31 @@ private[datasource] final class AggAccumulator(
     java.util.Arrays.fill(sumSeen, false)
   }
 
-  def update(row: InternalRow): Unit = {
+  def update(row: Array[Any]): Unit = {
     var i = 0
-    while (i < ops.length) {
-      ops(i) match {
+    while (i < opArr.length) {
+      val j = slot(i)
+      val v = if (j < 0) null else row(j)
+      opArr(i) match {
         case CountStarOp => counts(i) += 1
-        case CountColOp(f) => if (!row.isNullAt(idx(f))) counts(i) += 1
-        case MinOp(f) =>
-          val j = idx(f)
-          if (!row.isNullAt(j)) {
-            val v = row.get(j, dts(j))
-            if (extremes(i) == null || orderings(j).lt(v, extremes(i)))
-              extremes(i) = copyOf(v)
-          }
-        case MaxOp(f) =>
-          val j = idx(f)
-          if (!row.isNullAt(j)) {
-            val v = row.get(j, dts(j))
-            if (extremes(i) == null || orderings(j).gt(v, extremes(i)))
-              extremes(i) = copyOf(v)
-          }
-        case SumOp(f, integral, ansi) =>
-          val j = idx(f)
-          if (!row.isNullAt(j)) {
+        case CountColOp(_) => if (v != null) counts(i) += 1
+        case MinOp(_) =>
+          if (v != null && (extremes(i) == null || orderings(j).lt(v, extremes(i))))
+            extremes(i) = v
+        case MaxOp(_) =>
+          if (v != null && (extremes(i) == null || orderings(j).gt(v, extremes(i))))
+            extremes(i) = v
+        case SumOp(_, integral, ansi) =>
+          if (v != null) {
             sumSeen(i) = true
-            if (integral) {
-              val v = dts(j) match {
-                case org.apache.spark.sql.types.LongType => row.getLong(j)
-                case org.apache.spark.sql.types.IntegerType => row.getInt(j).toLong
-                case org.apache.spark.sql.types.ShortType => row.getShort(j).toLong
-                case _ => row.getByte(j).toLong
-              }
-              // ANSI sum raises on Long overflow; the partial must match
-              // (wrap-around would silently return a wrong answer where the
-              // engine errors)
-              sumsL(i) = if (ansi) Math.addExact(sumsL(i), v) else sumsL(i) + v
-            }
-            else sumsD(i) += (dts(j) match {
-              case org.apache.spark.sql.types.DoubleType => row.getDouble(j)
-              case _ => row.getFloat(j).toDouble
-            })
+            // boxed Byte/Short/Integer/Long and Float/Double are Numbers
+            val n = v.asInstanceOf[Number]
+            // ANSI sum raises on Long overflow; the partial must match
+            // (wrap-around would silently return a wrong answer where the
+            // engine errors)
+            if (integral)
+              sumsL(i) = if (ansi) Math.addExact(sumsL(i), n.longValue()) else sumsL(i) + n.longValue()
+            else sumsD(i) += n.doubleValue()
           }
       }
       i += 1
@@ -1222,33 +1224,60 @@ private[datasource] final class AggAccumulator(
   }.toArray
 }
 
-/** Store-side partial aggregation: folds the region's decoded rows into ONE
-  * output row (count/min/max partials) — the per-region movement drops from
-  * O(rows) to O(1), which is the entire point at 1000 executors. Reuses the
-  * row reader underneath so merge-to-latest / time-range / version
-  * semantics are identical to a row scan. */
-class GraftAggPartitionReader(p: GraftInputPartition, ops: Seq[PushedAggOp])
+/** The rows a pushed-aggregate partition folds: the partition's ranges
+  * walked through [[graft.store.KvTable.walk]], each served row's slots
+  * decoded into the reused [[values]] array by the materializer's slot
+  * plan — no `KvRow`, `KvCell` or `InternalRow` per scanned row.
+  * Merge-to-latest, time-range and TTL visibility are the row scan's
+  * (the walk keeps the scan's existence rule), so the partials equal an
+  * aggregate over that scan's rows. */
+private[datasource] abstract class AggFoldReader(p: GraftInputPartition, ops: Seq[PushedAggOp])
     extends PartitionReader[InternalRow] {
 
-  private val inner = new GraftPartitionReader(p)
-  private val acc = new AggAccumulator(ops, p.requiredSchema)
+  private val setup = new GraftScanSetup(p)
+  require(setup.materializer.walkable && p.opts.mergeToLatest,
+    "aggregate pushed over a shape the store walk cannot serve")
+  private val walks = setup.walks(setup.materializer.valueColumns)
+  private var walk: graft.store.KvWalk = _
+  protected val acc = new AggAccumulator(ops, p.requiredSchema)
+  /** The current row's decoded slot values, overwritten by [[advance]]. */
+  protected val values = new Array[Any](p.requiredSchema.length)
+  private var folded = 0L
+
+  /** Step to the next served row and decode it into [[values]]. */
+  protected def advance(): Boolean = {
+    while (walk == null || !walk.next()) {
+      if (!walks.hasNext) return false
+      walk = walks.next()
+    }
+    setup.materializer.decodeWalked(walk.key, walk.cells, values)
+    folded += 1
+    true
+  }
+
+  protected var current: InternalRow = _
+  override def get(): InternalRow = current
+  override def close(): Unit = setup.close()
+  override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+    GraftMetricsDefs.rows(folded, setup.rowsWalked)
+}
+
+/** Store-side partial aggregation: folds the region's rows into ONE output
+  * row (count/min/max/sum partials) — the per-region movement drops from
+  * O(rows) to O(1), which is the entire point at 1000 executors. */
+class GraftAggPartitionReader(p: GraftInputPartition, ops: Seq[PushedAggOp])
+    extends AggFoldReader(p, ops) {
 
   private var emitted = false
 
   override def next(): Boolean = {
     if (emitted) return false
     acc.reset()
-    while (inner.next()) acc.update(inner.get())
+    while (advance()) acc.update(values)
     current = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(acc.result())
     emitted = true
     true
   }
-
-  private var current: InternalRow = _
-  override def get(): InternalRow = current
-  override def close(): Unit = inner.close()
-  override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    inner.currentMetricsValues()
 }
 
 /** Store-side GROUPED partial aggregation for a row-key-prefix grouping:
@@ -1258,33 +1287,19 @@ class GraftAggPartitionReader(p: GraftInputPartition, ops: Seq[PushedAggOp])
   * no sort; per-region output is its distinct-prefix count, and Spark's
   * final aggregate merges groups that span region boundaries. */
 class GraftGroupAggPartitionReader(p: GraftInputPartition, ops: Seq[PushedAggOp])
-    extends PartitionReader[InternalRow] {
+    extends AggFoldReader(p, ops) {
 
-  private val inner = new GraftPartitionReader(p)
-  private val acc = new AggAccumulator(ops, p.requiredSchema)
-  private val idx = p.requiredSchema.fieldNames.zipWithIndex.toMap
-  private val gIdx = p.groupCols.map(idx(_)).toArray
+  private val gIdx = p.groupCols.map(p.requiredSchema.fieldIndex).toArray
 
-  private var pending: InternalRow = _
+  /** [[values]] holds a decoded row not yet folded into any group. */
+  private var pending = false
   private var exhausted = false
-  private var current: InternalRow = _
 
-  private def groupKey(row: InternalRow): Array[Any] = {
-    val k = new Array[Any](gIdx.length)
+  private def sameKey(key: Array[Any]): Boolean = {
     var i = 0
     while (i < gIdx.length) {
       val j = gIdx(i)
-      k(i) = if (row.isNullAt(j)) null else acc.copyOf(row.get(j, acc.dts(j)))
-      i += 1
-    }
-    k
-  }
-
-  private def sameKey(key: Array[Any], row: InternalRow): Boolean = {
-    var i = 0
-    while (i < gIdx.length) {
-      val j = gIdx(i)
-      val b = if (row.isNullAt(j)) null else row.get(j, acc.dts(j))
+      val b = values(j)
       val same =
         if (key(i) == null || b == null) key(i) == null && b == null
         else acc.orderings(j).equiv(key(i), b)
@@ -1295,37 +1310,29 @@ class GraftGroupAggPartitionReader(p: GraftInputPartition, ops: Seq[PushedAggOp]
   }
 
   override def next(): Boolean = {
-    if (exhausted && pending == null) return false
-    if (pending == null) {
-      if (!inner.next()) { exhausted = true; return false }
-      pending = inner.get()
+    if (!pending) {
+      if (exhausted || !advance()) { exhausted = true; return false }
     }
-    val key = groupKey(pending)
+    // decoded values are fresh objects per row, so the group key can hold
+    // them while the walk moves on
+    val key = gIdx.map(values(_))
     acc.reset()
-    acc.update(pending)
-    pending = null
-    var scanning = true
-    while (scanning) {
-      if (!inner.next()) { exhausted = true; scanning = false }
-      else {
-        val row = inner.get()
-        if (sameKey(key, row)) acc.update(row)
-        else { pending = row; scanning = false }
-      }
+    acc.update(values)
+    pending = false
+    while (!pending && !exhausted) {
+      if (!advance()) exhausted = true
+      else if (sameKey(key)) acc.update(values)
+      else pending = true
     }
     current = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
       key ++ acc.result())
     true
   }
-
-  override def get(): InternalRow = current
-  override def close(): Unit = inner.close()
-  override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    inner.currentMetricsValues()
 }
 
-/** Shared executor-side scan setup for the row and columnar readers:
-  * column restriction, version depth, and the ordered KvRow stream. */
+/** Shared executor-side scan setup for the row, columnar and aggregate
+  * readers: column restriction, version depth, the ordered KvRow stream or
+  * the aggregate fold's walks, and the rows walked under either. */
 private[datasource] final class GraftScanSetup(p: GraftInputPartition) {
 
   private val catalog = p.catalog
@@ -1334,7 +1341,8 @@ private[datasource] final class GraftScanSetup(p: GraftInputPartition) {
   // resource contract (reference HBaseResources.scala:33-89 releases
   // table/scanner handles at task end): a setup holds one scan lease from
   // construction until the owning reader's close() — idempotent, so a
-  // reader wrapped by another reader (agg over row) closes safely twice
+  // reader wrapped by another reader (columnar over grouped agg) closes
+  // safely twice
   table.acquireScanLease()
   private val leaseReleased = new java.util.concurrent.atomic.AtomicBoolean(false)
   def close(): Unit =
@@ -1436,11 +1444,36 @@ private[datasource] final class GraftScanSetup(p: GraftInputPartition) {
   // because a point `subMap` IS the get on the embedded store. A reversed
   // scan (top-N DESC) walks the normalized-ascending ranges backwards,
   // each range iterated descending, so the stream is globally key-DESC.
-  def kvRows: Iterator[graft.store.KvRow] = {
-    val ordered = if (p.reverse) p.ranges.reverseIterator else p.ranges.iterator
-    ordered.flatMap(r => table.scan(p.regionIndex, r.toRange, columnSet,
-      timeRange, versions, p.pred, p.reverse))
+  def kvRows: Iterator[graft.store.KvRow] =
+    orderedRanges.flatMap { r =>
+      val scan = table.scan(p.regionIndex, r.toRange, columnSet,
+        timeRange, versions, p.pred, p.reverse)
+      opened(() => scan.rowsWalked)
+      scan
+    }
+
+  /** One [[graft.store.KvTable.walk]] per range, in the [[kvRows]] order,
+    * fetching `cols` — the pushed-aggregate fold's rows. */
+  def walks(cols: Array[(String, String)]): Iterator[graft.store.KvWalk] =
+    orderedRanges.map { r =>
+      val walk = table.walk(p.regionIndex, r.toRange, cols, timeRange, p.pred, p.reverse)
+      opened(() => walk.rowsWalked)
+      walk
+    }
+
+  private def orderedRanges: Iterator[SerializableRange] =
+    if (p.reverse) p.ranges.reverseIterator else p.ranges.iterator
+
+  // rows walked by the ranges already passed, plus the open range's count
+  private var walkedBefore = 0L
+  private var walkedOpen: () => Long = () => 0L
+  private def opened(walked: () => Long): Unit = {
+    walkedBefore += walkedOpen()
+    walkedOpen = walked
   }
+  /** Rows the store stepped over for this partition so far, passing the
+    * pushed predicate or not. */
+  def rowsWalked: Long = walkedBefore + walkedOpen()
 
   /** CDC tombstones for this partition's stamp window: each delete marker
     * inside the pushed key ranges materializes as a key-only row (value
@@ -1518,7 +1551,7 @@ class GraftPartitionReader(p: GraftInputPartition) extends PartitionReader[Inter
   override def close(): Unit = setup.close()
 
   override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    Array(GraftMetricsDefs.task("graftRowsScanned", rowsScanned))
+    GraftMetricsDefs.rows(rowsScanned, setup.rowsWalked)
 }
 
 /** [[SlotSink]] over on-heap column vectors — the typed setter per slot is
@@ -1677,13 +1710,13 @@ class GraftColumnarPartitionReader(p: GraftInputPartition)
   private var rowsScanned = 0L
 
   override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    Array(GraftMetricsDefs.task("graftRowsScanned", rowsScanned))
+    GraftMetricsDefs.rows(rowsScanned, setup.rowsWalked)
 }
 
 /** Columnar reader for a pushed key-prefix GROUPED aggregate: delegates the
-  * scan-and-fold to [[GraftGroupAggPartitionReader]] (that streaming walk —
-  * O(1) state, one emitted row per distinct prefix — IS the expensive part
-  * and is unchanged) and batches the emitted group rows into
+  * walk-and-fold to [[GraftGroupAggPartitionReader]] (that streaming walk —
+  * O(1) state, one emitted row per distinct prefix — IS the expensive part)
+  * and batches the emitted group rows into
   * `ColumnarBatch`es, so a wide region's many groups flow to the final
   * aggregate on the vectorized path instead of row-at-a-time. */
 class GraftGroupAggColumnarReader(p: GraftInputPartition, ops: Seq[PushedAggOp])

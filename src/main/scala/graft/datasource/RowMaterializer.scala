@@ -48,10 +48,13 @@ final class RowMaterializer(
   private val KindVersioned = 2; private val KindDynamic = 3
   private val slotKind = new Array[Int](nSlots)
   private val keyPartOf = new Array[graft.catalog.RowKeyPart](nSlots)
-  private val slotByColumn = new java.util.HashMap[String, Integer]()
-  /** Length-prefixed column key — unambiguous for any cf/qual contents. */
-  private def colKey(cf: String, qual: String): String =
-    cf.length.toString + ":" + cf + qual
+  /** family → qualifier → slot: the cell's own strings are the lookup
+    * keys, so finding a cell's slot builds nothing per cell. */
+  private val slotByColumn = new java.util.HashMap[String, java.util.HashMap[String, Integer]]()
+  private def slotOf(cf: String, qual: String): Integer = {
+    val byQual = slotByColumn.get(cf)
+    if (byQual == null) null else byQual.get(qual)
+  }
   private var fastPathOk = true
   projection.zipWithIndex.foreach { case ((f, _), i) =>
     if (f.isRowKey) {
@@ -62,8 +65,53 @@ final class RowMaterializer(
       case MapType(LongType, _, _) => slotKind(i) = KindVersioned; fastPathOk = false
       case _ =>
         slotKind(i) = KindSimple
-        if (slotByColumn.put(colKey(f.cf, f.qual), i) != null) fastPathOk = false
+        val byQual = slotByColumn.computeIfAbsent(f.cf, _ => new java.util.HashMap[String, Integer]())
+        if (byQual.put(f.qual, i) != null) fastPathOk = false
     }
+  }
+
+  private def column(i: Int): (String, String) = (fieldsArr(i).cf, fieldsArr(i).qual)
+
+  /** The distinct (cf, qual) columns of the simple value slots — the
+    * column list a [[graft.store.KvTable.walk]] fetches for
+    * [[decodeWalked]]. */
+  val valueColumns: Array[(String, String)] =
+    (0 until nSlots).filter(slotKind(_) == KindSimple).map(column).distinct.toArray
+  /** Simple slot → index of its column in [[valueColumns]]; -1 otherwise. */
+  private val columnOfSlot: Array[Int] = Array.tabulate(nSlots)(i =>
+    if (slotKind(i) == KindSimple) valueColumns.indexOf(column(i)) else -1)
+
+  /** True when every slot is [[RowMaterializer.walkable]] — the
+    * precondition for [[decodeWalked]]. */
+  def walkable: Boolean = slotKind.forall(k => k == KindKey || k == KindSimple)
+
+  /** Decode one walked row into `out`, one value per slot in Catalyst
+    * representation (null when absent): key parts from `key` (salt
+    * included in the part offsets), value slots from `cells`, which holds
+    * the newest cell of each of [[valueColumns]]. Caller must hold
+    * [[walkable]] and a mergeToLatest read. */
+  def decodeWalked(key: Array[Byte], cells: Array[Array[Byte]], out: Array[Any]): Unit = {
+    var i = 0
+    while (i < nSlots) {
+      out(i) =
+        if (slotKind(i) == KindKey) decodeKeySlot(i, key)
+        else {
+          val b = cells(columnOfSlot(i))
+          if (b == null) null else decodeCellSlot(i, b)
+        }
+      i += 1
+    }
+  }
+
+  private def decodeKeySlot(i: Int, key: Array[Byte]): Any = {
+    val p = keyPartOf(i)
+    toRequired(fieldsArr(i), reqTypes(i), p.field.coder.decode(p.field.dataType, key,
+      p.offsetIn(key.length), p.lengthIn(key.length)))
+  }
+
+  private def decodeCellSlot(i: Int, value: Array[Byte]): Any = {
+    val f = fieldsArr(i)
+    toRequired(f, reqTypes(i), f.coder.decode(f.dataType, value))
   }
 
   /** True when every slot decodes in one cell pass with exactly one output
@@ -82,21 +130,16 @@ final class RowMaterializer(
     var i = 0
     while (i < nSlots) {
       if (slotKind(i) == KindKey) {
-        val p = keyPartOf(i)
-        val off = p.offsetIn(row.key.length)
-        val len = p.lengthIn(row.key.length)
-        val v = toRequired(fieldsArr(i), reqTypes(i),
-          p.field.coder.decode(p.field.dataType, row.key, off, len))
+        val v = decodeKeySlot(i, row.key)
         if (v == null) sink.putNull(i) else sink.put(i, v)
         filledBuf(i) = true
       }
       i += 1
     }
     row.cells.foreach { c =>
-      val s = slotByColumn.get(colKey(c.cf, c.qual))
+      val s = slotOf(c.cf, c.qual)
       if (s != null && !filledBuf(s)) {
-        val f = fieldsArr(s)
-        val v = toRequired(f, reqTypes(s), f.coder.decode(f.dataType, c.value))
+        val v = decodeCellSlot(s, c.value)
         if (v == null) sink.putNull(s) else sink.put(s, v)
         filledBuf(s) = true
       }
@@ -145,20 +188,15 @@ final class RowMaterializer(
     var i = 0
     while (i < nSlots) {
       if (slotKind(i) == KindKey) {
-        val p = keyPartOf(i)
-        val off = p.offsetIn(row.key.length)
-        val len = p.lengthIn(row.key.length)
-        out(i) = toRequired(fieldsArr(i), reqTypes(i),
-          p.field.coder.decode(p.field.dataType, row.key, off, len))
+        out(i) = decodeKeySlot(i, row.key)
         filled(i) = true
       }
       i += 1
     }
     row.cells.foreach { c =>
-      val s = slotByColumn.get(colKey(c.cf, c.qual))
+      val s = slotOf(c.cf, c.qual)
       if (s != null && !filled(s)) {
-        val f = fieldsArr(s)
-        out(s) = toRequired(f, reqTypes(s), f.coder.decode(f.dataType, c.value))
+        out(s) = decodeCellSlot(s, c.value)
         filled(s) = true
       }
     }
@@ -262,4 +300,14 @@ final class RowMaterializer(
         throw new UnsupportedOperationException(s"dynamic column ${f.name} with type $other")
     }
   }
+}
+
+object RowMaterializer {
+  /** A key part or a simple value column: one value from the key or from
+    * the column's newest cell, which a [[graft.store.KvTable.walk]] serves.
+    * Dynamic and versioned-map columns span many cells. */
+  def walkable(f: Field): Boolean = f.isRowKey || (!f.isDynamic && (f.dataType match {
+    case MapType(LongType, _, _) => false
+    case _ => true
+  }))
 }

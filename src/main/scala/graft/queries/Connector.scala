@@ -444,9 +444,10 @@ object Connector {
       |SELECT c_custkey, c_acctbal, CAST(NULL AS VARCHAR) AS c_mktsegment FROM customer
       |ORDER BY c_custkey, c_acctbal""".stripMargin
 
-  /** kv15: DSv2 AGGREGATE pushdown — count/min/max computed store-side
-    * per region partition ([[graft.datasource.GraftAggPartitionReader]]),
-    * each region answering with ONE partial row that Spark's final
+  /** kv15: DSv2 AGGREGATE pushdown — count/min/max/sum folded inside the
+    * store walk per region partition ([[graft.store.KvTable.walk]] under
+    * [[graft.datasource.GraftAggPartitionReader]], no row object per
+    * scanned row), each region answering with ONE partial row that Spark's final
     * aggregate merges (the DSv2 analogue of an HBase aggregation
     * coprocessor; the DSv1 reference has no hook for this). A key-range
     * predicate rides along: the store prunes regions AND rows first, then
@@ -493,7 +494,8 @@ object Connector {
       |WHERE c_custkey > 25 ORDER BY c_custkey LIMIT 20""".stripMargin
 
   /** kv17: GROUP BY a row-key PREFIX pushes per-group partials into the
-    * region scan ([[graft.datasource.GraftGroupAggPartitionReader]]):
+    * region's store walk ([[graft.datasource.GraftGroupAggPartitionReader]]
+    * over [[graft.store.KvTable.walk]]):
     * regions partition the key space disjointly and scan in key order, so
     * each region streams (group, count/min/max partials) with O(1) state —
     * emit on prefix change, no store-side hash map — and Spark's final

@@ -25,23 +25,12 @@ sealed trait KvPredicate extends Serializable {
     * filters on a time-ranged Scan. */
   def eval(key: Array[Byte], row: RowCells, time: Option[TimeRange]): Boolean
 
-  /** Newest version of (cf,qual) inside the scan's time range. */
-  protected final def latest(row: RowCells, cf: String, qual: String,
-      time: Option[TimeRange]): Option[Array[Byte]] = {
-    val versions = row.get((cf, qual))
-    if (versions == null || versions.isEmpty) return None
-    time match {
-      case None => Option(versions.firstEntry()).map(_.getValue)
-      case Some(t) =>
-        val it = versions.entrySet().iterator() // newest-first
-        while (it.hasNext) {
-          val e = it.next()
-          val ts = e.getKey.longValue()
-          if (ts >= t.minStamp && ts < t.maxStamp) return Some(e.getValue)
-        }
-        None
-    }
-  }
+  /** Newest version of column `col` = (cf, qual) inside the scan's time
+    * range, or null when it has none there. Callers hold `col` once, and
+    * the result is not wrapped: both would be an allocation per row tested. */
+  protected final def latest(row: RowCells, col: (String, String),
+      time: Option[TimeRange]): Array[Byte] =
+    KvStore.newestIn(row.get(col), time)
 }
 
 object KvPredicate {
@@ -56,10 +45,11 @@ object KvPredicate {
   /** Typed comparison on a column's latest version. */
   final case class ValueCmp(cf: String, qual: String, op: Op, value: Any,
       dt: DataType, coder: FieldCoder) extends KvPredicate {
-    override def eval(key: Array[Byte], row: RowCells, time: Option[TimeRange]): Boolean =
-      latest(row, cf, qual, time).exists { bytes =>
-        val x = coder.decode(dt, bytes)
-        val c = compareTyped(x, value)
+    private val col = (cf, qual)
+    override def eval(key: Array[Byte], row: RowCells, time: Option[TimeRange]): Boolean = {
+      val bytes = latest(row, col, time)
+      bytes != null && {
+        val c = compareTyped(coder.decode(dt, bytes), value)
         op match {
           case Eq => c == 0
           case Lt => c < 0
@@ -68,22 +58,27 @@ object KvPredicate {
           case Ge => c >= 0
         }
       }
+    }
   }
 
   final case class IsNull(cf: String, qual: String) extends KvPredicate {
-    override def eval(key: Array[Byte], row: RowCells, time: Option[TimeRange]): Boolean = latest(row, cf, qual, time).isEmpty
+    private val col = (cf, qual)
+    override def eval(key: Array[Byte], row: RowCells, time: Option[TimeRange]): Boolean = latest(row, col, time) == null
   }
 
   final case class IsNotNull(cf: String, qual: String) extends KvPredicate {
-    override def eval(key: Array[Byte], row: RowCells, time: Option[TimeRange]): Boolean = latest(row, cf, qual, time).nonEmpty
+    private val col = (cf, qual)
+    override def eval(key: Array[Byte], row: RowCells, time: Option[TimeRange]): Boolean = latest(row, col, time) != null
   }
 
   /** String prefix/suffix/substring on a column's latest version
     * (reference HBaseFilter.scala:320-368). */
   final case class StrMatch(cf: String, qual: String, pattern: String, mode: StrMode,
       dt: DataType, coder: FieldCoder) extends KvPredicate {
-    override def eval(key: Array[Byte], row: RowCells, time: Option[TimeRange]): Boolean =
-      latest(row, cf, qual, time).exists { bytes =>
+    private val col = (cf, qual)
+    override def eval(key: Array[Byte], row: RowCells, time: Option[TimeRange]): Boolean = {
+      val bytes = latest(row, col, time)
+      bytes != null && {
         val s = String.valueOf(coder.decode(dt, bytes))
         mode match {
           case StrMode.Prefix   => s.startsWith(pattern)
@@ -91,6 +86,7 @@ object KvPredicate {
           case StrMode.Contains => s.contains(pattern)
         }
       }
+    }
   }
 
   sealed trait StrMode extends Serializable
@@ -173,10 +169,11 @@ object KvPredicate {
     * content-wise byte arrays. */
   final case class ValueIn(cf: String, qual: String, values: Set[Any],
       dt: DataType, coder: FieldCoder) extends KvPredicate {
-    override def eval(key: Array[Byte], row: RowCells, time: Option[TimeRange]): Boolean =
-      latest(row, cf, qual, time).exists { bytes =>
-        values.contains(canonical(coder.decode(dt, bytes)))
-      }
+    private val col = (cf, qual)
+    override def eval(key: Array[Byte], row: RowCells, time: Option[TimeRange]): Boolean = {
+      val bytes = latest(row, col, time)
+      bytes != null && values.contains(canonical(coder.decode(dt, bytes)))
+    }
   }
 
   /** Set membership on one part of a (possibly composite) row key — the

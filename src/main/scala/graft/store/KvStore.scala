@@ -306,6 +306,28 @@ object KvStore {
   private val servedRows = new java.util.concurrent.atomic.LongAdder()
   def rowsServed: Long = servedRows.sum()
   private[store] def tickServed(): Unit = servedRows.increment()
+  private[store] def addServed(n: Long): Unit = servedRows.add(n)
+
+  /** Newest value among one column's versions (newest-first) inside `time`,
+    * or null when it has none there — THE visibility rule of a value
+    * predicate and of a [[KvTable.walk]]. */
+  private[store] def newestIn(versions: ConcurrentSkipListMap[java.lang.Long, Array[Byte]],
+      time: Option[TimeRange]): Array[Byte] = {
+    if (versions == null) return null
+    time match {
+      case None =>
+        val e = versions.firstEntry()
+        if (e == null) null else e.getValue
+      case Some(t) =>
+        val it = versions.entrySet().iterator()
+        while (it.hasNext) {
+          val e = it.next()
+          val ts = e.getKey.longValue()
+          if (ts >= t.minStamp && ts < t.maxStamp) return e.getValue
+        }
+        null
+    }
+  }
 
   def drop(name: String): Unit = synchronized {
     // same monitor as every other registry mutator — a drop racing a
@@ -347,6 +369,23 @@ final case class KvCell(cf: String, qual: String, ts: Long, value: Array[Byte])
 /** One scanned row: key bytes + cells surviving the scan's restrictions,
   * versions newest-first per column capped at the scan's maxVersions. */
 final case class KvRow(key: Array[Byte], cells: Seq[KvCell])
+
+/** [[KvTable.scan]]'s row stream. `rowsWalked` counts every row the scan
+  * has stepped over so far, whether or not it passed the predicate. */
+abstract class KvScan extends Iterator[KvRow] {
+  def rowsWalked: Long
+}
+
+/** [[KvTable.walk]]'s cursor: no row object per row. After `next()`
+  * returns true, `key` is the row's key and `cells(i)` the newest in-window
+  * value of the walk's i-th column, null when the row has none; both are
+  * overwritten by the following `next()`. */
+abstract class KvWalk {
+  def next(): Boolean
+  def key: Array[Byte]
+  def cells: Array[Array[Byte]]
+  def rowsWalked: Long
+}
 
 final case class RegionInfo(index: Int, start: Option[Array[Byte]], end: Option[Array[Byte]], host: String)
 
@@ -838,21 +877,88 @@ final class KvTable(initialName: String, splits: IndexedSeq[Array[Byte]],
       .map(e => (e.getKey, e.getValue.longValue()))
   }
 
-  def scan(regionIndex: Int, range: ScanRange[Array[Byte]], cols: ColumnSet,
-      time: Option[TimeRange], versions: Int,
-      predicate: Option[KvPredicate], reverse: Boolean = false): Iterator[KvRow] = {
-    val region = regions(regionIndex)
-    val m: RowMap = selectRows(region, range)
+  private type RowCells =
+    ConcurrentHashMap[(String, String), ConcurrentSkipListMap[java.lang.Long, Array[Byte]]]
+
+  /** The rows of one region range that pass `predicate`, in key order
+    * (descending when `reverse`) — THE row selection and predicate loop of
+    * [[scan]] and [[walk]]. `walked` counts every row stepped over. */
+  private final class Selection(regionIndex: Int, range: ScanRange[Array[Byte]],
+      time: Option[TimeRange], predicate: Option[KvPredicate], reverse: Boolean) {
+    private val m: RowMap = selectRows(regions(regionIndex), range)
     // reversed scan (HBase Scan.setReversed analogue): the skip list is a
     // NavigableMap, so descending iteration is O(1) per step — no sort
-    val it = if (reverse) m.descendingMap().entrySet().iterator()
-             else m.entrySet().iterator()
-    it.asScala.flatMap { e =>
-      if (predicate.forall(_.eval(e.getKey, e.getValue, time))) {
-        val m = materialize(e.getKey, e.getValue, cols, time, versions)
-        if (m.isDefined) KvStore.tickServed()
-        m
-      } else None
+    private val it = if (reverse) m.descendingMap().entrySet().iterator()
+                     else m.entrySet().iterator()
+    private val pred = predicate.orNull
+    var walked = 0L
+    var key: Array[Byte] = _
+    var row: RowCells = _
+    def advance(): Boolean = {
+      while (it.hasNext) {
+        val e = it.next()
+        walked += 1
+        if (pred == null || pred.eval(e.getKey, e.getValue, time)) {
+          key = e.getKey; row = e.getValue
+          return true
+        }
+      }
+      false
+    }
+  }
+
+  def scan(regionIndex: Int, range: ScanRange[Array[Byte]], cols: ColumnSet,
+      time: Option[TimeRange], versions: Int,
+      predicate: Option[KvPredicate], reverse: Boolean = false): KvScan = {
+    val sel = new Selection(regionIndex, range, time, predicate, reverse)
+    new KvScan {
+      private var pending: KvRow = _
+      override def hasNext: Boolean = {
+        while (pending == null && sel.advance())
+          materialize(sel.key, sel.row, cols, time, versions).foreach { r =>
+            KvStore.tickServed(); pending = r
+          }
+        pending != null
+      }
+      override def next(): KvRow = {
+        if (!hasNext) throw new NoSuchElementException("scan exhausted")
+        val r = pending; pending = null; r
+      }
+      override def rowsWalked: Long = sel.walked
+    }
+  }
+
+  /** The pushed-aggregate walk over one region range: for each row that
+    * passes `predicate` and exists in `time` (the [[scan]] existence rule:
+    * a row none of whose `cols` has an in-window cell still counts if any
+    * of its cells is in the window), the cursor exposes the key and the
+    * newest in-window value of each of `cols` in one reused array. Adds its
+    * served rows to [[KvStore.rowsServed]] once, when it runs out. */
+  def walk(regionIndex: Int, range: ScanRange[Array[Byte]], cols: Array[(String, String)],
+      time: Option[TimeRange], predicate: Option[KvPredicate],
+      reverse: Boolean = false): KvWalk = {
+    val sel = new Selection(regionIndex, range, time, predicate, reverse)
+    new KvWalk {
+      override val cells = new Array[Array[Byte]](cols.length)
+      private var served = 0L
+      private var done = false
+      override def key: Array[Byte] = sel.key
+      override def rowsWalked: Long = sel.walked
+      override def next(): Boolean = {
+        while (!done && sel.advance()) {
+          var any = false
+          var i = 0
+          while (i < cols.length) {
+            val v = KvStore.newestIn(sel.row.get(cols(i)), time)
+            cells(i) = v
+            if (v != null) any = true
+            i += 1
+          }
+          if (any || existsInRange(sel.row, time)) { served += 1; return true }
+        }
+        if (!done) { done = true; KvStore.addServed(served) }
+        false
+      }
     }
   }
 
