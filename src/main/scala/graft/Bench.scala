@@ -10,7 +10,14 @@ object Bench {
     * judging session to adjudicate. `rows` rides along so a rep that
     * "succeeded" against an unexpectedly empty result is visible too. */
   final case class Rep(wall: Double, util: Double, rows: Long, err: Option[String],
-      jobs: Long = -1L)
+      jobs: Long = -1L, compiles: Long = -1L, codegenMs: Double = -1.0)
+
+  /** Generated classes Janino compiled so far in this JVM, driver and
+    * executor side alike (local mode), and the nanoseconds it took. */
+  private def codegenCompiles(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+  private def codegenNanos(): Long =
+    org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime
 
   def jvmCpuNanos(): Long =
     java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
@@ -23,11 +30,14 @@ object Bench {
     * supplies a monotone Spark-job count (listener-fed, so slightly
     * async): the per-rep delta quantifies SCHEDULING-bound queries —
     * a CDC drain suite at cpu_util 0.1 and 150+ jobs is paying per-job
-    * floors, not doing slow data work. */
+    * floors, not doing slow data work. The per-rep codegen delta
+    * (`compiles`, `codegenMs`) shows a query that compiles the same
+    * generated classes on every run. */
   def timeOnce(spark: SparkSession, sfDir: String, cpus: Int,
       fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
       jobCounter: () => Long = () => -1L): Rep = {
     val j0 = jobCounter()
+    val (k0, kn0) = (codegenCompiles(), codegenNanos())
     val c0 = jvmCpuNanos()
     val t0 = System.nanoTime()
     val (rows, err) =
@@ -40,7 +50,8 @@ object Bench {
     val wall = (System.nanoTime() - t0) / 1e9
     val cpu = if (c0 < 0) -1.0 else (jvmCpuNanos() - c0) / 1e9
     val util = if (cpu < 0 || wall <= 0) -1.0 else cpu / (wall * cpus.toDouble)
-    Rep(wall, util, rows, err, if (j0 < 0) -1L else jobCounter() - j0)
+    Rep(wall, util, rows, err, if (j0 < 0) -1L else jobCounter() - j0,
+      codegenCompiles() - k0, (codegenNanos() - kn0) / 1e6)
   }
 
   /** `reps` timed invocations, plus a tie-breaking third when the first
@@ -306,12 +317,19 @@ object Bench {
     val jobsObj = perRep.map { case (k, ts) =>
       s"\"" + k + "\":[" + ts.map(_.jobs).mkString(",") + "]"
     }.mkString("{", ",", "}")
+    // generated classes compiled, and compile ms, per rep: a query whose
+    // later reps still compile is re-generating code it already had
+    val codegenObj = perRep.map { case (k, ts) =>
+      s"\"" + k + "\":{\"compiles\":[" + ts.map(_.compiles).mkString(",") + "],\"ms\":[" +
+        ts.map(t => String.format(java.util.Locale.ROOT, "%.1f", Double.box(t.codegenMs)))
+          .mkString(",") + "]}"
+    }.mkString("{", ",", "}")
     val errObj = queryErrs.toSeq.sortBy(_._1).map { case (k, e) =>
       s"\"" + k + "\":" + jstr(e)
     }.mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.sum else 0.0
     val populateTotal = populate.values.sum
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":${obj(results)},"query_reps":$repsObj,"query_cpu_util":$utilObj,"query_rows":$rowsObj,"query_jobs":$jobsObj,"query_err":$errObj,"tainted":${queryErrs.size},"partial":$partial,"queries_declared":$nDeclared,"reps_shed":$repsShed,"deadline_stop":$deadlineStop,"loadHigh":$loadHigh,"calib_ms":$calibMs,"populate":${obj(populate)},"populate_total":$populateTotal,"reps":$reps,"loadavg_start":$loadStart,"loadavg_end":$loadEnd,"sf":"$sfDir"}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":${obj(results)},"query_reps":$repsObj,"query_cpu_util":$utilObj,"query_rows":$rowsObj,"query_jobs":$jobsObj,"query_codegen":$codegenObj,"query_err":$errObj,"tainted":${queryErrs.size},"partial":$partial,"queries_declared":$nDeclared,"reps_shed":$repsShed,"deadline_stop":$deadlineStop,"loadHigh":$loadHigh,"calib_ms":$calibMs,"populate":${obj(populate)},"populate_total":$populateTotal,"reps":$reps,"loadavg_start":$loadStart,"loadavg_end":$loadEnd,"sf":"$sfDir"}"""
     // Persist the FULL record to a file: the per-query/per-rep map for
     // 150+ queries is ~15 KB and the harness that collects stdout keeps
     // only the last 2000 characters. The CANONICAL round record

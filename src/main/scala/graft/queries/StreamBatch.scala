@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftShim
 
 import graft.streaming.GraftStreaming
 
@@ -28,6 +29,7 @@ object StreamBatch {
 
   private val AqeKey = "spark.sql.adaptive.enabled"
   private val ShuffleKey = "spark.sql.shuffle.partitions"
+  private val WholeStageKey = "spark.sql.codegen.wholeStage"
 
   /** Stream the events parquet through a fresh file-source dir (the parquet
     * file is copied so the source directory contains exactly one file). */
@@ -72,20 +74,38 @@ object StreamBatch {
     * `readStream` with `srcOpts`, `body` on every micro-batch through
     * foreachBatch, checkpointed at `ckpt` (the caller's: it is resumed
     * across drains and never deleted here), run AvailableNow to completion.
-    * The drain conf window sets the checkpoint checksum and turns AQE OFF:
-    * every job a maintainer issues is a hinted broadcast, a bounded sliver
-    * read, or a batch-proportional write, so AdaptiveSparkPlan's per-job
-    * stage materialization and re-planning has nothing to re-optimize and
-    * costs measurably (paired A/B at sf0.1, wall and JVM-cpu: sv21
+    *
+    * `body` gets the micro-batch re-bound to the caller's session `s`.
+    * Every drain starts a new StreamExecution, which clones `s` into a
+    * session with a new id; Spark's executor gives each session id its own
+    * class loader, and the codegen cache is keyed by (class loader, code),
+    * so frames of the clone compiled byte-identical classes again on every
+    * drain. Spark's foreachBatch sink hands over a `LogicalRDD` over the
+    * stream's already-planned RDD, so the re-bound frame plans nothing
+    * again, and every job the body issues compiles into `s`'s one class
+    * loader. Body jobs therefore read `s`'s conf (this window included),
+    * not the checkpoint-restored conf of the stream's clone.
+    *
+    * The drain conf window sets the checkpoint checksum and turns AQE and
+    * whole-stage codegen OFF, for one reason: every job a maintainer issues
+    * is sized by its batch — a hinted broadcast, a bounded sliver read, or
+    * a batch-proportional write. AdaptiveSparkPlan's per-job stage
+    * materialization and re-planning has nothing to re-optimize and costs
+    * measurably (paired A/B at sf0.1, wall and JVM-cpu: sv21
     * 17.5→11.3 s / 70→52 cpu-s, sv12 6.2→4.5 / 27→17, sv25 24.4→20.5,
-    * sv22 8.1→7.4, sv26 10.0→8.9). Shuffle partitions stay untouched: a
+    * sv22 8.1→7.4, sv26 10.0→8.9). A whole-stage class costs a compile
+    * that a batch-sized job never earns back, and takes two codegen-cache
+    * entries (one per class loader, driver and executor), which push a
+    * drain cycle's working set past Spark's default 100-entry cache;
+    * expression codegen stays on. Shuffle partitions stay untouched: a
     * maintainer's first batch is a corpus-sized load that needs the
     * session's full parallelism (an 8-partition pin measured 2-6× slower). */
-  private def drain(s: SparkSession, srcOpts: Map[String, String], ckpt: String)(
+  private[graft] def drain(s: SparkSession, srcOpts: Map[String, String], ckpt: String)(
       body: (DataFrame, Long) => Unit): Unit =
-    withConfs(s, AqeKey -> "false", ckptChecksum(s)) {
+    withConfs(s, AqeKey -> "false", WholeStageKey -> "false", ckptChecksum(s)) {
       GraftStreaming.runOnce(s.readStream.format("graft-kv").options(srcOpts).load()
-        .writeStream.foreachBatch(body).option("checkpointLocation", ckpt))
+        .writeStream.foreachBatch((b: DataFrame, id: Long) => body(GraftShim.rebind(s, b), id))
+        .option("checkpointLocation", ckpt))
       ()
     }
 

@@ -403,43 +403,88 @@ object KvPredicate {
   }
 
   final case class And(children: Seq[KvPredicate]) extends KvPredicate {
-    override def eval(key: Array[Byte], row: RowCells, time: Option[TimeRange]): Boolean = children.forall(_.eval(key, row, time))
+    private val cs = children.toArray
+    override def eval(key: Array[Byte], row: RowCells, time: Option[TimeRange]): Boolean = {
+      var i = 0
+      while (i < cs.length) { if (!cs(i).eval(key, row, time)) return false; i += 1 }
+      true
+    }
   }
 
   final case class Or(children: Seq[KvPredicate]) extends KvPredicate {
-    override def eval(key: Array[Byte], row: RowCells, time: Option[TimeRange]): Boolean = children.exists(_.eval(key, row, time))
+    private val cs = children.toArray
+    override def eval(key: Array[Byte], row: RowCells, time: Option[TimeRange]): Boolean = {
+      var i = 0
+      while (i < cs.length) { if (cs(i).eval(key, row, time)) return true; i += 1 }
+      false
+    }
   }
 
   final case class Not(child: KvPredicate) extends KvPredicate {
     override def eval(key: Array[Byte], row: RowCells, time: Option[TimeRange]): Boolean = !child.eval(key, row, time)
   }
 
-  /** Compare two JVM values of the same runtime type. */
-  def compareTyped(a: Any, b: Any): Int = (a, b) match {
-    case (x: java.lang.Boolean, y: java.lang.Boolean) => x.compareTo(y)
-    case (x: java.lang.Byte, y: java.lang.Byte)       => x.compareTo(y)
-    case (x: java.lang.Short, y: java.lang.Short)     => x.compareTo(y)
-    case (x: java.lang.Integer, y: java.lang.Integer) => x.compareTo(y)
-    case (x: java.lang.Long, y: java.lang.Long)       => x.compareTo(y)
-    case (x: java.lang.Float, y: java.lang.Float)     => x.compareTo(y)
-    case (x: java.lang.Double, y: java.lang.Double)   => x.compareTo(y)
+  /** Compare two JVM values of the same runtime type; two different
+    * numeric boxes compare as doubles. Matches `a` alone and tests `b`'s
+    * type in a guard, so no pair is built per call. */
+  def compareTyped(a: Any, b: Any): Int = a match {
+    case x: java.lang.Integer if b.isInstanceOf[java.lang.Integer] =>
+      x.compareTo(b.asInstanceOf[java.lang.Integer])
+    case x: java.lang.Long if b.isInstanceOf[java.lang.Long] =>
+      x.compareTo(b.asInstanceOf[java.lang.Long])
     // UTF-8 byte order, matching Spark's UTF8String binary collation
-    case (x: String, y: String) =>
-      BytesUtil.compareBytes(x.getBytes("UTF-8"), y.getBytes("UTF-8"))
-    case (x: Array[Byte], y: Array[Byte])             => BytesUtil.compareBytes(x, y)
-    case (x: Number, y: Number) => java.lang.Double.compare(x.doubleValue(), y.doubleValue())
+    case x: String if b.isInstanceOf[String] => compareCodePoints(x, b.asInstanceOf[String])
+    case x: java.lang.Double if b.isInstanceOf[java.lang.Double] =>
+      x.compareTo(b.asInstanceOf[java.lang.Double])
+    case x: java.lang.Float if b.isInstanceOf[java.lang.Float] =>
+      x.compareTo(b.asInstanceOf[java.lang.Float])
+    case x: java.lang.Short if b.isInstanceOf[java.lang.Short] =>
+      x.compareTo(b.asInstanceOf[java.lang.Short])
+    case x: java.lang.Byte if b.isInstanceOf[java.lang.Byte] =>
+      x.compareTo(b.asInstanceOf[java.lang.Byte])
+    case x: java.lang.Boolean if b.isInstanceOf[java.lang.Boolean] =>
+      x.compareTo(b.asInstanceOf[java.lang.Boolean])
+    case x: Array[Byte] if b.isInstanceOf[Array[Byte]] =>
+      BytesUtil.compareBytes(x, b.asInstanceOf[Array[Byte]])
+    case x: Number if b.isInstanceOf[Number] =>
+      java.lang.Double.compare(x.doubleValue(), b.asInstanceOf[Number].doubleValue())
     // a struct (Avro record) key part: field by field, nulls first, the
     // order Spark gives structs
-    case (x: org.apache.spark.sql.Row, y: org.apache.spark.sql.Row) if x.length == y.length =>
-      (0 until x.length).iterator.map { i =>
-        (x.isNullAt(i), y.isNullAt(i)) match {
-          case (true, true) => 0
-          case (true, false) => -1
-          case (false, true) => 1
-          case _ => compareTyped(x.get(i), y.get(i))
-        }
-      }.find(_ != 0).getOrElse(0)
+    case x: org.apache.spark.sql.Row if b.isInstanceOf[org.apache.spark.sql.Row] &&
+        x.length == b.asInstanceOf[org.apache.spark.sql.Row].length =>
+      val y = b.asInstanceOf[org.apache.spark.sql.Row]
+      var i = 0
+      while (i < x.length) {
+        val c =
+          if (x.isNullAt(i)) { if (y.isNullAt(i)) 0 else -1 }
+          else if (y.isNullAt(i)) 1
+          else compareTyped(x.get(i), y.get(i))
+        if (c != 0) return c
+        i += 1
+      }
+      0
     case _ => throw new IllegalArgumentException(
       s"cannot compare ${a.getClass.getName} with ${b.getClass.getName}")
   }
+
+  /** Code point order of two well-formed strings, which is UTF-8 byte order
+    * (Spark's UTF8String binary collation), without encoding either.
+    * UTF-16 code unit order differs from it in one place only: a surrogate
+    * (half of a supplementary code point, U+10000 and above) sorts below
+    * U+E000..U+FFFF. At the first differing unit, so both strings agree
+    * before it, moving the surrogates above that block restores the order. */
+  private def compareCodePoints(x: String, y: String): Int = {
+    val n = math.min(x.length, y.length)
+    var i = 0
+    while (i < n) {
+      val c = x.charAt(i)
+      val d = y.charAt(i)
+      if (c != d) return codePointRank(c) - codePointRank(d)
+      i += 1
+    }
+    x.length - y.length
+  }
+
+  private def codePointRank(c: Char): Int =
+    if (c >= 0xE000) c - 0x800 else if (c >= 0xD800) c + 0x2000 else c
 }

@@ -53,4 +53,12 @@ class BenchRecordSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(errs.keySet == Set("bad_query", "dead_query"))
     assert(errs("bad_query") == "boom")
   }
+
+  test("a rep records the generated classes it compiled, and a repeat compiles none") {
+    val filtered: (SparkSession, String) => org.apache.spark.sql.DataFrame =
+      (s, _) => s.range(100).toDF("n").filter("n % 7919 = 13 or n * 31 = 3131")
+    val reps = Bench.timeQuery(spark, "/nonexistent", 2, filtered, reps = 2)
+    assert(reps.head.compiles > 0 && reps.head.codegenMs > 0, reps.head)
+    assert(reps(1).compiles == 0L && reps(1).codegenMs == 0.0, reps(1))
+  }
 }

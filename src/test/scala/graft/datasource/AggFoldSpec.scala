@@ -333,4 +333,43 @@ class AggFoldSpec extends AnyFunSuite with BeforeAndAfterAll {
     intercept[Exception](agg.collect())
     assert(KvStore.openScanCount == baseline)
   }
+
+  test("a supplementary character orders above U+FFFD on the scan and walk paths") {
+    // UTF-8 byte order (Spark's string order) is code point order; UTF-16
+    // code unit order puts a surrogate pair below U+E000..U+FFFF
+    val emoji = new String(Character.toChars(0x1F600))
+    val cat =
+      """{"table":{"namespace":"default", "name":"fold_utf"},
+        |"rowkey":"key",
+        |"columns":{
+        |"key":{"cf":"rowkey", "col":"key", "type":"bigint"},
+        |"s":{"cf":"f", "col":"s", "type":"string"}}}""".stripMargin
+    write(Seq(1L -> "a", 2L -> "\uFFFD", 3L -> emoji, 4L -> ("a" + emoji), 5L -> "a\uFFFD")
+      .toDF("key", "s"), cat, "newtable" -> "4", "minSplitNum" -> "0", "maxSplitNum" -> "10")
+    def keys(df: DataFrame): Set[Long] = df.collect().map(_.getLong(0)).toSet
+    val above = read(cat).filter(col("s") > "\uFFFD")
+    assert(keys(above) == Set(3L))
+    assert(scanMetrics(above)("graftRowsScanned") == 1L)
+    val below = read(cat).filter(col("s") < emoji)
+    assert(keys(below) == Set(1L, 2L, 4L, 5L))
+    assert(keys(read(cat).filter(col("s") > "a\uFFFD")) == Set(2L, 3L, 4L))
+    val folded = read(cat).filter(col("s") > "\uFFFD").agg(count(lit(1)), max(col("s")))
+    assert(plan(folded).contains("pushedAggregates"), plan(folded))
+    assert(folded.collect().head == Row(1L, emoji))
+    sameAsRowScan(read(cat).filter(col("s") >= "a\uFFFD"), Nil, count(lit(1)), min(col("s")))
+
+    val strs = Seq("", "a", "\u007F", "\u0080", "\uD7FF", "\uE000", "\uFFFD", "\uFFFF",
+      new String(Character.toChars(0x10000)), emoji, new String(Character.toChars(0x10FFFF)),
+      "ab", "a" + emoji, "a\uFFFD")
+    for (x <- strs; y <- strs) {
+      val want = Integer.signum(graft.ranges.BytesUtil.compareBytes(x.getBytes("UTF-8"),
+        y.getBytes("UTF-8")))
+      assert(Integer.signum(KvPredicate.compareTyped(x, y)) == want,
+        s"${x.codePoints.toArray.toSeq} vs ${y.codePoints.toArray.toSeq}")
+    }
+    assert(KvPredicate.compareTyped(Int.box(3), Long.box(2L)) > 0)
+    assert(KvPredicate.compareTyped(Double.box(Double.NaN), Double.box(1.0)) > 0)
+    assert(KvPredicate.compareTyped(new java.math.BigDecimal("1.5"),
+      new java.math.BigDecimal("2")) < 0)
+  }
 }

@@ -1730,6 +1730,108 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"default:kv_lm_counts_$suf").foreach(KvStore.drop)
   }
 
+  test("a drain's body gets its micro-batch re-bound to the caller's session") {
+    // every drain's StreamExecution runs in a clone of the session; the
+    // body's jobs must run in the caller's, under the drain's conf window
+    // (whole-stage codegen off), and the window must close after the drain
+    import graft.queries.StreamBatch
+    val cat = StreamBatch.sv21SrcCatalog.replace("\"kv_lm_src\"", "\"kv_lm_src_rebind\"")
+    KvStore.drop("default:kv_lm_src_rebind")
+    import spark.implicits._
+    Seq((1L, "a b"), (2L, "c")).toDF("doc_id", "text").write.format("graft-kv")
+      .options(Map("catalog" -> cat, "newtable" -> "4",
+        "timestamp" -> "1000", "minSplitNum" -> "0", "maxSplitNum" -> "100"))
+      .mode("append").save()
+    val ckpt = Files.createTempDirectory("graft-rebind-ckpt")
+    val wholeStageBefore = spark.conf.getOption("spark.sql.codegen.wholeStage")
+    val seen = new java.util.concurrent.atomic.AtomicReference[(Boolean, String, Long)]()
+    try {
+      StreamBatch.drain(spark, Map("catalog" -> cat), ckpt.toString) { (b, _) =>
+        seen.set((b.sparkSession eq spark,
+          b.sparkSession.conf.get("spark.sql.codegen.wholeStage"), b.count()))
+      }
+    } finally {
+      GraftStreaming.deleteTree(ckpt)
+      KvStore.drop("default:kv_lm_src_rebind")
+    }
+    assert(seen.get != null, "the drain admitted no batch")
+    val (same, wholeStage, rows) = seen.get
+    assert(same, "the body's frame must belong to the caller's session")
+    assert(wholeStage == "false", "body jobs must run with whole-stage codegen off")
+    assert(rows == 2L)
+    assert(spark.conf.getOption("spark.sql.codegen.wholeStage") == wholeStageBefore,
+      "the drain must restore whole-stage codegen")
+  }
+
+  test("a third drain of one maintainer, with a batch of the same shape, compiles no class") {
+    // a class compiled for one drain must serve the next: with the body in
+    // a per-drain session clone, every drain compiled its classes again
+    import graft.queries.StreamBatch
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val suf = "cgc"
+    def named(cat: String, base: String) = cat.replace("\"" + base + "\"", s""""${base}_$suf"""")
+    val ordCat = named(StreamBatch.sv23OrdSrcCatalog, "kv_jv_ord_src")
+    val custCat = named(StreamBatch.sv23CustSrcCatalog, "kv_jv_cust_src")
+    val ordMir = named(StreamBatch.sv23OrdMirrorCatalog, "kv_jv_ord_mirror")
+    val custMir = named(StreamBatch.sv23CustMirrorCatalog, "kv_jv_cust_mirror")
+    val viewCat = named(StreamBatch.sv23ViewCatalog, "kv_jv_view")
+    val aggCat = named(StreamBatch.sv24AggCatalog, "kv_jv_agg")
+    val tables = Seq("kv_jv_ord_src", "kv_jv_cust_src", "kv_jv_ord_mirror",
+      "kv_jv_cust_mirror", "kv_jv_view", "kv_jv_agg").map(t => s"default:${t}_$suf")
+    tables.foreach(KvStore.drop)
+    import spark.implicits._
+    def put(df: org.apache.spark.sql.DataFrame, cat: String, ts: Long,
+        opts: (String, String)*): Unit =
+      df.write.format("graft-kv").options(Map("catalog" -> cat, "newtable" -> "4",
+          "timestamp" -> ts.toString, "minSplitNum" -> "0", "maxSplitNum" -> "100") ++ opts)
+        .mode("append").save()
+    val twoVersions = "maxVersions" -> "2"
+    put(Seq.empty[(Long, Long)].toDF("o_orderkey", "o_custkey"), ordMir, 1, twoVersions)
+    put(Seq.empty[(Long, String)].toDF("c_custkey", "seg"), custMir, 1, twoVersions)
+    spark.range(0).select(lit(0L).as("c_custkey"), lit(0L).as("o_orderkey"),
+        lit(0L).as("price_c"), lit("").as("seg"), lit(1).as("alive"))
+      .write.format("graft-kv")
+      .options(Map("catalog" -> viewCat, "newtable" -> "4", "maxVersions" -> "2",
+        "timestamp" -> "1")).mode("append").save()
+    spark.range(0).select(lit("").as("segment"), lit(0L).as("n_orders"),
+        lit(0L).as("revenue_c"))
+      .write.format("graft-kv")
+      .options(Map("catalog" -> aggCat, "newtable" -> "4", "maxVersions" -> "2",
+        "timestamp" -> "1", "minSplit" -> "0", "maxSplit" -> "z"))
+      .mode("append").save()
+    val ckptO = Files.createTempDirectory("graft-cgc-ord")
+    val ckptC = Files.createTempDirectory("graft-cgc-cust")
+    def drainCustomers(base: Long): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      StreamBatch.maintainJoinViewCustomer(spark, base, ckptC.toString, custCat, custMir,
+        viewCat, Some(aggCat))
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    try {
+      put((1L to 8L).map(c => (c, "A")).toDF("c_custkey", "seg"), custCat, 1000)
+      drainCustomers(100000L)
+      put((1L to 40L).map(o => (o, o % 8 + 1, o * 100)).toDF("o_orderkey", "o_custkey",
+        "price_c"), ordCat, 2000)
+      StreamBatch.maintainJoinViewOrders(spark, 200000L, ckptO.toString, ordCat, ordMir,
+        custMir, viewCat, Some(aggCat))
+      // two waves of the same shape: two customers change segment
+      val compiles = Seq(("B", 300000L), ("C", 400000L)).map { case (seg, base) =>
+        put(Seq((2L, seg), (5L, seg)).toDF("c_custkey", "seg"), custCat, base / 100)
+        drainCustomers(base)
+      }
+      info(s"compiles per customer drain: ${compiles.mkString(", ")}")
+      assert(compiles.last == 0L,
+        s"the third customer drain compiled ${compiles.last} classes")
+      val rollup = spark.read.format("graft-kv").option("catalog", aggCat).load()
+        .filter(col("n_orders") > 0).collect()
+        .map(r => r.getAs[String]("segment") -> r.getAs[Long]("n_orders")).toMap
+      assert(rollup == Map("A" -> 30L, "C" -> 10L), s"rollup after the waves: $rollup")
+    } finally {
+      Seq(ckptO, ckptC).foreach(GraftStreaming.deleteTree)
+      tables.foreach(KvStore.drop)
+    }
+  }
+
   test("sv22: a batch torn between the manifest append and the counter advance replays idempotently") {
     import graft.queries.StreamBatch
     val suf = "crz"
