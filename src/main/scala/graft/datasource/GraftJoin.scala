@@ -26,11 +26,11 @@ import graft.store.KvStore
   *    row — no fan-out, INNER emits the pair or nothing, LEFT OUTER pads
   *    right columns with nulls;
   *  - row keys are never null, so null-key join semantics don't arise;
-  *  - the right probe materializes through the SAME column-restriction +
-  *    materializer stack a normal scan of the right side with that
-  *    projection uses ([[GraftScanSetup.probeColumnSet]]), so a row
-  *    invisible to the unpushed plan's right-side scan (no cells under the
-  *    restricted columns) is exactly as invisible to the probe;
+  *  - the right probe reads through the SAME setup a normal read of the
+  *    right side with that projection uses ([[GraftScanSetup.probe]]): a
+  *    point walk for a latest read of simple columns, a point get plus the
+  *    materializer for a multi-cell shape, so a row invisible to the
+  *    unpushed plan's right-side scan is exactly as invisible to the probe;
   *  - filters above the join stay residual in Spark (the joined builder
   *    declines all pushdown), so predicate semantics are Spark's own.
   *
@@ -160,9 +160,9 @@ class KvJoinPartitionReader(p: KvJoinInputPartition)
     StructType(fromOut ++ missing)
   }
 
-  // LEFT: an ordinary region scan through the standard setup (column
-  // restriction, materializer, KeysOnly fast path all apply); key parts
-  // are appended to the projection when pruned away so the probe has them
+  // LEFT: an ordinary region read through the standard setup (the walk,
+  // or the scan for a multi-cell shape); key parts are appended to the
+  // projection when pruned away so the probe has them
   private val leftSchema =
     sideSchema(join.left.catalog, leftOutToCol, join.leftKeys)
   private val leftSetup = new GraftScanSetup(GraftInputPartition(
@@ -171,12 +171,13 @@ class KvJoinPartitionReader(p: KvJoinInputPartition)
   private val leftKeyIdxs = join.leftKeys.map(leftSchema.fieldIndex).toArray
   private val leftKeyDts = leftKeyIdxs.map(leftSchema.fields(_).dataType)
 
-  // RIGHT: probes reuse a setup built over the right projection so the
-  // column restriction and materializer match a normal right-side scan
+  // RIGHT: probes go through a setup built over the right projection and
+  // the right side's pushed predicate, so they see what a normal
+  // right-side read sees
   private val rightSchema = sideSchema(join.right.catalog, rightOutToCol, Nil)
   private val rightSetup = new GraftScanSetup(GraftInputPartition(
     join.right.catalog, join.right.opts, 0, p.host,
-    Seq(SerializableRange.from(ScanRange.all[Array[Byte]])), None, rightSchema))
+    Seq(SerializableRange.from(ScanRange.all[Array[Byte]])), p.rightPred, rightSchema))
   // right key parts in key order — position i assembles from left part i,
   // exactly the writer's encode-and-concat ([[KvRowEncoder.key]])
   private val rightKeyParts = join.right.catalog.rowKeyParts.toArray
@@ -197,8 +198,7 @@ class KvJoinPartitionReader(p: KvJoinInputPartition)
     graft.ranges.BytesUtil.byteArrayOrdering
   private val rightScanRanges = p.rightRanges.map(_.toRange)
 
-  private val rows: Iterator[InternalRow] = leftSetup.kvRows
-    .flatMap(leftSetup.materializer.materialize)
+  private val rows: Iterator[InternalRow] = leftSetup.rows
     .flatMap { lrow =>
       rowsScanned += 1
       // assemble the right key from the left row's key-part values —
@@ -217,9 +217,7 @@ class KvJoinPartitionReader(p: KvJoinInputPartition)
       val keyBytes = graft.ranges.BytesUtil.concat(partBytes.toIndexedSeq: _*)
       val rrow =
         if (!rightScanRanges.exists(_.contains(keyBytes))) None
-        else rightSetup.probeTable
-          .get(keyBytes, rightSetup.probeColumnSet, None, 1, p.rightPred)
-          .flatMap(kr => rightSetup.materializer.materialize(kr).toSeq.headOption)
+        else rightSetup.probe(keyBytes)
       rrow match {
         case Some(r) => rowsScanned += 1; Some(assemble(lrow, r))
         case None if join.leftOuter => Some(assemble(lrow, null))

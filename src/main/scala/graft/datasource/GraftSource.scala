@@ -1092,18 +1092,18 @@ class GraftReaderFactory extends PartitionReaderFactory {
     }
   }
 
-  /** Columnar fast path: latest-merge scans whose every slot is a key part,
-    * a unique static column of a vector-writable atomic type, or the
-    * `_cell_ts` metadata column (a long vector filled from the row's newest
-    * stamp) decode straight into `ColumnarBatch` vectors (the reference's
-    * row-at-a-time materializer was its own known perf debt —
+  /** Columnar reads: a latest read whose every slot the store walk serves
+    * (a key part, a simple column, or `_cell_ts`) and whose every type is
+    * vector-writable decodes straight into `ColumnarBatch` vectors (the
+    * reference's row-at-a-time materializer was its own known perf debt —
     * HBaseTableScan.scala:113,177,218 TODOs). GROUPED pushed aggregates are
     * also columnar when every output type is vector-writable: a key-prefix
     * group scan over a wide region emits one row per distinct prefix, and
     * batching those into vectors keeps the 100×-shape (many groups) on the
-    * vectorized path. Global aggregates (one row per region), versioned,
-    * dynamic, and nested reads keep the row reader. The decision depends
-    * only on schema/options, never on a partition's ranges, so one scan's
+    * vectorized path. Global aggregates (one row per region), `_deleted`
+    * reads and the multi-cell shapes (versioned, dynamic, version
+    * explosion) keep the row reader. The decision depends only on
+    * schema/options, never on a partition's ranges, so one scan's
     * partitions always agree (Spark requires all-or-none). */
   override def supportColumnarReads(partition: InputPartition): Boolean = {
     val p = partition.asInstanceOf[GraftInputPartition]
@@ -1115,13 +1115,9 @@ class GraftReaderFactory extends PartitionReaderFactory {
       case None =>
         // _deleted stays on the row path: CDC batches interleave upserts and
         // tombstone rows, not a shape worth vectorizing
-        if (p.requiredSchema.fieldNames.contains(GraftTable.DeletedColumn)) return false
-        val dataFields = p.requiredSchema.fields.toSeq
-          .filterNot(_.name == GraftTable.CellTsColumn)
-        dataFields.forall(f => VectorSlotSink.supports(f.dataType)) && {
-          val projection = dataFields.map(sf => (p.catalog.field(sf.name), sf.dataType))
-          new RowMaterializer(p.catalog, projection, p.opts.mergeToLatest)
-            .fastPathColumnar
+        p.opts.mergeToLatest && p.requiredSchema.fields.forall { f =>
+          f.name != GraftTable.DeletedColumn && VectorSlotSink.supports(f.dataType) &&
+            (f.name == GraftTable.CellTsColumn || RowMaterializer.walkable(p.catalog.field(f.name)))
         }
     }
   }
@@ -1224,10 +1220,9 @@ private[datasource] final class AggAccumulator(
   }.toArray
 }
 
-/** The rows a pushed-aggregate partition folds: the partition's ranges
-  * walked through [[graft.store.KvTable.walk]], each served row's slots
-  * decoded into the reused [[values]] array by the materializer's slot
-  * plan — no `KvRow`, `KvCell` or `InternalRow` per scanned row.
+/** The rows a pushed-aggregate partition folds: the partition's walked
+  * rows ([[GraftScanSetup.nextWalked]]), each decoded into the reused
+  * [[values]] array — no `KvRow`, `KvCell` or `InternalRow` per scanned row.
   * Merge-to-latest, time-range and TTL visibility are the row scan's
   * (the walk keeps the scan's existence rule), so the partials equal an
   * aggregate over that scan's rows. */
@@ -1235,25 +1230,14 @@ private[datasource] abstract class AggFoldReader(p: GraftInputPartition, ops: Se
     extends PartitionReader[InternalRow] {
 
   private val setup = new GraftScanSetup(p)
-  require(setup.materializer.walkable && p.opts.mergeToLatest,
-    "aggregate pushed over a shape the store walk cannot serve")
-  private val walks = setup.walks(setup.materializer.valueColumns)
-  private var walk: graft.store.KvWalk = _
+  require(setup.walked, "aggregate pushed over a shape the store walk cannot serve")
   protected val acc = new AggAccumulator(ops, p.requiredSchema)
   /** The current row's decoded slot values, overwritten by [[advance]]. */
   protected val values = new Array[Any](p.requiredSchema.length)
   private var folded = 0L
 
   /** Step to the next served row and decode it into [[values]]. */
-  protected def advance(): Boolean = {
-    while (walk == null || !walk.next()) {
-      if (!walks.hasNext) return false
-      walk = walks.next()
-    }
-    setup.materializer.decodeWalked(walk.key, walk.cells, values)
-    folded += 1
-    true
-  }
+  protected def advance(): Boolean = setup.nextWalked(values) && { folded += 1; true }
 
   protected var current: InternalRow = _
   override def get(): InternalRow = current
@@ -1330,10 +1314,14 @@ class GraftGroupAggPartitionReader(p: GraftInputPartition, ops: Seq[PushedAggOp]
   }
 }
 
-/** Shared executor-side scan setup for the row, columnar and aggregate
-  * readers: column restriction, version depth, the ordered KvRow stream or
-  * the aggregate fold's walks, and the rows walked under either. */
+/** Shared executor-side scan setup for the row, columnar, join and
+  * aggregate readers: column restriction, version depth, and the two ways
+  * to read the partition's ranges — the store walk for a latest read whose
+  * every slot it serves ([[walked]]), the `KvRow` scan for the multi-cell
+  * shapes — plus the rows walked under either. */
 private[datasource] final class GraftScanSetup(p: GraftInputPartition) {
+
+  import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 
   private val catalog = p.catalog
   private val table = KvStore.table(p.opts.storeName(catalog))
@@ -1342,54 +1330,41 @@ private[datasource] final class GraftScanSetup(p: GraftInputPartition) {
   // table/scanner handles at task end): a setup holds one scan lease from
   // construction until the owning reader's close() — idempotent, so a
   // reader wrapped by another reader (columnar over grouped agg) closes
-  // safely twice
+  // safely twice. Closing also ends the open walk, so the rows it served
+  // before a limit stopped it still count.
   table.acquireScanLease()
   private val leaseReleased = new java.util.concurrent.atomic.AtomicBoolean(false)
   def close(): Unit =
-    if (leaseReleased.compareAndSet(false, true)) table.releaseScanLease()
+    if (leaseReleased.compareAndSet(false, true)) {
+      if (openWalk != null) openWalk.close()
+      table.releaseScanLease()
+    }
 
   // the _cell_ts and _deleted metadata columns are not catalog fields:
-  // carve their slots out, materialize the DATA slots normally, and splice
-  // the metadata values back in at assembly time
-  private[datasource] val tsSlots: Array[Int] = p.requiredSchema.fields.zipWithIndex
+  // carve their slots out, decode the DATA slots into their positions, and
+  // fill the metadata slots alongside
+  private val width = p.requiredSchema.length
+  private val tsSlots: Array[Int] = p.requiredSchema.fields.zipWithIndex
     .collect { case (f, i) if f.name == GraftTable.CellTsColumn => i }
-  private[datasource] val delSlots: Array[Int] = p.requiredSchema.fields.zipWithIndex
+  private val delSlots: Array[Int] = p.requiredSchema.fields.zipWithIndex
     .collect { case (f, i) if f.name == GraftTable.DeletedColumn => i }
   private val dataFields = p.requiredSchema.fields.zipWithIndex
     .filterNot { case (_, i) => tsSlots.contains(i) || delSlots.contains(i) }
-  private[datasource] val dataSlots: Array[Int] = dataFields.map(_._2)
+  private val dataSlots: Array[Int] = dataFields.map(_._2)
   private val dataDts = dataFields.map(_._1.dataType)
-  private[datasource] def dataSchema: StructType = StructType(dataFields.map(_._1))
-  def hasCellTs: Boolean = tsSlots.nonEmpty
-  def hasMeta: Boolean = tsSlots.nonEmpty || delSlots.nonEmpty
+  private def hasCellTs: Boolean = tsSlots.nonEmpty
+  private def hasMeta: Boolean = tsSlots.nonEmpty || delSlots.nonEmpty
 
-  /** Newest cell stamp of a scanned row, `Long.MinValue` when cell-less —
-    * the _cell_ts value (the scan is forced wide when _cell_ts is
-    * projected, so this sees every column's latest cell). */
-  def newestStamp(kr: graft.store.KvRow): Long = {
+  /** Newest cell stamp of a scanned row, `Long.MinValue` when cell-less. */
+  private def newestStamp(kr: graft.store.KvRow): Long = {
     var maxTs = Long.MinValue
     kr.cells.foreach(c => if (c.ts > maxTs) maxTs = c.ts)
     maxTs
   }
 
   // pair each required (possibly nested-pruned) column with its catalog field
-  val projection: Seq[(graft.catalog.Field, org.apache.spark.sql.types.DataType)] =
+  private val projection: Seq[(graft.catalog.Field, org.apache.spark.sql.types.DataType)] =
     dataFields.toSeq.map { case (sf, _) => (catalog.field(sf.name), sf.dataType) }
-
-  /** Splice the metadata values — `cellTs` (boxed Long or null) and the
-    * `_deleted` flag — into their slots around the materialized data row. */
-  def assembleWithMeta(dataRow: InternalRow, cellTs: Any,
-      deleted: Boolean = false): InternalRow = {
-    val out = new Array[Any](p.requiredSchema.length)
-    var i = 0
-    while (i < dataSlots.length) {
-      out(dataSlots(i)) = if (dataRow.isNullAt(i)) null else dataRow.get(i, dataDts(i))
-      i += 1
-    }
-    tsSlots.foreach(j => out(j) = cellTs)
-    delSlots.foreach(j => out(j) = deleted)
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(out)
-  }
 
   private val timeRange = p.opts.timeRange
   private val needsVersions =
@@ -1403,7 +1378,9 @@ private[datasource] final class GraftScanSetup(p: GraftInputPartition) {
 
   /** Column restriction (reference restrictive modes,
     * HBaseTableScan.scala:406-416): COLUMN when the projection is static,
-    * FAMILY/ALL when dynamic columns need the whole family. */
+    * FAMILY/ALL when dynamic columns need the whole family. A walk reads
+    * the projected columns whatever the mode; the restriction decides the
+    * columns its `_cell_ts` stamp spans. */
   private val columnSet: ColumnSet = {
     val valueFields = projection.map(_._1).filterNot(_.isRowKey)
     p.opts.restrictive match {
@@ -1430,13 +1407,19 @@ private[datasource] final class GraftScanSetup(p: GraftInputPartition) {
     }
   }
 
-  val materializer = new RowMaterializer(catalog, projection, p.opts.mergeToLatest)
+  private val materializer = new RowMaterializer(catalog, projection, p.opts.mergeToLatest)
 
-  /** Column restriction + table handle, exposed for the join reader's
-    * point-get probes — which must see EXACTLY what a normal scan of this
-    * side with this projection would see. */
-  private[datasource] def probeColumnSet: ColumnSet = columnSet
-  private[datasource] def probeTable = table
+  /** A latest read of key parts and simple columns only: each partition row
+    * is one walked row, decoded by [[nextWalked]]. Otherwise the read is a
+    * multi-cell shape and goes through the `KvRow` scan. */
+  val walked: Boolean =
+    p.opts.mergeToLatest && projection.forall(f => RowMaterializer.walkable(f._1))
+
+  private val walkCols = materializer.valueColumns
+  private val stampCols = if (hasCellTs) Some(columnSet) else None
+
+  private def orderedRanges: Iterator[SerializableRange] =
+    if (p.reverse) p.ranges.reverseIterator else p.ranges.iterator
 
   // Point ranges become single-key lookups and range ranges become ordered
   // scans over the region's skip list — the scan-vs-get split of the
@@ -1444,25 +1427,21 @@ private[datasource] final class GraftScanSetup(p: GraftInputPartition) {
   // because a point `subMap` IS the get on the embedded store. A reversed
   // scan (top-N DESC) walks the normalized-ascending ranges backwards,
   // each range iterated descending, so the stream is globally key-DESC.
-  def kvRows: Iterator[graft.store.KvRow] =
+  private val walks: Iterator[graft.store.KvWalk] = orderedRanges.map { r =>
+    val walk = table.walk(p.regionIndex, r.toRange, walkCols, timeRange, p.pred,
+      p.reverse, stampCols)
+    opened(() => walk.rowsWalked)
+    walk
+  }
+  private var openWalk: graft.store.KvWalk = _
+
+  private def kvRows: Iterator[graft.store.KvRow] =
     orderedRanges.flatMap { r =>
       val scan = table.scan(p.regionIndex, r.toRange, columnSet,
         timeRange, versions, p.pred, p.reverse)
       opened(() => scan.rowsWalked)
       scan
     }
-
-  /** One [[graft.store.KvTable.walk]] per range, in the [[kvRows]] order,
-    * fetching `cols` — the pushed-aggregate fold's rows. */
-  def walks(cols: Array[(String, String)]): Iterator[graft.store.KvWalk] =
-    orderedRanges.map { r =>
-      val walk = table.walk(p.regionIndex, r.toRange, cols, timeRange, p.pred, p.reverse)
-      opened(() => walk.rowsWalked)
-      walk
-    }
-
-  private def orderedRanges: Iterator[SerializableRange] =
-    if (p.reverse) p.ranges.reverseIterator else p.ranges.iterator
 
   // rows walked by the ranges already passed, plus the open range's count
   private var walkedBefore = 0L
@@ -1475,67 +1454,127 @@ private[datasource] final class GraftScanSetup(p: GraftInputPartition) {
     * pushed predicate or not. */
   def rowsWalked: Long = walkedBefore + walkedOpen()
 
+  /** Step to the partition's next walked row and decode it into `out` at
+    * required-schema positions, `_cell_ts` and `_deleted` (false) included;
+    * false when every range is done. Needs [[walked]]. */
+  def nextWalked(out: Array[Any]): Boolean = {
+    while (openWalk == null || !openWalk.next()) {
+      if (!walks.hasNext) return false
+      openWalk = walks.next()
+    }
+    decode(openWalk.key, openWalk.cells, openWalk.stamp, deleted = false, out)
+    true
+  }
+
+  private def decode(key: Array[Byte], cells: Array[Array[Byte]], stamp: Long,
+      deleted: Boolean, out: Array[Any]): Unit = {
+    materializer.decodeWalked(key, cells, out, dataSlots)
+    if (hasCellTs) {
+      val ts = if (stamp == Long.MinValue) null else Long.box(stamp)
+      tsSlots.foreach(out(_) = ts)
+    }
+    delSlots.foreach(out(_) = deleted)
+  }
+
+  /** The partition's upsert rows in required-schema order: walked rows, or
+    * for a multi-cell shape each scanned `KvRow` materialized. */
+  def rows: Iterator[InternalRow] =
+    if (walked)
+      Iterator.continually { val out = new Array[Any](width); if (nextWalked(out)) out else null }
+        .takeWhile(_ != null).map(new GenericInternalRow(_))
+    else kvRows.flatMap(materialized)
+
+  private def materialized(kr: graft.store.KvRow): Iterator[InternalRow] =
+    if (!hasMeta) materializer.materialize(kr)
+    else {
+      val maxTs = newestStamp(kr)
+      val ts: Any = if (maxTs == Long.MinValue) null else Long.box(maxTs)
+      materializer.materialize(kr).map(assembleWithMeta(_, ts))
+    }
+
+  /** Splice `cellTs` (boxed Long or null) and `_deleted` = false into their
+    * slots around a materialized data row. */
+  private def assembleWithMeta(dataRow: InternalRow, cellTs: Any): InternalRow = {
+    val out = new Array[Any](width)
+    var i = 0
+    while (i < dataSlots.length) {
+      out(dataSlots(i)) = if (dataRow.isNullAt(i)) null else dataRow.get(i, dataDts(i))
+      i += 1
+    }
+    tsSlots.foreach(j => out(j) = cellTs)
+    delSlots.foreach(j => out(j) = false)
+    new GenericInternalRow(out)
+  }
+
+  /** The row at `key` exactly as a read of this setup sees it — column
+    * restriction, visibility and the partition's pushed predicate applied —
+    * or None: the join's right-side point probe. */
+  def probe(key: Array[Byte]): Option[InternalRow] =
+    if (walked) {
+      val walk = table.walk(table.regionOf(key), ScanRange.point(key), walkCols, timeRange,
+        p.pred, stampCols = stampCols)
+      try {
+        if (!walk.next()) None
+        else {
+          val out = new Array[Any](width)
+          decode(walk.key, walk.cells, walk.stamp, deleted = false, out)
+          Some(new GenericInternalRow(out))
+        }
+      } finally walk.close()
+    } else table.get(key, columnSet, timeRange, versions, p.pred)
+      .flatMap(materialized(_).toSeq.headOption)
+
   /** CDC tombstones for this partition's stamp window: each delete marker
-    * inside the pushed key ranges materializes as a key-only row (value
-    * columns null) with `_deleted=true` and `_cell_ts` = the delete stamp.
-    * A marker superseded by a LIVE row whose newest cell stamp is >= the
-    * marker (a re-put resurrected the key) is suppressed — the upsert row
-    * carries the truth.
+    * inside the pushed key ranges becomes a key-only row (value columns
+    * null) with `_deleted=true` and `_cell_ts` = the delete stamp — one
+    * row per marker whatever the shape, decoded like a walked row with no
+    * cells. A marker superseded by a LIVE row whose newest cell stamp is >=
+    * the marker (a re-put resurrected the key) is suppressed — the upsert
+    * row carries the truth.
     *
     * The pushed predicate IS applied, evaluated over exactly what the
-    * materialized tombstone row will look like (key bytes + all-null value
-    * columns): key predicates test the key, `IS NULL` matches, comparisons
-    * and `IS NOT NULL` don't. Skipping it would violate the handled=true
+    * tombstone row will look like (key bytes + all-null value columns): key
+    * predicates test the key, `IS NULL` matches, comparisons and
+    * `IS NOT NULL` don't. Skipping it would violate the handled=true
     * contract — Spark has already REMOVED fully-handled filters from the
     * plan, so an unfiltered tombstone (e.g. under a suffix-key equality,
     * which compiles to ranges=All + an exact key predicate) would emit rows
-    * that contradict the query's WHERE with nothing above to catch them.
-    *
-    * Materialization goes through [[RowMaterializer.materializeTombstone]]:
-    * the `mergeToLatest=false` explosion path emits one row per distinct
-    * cell stamp — ZERO for a cell-less synthetic row, which would silently
-    * drop every delete event from the stream. */
+    * that contradict the query's WHERE with nothing above to catch them. */
   def tombstoneRows: Iterator[InternalRow] =
     if (delSlots.isEmpty) Iterator.empty // projection dropped _deleted —
     // upsert rows and tombstones would be indistinguishable, so emit none
     else p.tombstoneWindow.iterator.flatMap { window =>
-      val noCells = new java.util.concurrent.ConcurrentHashMap[(String, String),
+      val emptyRow = new java.util.concurrent.ConcurrentHashMap[(String, String),
         java.util.concurrent.ConcurrentSkipListMap[java.lang.Long, Array[Byte]]]()
+      val noCells = new Array[Array[Byte]](walkCols.length)
       p.ranges.iterator.flatMap(r =>
         table.tombstonesIn(p.regionIndex, r.toRange, window))
-        .filter { case (key, _) => p.pred.forall(_.eval(key, noCells, None)) }
+        .filter { case (key, _) => p.pred.forall(_.eval(key, emptyRow, None)) }
         .filter { case (key, stamp) =>
           table.get(key, ColumnSet.All, None, 1)
             .forall(live => newestStamp(live) < stamp)
         }
         .map { case (key, stamp) =>
-          assembleWithMeta(
-            materializer.materializeTombstone(graft.store.KvRow(key, Seq.empty)),
-            Long.box(stamp), deleted = true)
+          val out = new Array[Any](width)
+          decode(key, noCells, stamp, deleted = true, out)
+          new GenericInternalRow(out)
         }
     }
 }
 
-/** Executor-side reader: splits ranges into point gets vs scans (reference
-  * compute/buildGets, HBaseTableScan.scala:424-494) and materializes rows. */
+/** Executor-side row reader: the partition's rows ([[GraftScanSetup.rows]])
+  * and, on a CDC read, its tombstones. */
 class GraftPartitionReader(p: GraftInputPartition) extends PartitionReader[InternalRow] {
 
   private val setup = new GraftScanSetup(p)
 
   private val rows: Iterator[InternalRow] = {
-    val upserts =
-      if (!setup.hasMeta) setup.kvRows.flatMap(setup.materializer.materialize)
-      else setup.kvRows.flatMap { kr =>
-        val maxTs = setup.newestStamp(kr)
-        val ts: Any = if (maxTs == Long.MinValue) null else Long.box(maxTs)
-        setup.materializer.materialize(kr).map(setup.assembleWithMeta(_, ts))
-      }
     // CDC tombstones ride behind the window's upserts (order within a
     // micro-batch carries no semantics — stamps do); None on batch scans
-    val base = upserts ++ setup.tombstoneRows
+    val base = setup.rows ++ setup.tombstoneRows
     // pushed limit/top-N: ranges are normalized-disjoint and each region
-    // scan is key-ordered, so the first `l` materialized rows are the
-    // partition's top `l` — the iterator stops, the region read ends early
+    // read is key-ordered, so the first `l` rows are the partition's top
+    // `l` — the iterator stops, the region read ends early
     p.limit.fold(base)(l => base.take(l))
   }
 
@@ -1554,25 +1593,9 @@ class GraftPartitionReader(p: GraftInputPartition) extends PartitionReader[Inter
     GraftMetricsDefs.rows(rowsScanned, setup.rowsWalked)
 }
 
-/** [[SlotSink]] over on-heap column vectors — the typed setter per slot is
-  * resolved once at construction, so the per-cell write is one virtual call
-  * plus a primitive/bytes append. */
-private[datasource] final class VectorSlotSink(
-    vectors: Array[org.apache.spark.sql.execution.vectorized.OnHeapColumnVector],
-    schema: StructType) extends SlotSink {
-
-  import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
-  import org.apache.spark.sql.types._
-
-  var rowId: Int = 0
-
-  private val setters: Array[(OnHeapColumnVector, Int, Any) => Unit] =
-    schema.fields.map(f => VectorSlotSink.setterFor(f.dataType))
-
-  override def putNull(slot: Int): Unit = vectors(slot).putNull(rowId)
-  override def put(slot: Int, v: Any): Unit = setters(slot)(vectors(slot), rowId, v)
-}
-
+/** Typed `OnHeapColumnVector` setters for the columnar readers — resolved
+  * once per slot, so the per-value write is one virtual call plus a
+  * primitive/bytes append. */
 private[datasource] object VectorSlotSink {
   import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
   import org.apache.spark.sql.types._
@@ -1649,65 +1672,68 @@ private[datasource] object VectorSlotSink {
   }
 }
 
-/** Columnar executor-side reader: decodes each KvRow's slots straight into
-  * `OnHeapColumnVector`s (no per-row `InternalRow`), emitting 4096-row
-  * `ColumnarBatch`es that downstream whole-stage codegen consumes
-  * vector-at-a-time. `_cell_ts` slots are long vectors filled from each
-  * row's newest stamp alongside the decoded data slots. Only constructed
-  * when [[GraftReaderFactory.supportColumnarReads]] held. */
-class GraftColumnarPartitionReader(p: GraftInputPartition)
+/** The columnar readers' one batching loop: [[nextSlots]] decodes a row's
+  * slots (Catalyst values, null when absent) into a reused array, and each
+  * `next()` writes up to 4096 of them into `OnHeapColumnVector`s through
+  * [[VectorSlotSink.setterFor]] — no `InternalRow` per row; downstream
+  * whole-stage codegen consumes the batch vector-at-a-time. */
+private[datasource] abstract class SlotBatchReader(
+    protected val types: Array[org.apache.spark.sql.types.DataType])
     extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
 
   import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
   import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 
-  private val setup = new GraftScanSetup(p)
-  require(setup.materializer.fastPathColumnar,
-    "columnar reader constructed for a non-fast-path scan")
-
-  // fast path ⇒ exactly one output row per KvRow, so a pushed limit/top-N
-  // truncates the KvRow stream directly
-  private val kvRows = p.limit.fold(setup.kvRows)(l => setup.kvRows.take(l))
+  /** Decode the next row into `out`; false when the source is done. */
+  protected def nextSlots(out: Array[Any]): Boolean
 
   private val capacity = 4096
-  private val vectors: Array[OnHeapColumnVector] =
-    OnHeapColumnVector.allocateColumns(capacity, p.requiredSchema)
+  private val vectors: Array[OnHeapColumnVector] = OnHeapColumnVector.allocateColumns(capacity,
+    StructType(types.zipWithIndex.map { case (dt, i) =>
+      org.apache.spark.sql.types.StructField(s"c$i", dt)
+    }))
   private val batch = new ColumnarBatch(vectors.map(v => v: ColumnVector))
-  // the materializer's slot i is the i-th DATA column; _cell_ts slots are
-  // carved out and written directly below
-  private val sink = new VectorSlotSink(setup.dataSlots.map(vectors), setup.dataSchema)
-  private val tsVectors = setup.tsSlots.map(vectors)
+  private val setters = types.map(VectorSlotSink.setterFor)
+  private val slots = new Array[Any](types.length)
 
   override def next(): Boolean = {
-    if (!kvRows.hasNext) return false
     var i = 0
     while (i < vectors.length) { vectors(i).reset(); i += 1 }
     var n = 0
-    while (n < capacity && kvRows.hasNext) {
-      sink.rowId = n
-      val kr = kvRows.next()
-      setup.materializer.materializeInto(kr, sink)
-      if (tsVectors.nonEmpty) {
-        val maxTs = setup.newestStamp(kr)
-        var j = 0
-        while (j < tsVectors.length) {
-          if (maxTs == Long.MinValue) tsVectors(j).putNull(n)
-          else tsVectors(j).putLong(n, maxTs)
-          j += 1
-        }
+    while (n < capacity && nextSlots(slots)) {
+      var j = 0
+      while (j < slots.length) {
+        val v = slots(j)
+        if (v == null) vectors(j).putNull(n) else setters(j)(vectors(j), n, v)
+        j += 1
       }
       n += 1
     }
     batch.setNumRows(n)
-    rowsScanned += n
-    true
+    n > 0
   }
 
   override def get(): ColumnarBatch = batch
+  override def close(): Unit = batch.close()
+}
 
-  override def close(): Unit = { batch.close(); setup.close() }
+/** Columnar executor-side reader: the partition's walked rows, `_cell_ts`
+  * included, batched by [[SlotBatchReader]]. Only constructed when
+  * [[GraftReaderFactory.supportColumnarReads]] held. */
+class GraftColumnarPartitionReader(p: GraftInputPartition)
+    extends SlotBatchReader(p.requiredSchema.fields.map(_.dataType)) {
 
+  private val setup = new GraftScanSetup(p)
+  require(setup.walked, "columnar reader constructed for a read the store walk cannot serve")
+
+  // one output row per walked row, so a pushed limit/top-N counts them
+  private val limit = p.limit.getOrElse(Int.MaxValue)
   private var rowsScanned = 0L
+
+  override protected def nextSlots(out: Array[Any]): Boolean =
+    rowsScanned < limit && setup.nextWalked(out) && { rowsScanned += 1; true }
+
+  override def close(): Unit = { super.close(); setup.close() }
 
   override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
     GraftMetricsDefs.rows(rowsScanned, setup.rowsWalked)
@@ -1716,50 +1742,24 @@ class GraftColumnarPartitionReader(p: GraftInputPartition)
 /** Columnar reader for a pushed key-prefix GROUPED aggregate: delegates the
   * walk-and-fold to [[GraftGroupAggPartitionReader]] (that streaming walk —
   * O(1) state, one emitted row per distinct prefix — IS the expensive part)
-  * and batches the emitted group rows into
-  * `ColumnarBatch`es, so a wide region's many groups flow to the final
-  * aggregate on the vectorized path instead of row-at-a-time. */
+  * and batches the emitted group rows, so a wide region's many groups flow
+  * to the final aggregate on the vectorized path instead of row-at-a-time. */
 class GraftGroupAggColumnarReader(p: GraftInputPartition, ops: Seq[PushedAggOp])
-    extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-
-  import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
-  import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
+    extends SlotBatchReader(PushedAggSchema.outputTypes(p.catalog, p.groupCols, ops).toArray) {
 
   private val inner = new GraftGroupAggPartitionReader(p, ops)
-  private val outTypes = PushedAggSchema.outputTypes(p.catalog, p.groupCols, ops).toArray
-  private val outSchema = StructType(outTypes.zipWithIndex.map { case (dt, i) =>
-    org.apache.spark.sql.types.StructField(s"c$i", dt)
-  })
 
-  private val capacity = 4096
-  private val vectors: Array[OnHeapColumnVector] =
-    OnHeapColumnVector.allocateColumns(capacity, outSchema)
-  private val batch = new ColumnarBatch(vectors.map(v => v: ColumnVector))
-  private val setters = outTypes.map(VectorSlotSink.setterFor)
-
-  override def next(): Boolean = {
-    if (!inner.next()) return false
-    var i = 0
-    while (i < vectors.length) { vectors(i).reset(); i += 1 }
-    var n = 0
-    var more = true
-    while (n < capacity && more) {
-      val row = inner.get()
-      var j = 0
-      while (j < outTypes.length) {
-        if (row.isNullAt(j)) vectors(j).putNull(n)
-        else setters(j)(vectors(j), n, row.get(j, outTypes(j)))
-        j += 1
-      }
-      n += 1
-      if (n < capacity) more = inner.next()
+  override protected def nextSlots(out: Array[Any]): Boolean = inner.next() && {
+    val row = inner.get()
+    var j = 0
+    while (j < out.length) {
+      out(j) = if (row.isNullAt(j)) null else row.get(j, types(j))
+      j += 1
     }
-    batch.setNumRows(n)
     true
   }
 
-  override def get(): ColumnarBatch = batch
-  override def close(): Unit = { batch.close(); inner.close() }
+  override def close(): Unit = { super.close(); inner.close() }
   override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
     inner.currentMetricsValues()
 }

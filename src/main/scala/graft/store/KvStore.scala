@@ -377,14 +377,21 @@ abstract class KvScan extends Iterator[KvRow] {
 }
 
 /** [[KvTable.walk]]'s cursor: no row object per row. After `next()`
-  * returns true, `key` is the row's key and `cells(i)` the newest in-window
-  * value of the walk's i-th column, null when the row has none; both are
-  * overwritten by the following `next()`. */
+  * returns true, `key` is the row's key, `cells(i)` the newest in-window
+  * value of the walk's i-th column (null when the row has none) and
+  * `stamp` the row's newest in-window stamp over the walk's stamp columns
+  * (`Long.MinValue` when it has none there, or when the walk keeps no
+  * stamp); all are overwritten by the following `next()`. */
 abstract class KvWalk {
   def next(): Boolean
   def key: Array[Byte]
   def cells: Array[Array[Byte]]
+  def stamp: Long
   def rowsWalked: Long
+  /** Add the rows served so far to [[KvStore.rowsServed]] and end the walk
+    * — what `next()` does when it runs out; a walk stopped early (a limit,
+    * a `take`) is closed by its reader. Idempotent. */
+  def close(): Unit
 }
 
 final case class RegionInfo(index: Int, start: Option[Array[Byte]], end: Option[Array[Byte]], host: String)
@@ -542,6 +549,9 @@ final class KvTable(initialName: String, splits: IndexedSeq[Array[Byte]],
   val regions: IndexedSeq[Region] = (0 to sortedSplits.size).map(new Region(_)).toIndexedSeq
 
   def regionInfos: Seq[RegionInfo] = regions.map(r => RegionInfo(r.index, r.start, r.end, r.host))
+
+  /** Index of the region holding `key` — where a point [[walk]] runs. */
+  def regionOf(key: Array[Byte]): Int = regionFor(key).index
 
   private def regionFor(key: Array[Byte]): Region = {
     // binary search over split points
@@ -928,21 +938,26 @@ final class KvTable(initialName: String, splits: IndexedSeq[Array[Byte]],
     }
   }
 
-  /** The pushed-aggregate walk over one region range: for each row that
-    * passes `predicate` and exists in `time` (the [[scan]] existence rule:
-    * a row none of whose `cols` has an in-window cell still counts if any
-    * of its cells is in the window), the cursor exposes the key and the
-    * newest in-window value of each of `cols` in one reused array. Adds its
-    * served rows to [[KvStore.rowsServed]] once, when it runs out. */
+  /** The latest-read walk over one region range: for each row that passes
+    * `predicate` and exists in `time` (the [[scan]] existence rule: a row
+    * none of whose `cols` has an in-window cell still counts if any of its
+    * cells is in the window), the cursor exposes the key, the newest
+    * in-window value of each of `cols` in one reused array, and — when
+    * `stampCols` is given — the newest in-window stamp over those columns.
+    * Adds its served rows to [[KvStore.rowsServed]] once, when it runs out
+    * or is closed. */
   def walk(regionIndex: Int, range: ScanRange[Array[Byte]], cols: Array[(String, String)],
       time: Option[TimeRange], predicate: Option[KvPredicate],
-      reverse: Boolean = false): KvWalk = {
+      reverse: Boolean = false, stampCols: Option[ColumnSet] = None): KvWalk = {
     val sel = new Selection(regionIndex, range, time, predicate, reverse)
+    val stamped = stampCols.orNull
     new KvWalk {
       override val cells = new Array[Array[Byte]](cols.length)
+      private var rowStamp = Long.MinValue
       private var served = 0L
       private var done = false
       override def key: Array[Byte] = sel.key
+      override def stamp: Long = rowStamp
       override def rowsWalked: Long = sel.walked
       override def next(): Boolean = {
         while (!done && sel.advance()) {
@@ -954,21 +969,53 @@ final class KvTable(initialName: String, splits: IndexedSeq[Array[Byte]],
             if (v != null) any = true
             i += 1
           }
-          if (any || existsInRange(sel.row, time)) { served += 1; return true }
+          if (any || existsInRange(sel.row, time)) {
+            if (stamped != null) rowStamp = newestStamp(sel.row, stamped, time)
+            served += 1
+            return true
+          }
         }
-        if (!done) { done = true; KvStore.addServed(served) }
+        close()
         false
       }
+      override def close(): Unit =
+        if (!done) { done = true; KvStore.addServed(served) }
     }
+  }
+
+  /** Newest in-window stamp among the row's columns in `cols`,
+    * `Long.MinValue` when none has one — the stamp a [[scan]] of `cols`
+    * would carry as the row's newest cell. */
+  private def newestStamp(row: RowCells, cols: ColumnSet, time: Option[TimeRange]): Long = {
+    var newest = Long.MinValue
+    row.forEach { (ck, vmap) =>
+      if (keeps(cols, ck)) {
+        val it = vmap.keySet().iterator() // newest-first
+        var found = false
+        while (!found && it.hasNext) {
+          val ts = it.next().longValue()
+          if (time.forall(t => ts >= t.minStamp && ts < t.maxStamp)) {
+            found = true
+            if (ts > newest) newest = ts
+          }
+        }
+      }
+    }
+    newest
+  }
+
+  private def keeps(cols: ColumnSet, ck: (String, String)): Boolean = cols match {
+    case ColumnSet.All => true
+    case ColumnSet.Families(cfs) => cfs.contains(ck._1)
+    case ColumnSet.Columns(cs) => cs.contains(ck)
+    case ColumnSet.KeysOnly => false
   }
 
   /** Does ANY cell of the row fall inside the scan's time range? First
     * in-range cell wins — THE shared existence test of the KeysOnly fast
     * path and the empty-projection row-exists rule (one implementation,
     * so a time-window semantics change can never diverge them). */
-  private def existsInRange(
-      row: ConcurrentHashMap[(String, String), ConcurrentSkipListMap[java.lang.Long, Array[Byte]]],
-      time: Option[TimeRange]): Boolean = {
+  private def existsInRange(row: RowCells, time: Option[TimeRange]): Boolean = {
     var exists = false
     val it = row.values().iterator()
     while (!exists && it.hasNext) {
@@ -981,9 +1028,7 @@ final class KvTable(initialName: String, splits: IndexedSeq[Array[Byte]],
     exists
   }
 
-  private def materialize(
-      key: Array[Byte],
-      row: ConcurrentHashMap[(String, String), ConcurrentSkipListMap[java.lang.Long, Array[Byte]]],
+  private def materialize(key: Array[Byte], row: RowCells,
       cols: ColumnSet, time: Option[TimeRange], versions: Int): Option[KvRow] = {
     if (cols == ColumnSet.KeysOnly) {
       // existence-only fast path: no cell list
@@ -992,13 +1037,7 @@ final class KvTable(initialName: String, splits: IndexedSeq[Array[Byte]],
     val out = Seq.newBuilder[KvCell]
     var any = false
     row.forEach { (ck, vmap) =>
-      val keep = cols match {
-        case ColumnSet.All => true
-        case ColumnSet.Families(cfs) => cfs.contains(ck._1)
-        case ColumnSet.Columns(cs) => cs.contains(ck)
-        case ColumnSet.KeysOnly => false // unreachable (handled above)
-      }
-      if (keep) {
+      if (keeps(cols, ck)) {
         var n = 0
         val it = vmap.entrySet().iterator() // newest-first
         while (it.hasNext && n < versions) {
