@@ -26,6 +26,15 @@ wrong answer ("correct": false, run.py's exit status 1), stops the A/B with
 that run's output and no verdict: a fast wrong answer is not a gain.
 BENCHMARK.json is read from the change tree. The script itself writes
 nothing; `run.py` builds into its own tree's `perfbench/.build` as usual.
+
+    python3 scripts/perfbench_ab.py PARENT_TREE CHANGE_TREE --workload cdc_drain --pairs 1 --trace
+
+--trace runs the pairs traced (`run.py --trace 1`, which also writes each
+tree's `perfbench/out/trace-<workload>.json`) and prints, per side, the
+medians and quartiles of the per-layer counts in TRACE_METRICS (the result's
+metrics, which run.py also prints as `metric <name> <value> <unit>` lines)
+and the change's median minus the parent's. It gives no end-to-end verdict: tracing itself slows a run
+(about 20% on kv_read). It answers "does the change issue the same work".
 """
 import argparse
 import json
@@ -37,6 +46,8 @@ import sys
 
 GAIN_SHARE = 0.9
 OP_LINE = re.compile(r"^(\w+_p50_ms) (\S+) ms\b")
+TRACE_METRICS = ("spark.jobs_per_op", "spark.tasks_per_op", "spark.actions_per_op",
+                 "spark.codegen_compiles")
 
 
 def quartiles(xs):
@@ -121,9 +132,23 @@ def parse_run(stdout):
     return res, ops
 
 
-def run_once(tree, workload, seed, seconds):
+def layer_medians(parent, change, names=TRACE_METRICS):
+    """[(name, parent quartiles, change quartiles, change median - parent
+    median)] over each side's run results, for each name both sides
+    report."""
+    rows = []
+    for name in names:
+        par = [r["metrics"][name]["value"] for r in parent if name in r["metrics"]]
+        chg = [r["metrics"][name]["value"] for r in change if name in r["metrics"]]
+        if par and chg:
+            pq, cq = quartiles(par), quartiles(chg)
+            rows.append((name, pq, cq, cq[1] - pq[1]))
+    return rows
+
+
+def run_once(tree, workload, seed, seconds, trace=False):
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
-           "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
+           "--seed", str(seed), "--seconds", str(seconds), "--trace", "1" if trace else "0"]
     p = subprocess.run(cmd, cwd=tree, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL,
                        universal_newlines=True)
     try:
@@ -145,6 +170,8 @@ def main():
     ap.add_argument("--workload", required=True)
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--seed", type=int, default=1, help="seed of the first pair")
+    ap.add_argument("--trace", action="store_true",
+                    help="traced runs: per-layer count medians, no end-to-end verdict")
     args = ap.parse_args()
     with open(os.path.join(args.change, "BENCHMARK.json")) as fh:
         spec = json.load(fh)
@@ -154,7 +181,7 @@ def main():
         order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
         for side in order:
             tree = args.parent if side == "parent" else args.change
-            res, ops = run_once(tree, args.workload, seed, spec["run_seconds"])
+            res, ops = run_once(tree, args.workload, seed, spec["run_seconds"], args.trace)
             runs[side].append((res, ops))
             print("pair %d seed %d %s: failed %d/%d %s %s" % (
                 i + 1, seed, side, res["failed"], res["attempted"],
@@ -165,6 +192,14 @@ def main():
         att = sum(r["attempted"] for r, _ in runs[side])
         fail = sum(r["failed"] for r, _ in runs[side])
         print("%s: %d of %d operations failed" % (side, fail, att))
+    if args.trace:
+        print("traced runs: per-layer medians only, no end-to-end verdict")
+        print("%-24s %-30s %-30s %s" % ("metric", "parent median [q1, q3]",
+                                        "change median [q1, q3]", "change - parent"))
+        for name, pq, cq, diff in layer_medians([r for r, _ in runs["parent"]],
+                                                [r for r, _ in runs["change"]]):
+            print("%-24s %-30s %-30s %+.4g" % (name, fmt(pq), fmt(cq), diff))
+        return
     print("%-20s %-30s %-30s %6s %9s  %s" % ("metric", "parent median [q1, q3]",
                                             "change median [q1, q3]", "ratio", "w/t/l", "verdict"))
     for m in spec["end_to_end"]:

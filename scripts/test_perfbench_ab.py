@@ -88,5 +88,25 @@ class ParseRun(unittest.TestCase):
                 ab.parse_run(out)
 
 
+class Trace(unittest.TestCase):
+    @staticmethod
+    def res(metrics):
+        return {"metrics": {k: {"value": v, "unit": "count"} for k, v in metrics.items()}}
+
+    def test_medians_and_difference_per_reported_layer(self):
+        jobs, cg = "spark.jobs_per_op", "spark.codegen_compiles"
+        parent = [self.res({jobs: 15.0, cg: 170.0}), self.res({jobs: 15.1}),
+                  self.res({jobs: 15.2})]
+        change = [self.res({jobs: 15.1, cg: 150.0}), self.res({jobs: 15.3}),
+                  self.res({jobs: 15.2})]
+        rows = ab.layer_medians(parent, change)
+        # names keep TRACE_METRICS' order; one no side reports is left out
+        self.assertEqual([r[0] for r in rows], [jobs, cg])
+        name, pq, cq, diff = rows[0]
+        self.assertEqual((pq[1], cq[1]), (15.1, 15.2))
+        self.assertAlmostEqual(diff, 0.1)
+        self.assertEqual(rows[1][3], -20.0)
+
+
 if __name__ == "__main__":
     unittest.main()

@@ -109,6 +109,45 @@ object StreamBatch {
       ()
     }
 
+  /** A change-set [[drain]]: a `tombstones=true` read of `srcOpts` whose
+    * micro-batch, narrowed to `cols` plus `_deleted`, is pinned (every
+    * maintainer reads it in several actions) and handed to `body` with its
+    * batch id only when it is non-empty. Returns the highest batch id whose
+    * body completed (ids rise batch by batch), `None` when no body ran — the
+    * as-of maintainers derive their returned write stamp from it. The streaming thread's write is
+    * visible here: `runOnce` returns through the query's termination
+    * latch. */
+  private[graft] def drainChanges(s: SparkSession, srcOpts: Map[String, String],
+      ckpt: String, cols: String*)(body: (DataFrame, Long) => Unit): Option[Long] = {
+    var last = Option.empty[Long]
+    drain(s, srcOpts + ("tombstones" -> "true"), ckpt) { (df, id) =>
+      withPersisted(df.select((cols :+ "_deleted").map(col): _*)) { changed =>
+        if (!changed.isEmpty) {
+          body(changed, id)
+          last = Some(id)
+        }
+      }
+    }
+    last
+  }
+
+  /** The admission cap of a capped catch-up drain, as source options. */
+  private def capOpt(maxRowsPerBatch: Option[Long]): Map[String, String] =
+    maxRowsPerBatch.map(n => "maxRowsPerBatch" -> n.toString).toMap
+
+  /** The protocols' ranged source DELETE: every row of `catalog` whose
+    * `column` lies in [lo, hi] dies at `stamp` — a CDC read then streams
+    * them as `_deleted=true` tombstones. */
+  private def cdcDelete(catalog: String, column: String, lo: Long, hi: Long,
+      stamp: Long): Unit = {
+    import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThanOrEqual}
+    val parsed = graft.catalog.GraftCatalog.parse(catalog, Map.empty)
+    val hrf = graft.datasource.FilterCompiler.compileAll(parsed,
+      Seq(GreaterThanOrEqual(column, lo), LessThanOrEqual(column, hi)))
+      .exactOrThrow("CDC DELETE")
+    graft.store.KvStore.table(parsed.qualifiedName).delete(hrf.ranges, hrf.pred, stamp)
+  }
+
   /** Split bounds of a table a write may create: numeric keys in [0, max],
     * string keys over '0'..'z' (byte-interpolated — covers digit-formatted
     * keys), or the store's default string bounds. */
@@ -428,7 +467,6 @@ object StreamBatch {
     * values. Exactly the incremental-index-maintenance loop a 100 TB
     * training-data pipeline runs off CDC. */
   def sv11StreamCdcTombstones(s: SparkSession, dir: String): DataFrame = {
-    import graft.datasource.FilterCompiler
     import graft.store.KvStore
     val base = Tables.events(s, dir).select(
       col("event_id").cast("long").as("event_id"),
@@ -436,7 +474,6 @@ object StreamBatch {
       col("event_type"),
       col("value").cast("double").as("value"))
     val maxId = base.agg(max(col("event_id"))).head().getLong(0)
-    val srcParsed = graft.catalog.GraftCatalog.parse(sv11SourceCatalog, Map.empty)
     val mirParsed = graft.catalog.GraftCatalog.parse(sv11MirrorCatalog, Map.empty)
     val ckpt = tempWorkDir(s, "graft-sv11-ckpt").toString
     def mirrorApply(phaseStamp: Long): Unit =
@@ -459,10 +496,7 @@ object StreamBatch {
     kvWrite(base, sv11SourceCatalog, 1000, numKeys(maxId), overwrite = true)
     mirrorApply(phaseStamp = 10)
     // ranged DELETE on the source — streams as _deleted=true tombstones
-    val hrf = FilterCompiler.compileAll(srcParsed, Seq(
-      org.apache.spark.sql.sources.GreaterThanOrEqual("event_id", 100L),
-      org.apache.spark.sql.sources.LessThanOrEqual("event_id", 499L))).exactOrThrow("CDC DELETE")
-    KvStore.table(srcParsed.qualifiedName).delete(hrf.ranges, hrf.pred, stamp = 2000)
+    cdcDelete(sv11SourceCatalog, "event_id", 100L, 499L, stamp = 2000)
     mirrorApply(phaseStamp = 20)
     // update wave: re-puts %7 ids (resurrecting deleted ones) with new values
     kvWrite(base.filter(col("event_id") % 7 === 0)
@@ -606,7 +640,6 @@ object StreamBatch {
       col("event_type"),
       col("value").cast("double").as("value"))
     val maxId = base.agg(max(col("event_id"))).head().getLong(0)
-    val srcParsed = graft.catalog.GraftCatalog.parse(sv15SourceCatalog, Map.empty)
     val logDir = tempWorkDir(s, "graft-sv15-log").toString
     val ckpt = tempWorkDir(s, "graft-sv15-ckpt").toString
     def appendLog(): Unit =
@@ -615,11 +648,7 @@ object StreamBatch {
       }
     kvWrite(base, sv15SourceCatalog, 1000, numKeys(maxId), overwrite = true)
     appendLog()
-    val hrf = graft.datasource.FilterCompiler.compileAll(srcParsed, Seq(
-      org.apache.spark.sql.sources.GreaterThanOrEqual("event_id", 100L),
-      org.apache.spark.sql.sources.LessThanOrEqual("event_id", 499L))).exactOrThrow("CDC DELETE")
-    graft.store.KvStore.table(srcParsed.qualifiedName)
-      .delete(hrf.ranges, hrf.pred, stamp = 2000)
+    cdcDelete(sv15SourceCatalog, "event_id", 100L, 499L, stamp = 2000)
     appendLog()
     kvWrite(base.filter(col("event_id") % 7 === 0)
       .withColumn("value", col("value") + 1000000.0d), sv15SourceCatalog, 3000, numKeys(maxId))
@@ -687,44 +716,38 @@ object StreamBatch {
       .filter(length(col("term")) > 0)
       .withColumn("ik", concat(col("term"), lit(sep),
         format_string("%012d", col("doc_id"))))
-    drain(s, Map("catalog" -> srcCatalog, "tombstones" -> "true"), ckpt) { (df, _) =>
-      withPersisted(df.select(col("doc_id"), col("text"), col("_deleted"))) { changed =>
-        // before the first batch no mirror exists — nothing old to retire
-        val haveMirror = KvStore.exists(fwdName)
-        if (!changed.isEmpty) {
-          // 1. retire the OLD index entries of every touched doc,
-          //    DISTRIBUTED end to end: the changed-id set (bounded by
-          //    maxRowsPerBatch) broadcasts into a leftsemi probe of the
-          //    forward mirror, whose tokenization re-derives the exact
-          //    old posting keys — and those keys die through the
-          //    delete-mode writer, each task against its own region
-          //    slice. Nothing per-term ever visits the driver: a batch
-          //    of long documents fans out to millions of postings, and
-          //    the old collect-then-In path materialized every one of
-          //    them driver-side.
-          if (haveMirror) {
-            val oldDocs = s.read.format("graft-kv")
-              .option("catalog", fwdCatalog).load()
-              .join(broadcast(changed.select("doc_id").distinct()),
-                Seq("doc_id"), "leftsemi")
-            kvWrite(pairsOf(oldDocs).select(col("ik")), idxCatalog, phaseStamp,
-              opts = deleteMode)
-            // 2. forward mirror: deleted docs die the same way
-            kvWrite(changed.filter(col("_deleted")).select(col("doc_id")), fwdCatalog,
-              phaseStamp, opts = deleteMode)
-          }
-          val ups = changed.filter(!col("_deleted")).select(col("doc_id"), col("text"))
-          kvWrite(ups, fwdCatalog, phaseStamp, numKeys(maxId))
-          // 3. insert the new index pairs
-          kvWrite(pairsOf(ups).select(col("ik"), col("term"), col("doc_id")), idxCatalog,
-            phaseStamp, anyKeys)
-        }
+    drainChanges(s, Map("catalog" -> srcCatalog), ckpt, "doc_id", "text") { (changed, _) =>
+      // 1. retire the OLD index entries of every touched doc,
+      //    DISTRIBUTED end to end: the changed-id set (bounded by
+      //    maxRowsPerBatch) broadcasts into a leftsemi probe of the
+      //    forward mirror, whose tokenization re-derives the exact
+      //    old posting keys — and those keys die through the
+      //    delete-mode writer, each task against its own region
+      //    slice. Nothing per-term ever visits the driver: a batch
+      //    of long documents fans out to millions of postings, and
+      //    the old collect-then-In path materialized every one of
+      //    them driver-side. Before the first batch no mirror exists —
+      //    nothing old to retire.
+      if (KvStore.exists(fwdName)) {
+        val oldDocs = s.read.format("graft-kv")
+          .option("catalog", fwdCatalog).load()
+          .join(broadcast(changed.select("doc_id").distinct()),
+            Seq("doc_id"), "leftsemi")
+        kvWrite(pairsOf(oldDocs).select(col("ik")), idxCatalog, phaseStamp,
+          opts = deleteMode)
+        // 2. forward mirror: deleted docs die the same way
+        kvWrite(changed.filter(col("_deleted")).select(col("doc_id")), fwdCatalog,
+          phaseStamp, opts = deleteMode)
       }
+      val ups = changed.filter(!col("_deleted")).select(col("doc_id"), col("text"))
+      kvWrite(ups, fwdCatalog, phaseStamp, numKeys(maxId))
+      // 3. insert the new index pairs
+      kvWrite(pairsOf(ups).select(col("ik"), col("term"), col("doc_id")), idxCatalog,
+        phaseStamp, anyKeys)
     }
   }
 
   def sv12StreamCdcIndex(s: SparkSession, dir: String): DataFrame = {
-    import graft.datasource.FilterCompiler
     import graft.store.KvStore
     import org.apache.spark.sql.expressions.Window
     val base = Tables.documents(s, dir)
@@ -741,11 +764,7 @@ object StreamBatch {
     KvStore.drop(idxParsed.qualifiedName)
     kvWrite(base, sv12SrcCatalog, 1000, numKeys(maxId), overwrite = true)
     applyBatch(phaseStamp = 10)
-    val hrf = FilterCompiler.compileAll(
-      graft.catalog.GraftCatalog.parse(sv12SrcCatalog, Map.empty), Seq(
-        org.apache.spark.sql.sources.GreaterThanOrEqual("doc_id", 100L),
-        org.apache.spark.sql.sources.LessThanOrEqual("doc_id", 199L))).exactOrThrow("CDC DELETE")
-    KvStore.table("default:kv_idx_src").delete(hrf.ranges, hrf.pred, stamp = 2000)
+    cdcDelete(sv12SrcCatalog, "doc_id", 100L, 199L, stamp = 2000)
     applyBatch(phaseStamp = 20)
     kvWrite(base.filter(col("doc_id") % 9 === 0)
       .withColumn("text", concat(col("text"), lit(" zzznewterm"))), sv12SrcCatalog, 3000,
@@ -925,6 +944,23 @@ object StreamBatch {
     else 0L
   }
 
+  /** The one sliver-vs-scan gate of the key-set lookups. At or below
+    * `smallStateRows` live rows of `catalog` it answers `unpushed` without
+    * forcing `keys` (deriving them is a Spark job, see [[SmallStateRows]]);
+    * an empty key set reads nothing; past [[MaxPushedBandPrefixes]] keys,
+    * or when keys × 4 ≥ rows (the slivers would not be materially smaller
+    * than the table — an O(regions) row-count consult, the secondary-index
+    * consult's judgment), `unpushed` again; otherwise `pushed(keys)`. */
+  private def keySetGate[K](catalog: String, smallStateRows: Long, keys: => Array[K],
+      empty: => DataFrame, unpushed: => DataFrame)(pushed: Array[K] => DataFrame): DataFrame = {
+    val rows = storeRows(catalog)
+    if (rows <= smallStateRows) return unpushed
+    val k = keys
+    if (k.isEmpty) empty
+    else if (k.length > MaxPushedBandPrefixes || k.length.toLong * 4 >= rows) unpushed
+    else pushed(k)
+  }
+
   /** Batch-proportional band-index lookup: a batch's distinct
     * `"%02d:%021d:"`-formatted (band, bh) prefixes ship as the
     * `keyPrefixes` read option, which the scan compiles STRAIGHT to a
@@ -941,28 +977,20 @@ object StreamBatch {
     * evaluating the prefix set at all — at that size the collect job
     * costs more wall than the scan it would avoid (see [[SmallStateRows]]'s
     * measured cost model), and callers re-join on (band, bh) either way.
-    * Two further fallbacks also return the full scan: past
-    * [[MaxPushedBandPrefixes]], and when the sliver union would not be
-    * materially smaller than the index itself (prefixes × 4 ≥ index
-    * rows — an O(regions) row-count consult, the same judgment as the
-    * secondary-index consult's cap). Above the small-state gate an empty
-    * prefix set returns an empty result without touching the store; at or
-    * below it the gate wins and the FULL scan is returned before the
-    * prefix thunk is ever forced, so callers must not count the result
-    * directly — they re-join on (band, bh), which keeps the answer
-    * identical either way. */
+    * [[keySetGate]] decides: past its cap or ratio the full scan too; an
+    * empty prefix set above the small-state gate reads nothing. At or
+    * below the gate the FULL scan is returned before the prefix thunk is
+    * ever forced, so callers must not count the result directly — they
+    * re-join on (band, bh), which keeps the answer identical either way. */
   private[graft] def bandIndexLookup(s: SparkSession, idxCatalog: String,
       prefixes: => Array[String],
       smallStateRows: Long = SmallStateRows): DataFrame = {
     def idx(extra: Map[String, String]) = s.read.format("graft-kv")
       .options(Map("catalog" -> idxCatalog) ++ extra).load()
-    val idxRows = storeRows(idxCatalog)
-    if (idxRows <= smallStateRows) return idx(Map.empty)
-    val p = prefixes
-    if (p.isEmpty) idx(Map.empty).filter(lit(false))
-    else if (p.length > MaxPushedBandPrefixes ||
-        p.length.toLong * 4 >= idxRows) idx(Map.empty)
-    else idx(Map("keyPrefixes" -> p.mkString("\u0001")))
+    keySetGate(idxCatalog, smallStateRows, prefixes,
+      idx(Map.empty).filter(lit(false)), idx(Map.empty)) { p =>
+      idx(Map("keyPrefixes" -> p.mkString("\u0001")))
+    }
   }
 
   /** One CDC drain of incremental near-dup maintenance — the per-batch
@@ -1124,16 +1152,18 @@ object StreamBatch {
       |"vec_id":{"cf":"rowkey", "col":"vid", "type":"bigint"},
       |"v":{"cf":"f", "col":"v", "avro":"annVec"}}}""".stripMargin
 
-  /** Forward-mirror lookup for retirement: the changed-id frame (a
-    * `vec_id` column, batch-bounded by construction) compiles into In
-    * point-ranges on the `vec_id` ROWKEY, so each CDC batch point-reads
-    * exactly its touched rows instead of scanning the corpus-sized mirror
-    * — the same batch-proportionality contract as [[bandIndexLookup]].
-    * ONE bounded job decides both the guard and the id set (limit(cap+1)
-    * caps driver memory); empty batches read nothing, and past
-    * [[MaxPushedBandPrefixes]] ids (where a scan genuinely competes) the
-    * lookup keeps its touched-rows contract by falling back to a
-    * broadcast leftsemi over the full scan — never the raw mirror. */
+  /** The key-set lookup of every maintainer: the rows of `catalog` whose
+    * `idCol` — the rowkey, or a composite rowkey's LEADING part, of any key
+    * type — is in the batch-bounded `idsDf`. Pushed, the key set compiles
+    * into In point-ranges (prefix slivers for a leading part), so each CDC
+    * batch point-reads exactly its touched rows instead of scanning the
+    * corpus-sized table — the same batch-proportionality contract as
+    * [[bandIndexLookup]], under the same [[keySetGate]]. ONE bounded job
+    * (limit(cap+1) caps driver memory) derives the key set; empty batches
+    * read nothing. Unpushed — at or below `smallStateRows`, past the cap,
+    * or when the keys rival the table — the lookup keeps its touched-rows
+    * answer as a broadcast leftsemi over the full scan, never the raw
+    * table. */
   private[graft] def mirrorLookup(s: SparkSession, catalog: String,
       avroJson: String, idsDf: DataFrame, idCol: String = "vec_id",
       smallStateRows: Long = SmallStateRows,
@@ -1141,26 +1171,12 @@ object StreamBatch {
     val opts = Map("catalog" -> catalog) ++ extraOpts ++
       (if (avroJson.nonEmpty) Map("annVec" -> avroJson) else Map.empty)
     val mirror = s.read.format("graft-kv").options(opts).load()
-    val mirRows = storeRows(catalog)
-    // below the measured small-state threshold the ids collect (a Spark
-    // job) costs more wall than scanning the whole mirror — skip straight
-    // to the broadcast-leftsemi shape, which keeps the touched-rows
-    // answer without the driver round-trip (see [[SmallStateRows]])
-    if (mirRows <= smallStateRows)
-      return mirror.join(broadcast(idsDf.select(col(idCol)).distinct()),
-        Seq(idCol), "leftsemi")
     val ids = idsDf.select(col(idCol)).distinct()
-      .limit(MaxPushedBandPrefixes + 1).collect().map(_.getLong(0))
-    // same cost model as [[bandIndexLookup]]: pushed point-gets pay an
-    // O(ids) plan cost, which only wins when the batch is much smaller
-    // than the mirror — a catch-up batch rivaling the corpus takes the
-    // scan + broadcast leftsemi instead (touched-rows contract either way)
-    if (ids.isEmpty) mirror.filter(lit(false))
-    else if (ids.length > MaxPushedBandPrefixes ||
-        ids.length.toLong * 4 >= mirRows)
-      mirror.join(broadcast(idsDf.select(col(idCol)).distinct()),
-        Seq(idCol), "leftsemi")
-    else mirror.filter(col(idCol).isInCollection(ids.toSeq))
+    keySetGate(catalog, smallStateRows,
+      ids.limit(MaxPushedBandPrefixes + 1).collect().map(_.get(0)),
+      mirror.filter(lit(false)), mirror.join(broadcast(ids), Seq(idCol), "leftsemi")) { k =>
+      mirror.filter(col(idCol).isInCollection(k.toSeq))
+    }
   }
 
   /** IVF probe read over an inverted-file table keyed `cell ‖ vec_id`: the
@@ -1255,42 +1271,34 @@ object StreamBatch {
     val fwdName = graft.catalog.GraftCatalog.parse(fwdCatalog, Map.empty).qualifiedName
     def cellOf(vec: org.apache.spark.sql.Column) =
       element_at(graft.functions.VectorExprs.nearestCentroids(vec, cents, 1), 1)
-    drain(s, Map("catalog" -> srcCatalog, "annVec" -> sv18AvroVec, "tombstones" -> "true"),
-        ckpt) { (df, _) =>
-      // three consumers (retirement probe, mirror writes, index
-      // insert) — pin the batch-proportional frame once
-      withPersisted(df.select(col("vec_id"), col("embedding"), col("_deleted"))) { changed =>
-        val haveMirror = KvStore.exists(fwdName)
-        if (!changed.isEmpty) {
-          if (haveMirror) {
-            // retire every touched vector's OLD entry: the changed-id
-            // set (control-sized — ids only, capped like sv14's band
-            // prefixes) compiles into In POINT-RANGES on the mirror's
-            // rowkey, so retirement reads the touched rows' point-gets,
-            // never the corpus-sized mirror (oversized batches keep the
-            // touched-rows contract via mirrorLookup's leftsemi fallback)
-            val old = mirrorLookup(s, fwdCatalog, sv18AvroVec, changed)
-            kvWrite(old.select(cellOf(col("embedding")).as("cell"), col("vec_id")),
-              idxCatalog, phaseStamp, opts = deleteMode ++ idxOpts)
-            kvWrite(changed.filter(col("_deleted")).select(col("vec_id")), fwdCatalog,
-              phaseStamp, opts = deleteMode ++ vecOpts)
-          }
-          val ups = changed.filter(!col("_deleted"))
-            .select(col("vec_id"), col("embedding"))
-          kvWrite(ups, fwdCatalog, phaseStamp + 1, numKeys(maxId), opts = vecOpts)
-          crashPoint() // worst torn window: mirror overwritten, index insert missing
-          // the new inverted-file entries: presplit across CELL space, so
-          // cells (and their probe slivers) spread over regions
-          kvWrite(ups.select(cellOf(col("embedding")).as("cell") +: col("vec_id") +:
-              covered(col("embedding")): _*),
-            idxCatalog, phaseStamp + 1, numKeys(cents.length), opts = idxOpts)
-        }
+    drainChanges(s, Map("catalog" -> srcCatalog) ++ vecOpts, ckpt, "vec_id",
+        "embedding") { (changed, _) =>
+      if (KvStore.exists(fwdName)) {
+        // retire every touched vector's OLD entry: the changed-id
+        // set (control-sized — ids only, capped like sv14's band
+        // prefixes) compiles into In POINT-RANGES on the mirror's
+        // rowkey, so retirement reads the touched rows' point-gets,
+        // never the corpus-sized mirror (oversized batches keep the
+        // touched-rows contract via mirrorLookup's leftsemi fallback)
+        val old = mirrorLookup(s, fwdCatalog, sv18AvroVec, changed)
+        kvWrite(old.select(cellOf(col("embedding")).as("cell"), col("vec_id")),
+          idxCatalog, phaseStamp, opts = deleteMode ++ idxOpts)
+        kvWrite(changed.filter(col("_deleted")).select(col("vec_id")), fwdCatalog,
+          phaseStamp, opts = deleteMode ++ vecOpts)
       }
+      val ups = changed.filter(!col("_deleted"))
+        .select(col("vec_id"), col("embedding"))
+      kvWrite(ups, fwdCatalog, phaseStamp + 1, numKeys(maxId), opts = vecOpts)
+      crashPoint() // worst torn window: mirror overwritten, index insert missing
+      // the new inverted-file entries: presplit across CELL space, so
+      // cells (and their probe slivers) spread over regions
+      kvWrite(ups.select(cellOf(col("embedding")).as("cell") +: col("vec_id") +:
+          covered(col("embedding")): _*),
+        idxCatalog, phaseStamp + 1, numKeys(cents.length), opts = idxOpts)
     }
   }
 
   def sv18StreamAnnIvf(s: SparkSession, dir: String): DataFrame = {
-    import graft.datasource.FilterCompiler
     import graft.pipeline.Similarity
     import graft.store.KvStore
     val cents = Pipeline.ivfCentroidsFor(s, dir)
@@ -1303,7 +1311,6 @@ object StreamBatch {
       .filter(col("vec_id").isNotNull && col("embedding").isNotNull)
       .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
     val maxId = base.agg(max(col("vec_id"))).head().getLong(0)
-    val srcParsed = graft.catalog.GraftCatalog.parse(sv18SrcCatalog, Map.empty)
     val fwdParsed = graft.catalog.GraftCatalog.parse(sv18FwdCatalog, Map.empty)
     val idxParsed = graft.catalog.GraftCatalog.parse(sv18IdxCatalog, Map.empty)
     val ckpt = tempWorkDir(s, "graft-sv18-ckpt").toString
@@ -1323,10 +1330,7 @@ object StreamBatch {
       opts = vecOpts)
     applyBatch(phaseStamp = 20)
     // ranged DELETE — tombstones retire index entries
-    val hrf = FilterCompiler.compileAll(srcParsed, Seq(
-      org.apache.spark.sql.sources.GreaterThanOrEqual("vec_id", 30L),
-      org.apache.spark.sql.sources.LessThanOrEqual("vec_id", 90L))).exactOrThrow("CDC DELETE")
-    KvStore.table(srcParsed.qualifiedName).delete(hrf.ranges, hrf.pred, stamp = 3000)
+    cdcDelete(sv18SrcCatalog, "vec_id", 30L, 90L, stamp = 3000)
     applyBatch(phaseStamp = 30)
     // g2: last generation + resurrection of the deleted range
     kvWrite(base.filter(col("vec_id") % 3 === 2 ||
@@ -1429,47 +1433,29 @@ object StreamBatch {
       phaseStamp: Long, n: Int = 5, crashPoint: () => Unit = () => ()): Unit = {
     import graft.store.KvStore
     val mirName = graft.catalog.GraftCatalog.parse(mirCatalog, Map.empty).qualifiedName
-    drain(s, Map("catalog" -> srcCatalog, "tombstones" -> "true"), ckpt) { (df, _) =>
-      withPersisted(df.select(col("doc_id"), col("text"), col("_deleted"))) { changed =>
-        if (!changed.isEmpty) {
-          if (KvStore.exists(mirName)) {
-            // 1. retire the touched docs' OLD pairs: changed ids → In
-            //    ranges on the LEADING key part (capped, leftsemi
-            //    fallback past the cap) — batch-sized point slivers.
-            //    Same small-state gate as [[mirrorLookup]]: below
-            //    [[SmallStateRows]] the ids collect costs more than
-            //    scanning the mirror, so skip straight to the leftsemi.
-            val mirror = s.read.format("graft-kv")
-              .option("catalog", mirCatalog).load()
-            def idsLeftsemi = mirror.join(broadcast(changed.select(
-                col("doc_id").as("train_id")).distinct()),
-              Seq("train_id"), "leftsemi")
-            val oldPairs =
-              if (storeRows(mirCatalog) <= SmallStateRows) idsLeftsemi
-              else {
-                val ids = changed.select(col("doc_id")).distinct()
-                  .limit(MaxPushedBandPrefixes + 1).collect().map(_.getLong(0))
-                if (ids.length > MaxPushedBandPrefixes) idsLeftsemi
-                else mirror.filter(col("train_id").isInCollection(ids.toSeq))
-              }
-            kvWrite(oldPairs.select(col("train_id"), col("eval_id")), mirCatalog,
-              phaseStamp, opts = deleteMode)
-          }
-          crashPoint() // fault-injection seam: deletes-at-T landed, puts-at-T+1 have not
-          // 2. fresh pairs for the upserted docs, against the static
-          //    PRE-EXPLODED eval grams — batch × eval, never corpus × eval,
-          //    and never a repeat of the eval-side tokenize
-          val ups = changed.filter(!col("_deleted"))
-            .select(col("doc_id"), col("text"))
-          kvWrite(graft.pipeline.Dedup.contaminationWithEvalGrams(ups, evalG,
-            "doc_id", "text", n = n, minShared = 1), mirCatalog, phaseStamp + 1, numKeys(maxId))
-        }
+    drainChanges(s, Map("catalog" -> srcCatalog), ckpt, "doc_id", "text") { (changed, _) =>
+      if (KvStore.exists(mirName)) {
+        // 1. retire the touched docs' OLD pairs: changed ids → In
+        //    ranges on the LEADING key part through [[mirrorLookup]] —
+        //    batch-sized point slivers, or its leftsemi shape under its
+        //    gate
+        val oldPairs = mirrorLookup(s, mirCatalog, "",
+          changed.select(col("doc_id").as("train_id")), idCol = "train_id")
+        kvWrite(oldPairs.select(col("train_id"), col("eval_id")), mirCatalog,
+          phaseStamp, opts = deleteMode)
       }
+      crashPoint() // fault-injection seam: deletes-at-T landed, puts-at-T+1 have not
+      // 2. fresh pairs for the upserted docs, against the static
+      //    PRE-EXPLODED eval grams — batch × eval, never corpus × eval,
+      //    and never a repeat of the eval-side tokenize
+      val ups = changed.filter(!col("_deleted"))
+        .select(col("doc_id"), col("text"))
+      kvWrite(graft.pipeline.Dedup.contaminationWithEvalGrams(ups, evalG,
+        "doc_id", "text", n = n, minShared = 1), mirCatalog, phaseStamp + 1, numKeys(maxId))
     }
   }
 
   def sv19StreamDecontam(s: SparkSession, dir: String): DataFrame = {
-    import graft.datasource.FilterCompiler
     import graft.store.KvStore
     val base = Tables.documents(s, dir)
       .select(col("doc_id").cast("long").as("doc_id"), col("text"))
@@ -1479,7 +1465,6 @@ object StreamBatch {
     // materialized gram frame, released on every exit path
     withPersisted(contamEvalGrams(evalDocs, n = 5)) { evalG =>
       val maxId = base.agg(max(col("doc_id"))).head().getLong(0)
-      val srcParsed = graft.catalog.GraftCatalog.parse(sv19SrcCatalog, Map.empty)
       val mirParsed = graft.catalog.GraftCatalog.parse(sv19MirCatalog, Map.empty)
       val ckpt = tempWorkDir(s, "graft-sv19-ckpt").toString
       def applyBatch(phaseStamp: Long): Unit =
@@ -1489,10 +1474,7 @@ object StreamBatch {
       KvStore.drop(mirParsed.qualifiedName)
       kvWrite(train, sv19SrcCatalog, 1000, numKeys(maxId), overwrite = true)
       applyBatch(phaseStamp = 10)
-      val hrf = FilterCompiler.compileAll(srcParsed, Seq(
-        org.apache.spark.sql.sources.GreaterThanOrEqual("doc_id", 100L),
-        org.apache.spark.sql.sources.LessThanOrEqual("doc_id", 199L))).exactOrThrow("CDC DELETE")
-      KvStore.table(srcParsed.qualifiedName).delete(hrf.ranges, hrf.pred, stamp = 2000)
+      cdcDelete(sv19SrcCatalog, "doc_id", 100L, 199L, stamp = 2000)
       applyBatch(phaseStamp = 20)
       val inDel = col("doc_id").between(100, 199)
       kvWrite(
@@ -1573,23 +1555,19 @@ object StreamBatch {
       ckpt: String, phaseStamp: Long): Unit = {
     import graft.store.KvStore
     val codesName = graft.catalog.GraftCatalog.parse(codesCatalog, Map.empty).qualifiedName
-    drain(s, Map("catalog" -> srcCatalog, "annVec" -> sv18AvroVec, "tombstones" -> "true"),
-        ckpt) { (df, _) =>
-      withPersisted(df.select(col("vec_id"), col("embedding"), col("_deleted"))) { changed =>
-        if (!changed.isEmpty) {
-          // retirement: tombstoned ids die by key through the
-          // delete-mode writer — distributed, batch-sized, no reads
-          if (KvStore.exists(codesName))
-            kvWrite(changed.filter(col("_deleted")).select(col("vec_id")), codesCatalog,
-              phaseStamp, opts = deleteMode ++ codesOpts)
-          // re-encode + overwrite: updates re-code in place one stamp
-          // later (key = vec_id, version cap 1 keeps the latest)
-          kvWrite(changed.filter(!col("_deleted"))
-            .select(col("vec_id"),
-              graft.pipeline.Similarity.pqCodes(col("embedding"), books).as("codes")),
-            codesCatalog, phaseStamp + 1, numKeys(maxId), opts = codesOpts)
-        }
-      }
+    drainChanges(s, Map("catalog" -> srcCatalog) ++ vecOpts, ckpt, "vec_id",
+        "embedding") { (changed, _) =>
+      // retirement: tombstoned ids die by key through the
+      // delete-mode writer — distributed, batch-sized, no reads
+      if (KvStore.exists(codesName))
+        kvWrite(changed.filter(col("_deleted")).select(col("vec_id")), codesCatalog,
+          phaseStamp, opts = deleteMode ++ codesOpts)
+      // re-encode + overwrite: updates re-code in place one stamp
+      // later (key = vec_id, version cap 1 keeps the latest)
+      kvWrite(changed.filter(!col("_deleted"))
+        .select(col("vec_id"),
+          graft.pipeline.Similarity.pqCodes(col("embedding"), books).as("codes")),
+        codesCatalog, phaseStamp + 1, numKeys(maxId), opts = codesOpts)
     }
   }
 
@@ -1612,14 +1590,12 @@ object StreamBatch {
     * maintaining the compression incrementally may change what the
     * search returns. */
   def sv20StreamPqCodes(s: SparkSession, dir: String): DataFrame = {
-    import graft.datasource.FilterCompiler
     import graft.store.KvStore
     val books = Pipeline.pqCodebooksFor(s, dir)
     val base = Tables.embeddings(s, dir)
       .filter(col("vec_id").isNotNull && col("embedding").isNotNull)
       .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
     val maxId = base.agg(max(col("vec_id"))).head().getLong(0)
-    val srcParsed = graft.catalog.GraftCatalog.parse(sv20SrcCatalog, Map.empty)
     val codesParsed = graft.catalog.GraftCatalog.parse(sv20CodesCatalog, Map.empty)
     val ckpt = tempWorkDir(s, "graft-sv20-ckpt").toString
     def applyBatch(phaseStamp: Long): Unit =
@@ -1634,10 +1610,7 @@ object StreamBatch {
     kvWrite(base.filter(col("vec_id") % 3 <= 1), sv20SrcCatalog, 2000, numKeys(maxId),
       opts = vecOpts)
     applyBatch(phaseStamp = 20)
-    val hrf = FilterCompiler.compileAll(srcParsed, Seq(
-      org.apache.spark.sql.sources.GreaterThanOrEqual("vec_id", 30L),
-      org.apache.spark.sql.sources.LessThanOrEqual("vec_id", 90L))).exactOrThrow("CDC DELETE")
-    KvStore.table(srcParsed.qualifiedName).delete(hrf.ranges, hrf.pred, stamp = 3000)
+    cdcDelete(sv20SrcCatalog, "vec_id", 30L, 90L, stamp = 3000)
     applyBatch(phaseStamp = 30)
     kvWrite(base.filter(col("vec_id") % 3 === 2 ||
       (col("vec_id") >= 30 && col("vec_id") <= 90)), sv20SrcCatalog, 4000, numKeys(maxId),
@@ -1669,33 +1642,6 @@ object StreamBatch {
       |"w2":{"cf":"f", "col":"w2", "type":"string"},
       |"cnt":{"cf":"f", "col":"c", "type":"bigint"}}}""".stripMargin
 
-  /** Exact-key lookup into a STRING-rowkey table — [[mirrorLookup]]'s
-    * contract (batch-proportional point-gets, ratio-gated broadcast-leftsemi
-    * fallback, small-state full-scan gate) for string keys: the key frame
-    * (batch-bounded by construction) compiles into In point-ranges on the
-    * rowkey, so each CDC batch point-reads exactly its touched rows instead
-    * of scanning the (vocabulary²-scale) table. Same cost model, same
-    * bounded `limit(cap+1)` driver job deciding guard + key set at once. */
-  private[graft] def stringKeyLookup(s: SparkSession, catalog: String,
-      keysDf: DataFrame, keyCol: String,
-      smallStateRows: Long = SmallStateRows,
-      extraOpts: Map[String, String] = Map.empty): DataFrame = {
-    val tbl = s.read.format("graft-kv")
-      .options(Map("catalog" -> catalog) ++ extraOpts).load()
-    val rows = storeRows(catalog)
-    if (rows <= smallStateRows)
-      return tbl.join(broadcast(keysDf.select(col(keyCol)).distinct()),
-        Seq(keyCol), "leftsemi")
-    val keys = keysDf.select(col(keyCol)).distinct()
-      .limit(MaxPushedBandPrefixes + 1).collect().map(_.getString(0))
-    if (keys.isEmpty) tbl.filter(lit(false))
-    else if (keys.length > MaxPushedBandPrefixes ||
-        keys.length.toLong * 4 >= rows)
-      tbl.join(broadcast(keysDf.select(col(keyCol)).distinct()),
-        Seq(keyCol), "leftsemi")
-    else tbl.filter(col(keyCol).isInCollection(keys.toSeq))
-  }
-
   /** Signed per-document bigram multiset — [[graft.pipeline.TextOps
     * .bigramLm]]'s exact tokenization and pairing (empty tokens dropped,
     * docs under 2 tokens contribute nothing), each pair carrying weight
@@ -1724,10 +1670,10 @@ object StreamBatch {
     * threshold or past the cap, where that IS the cheaper plan), (2)
     * folds old text at −1 and new text at +1 into one signed gram
     * aggregation (cancellation makes unchanged-text rewrites free), (3)
-    * reads ONLY the affected grams' current counts ([[stringKeyLookup]]
-    * — keyed by ≤ the batch's token count, never the vocabulary, same
-    * gate caveat), and (4) writes counts back: zero-crossers become
-    * LOGICAL zeros, the rest overwrite in place. Touched rows and writes
+    * reads ONLY the affected grams' current counts ([[mirrorLookup]] on
+    * the string `gram` rowkey — keyed by ≤ the batch's token count, never
+    * the vocabulary, same gate caveat), and (4) writes counts back:
+    * zero-crossers become LOGICAL zeros, the rest overwrite in place. Touched rows and writes
     * are batch-proportional at every state size the gates route to the
     * sliver path — which is every size where it matters.
     *
@@ -1780,74 +1726,67 @@ object StreamBatch {
       mirrorCatalog: String, countsCatalog: String, maxId: Long,
       ckpt: String, maxRowsPerBatch: Option[Long] = None,
       crashPoint: () => Unit = () => ()): Long = {
-    val highWrite = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
-    val srcOpts = Map("catalog" -> srcCatalog, "tombstones" -> "true") ++
-      maxRowsPerBatch.map(n => "maxRowsPerBatch" -> n.toString)
-    drain(s, srcOpts, ckpt) { (b, batchId) =>
-      val stamp = (batchId + 1) * 10
+    def stampOf(batchId: Long) = (batchId + 1) * 10
+    drainChanges(s, Map("catalog" -> srcCatalog) ++ capOpt(maxRowsPerBatch), ckpt,
+        "doc_id", "text") { (changed, batchId) =>
+      val stamp = stampOf(batchId)
       val asOf = Map("maxStamp" -> stamp.toString)
-      withPersisted(b.select(col("doc_id"), col("text"), col("_deleted"))) { changed =>
-        if (!changed.isEmpty) {
-          // OLD text of every changed id (upsert OR tombstone), as of
-          // pre-batch state — stable even if this batch's own mirror
-          // writes landed before a crash-and-replay
-          val olds = mirrorLookup(s, mirrorCatalog, "",
-            changed.select(col("doc_id")), idCol = "doc_id",
-            extraOpts = asOf)
-            .select(col("doc_id"), col("text"))
-          withPersisted(signedBigrams(olds, -1)
-            .unionByName(signedBigrams(changed.filter(!col("_deleted")), 1))
-            .groupBy(col("w1"), col("w2"))
-            .agg(sum(col("w")).as("d"))
-            .filter(col("d") =!= 0)
-            .withColumn("gram", concat(col("w1"), lit(" "), col("w2")))) { delta =>
-            val current = stringKeyLookup(s, countsCatalog,
-              delta.select(col("gram")), "gram", extraOpts = asOf)
-              .select(col("gram"), col("cnt").as("old_cnt"))
-            // The negative-count guard rides INSIDE the cnt expression (a
-            // conditional raise_error evaluated by the write tasks) instead
-            // of a separate driver-blocking filter+isEmpty job per batch: a
-            // count going negative means the decrement stream no longer
-            // matches what was added (protocol bug or out-of-band state
-            // edit). The failing write makes the refused batch a
-            // PERMANENTLY TORN batch — sibling tasks' puts may have landed
-            // (the kv writer appends eagerly, there is no staging), but the
-            // checkpoint never commits, so once the out-of-band corruption
-            // is repaired a re-drain replays the batch against the same
-            // as-of state and overwrites the partial cells at the same
-            // stamps — the exact discipline every torn window here already
-            // rests on (the recovery spec pins it end to end). merged is
-            // NOT persisted: the counts write is its only consumer.
-            val rawCnt = coalesce(col("old_cnt"), lit(0L)) + col("d")
-            val merged = delta
-              .join(current, Seq("gram"), "left")
-              .select(col("gram"), col("w1"), col("w2"),
-                when(rawCnt < 0, raise_error(concat(
-                  lit("maintainBigramCounts: merged count went NEGATIVE for gram '"),
-                  col("gram"), lit("' — refusing to persist corrupted counts"))))
-                  .otherwise(rawCnt).as("cnt"))
-            // zero-crossers write a LOGICAL zero (a regular versioned cell),
-            // never the physical delete-mode writer: a physical delete is
-            // unrecoverable under the as-of replay read, while a cnt=0 cell
-            // leaves the previous version visible below the batch stamp (the
-            // LSM discipline — logical death now, physical reclamation by
-            // an explicit compaction). Readers treat cnt=0 as dead: it adds
-            // nothing to any marginal and never passes a minCount filter.
-            kvWrite(merged, countsCatalog, stamp + 1, strKeys, versions = 2)
-            crashPoint()
-            // mirror maintenance LAST, by the same logical-tombstone rule:
-            // a dead doc becomes EMPTY text (bigram-identical to deletion —
-            // no gram survives tokenization) so its previous version stays
-            // readable below the batch stamp for the replay's decrements
-            kvWrite(changed.select(col("doc_id"),
-                when(col("_deleted"), lit("")).otherwise(col("text")).as("text")),
-              mirrorCatalog, stamp + 1, numKeys(maxId), versions = 2)
-            highWrite.accumulateAndGet(stamp + 1, math.max)
-          }
-        }
+      // OLD text of every changed id (upsert OR tombstone), as of
+      // pre-batch state — stable even if this batch's own mirror
+      // writes landed before a crash-and-replay
+      val olds = mirrorLookup(s, mirrorCatalog, "",
+        changed.select(col("doc_id")), idCol = "doc_id",
+        extraOpts = asOf)
+        .select(col("doc_id"), col("text"))
+      withPersisted(signedBigrams(olds, -1)
+        .unionByName(signedBigrams(changed.filter(!col("_deleted")), 1))
+        .groupBy(col("w1"), col("w2"))
+        .agg(sum(col("w")).as("d"))
+        .filter(col("d") =!= 0)
+        .withColumn("gram", concat(col("w1"), lit(" "), col("w2")))) { delta =>
+        val current = mirrorLookup(s, countsCatalog, "",
+          delta.select(col("gram")), idCol = "gram", extraOpts = asOf)
+          .select(col("gram"), col("cnt").as("old_cnt"))
+        // The negative-count guard rides INSIDE the cnt expression (a
+        // conditional raise_error evaluated by the write tasks) instead
+        // of a separate driver-blocking filter+isEmpty job per batch: a
+        // count going negative means the decrement stream no longer
+        // matches what was added (protocol bug or out-of-band state
+        // edit). The failing write makes the refused batch a
+        // PERMANENTLY TORN batch — sibling tasks' puts may have landed
+        // (the kv writer appends eagerly, there is no staging), but the
+        // checkpoint never commits, so once the out-of-band corruption
+        // is repaired a re-drain replays the batch against the same
+        // as-of state and overwrites the partial cells at the same
+        // stamps — the exact discipline every torn window here already
+        // rests on (the recovery spec pins it end to end). merged is
+        // NOT persisted: the counts write is its only consumer.
+        val rawCnt = coalesce(col("old_cnt"), lit(0L)) + col("d")
+        val merged = delta
+          .join(current, Seq("gram"), "left")
+          .select(col("gram"), col("w1"), col("w2"),
+            when(rawCnt < 0, raise_error(concat(
+              lit("maintainBigramCounts: merged count went NEGATIVE for gram '"),
+              col("gram"), lit("' — refusing to persist corrupted counts"))))
+              .otherwise(rawCnt).as("cnt"))
+        // zero-crossers write a LOGICAL zero (a regular versioned cell),
+        // never the physical delete-mode writer: a physical delete is
+        // unrecoverable under the as-of replay read, while a cnt=0 cell
+        // leaves the previous version visible below the batch stamp (the
+        // LSM discipline — logical death now, physical reclamation by
+        // an explicit compaction). Readers treat cnt=0 as dead: it adds
+        // nothing to any marginal and never passes a minCount filter.
+        kvWrite(merged, countsCatalog, stamp + 1, strKeys, versions = 2)
+        crashPoint()
+        // mirror maintenance LAST, by the same logical-tombstone rule:
+        // a dead doc becomes EMPTY text (bigram-identical to deletion —
+        // no gram survives tokenization) so its previous version stays
+        // readable below the batch stamp for the replay's decrements
+        kvWrite(changed.select(col("doc_id"),
+            when(col("_deleted"), lit("")).otherwise(col("text")).as("text")),
+          mirrorCatalog, stamp + 1, numKeys(maxId), versions = 2)
       }
-    }
-    highWrite.get()
+    }.fold(Long.MinValue)(stampOf(_) + 1)
   }
 
   /** Physical reclamation of LOGICAL tombstones — the compaction half of
@@ -1936,13 +1875,11 @@ object StreamBatch {
     * from the MAINTAINED counts and must equal the batch recomputation
     * bit-for-bit — the oracle IS px30's SQL. */
   def sv21StreamBigramLm(s: SparkSession, dir: String): DataFrame = {
-    import graft.datasource.FilterCompiler
     import graft.store.KvStore
     import org.apache.spark.sql.expressions.Window
     val base = Tables.documents(s, dir)
       .select(col("doc_id").cast("long").as("doc_id"), col("text"))
     val maxId = base.agg(max(col("doc_id"))).head().getLong(0)
-    val srcParsed = graft.catalog.GraftCatalog.parse(sv21SrcCatalog, Map.empty)
     // fresh run every invocation; pre-create mirror + counts (the FIRST
     // batch already point-reads both)
     Seq("default:kv_lm_mirror", "default:kv_lm_counts").foreach(KvStore.drop)
@@ -1969,10 +1906,7 @@ object StreamBatch {
     kvWrite(base.filter(col("doc_id") % 3 <= 1), sv21SrcCatalog, 2000, numKeys(maxId))
     runDrain()
     // phase 3: ranged DELETE — counts of [100,300]'s grams must decrement
-    val hrf = FilterCompiler.compileAll(srcParsed, Seq(
-      org.apache.spark.sql.sources.GreaterThanOrEqual("doc_id", 100L),
-      org.apache.spark.sql.sources.LessThanOrEqual("doc_id", 300L))).exactOrThrow("CDC DELETE")
-    KvStore.table(srcParsed.qualifiedName).delete(hrf.ranges, hrf.pred, stamp = 3000)
+    cdcDelete(sv21SrcCatalog, "doc_id", 100L, 300L, stamp = 3000)
     runDrain()
     // scheduled compaction mid-stream: reclaim logical tombstones behind
     // the committed watermark (phase 1/2's zero-crossers — the corrupted
@@ -2062,51 +1996,43 @@ object StreamBatch {
       maxId: Long, ckpt: String, maxRowsPerBatch: Option[Long] = None,
       crashPoint: () => Unit = () => ()): Long = {
     import org.apache.spark.sql.expressions.Window
-    val highWrite = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
-    val srcOpts = Map("catalog" -> srcCatalog, "tombstones" -> "true") ++
-      maxRowsPerBatch.map(n => "maxRowsPerBatch" -> n.toString)
-    drain(s, srcOpts, ckpt) { (b, batchId) =>
-      val stamp = (batchId + 1) * 10
-      withPersisted(b.select(col("doc_id"), col("_deleted"))) { changed =>
-        if (!changed.isEmpty) {
-          // retire every changed id's row — an update re-appends at the
-          // tail below; a tombstone just dies (position slot stays burned).
-          // Pure inserts leave a no-op tombstone cell here: telling an
-          // insert from an update apart would take a manifest point-read
-          // the protocol otherwise never makes, and a marker cell is
-          // cheaper than a read — compaction reclaims them wholesale.
-          kvWrite(changed.select(col("doc_id")), manifestCatalog, stamp, opts = deleteMode)
-          val ins = changed.filter(!col("_deleted"))
-            .select(col("doc_id"),
-              graft.functions.HashExprs.md5NumberLower(
-                concat(lit("epoch0|"), col("doc_id").cast("string")))
-                .bitwiseAND(lit(0x3fffffffffffffffL)).as("skey"))
-            .withColumn("shard", (col("skey") % shards).cast("int"))
-          // counter table: <= `shards` live rows — read whole (as of
-          // pre-batch state, see REPLAY SAFETY above) and broadcast
-          val ctr = s.read.format("graft-kv")
-            .options(Map("catalog" -> countersCatalog,
-              "maxStamp" -> stamp.toString)).load()
-            .select(col("shard"), col("n"))
-          // ranked feeds the manifest append AND the counter advance
-          withPersisted(ins
-            .withColumn("r", row_number().over(
-              Window.partitionBy(col("shard")).orderBy(col("skey"), col("doc_id"))))
-            .join(broadcast(ctr), Seq("shard"), "left")
-            .select(col("doc_id"), col("skey"), col("shard"),
-              (coalesce(col("n"), lit(0L)) + col("r")).as("pos"))) { ranked =>
-            kvWrite(ranked, manifestCatalog, stamp + 1, numKeys(maxId))
-            crashPoint()
-            // two retained versions: a crash AFTER this write must leave the
-            // pre-batch high-water readable below the as-of window on replay
-            kvWrite(ranked.groupBy(col("shard")).agg(max(col("pos")).as("n")),
-              countersCatalog, stamp + 1, numKeys(shards - 1), versions = 2)
-            highWrite.accumulateAndGet(stamp + 1, math.max)
-          }
-        }
+    def stampOf(batchId: Long) = (batchId + 1) * 10
+    drainChanges(s, Map("catalog" -> srcCatalog) ++ capOpt(maxRowsPerBatch), ckpt,
+        "doc_id") { (changed, batchId) =>
+      val stamp = stampOf(batchId)
+      // retire every changed id's row — an update re-appends at the
+      // tail below; a tombstone just dies (position slot stays burned).
+      // Pure inserts leave a no-op tombstone cell here: telling an
+      // insert from an update apart would take a manifest point-read
+      // the protocol otherwise never makes, and a marker cell is
+      // cheaper than a read — compaction reclaims them wholesale.
+      kvWrite(changed.select(col("doc_id")), manifestCatalog, stamp, opts = deleteMode)
+      val ins = changed.filter(!col("_deleted"))
+        .select(col("doc_id"),
+          graft.functions.HashExprs.md5NumberLower(
+            concat(lit("epoch0|"), col("doc_id").cast("string")))
+            .bitwiseAND(lit(0x3fffffffffffffffL)).as("skey"))
+        .withColumn("shard", (col("skey") % shards).cast("int"))
+      // counter table: <= `shards` live rows — read whole (as of
+      // pre-batch state, see REPLAY SAFETY above) and broadcast
+      val ctr = s.read.format("graft-kv")
+        .options(Map("catalog" -> countersCatalog, "maxStamp" -> stamp.toString)).load()
+        .select(col("shard"), col("n"))
+      // ranked feeds the manifest append AND the counter advance
+      withPersisted(ins
+        .withColumn("r", row_number().over(
+          Window.partitionBy(col("shard")).orderBy(col("skey"), col("doc_id"))))
+        .join(broadcast(ctr), Seq("shard"), "left")
+        .select(col("doc_id"), col("skey"), col("shard"),
+          (coalesce(col("n"), lit(0L)) + col("r")).as("pos"))) { ranked =>
+        kvWrite(ranked, manifestCatalog, stamp + 1, numKeys(maxId))
+        crashPoint()
+        // two retained versions: a crash AFTER this write must leave the
+        // pre-batch high-water readable below the as-of window on replay
+        kvWrite(ranked.groupBy(col("shard")).agg(max(col("pos")).as("n")),
+          countersCatalog, stamp + 1, numKeys(shards - 1), versions = 2)
       }
-    }
-    highWrite.get()
+    }.fold(Long.MinValue)(stampOf(_) + 1)
   }
 
   /** sv22: STREAMING EPOCH-SHARD MANIFEST over CDC — px63's loader-facing
@@ -2123,13 +2049,11 @@ object StreamBatch {
     * ranks each shard's events by (phase, skey, doc_id) — burned slots
     * included — and keeps each doc's LAST event's position. */
   def sv22StreamShardManifest(s: SparkSession, dir: String): DataFrame = {
-    import graft.datasource.FilterCompiler
     import graft.store.KvStore
     val shards = 16
     val base = Tables.documents(s, dir)
       .select(col("doc_id").cast("long").as("doc_id"), col("text"))
     val maxId = base.agg(max(col("doc_id"))).head().getLong(0)
-    val srcParsed = graft.catalog.GraftCatalog.parse(sv22SrcCatalog, Map.empty)
     Seq("default:kv_sh_manifest", "default:kv_sh_counters").foreach(KvStore.drop)
     // pre-create manifest + counters (the first batch reads the counters)
     kvWrite(s.range(0).select(col("id").as("doc_id"), col("id").as("skey"),
@@ -2148,10 +2072,7 @@ object StreamBatch {
     runDrain()
     kvWrite(base.filter(col("doc_id") % 3 === 1), sv22SrcCatalog, 2000, numKeys(maxId))
     runDrain()
-    val hrf = FilterCompiler.compileAll(srcParsed, Seq(
-      org.apache.spark.sql.sources.GreaterThanOrEqual("doc_id", 100L),
-      org.apache.spark.sql.sources.LessThanOrEqual("doc_id", 300L))).exactOrThrow("CDC DELETE")
-    KvStore.table(srcParsed.qualifiedName).delete(hrf.ranges, hrf.pred, stamp = 3000)
+    cdcDelete(sv22SrcCatalog, "doc_id", 100L, 300L, stamp = 3000)
     runDrain()
     // scheduled compaction mid-stream (sv21's discipline, manifest flavor):
     // the retire-first write burns a no-op delete MARKER per pure insert
@@ -2283,7 +2204,7 @@ object StreamBatch {
   /** Fold a batch's SIGNED per-segment deltas (`seg`, `dn` order count,
     * `dr` revenue cents) into the rollup table — sv21's count-merge
     * discipline applied to the join's GROUP BY: read current values
-    * as-of `stamp` (≤ #segments rows, [[stringKeyLookup]] gates), add,
+    * as-of `stamp` (≤ #segments rows, [[mirrorLookup]] gates), add,
     * refuse NEGATIVE results inside the write expression (a negative
     * count or revenue means the decrement stream diverged from what was
     * added — the refused batch stays torn and replays after repair),
@@ -2297,8 +2218,8 @@ object StreamBatch {
         .agg(sum(col("dn")).as("dn"), sum(col("dr")).as("dr"))
         .filter(col("dn") =!= 0 || col("dr") =!= 0)) { keyed =>
       if (!keyed.isEmpty) {
-        val current = stringKeyLookup(s, aggCatalog,
-          keyed.select(col("segment")), "segment",
+        val current = mirrorLookup(s, aggCatalog, "",
+          keyed.select(col("segment")), idCol = "segment",
           extraOpts = Map("maxStamp" -> stamp.toString))
           .select(col("segment"), col("n_orders").as("cur_n"),
             col("revenue_c").as("cur_r"))
@@ -2351,70 +2272,62 @@ object StreamBatch {
       aggCatalog: Option[String] = None,
       maxRowsPerBatch: Option[Long] = None,
       crashPoint: () => Unit = () => ()): Long = {
-    val highWrite = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
-    val srcOpts = Map("catalog" -> srcCatalog, "tombstones" -> "true") ++
-      maxRowsPerBatch.map(n => "maxRowsPerBatch" -> n.toString)
-    drain(s, srcOpts, ckpt) { (b, batchId) =>
-      val stamp = drainBase + (batchId + 1) * 10
+    def stampOf(batchId: Long) = drainBase + (batchId + 1) * 10
+    drainChanges(s, Map("catalog" -> srcCatalog) ++ capOpt(maxRowsPerBatch), ckpt,
+        "o_orderkey", "o_custkey", "price_c") { (changed, batchId) =>
+      val stamp = stampOf(batchId)
       val asOf = Map("maxStamp" -> stamp.toString)
-      withPersisted(b.select(col("o_orderkey"), col("o_custkey"),
-          col("price_c"), col("_deleted"))) { changed =>
-        if (!changed.isEmpty) {
-          val olds = mirrorLookup(s, ordMirrorCatalog, "",
-            changed.select(col("o_orderkey")), idCol = "o_orderkey",
+      val olds = mirrorLookup(s, ordMirrorCatalog, "",
+        changed.select(col("o_orderkey")), idCol = "o_orderkey",
+        extraOpts = asOf)
+        .filter(col("o_custkey") >= 0) // −1 = logically dead (no view row)
+        .select(col("o_orderkey"), col("o_custkey").as("old_custkey"))
+      withPersisted(changed.join(olds, Seq("o_orderkey"), "left")) { j =>
+        // retire rows whose view ADDRESS vanished: deletes, and moves
+        // (old address ≠ new — the re-keying case)
+        val retire = j.filter(col("old_custkey").isNotNull &&
+            (col("_deleted") || col("old_custkey") =!= col("o_custkey")))
+          .select(col("old_custkey").as("c_custkey"), col("o_orderkey"),
+            lit(0L).as("price_c"), lit("").as("seg"), lit(0).as("alive"))
+        val ups = j.filter(!col("_deleted"))
+        val segs = mirrorLookup(s, custMirrorCatalog, "",
+          ups.select(col("o_custkey").as("c_custkey")), idCol = "c_custkey",
+          extraOpts = asOf)
+          .filter(length(col("seg")) > 0) // '' = logically dead customer
+          .select(col("c_custkey").as("o_custkey"), col("seg"))
+        val inserts = ups.join(segs, Seq("o_custkey"), "left")
+          .select(col("o_custkey").as("c_custkey"), col("o_orderkey"),
+            col("price_c"), coalesce(col("seg"), lit("")).as("seg"),
+            lit(1).as("alive"))
+        kvWrite(retire.unionByName(inserts), viewCatalog, stamp + 1, anyKeys, versions = 2)
+        // sv24's rollup delta: every touched order's OLD (price, seg)
+        // decrements, every upsert's NEW increments. The old values'
+        // only current truth is the VIEW row at the old address — read
+        // as-of (so this batch's own view write above is invisible),
+        // custkey prefix slivers pruned to the exact rows by the
+        // address semi-join; cost is bounded by the wave's customers'
+        // order fan-in, the inherent decrement cost of aggregate IVM
+        // over a join
+        aggCatalog.foreach { aggCat =>
+          val oldAddr = j.filter(col("old_custkey").isNotNull)
+            .select(col("old_custkey").as("c_custkey"), col("o_orderkey"))
+          val oldRows = mirrorLookup(s, viewCatalog, "",
+            oldAddr.select(col("c_custkey")), idCol = "c_custkey",
             extraOpts = asOf)
-            .filter(col("o_custkey") >= 0) // −1 = logically dead (no view row)
-            .select(col("o_orderkey"), col("o_custkey").as("old_custkey"))
-          withPersisted(changed.join(olds, Seq("o_orderkey"), "left")) { j =>
-            // retire rows whose view ADDRESS vanished: deletes, and moves
-            // (old address ≠ new — the re-keying case)
-            val retire = j.filter(col("old_custkey").isNotNull &&
-                (col("_deleted") || col("old_custkey") =!= col("o_custkey")))
-              .select(col("old_custkey").as("c_custkey"), col("o_orderkey"),
-                lit(0L).as("price_c"), lit("").as("seg"), lit(0).as("alive"))
-            val ups = j.filter(!col("_deleted"))
-            val segs = mirrorLookup(s, custMirrorCatalog, "",
-              ups.select(col("o_custkey").as("c_custkey")), idCol = "c_custkey",
-              extraOpts = asOf)
-              .filter(length(col("seg")) > 0) // '' = logically dead customer
-              .select(col("c_custkey").as("o_custkey"), col("seg"))
-            val inserts = ups.join(segs, Seq("o_custkey"), "left")
-              .select(col("o_custkey").as("c_custkey"), col("o_orderkey"),
-                col("price_c"), coalesce(col("seg"), lit("")).as("seg"),
-                lit(1).as("alive"))
-            kvWrite(retire.unionByName(inserts), viewCatalog, stamp + 1, anyKeys, versions = 2)
-            // sv24's rollup delta: every touched order's OLD (price, seg)
-            // decrements, every upsert's NEW increments. The old values'
-            // only current truth is the VIEW row at the old address — read
-            // as-of (so this batch's own view write above is invisible),
-            // custkey prefix slivers pruned to the exact rows by the
-            // address semi-join; cost is bounded by the wave's customers'
-            // order fan-in, the inherent decrement cost of aggregate IVM
-            // over a join
-            aggCatalog.foreach { aggCat =>
-              val oldAddr = j.filter(col("old_custkey").isNotNull)
-                .select(col("old_custkey").as("c_custkey"), col("o_orderkey"))
-              val oldRows = mirrorLookup(s, viewCatalog, "",
-                oldAddr.select(col("c_custkey")), idCol = "c_custkey",
-                extraOpts = asOf)
-                .filter(col("alive") === 1)
-                .join(oldAddr, Seq("c_custkey", "o_orderkey"), "leftsemi")
-                .select(col("seg"), lit(-1L).as("dn"),
-                  (-col("price_c")).as("dr"))
-              val newRows = inserts.select(col("seg"), lit(1L).as("dn"),
-                col("price_c").as("dr"))
-              mergeSegDeltas(s, aggCat, oldRows.unionByName(newRows), stamp)
-            }
-            crashPoint()
-            kvWrite(changed.select(col("o_orderkey"),
-                when(col("_deleted"), lit(-1L)).otherwise(col("o_custkey")).as("o_custkey")),
-              ordMirrorCatalog, stamp + 1, anyKeys, versions = 2)
-            highWrite.accumulateAndGet(stamp + 1, math.max)
-          }
+            .filter(col("alive") === 1)
+            .join(oldAddr, Seq("c_custkey", "o_orderkey"), "leftsemi")
+            .select(col("seg"), lit(-1L).as("dn"),
+              (-col("price_c")).as("dr"))
+          val newRows = inserts.select(col("seg"), lit(1L).as("dn"),
+            col("price_c").as("dr"))
+          mergeSegDeltas(s, aggCat, oldRows.unionByName(newRows), stamp)
         }
+        crashPoint()
+        kvWrite(changed.select(col("o_orderkey"),
+            when(col("_deleted"), lit(-1L)).otherwise(col("o_custkey")).as("o_custkey")),
+          ordMirrorCatalog, stamp + 1, anyKeys, versions = 2)
       }
-    }
-    highWrite.get()
+    }.fold(Long.MinValue)(stampOf(_) + 1)
   }
 
   /** One CDC drain of the CUSTOMER side of join-view maintenance — the
@@ -2436,47 +2349,40 @@ object StreamBatch {
       aggCatalog: Option[String] = None,
       maxRowsPerBatch: Option[Long] = None,
       crashPoint: () => Unit = () => ()): Long = {
-    val highWrite = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
-    val srcOpts = Map("catalog" -> srcCatalog, "tombstones" -> "true") ++
-      maxRowsPerBatch.map(n => "maxRowsPerBatch" -> n.toString)
-    drain(s, srcOpts, ckpt) { (b, batchId) =>
-      val stamp = drainBase + (batchId + 1) * 10
+    def stampOf(batchId: Long) = drainBase + (batchId + 1) * 10
+    drainChanges(s, Map("catalog" -> srcCatalog) ++ capOpt(maxRowsPerBatch), ckpt,
+        "c_custkey", "seg") { (changed, batchId) =>
+      val stamp = stampOf(batchId)
       val asOf = Map("maxStamp" -> stamp.toString)
-      withPersisted(b.select(col("c_custkey"), col("seg"), col("_deleted"))) { changed =>
-        if (!changed.isEmpty) {
-          // the affected view rows: THIS batch's custkey prefix slivers,
-          // as-of pre-batch state (alive only — dead rows stay dead).
-          // The rows carry their OLD segment — sv24's decrement side
-          // comes for free from the repair read.
-          val aff = mirrorLookup(s, viewCatalog, "",
-            changed.select(col("c_custkey")), idCol = "c_custkey",
-            extraOpts = asOf)
-            .filter(col("alive") === 1)
-            .select(col("c_custkey"), col("o_orderkey"), col("price_c"),
-              col("seg").as("old_seg"))
-          val segs = changed.select(col("c_custkey"),
-            when(col("_deleted"), lit("")).otherwise(col("seg")).as("seg"))
-          withPersisted(aff.join(segs, Seq("c_custkey"))) { rep =>
-            kvWrite(rep.select(col("c_custkey"), col("o_orderkey"), col("price_c"),
-              col("seg"), lit(1).as("alive")), viewCatalog, stamp + 1, anyKeys, versions = 2)
-            // sv24's rollup: a segment change MOVES each repaired row's
-            // contribution old_seg → seg; rows whose segment didn't change
-            // cancel inside the merge's per-segment sum
-            aggCatalog.foreach { aggCat =>
-              mergeSegDeltas(s, aggCat,
-                rep.select(col("old_seg").as("seg"), lit(-1L).as("dn"),
-                    (-col("price_c")).as("dr"))
-                  .unionByName(rep.select(col("seg"), lit(1L).as("dn"),
-                    col("price_c").as("dr"))), stamp)
-            }
-            crashPoint()
-            kvWrite(segs, custMirrorCatalog, stamp + 1, anyKeys, versions = 2)
-            highWrite.accumulateAndGet(stamp + 1, math.max)
-          }
+      // the affected view rows: THIS batch's custkey prefix slivers,
+      // as-of pre-batch state (alive only — dead rows stay dead).
+      // The rows carry their OLD segment — sv24's decrement side
+      // comes for free from the repair read.
+      val aff = mirrorLookup(s, viewCatalog, "",
+        changed.select(col("c_custkey")), idCol = "c_custkey",
+        extraOpts = asOf)
+        .filter(col("alive") === 1)
+        .select(col("c_custkey"), col("o_orderkey"), col("price_c"),
+          col("seg").as("old_seg"))
+      val segs = changed.select(col("c_custkey"),
+        when(col("_deleted"), lit("")).otherwise(col("seg")).as("seg"))
+      withPersisted(aff.join(segs, Seq("c_custkey"))) { rep =>
+        kvWrite(rep.select(col("c_custkey"), col("o_orderkey"), col("price_c"),
+          col("seg"), lit(1).as("alive")), viewCatalog, stamp + 1, anyKeys, versions = 2)
+        // sv24's rollup: a segment change MOVES each repaired row's
+        // contribution old_seg → seg; rows whose segment didn't change
+        // cancel inside the merge's per-segment sum
+        aggCatalog.foreach { aggCat =>
+          mergeSegDeltas(s, aggCat,
+            rep.select(col("old_seg").as("seg"), lit(-1L).as("dn"),
+                (-col("price_c")).as("dr"))
+              .unionByName(rep.select(col("seg"), lit(1L).as("dn"),
+                col("price_c").as("dr"))), stamp)
         }
+        crashPoint()
+        kvWrite(segs, custMirrorCatalog, stamp + 1, anyKeys, versions = 2)
       }
-    }
-    highWrite.get()
+    }.fold(Long.MinValue)(stampOf(_) + 1)
   }
 
   /** sv23: INCREMENTALLY-MAINTAINED JOIN VIEW over TWO CDC streams — the
@@ -2514,7 +2420,6 @@ object StreamBatch {
   private def runJoinViewPhases(s: SparkSession, dir: String,
       ordCat: String, custCat: String, ordMir: String, custMir: String,
       viewCat: String, aggCat: Option[String]): Unit = {
-    import graft.datasource.FilterCompiler
     import graft.store.KvStore
     val ordBase = Tables.orders(s, dir).select(
       col("o_orderkey").cast("long").as("o_orderkey"),
@@ -2539,8 +2444,6 @@ object StreamBatch {
     withConfs(s, ShuffleKey -> "8", AqeKey -> "false") {
       val maxOrd = ordBase.agg(max(col("o_orderkey"))).head().getLong(0)
       val maxCust = custBase.agg(max(col("c_custkey"))).head().getLong(0)
-      val ordParsed = graft.catalog.GraftCatalog.parse(ordCat, Map.empty)
-      val custParsed = graft.catalog.GraftCatalog.parse(custCat, Map.empty)
       // fresh run; pre-create the state tables (first batches read all)
       (Seq(ordCat, custCat, ordMir, custMir, viewCat) ++ aggCat)
         .foreach(c => KvStore.drop(
@@ -2588,19 +2491,13 @@ object StreamBatch {
       kvWrite(ordBase.filter(col("o_orderkey") % 7 === 0)
         .select(col("o_orderkey"), ((col("o_custkey") % 50) + 1).as("o_custkey"),
           (col("price_c") + 1).as("price_c")), ordCat, 3000, numKeys(maxOrd))
-      val hrfO = FilterCompiler.compileAll(ordParsed, Seq(
-        org.apache.spark.sql.sources.GreaterThanOrEqual("o_orderkey", 100L),
-        org.apache.spark.sql.sources.LessThanOrEqual("o_orderkey", 299L))).exactOrThrow("CDC DELETE")
-      KvStore.table(ordParsed.qualifiedName).delete(hrfO.ranges, hrfO.pred, stamp = 4000)
+      cdcDelete(ordCat, "o_orderkey", 100L, 299L, stamp = 4000)
       drainO()
       // phase 5: customer wave — %5 segments change; custkeys [10, 29] DIE
       // (their orders orphan to ''-segment rows, LEFT-join style)
       kvWrite(custBase.filter(col("c_custkey") % 5 === 0)
         .withColumn("seg", lit("MOVED")), custCat, 5000, numKeys(maxCust))
-      val hrfC = FilterCompiler.compileAll(custParsed, Seq(
-        org.apache.spark.sql.sources.GreaterThanOrEqual("c_custkey", 10L),
-        org.apache.spark.sql.sources.LessThanOrEqual("c_custkey", 29L))).exactOrThrow("CDC DELETE")
-      KvStore.table(custParsed.qualifiedName).delete(hrfC.ranges, hrfC.pred, stamp = 5100)
+      cdcDelete(custCat, "c_custkey", 10L, 29L, stamp = 5100)
       drainC()
       // mid-schedule compaction behind the drain-derived fence: retired view
       // rows, dead mirror rows, and zero-crossed rollup rows die physically;
@@ -2759,7 +2656,6 @@ object StreamBatch {
     * snapshot bit-for-bit and the oracle IS px61's rendered SQL (the
     * kv32/px57 shared-string precedent). */
   def sv25StreamIvfPq(s: SparkSession, dir: String): DataFrame = {
-    import graft.datasource.FilterCompiler
     import graft.store.KvStore
     val cents = Pipeline.ivfCentroidsFor(s, dir)
     val books = Pipeline.pqCodebooksFor(s, dir)
@@ -2767,7 +2663,6 @@ object StreamBatch {
       .filter(col("vec_id").isNotNull && col("embedding").isNotNull)
       .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
     val maxId = base.agg(max(col("vec_id"))).head().getLong(0)
-    val srcParsed = graft.catalog.GraftCatalog.parse(sv25SrcCatalog, Map.empty)
     val fwdParsed = graft.catalog.GraftCatalog.parse(sv25FwdCatalog, Map.empty)
     val codesParsed = graft.catalog.GraftCatalog.parse(sv25CodesCatalog, Map.empty)
     val ckpt = tempWorkDir(s, "graft-sv25-ckpt").toString
@@ -2787,10 +2682,7 @@ object StreamBatch {
       opts = vecOpts)
     applyBatch(phaseStamp = 20)
     // ranged DELETE — tombstones retire inverted-file rows
-    val hrf = FilterCompiler.compileAll(srcParsed, Seq(
-      org.apache.spark.sql.sources.GreaterThanOrEqual("vec_id", 30L),
-      org.apache.spark.sql.sources.LessThanOrEqual("vec_id", 90L))).exactOrThrow("CDC DELETE")
-    KvStore.table(srcParsed.qualifiedName).delete(hrf.ranges, hrf.pred, stamp = 3000)
+    cdcDelete(sv25SrcCatalog, "vec_id", 30L, 90L, stamp = 3000)
     applyBatch(phaseStamp = 30)
     // g2: last generation + resurrection of the deleted range
     kvWrite(base.filter(col("vec_id") % 3 === 2 ||
@@ -2856,7 +2748,8 @@ object StreamBatch {
     *     sliver is LOCAL-CHECKPOINTED eagerly — the retire below deletes
     *     the very rows it came from, and a lazily-cached block that fell
     *     out under memory pressure would silently recompute `kept` from
-    *     the post-retire (emptied) table;
+    *     the post-retire (emptied) table; both checkpoints release when
+    *     the batch ends, on every exit path ([[withPersisted]]);
     *  3. per-user chains are LINEAR, so each touched user's closure is ONE
     *     window pass: a session head is an event with no ≤12h predecessor
     *     and every event's root is the latest head at or before it — the
@@ -2875,40 +2768,33 @@ object StreamBatch {
     import org.apache.spark.sql.expressions.Window
     val fwdName = graft.catalog.GraftCatalog.parse(fwdCat, Map.empty).qualifiedName
     val viewName = graft.catalog.GraftCatalog.parse(viewCat, Map.empty).qualifiedName
-    drain(s, Map("catalog" -> srcCat, "tombstones" -> "true"), ckpt) { (df, _) =>
-      withPersisted(df.select(col("event_id"), col("user_id"), col("tu"),
-          col("_deleted"))) { changed =>
-        if (!changed.isEmpty) {
-          val haveFwd = KvStore.exists(fwdName)
-          val haveView = KvStore.exists(viewName)
-          val batchKeys = changed.select("event_id").distinct()
-          val puts = changed.filter(!col("_deleted"))
-          // the wave's mirror rows, read ONCE through the shared bounded-In
-          // lookup (point gets for wave-sized batches, semi-join fallback)
-          // and local-checkpointed: both the owner derivation AND the
-          // retire below read these rows, and the retire destroys them —
-          // eager materialization makes read-before-delete actual instead
-          // of cache-dependent
-          val fwdHits =
-            if (haveFwd) mirrorLookup(s, fwdCat, "", batchKeys, "event_id",
-              smallStateRows).localCheckpoint()
-            else null
-          val owners =
-            if (fwdHits != null) fwdHits.select("user_id")
-            else puts.select("user_id").limit(0)
-          val touched = puts.select("user_id").union(owners).distinct()
-          val oldView =
-            if (haveView) mirrorLookup(s, viewCat, "", touched, "user_id",
-              smallStateRows).localCheckpoint()
-            else null
-          val kept =
-            if (oldView == null) puts.select("user_id", "event_id", "tu").limit(0)
-            else oldView.select("user_id", "event_id", "tu")
+    // a present table's lookup, local-checkpointed eagerly and released
+    // when the batch ends
+    def pinned(present: Boolean, lookup: => DataFrame)(f: Option[DataFrame] => Unit): Unit =
+      if (present) withPersisted(lookup.localCheckpoint())(p => f(Some(p))) else f(None)
+    drainChanges(s, Map("catalog" -> srcCat), ckpt, "event_id", "user_id", "tu") {
+        (changed, _) =>
+      val batchKeys = changed.select("event_id").distinct()
+      val puts = changed.filter(!col("_deleted"))
+      // the wave's mirror rows, read ONCE through the shared bounded-In
+      // lookup (point gets for wave-sized batches, semi-join fallback)
+      // and local-checkpointed: both the owner derivation AND the
+      // retire below read these rows, and the retire destroys them —
+      // eager materialization makes read-before-delete actual instead
+      // of cache-dependent
+      pinned(KvStore.exists(fwdName),
+          mirrorLookup(s, fwdCat, "", batchKeys, "event_id", smallStateRows)) { fwdHits =>
+        val owners = fwdHits.fold(puts.select("user_id").limit(0))(_.select("user_id"))
+        val touched = puts.select("user_id").union(owners).distinct()
+        pinned(KvStore.exists(viewName),
+            mirrorLookup(s, viewCat, "", touched, "user_id", smallStateRows)) { oldView =>
+          val kept = oldView.fold(puts.select("user_id", "event_id", "tu").limit(0))(
+            _.select("user_id", "event_id", "tu")
               .join(broadcast(batchKeys), Seq("event_id"), "left_anti")
               // a using-join REORDERS output columns (join key first) —
               // re-pin the order; the union below is by NAME anyway,
               // belt-and-braces after this exact swap bit once
-              .select("user_id", "event_id", "tu")
+              .select("user_id", "event_id", "tu"))
           val merged = kept.unionByName(puts.select("user_id", "event_id", "tu"))
           val w = Window.partitionBy(col("user_id")).orderBy(col("tu"), col("event_id"))
           val roots = merged
@@ -2918,16 +2804,13 @@ object StreamBatch {
             .withColumn("session_root", last(col("head"), ignoreNulls = true)
               .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
             .select(col("user_id"), col("event_id"), col("tu"), col("session_root"))
-          if (oldView != null)
-            kvWrite(oldView.select("user_id", "event_id"), viewCat, phaseStamp,
-              opts = deleteMode)
+          oldView.foreach(v =>
+            kvWrite(v.select("user_id", "event_id"), viewCat, phaseStamp, opts = deleteMode))
           kvWrite(roots, viewCat, phaseStamp + 1, anyKeys, versions = 2)
-          if (fwdHits != null)
-            kvWrite(fwdHits.select("event_id"), fwdCat, phaseStamp, opts = deleteMode)
+          fwdHits.foreach(f =>
+            kvWrite(f.select("event_id"), fwdCat, phaseStamp, opts = deleteMode))
           kvWrite(puts.select("event_id", "user_id"), fwdCat, phaseStamp + 1, anyKeys,
             versions = 2)
-          // fwdHits/oldView are local checkpoints — their blocks release
-          // with the dataset (ContextCleaner), no unpersist to call
         }
       }
     }
@@ -2943,7 +2826,6 @@ object StreamBatch {
     * roots from the final state with q27's RECURSIVE SQL — maintenance
     * must equal the recursive fixpoint bit-for-bit. */
   def sv26StreamSessionRoots(s: SparkSession, dir: String): DataFrame = {
-    import graft.datasource.FilterCompiler
     import graft.store.KvStore
     // wave-sized drains: the join-view drains' shuffle pin
     withConfs(s, ShuffleKey -> "8") {
@@ -2952,7 +2834,6 @@ object StreamBatch {
         col("user_id").cast("long").as("user_id"),
         unix_seconds(col("ts")).cast("long").as("tu"))
       val maxId = base.agg(max(col("event_id"))).head().getLong(0)
-      val srcParsed = graft.catalog.GraftCatalog.parse(sv26SrcCatalog, Map.empty)
       val ckpt = tempWorkDir(s, "graft-sv26-ckpt").toString
       def applyBatch(stamp: Long): Unit = maintainSessionRoots(s, sv26SrcCatalog,
         sv26FwdCatalog, sv26ViewCatalog, ckpt, stamp)
@@ -2966,11 +2847,7 @@ object StreamBatch {
         .withColumn("tu", col("tu") + 50000L), sv26SrcCatalog, 2000, numKeys(maxId))
       applyBatch(30)
       // wave 3, ONE mixed batch: ranged delete + partial resurrection
-      val hrf = FilterCompiler.compileAll(srcParsed, Seq(
-        org.apache.spark.sql.sources.GreaterThanOrEqual("event_id", 300L),
-        org.apache.spark.sql.sources.LessThanOrEqual("event_id", 599L)))
-        .exactOrThrow("CDC DELETE")
-      KvStore.table(srcParsed.qualifiedName).delete(hrf.ranges, hrf.pred, stamp = 3000)
+      cdcDelete(sv26SrcCatalog, "event_id", 300L, 599L, stamp = 3000)
       kvWrite(base
         .filter(col("event_id").between(300L, 599L) && col("event_id") % 5 === 0)
         .withColumn("tu", when(col("event_id") % 11 === 0, col("tu") + 50000L)

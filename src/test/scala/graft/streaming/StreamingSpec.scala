@@ -1730,6 +1730,41 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"default:kv_lm_counts_$suf").foreach(KvStore.drop)
   }
 
+  test("sv26 drains release their eager local checkpoints when each batch ends") {
+    // the session-root maintainer pins the wave's mirror rows and the
+    // touched users' view slivers as eager local checkpoints (its retire
+    // deletes the rows they came from); their blocks must go when the
+    // batch ends, not whenever GC reaches the dataset
+    import graft.queries.StreamBatch
+    val suf = "ckrel"
+    val srcCat = StreamBatch.sv26SrcCatalog.replace("\"kv_sess_src\"", s""""kv_sess_src_$suf"""")
+    val fwdCat = StreamBatch.sv26FwdCatalog.replace("\"kv_sess_fwd\"", s""""kv_sess_fwd_$suf"""")
+    val viewCat = StreamBatch.sv26ViewCatalog.replace("\"kv_sess_view\"", s""""kv_sess_view_$suf"""")
+    val tables = Seq(s"default:kv_sess_src_$suf", s"default:kv_sess_fwd_$suf",
+      s"default:kv_sess_view_$suf")
+    tables.foreach(KvStore.drop)
+    import spark.implicits._
+    def put(rows: Seq[(Long, Long, Long)], ts: Long): Unit =
+      rows.toDF("event_id", "user_id", "tu").write.format("graft-kv")
+        .options(Map("catalog" -> srcCat, "newtable" -> "4",
+          "timestamp" -> ts.toString, "minSplitNum" -> "0", "maxSplitNum" -> "100"))
+        .mode("append").save()
+    val ckpt = Files.createTempDirectory("graft-sessrel-ckpt").toString
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    put((0L until 20L).map(i => (i, i % 4, 1000L * i)), ts = 1000L)
+    StreamBatch.maintainSessionRoots(spark, srcCat, fwdCat, viewCat, ckpt, phaseStamp = 10L)
+    // the second drain finds the mirror and the view, so both lookups run
+    // and both checkpoints are taken: event 3 moves to user 1
+    put(Seq((3L, 1L, 3000L), (25L, 2L, 5000L)), ts = 2000L)
+    StreamBatch.maintainSessionRoots(spark, srcCat, fwdCat, viewCat, ckpt, phaseStamp = 20L)
+    val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"sv26 drains left persisted RDDs $left behind")
+    val view = spark.read.format("graft-kv").option("catalog", viewCat).load()
+      .collect().map(r => (r.getAs[Long]("event_id"), r.getAs[Long]("user_id"))).toMap
+    assert(view.size == 21 && view(3L) == 1L && view(25L) == 2L, s"got $view")
+    tables.foreach(KvStore.drop)
+  }
+
   test("a drain's body gets its micro-batch re-bound to the caller's session") {
     // every drain's StreamExecution runs in a clone of the session; the
     // body's jobs must run in the caller's, under the drain's conf window
@@ -2577,6 +2612,63 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(graft.queries.StreamBatch
       .mirrorLookup(spark, catalog, avro,
         spark.emptyDataset[Long].toDF("vec_id")).count() == 0L)
+  }
+
+  test("mirrorLookup point-reads a string rowkey and a composite key's leading part") {
+    // the one key-set lookup serves every maintainer's key type: the sv21
+    // counts / sv24 rollup shape (a STRING rowkey) and sv19's contamination
+    // mirror (`train_id ‖ eval_id`, looked up by its leading part). Per
+    // shape: pinned to the pushed path it scans only the touched rows, by
+    // default (a small table) it is the broadcast leftsemi, and both
+    // answer the same rows
+    import graft.queries.StreamBatch
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import spark.implicits._
+    def scanned(df: DataFrame): Long =
+      allPlanNodes(df.queryExecution.executedPlan).collectFirst {
+        case b: BatchScanExec => b.metrics("graftRowsScanned").value
+      }.get
+    def isSemi(df: DataFrame): Boolean = allPlanNodes(df.queryExecution.executedPlan).exists {
+      case j: BroadcastHashJoinExec => j.joinType == org.apache.spark.sql.catalyst.plans.LeftSemi
+      case _ => false
+    }
+    def check(catalog: String, idCol: String, touched: DataFrame, want: Int): Unit = {
+      val pushed = StreamBatch.mirrorLookup(spark, catalog, "", touched, idCol = idCol,
+        smallStateRows = 0L)
+      val pushedRows = pushed.collect().toSet
+      assert(pushedRows.size == want, s"$idCol: got ${pushedRows.size} rows")
+      assert(scanned(pushed) == want.toLong,
+        s"$idCol: the pushed lookup scanned ${scanned(pushed)} rows for $want touched")
+      assert(!isSemi(pushed))
+      assert(500L <= StreamBatch.SmallStateRows)
+      val semi = StreamBatch.mirrorLookup(spark, catalog, "", touched, idCol = idCol)
+      val semiRows = semi.collect().toSet
+      assert(isSemi(semi), s"$idCol: a small-state lookup must be a broadcast leftsemi")
+      assert(semiRows == pushedRows)
+    }
+
+    val cntCat = StreamBatch.sv21CountsCatalog
+      .replace("\"kv_lm_counts\"", "\"kv_lm_counts_lookup\"")
+    KvStore.drop("default:kv_lm_counts_lookup")
+    (0 until 400).map(i => (f"w$i%03d x", f"w$i%03d", "x", i.toLong))
+      .toDF("gram", "w1", "w2", "cnt").write.format("graft-kv")
+      .options(Map("catalog" -> cntCat, "newtable" -> "8",
+        "minSplit" -> "0", "maxSplit" -> "z"))
+      .mode("append").save()
+    check(cntCat, "gram", Seq("w007 x", "w123 x", "w399 x", "nope x").toDF("gram"), 3)
+
+    val mirCat = StreamBatch.sv19MirCatalog
+      .replace("\"kv_ctm_mirror\"", "\"kv_ctm_mirror_lookup\"")
+    KvStore.drop("default:kv_ctm_mirror_lookup")
+    (for (t <- 0 until 50; e <- 0 until 10) yield (t.toLong, e.toLong * 10, 3L))
+      .toDF("train_id", "eval_id", "n_shared").write.format("graft-kv")
+      .options(Map("catalog" -> mirCat, "newtable" -> "8",
+        "minSplitNum" -> "0", "maxSplitNum" -> "50"))
+      .mode("append").save()
+    check(mirCat, "train_id", Seq(3L, 17L, 42L).toDF("train_id"), 30)
+    Seq("default:kv_lm_counts_lookup", "default:kv_ctm_mirror_lookup").foreach(KvStore.drop)
   }
 
   test("ANN maintenance protocol: random insert/update/delete sequences equal a batch rebuild") {
